@@ -44,10 +44,10 @@ from onehouse_demos_spark.operators.similarity import (
     _as_double,
     _assign_to_centroids,
     _centroid_df,
-    _lloyd_scope,
     _pq_assign,
     _pq_codebook_df,
     _subvec_frame,
+    _tiny_if_small,
     cosine,
     train_ivf_centroids,
     train_pq_codebooks,
@@ -81,22 +81,19 @@ class AnnIndex:
         iters: int = 4,
     ) -> "AnnIndex":
         spark = emb.sparkSession
-        vecs = emb.select(
-            "vec_id", _as_double(F.col("embedding")).alias("v")
-        ).persist()
-        # r15: the whole build is a chain of ~30 tiny sequential jobs
-        # at local SFs (train rounds, assignment, encode, three
-        # writes) — run it under the same tiny-guarded scope the Lloyd
-        # loops use (AQE off + 1-partition shuffles; similarity.
-        # _lloyd_scope). The guard keeps AQE on when the corpus scan
-        # is cluster-wide, so the 100 TB encode/write path is
-        # untouched. Layout equivalence at tiny scale: the codes
-        # write's repartition("cell") shuffles byte-sized data that
-        # AQE coalesces to one partition anyway — one file per cell
-        # directory either way (asserted identical end-to-end by
-        # tools/ab_ann_lloyd.py and the 3-SF oracle checks).
-        try:
-            with _lloyd_scope(vecs):
+        # The whole build is a chain of ~30 small dependent jobs (train
+        # rounds, assignment, encode, three writes). Only when
+        # `is_tiny(emb)` it runs in `session.tiny_scope`, whose
+        # 1-partition shuffles give the codes write one file per cell
+        # directory. The index does not depend on the partitioning
+        # (centroids and codewords sit on the 6-decimal grid), and the
+        # returned index stays bound to the caller's session.
+        with _tiny_if_small(emb) as (emb,):
+            vecs = emb.select(
+                "vec_id", _as_double(F.col("embedding")).alias("v")
+            ).persist()
+            resid = None
+            try:
                 dims = len(vecs.select("v").first().v)
                 # 1. coarse quantizer
                 centroids = train_ivf_centroids(
@@ -154,7 +151,7 @@ class AnnIndex:
                 _centroid_df(vecs, centroids).write.mode(
                     "overwrite"
                 ).parquet(f"{path}/centroids.parquet")
-                _pq_codebook_df(spark, books).write.mode(
+                _pq_codebook_df(vecs.sparkSession, books).write.mode(
                     "overwrite"
                 ).parquet(f"{path}/codebooks.parquet")
                 meta = {
@@ -164,15 +161,13 @@ class AnnIndex:
                     "k_pq": k_pq,
                     "n_vectors": vecs.count(),
                 }
-            with open(f"{path}/meta.json", "w") as fh:
-                json.dump(meta, fh)
-            return AnnIndex(spark, path, centroids, books, meta)
-        finally:
-            vecs.unpersist()
-            try:
-                resid.unpersist()
-            except Exception:
-                pass
+            finally:
+                vecs.unpersist()
+                if resid is not None:
+                    resid.unpersist()
+        with open(f"{path}/meta.json", "w") as fh:
+            json.dump(meta, fh)
+        return AnnIndex(spark, path, centroids, books, meta)
 
     # ------------------------------------------------------- incremental
 
@@ -196,14 +191,12 @@ class AnnIndex:
         `vec_id`s must be new: the index never rescans itself to check
         (that would read the whole corpus per insert) — dedupe
         upstream like any append-only ingest."""
-        vecs = emb.select(
-            "vec_id", _as_double(F.col("embedding")).alias("v")
-        ).persist()
-        # r15: same tiny-guarded scope as build — the batch-only
-        # assign/encode/append chain is a handful of sequential tiny
-        # jobs at local SFs; cluster-wide batches keep AQE (guard).
-        try:
-            with _lloyd_scope(vecs):
+        # Same tiny scope as build, guarded on the batch alone.
+        with _tiny_if_small(emb) as (emb,):
+            vecs = emb.select(
+                "vec_id", _as_double(F.col("embedding")).alias("v")
+            ).persist()
+            try:
                 n = vecs.count()
                 if n == 0:
                     return 0
@@ -244,14 +237,14 @@ class AnnIndex:
                 codes.repartition("cell").write.mode("append").partitionBy(
                     "cell"
                 ).parquet(f"{self.path}/codes")
-            self.meta["n_vectors"] = int(self.meta.get("n_vectors", 0)) + n
-            tmp = f"{self.path}/meta.json.tmp"
-            with open(tmp, "w") as fh:
-                json.dump(self.meta, fh)
-            os.replace(tmp, f"{self.path}/meta.json")
-            return n
-        finally:
-            vecs.unpersist()
+            finally:
+                vecs.unpersist()
+        self.meta["n_vectors"] = int(self.meta.get("n_vectors", 0)) + n
+        tmp = f"{self.path}/meta.json.tmp"
+        with open(tmp, "w") as fh:
+            json.dump(self.meta, fh)
+        os.replace(tmp, f"{self.path}/meta.json")
+        return n
 
     # ------------------------------------------------------------- load
 

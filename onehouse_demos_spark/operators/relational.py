@@ -31,6 +31,7 @@ from onehouse_demos_spark.functions.quantize import (
     fsum,
     fsum_sql,
 )
+from onehouse_demos_spark.session import is_tiny
 
 #: "high-value open order" predicate shared by customers_with_big_orders
 #: and its anti-join complement customers_without_orders — one source of
@@ -54,10 +55,8 @@ def fan_out(df: DataFrame) -> DataFrame:
     true no-op, not a full-table shuffle. Only worth it where per-row
     CPU dwarfs the row's shuffle bytes (tokenizing, hashing, vector
     math) — measured per call site, see OPTIMIZATION_r14.md."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        df = df.repartition(n)
+    if is_tiny(df):
+        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     return df
 
 

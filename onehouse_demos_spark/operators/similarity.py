@@ -19,61 +19,24 @@ decimals with deterministic id tie-breaks.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+from contextlib import nullcontext
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onehouse_demos_spark.functions.quantize import fquant
-
-#: r15 (VERDICT r14 ask #5): the Lloyd training loops are 2×iters
-#: sequential collect-jobs over tiny frames; with AQE on, every shuffle
-#: in each round's plan becomes a separately submitted query-stage job
-#: plus a re-optimization pass — pure per-round driver overhead when
-#: the whole round's data is a few MB. Scoped AQE-off collapses each
-#: round back to ONE job. Guarded like fan_out: the conf flips only
-#: when the training input's scan parallelism is below the cluster
-#: default (single-row-group local files ⇒ 1-task scans); at 100 TB
-#: (thousands of splits) the guard keeps AQE on, where its coalescing
-#: and skew handling matter. Flag exists so tools/ab_ann_lloyd.py can
-#: interleave-A/B both variants in one JVM.
-_LLOYD_COALESCE = True
+from onehouse_demos_spark.session import is_tiny, tiny_scope
 
 
-@contextmanager
-def _lloyd_scope(df: DataFrame):
-    """Scoped spark.sql.adaptive.enabled=false around a Lloyd training
-    loop (restored in finally; results are AQE-independent — the
-    aggregations are deterministic and every round's centroids are
-    rounded to the 6-decimal grid)."""
-    spark = df.sparkSession
-    tiny = (
-        _LLOYD_COALESCE
-        and df.rdd.getNumPartitions()
-        < spark.sparkContext.defaultParallelism
-    )
-    if not tiny:
-        yield
-        return
-    # AQE-off ALONE measured 37% slower here (tools/ab_ann_lloyd.py:
-    # the tiny per-round shuffles then run at the session's full
-    # shuffle-partition count). Pair it with 1-partition shuffles —
-    # exactly the partition count AQE's coalescer picks for these
-    # byte-sized exchanges, minus the per-stage job round-trips. Safe
-    # under the tiny guard above; results are partitioning-independent
-    # (deterministic aggregates on the 6-decimal grid).
-    keys = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": "1",
-    }
-    prev = {k: spark.conf.get(k) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
+def _tiny_if_small(df: DataFrame):
+    """`session.tiny_scope(df)` when `is_tiny(df)`, else `(df,)` as is.
+
+    Lloyd training and the ANN build/insert chains are sequences of
+    small dependent jobs; on tiny inputs the scope runs each as one job
+    (no AQE stage round-trips, 1-partition shuffles). Results do not
+    depend on the partitioning: the aggregations are deterministic and
+    every round's centroids are rounded to the 6-decimal grid."""
+    return tiny_scope(df) if is_tiny(df) else nullcontext((df,))
 
 
 def load_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -504,22 +467,22 @@ def train_ivf_centroids(
     task, and only k×dims scalars return to the driver per round.
     Deterministic: seeds are the k lowest-md5 vectors, and the mean
     aggregation is per-(cluster, dim)."""
-    vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    if sample_fraction is not None:
-        # deterministic hash sample — reproducible across runs/shards
-        vecs = vecs.filter(
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 4), 16, 10)
-            .cast("long") % F.lit(int(1 / sample_fraction)) == 0
+    with _tiny_if_small(emb) as (emb,):
+        vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
+        if sample_fraction is not None:
+            # deterministic hash sample — reproducible across runs/shards
+            vecs = vecs.filter(
+                F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 4), 16, 10)
+                .cast("long") % F.lit(int(1 / sample_fraction)) == 0
+            )
+        seeds = (
+            vecs.withColumn("h", F.md5(F.col("vec_id").cast("string")))
+            .orderBy("h", "vec_id")
+            .limit(k)
+            .select("v")
+            .collect()
         )
-    seeds = (
-        vecs.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(k)
-        .select("v")
-        .collect()
-    )
-    centroids = [list(r.v) for r in seeds]
-    with _lloyd_scope(vecs):
+        centroids = [list(r.v) for r in seeds]
         for _ in range(iters):
             centroids = _lloyd_round(vecs, centroids)
     return centroids
@@ -529,7 +492,7 @@ def _lloyd_round(
     vecs: DataFrame, centroids: list[list[float]]
 ) -> list[list[float]]:
     """One Lloyd iteration: assign → per-(cid, pos) mean → driver-side
-    array assembly (r14), empty cells carry the previous centroid."""
+    array assembly, empty cells carry the previous centroid."""
     assigned = _assign_to_centroids(vecs, centroids)
     comps = assigned.select(
         "cid", F.posexplode(F.col("v")).alias("pos", "x")
@@ -540,12 +503,11 @@ def _lloyd_round(
     # inputs to the next round instead of compounding last-ulp
     # summation-order drift. Quality impact is nil (1e-6 abs on
     # O(1) components).
-    # r14: collect the k×dims (cid, pos, m) scalars directly and
-    # assemble per-cid arrays on the driver — posexplode emits the
-    # full dense 0..dims-1 position range for every assigned
-    # vector, so this is exactly the second-level
-    # array_sort(collect_list(struct(pos, m))) groupBy it replaces,
-    # minus one shuffle + one AQE stage per Lloyd round.
+    # Collect the k×dims (cid, pos, m) scalars directly and assemble
+    # per-cid arrays on the driver — posexplode emits the full dense
+    # 0..dims-1 position range for every assigned vector, so no
+    # second-level collect_list groupBy (one more shuffle per round)
+    # is needed.
     rows = (
         comps.groupBy("cid", "pos")
         .agg(F.round(F.avg("x"), 6).alias("m"))
@@ -692,7 +654,7 @@ def _subvec_frame(vecs: DataFrame, m: int, dims: int | None = None) -> DataFrame
     """(vec_id, v) → (vec_id, sub, sv): M subvectors per vector, built
     with slice+explode in one map stage (no shuffle). Pass `dims` when
     the caller already knows it (index meta, an earlier probe) to skip
-    the one-row probe JOB this otherwise runs (r14)."""
+    the one-row probe JOB this otherwise runs."""
     d = dims if dims is not None else len(vecs.select("v").first().v)
     sd = d // m
     subs = F.array(*[
@@ -755,34 +717,33 @@ def train_pq_codebooks(
     """Train all M subspace codebooks in parallel (one job per Lloyd
     round covers every subspace). Deterministic seeding: per subspace,
     the K subvectors with the lowest md5(vec_id). `dims`, when known
-    by the caller, skips the one-row dims probe job (r14)."""
-    vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    subvecs = _subvec_frame(vecs, m, dims=dims).persist()
-    try:
-        from pyspark.sql import Window
+    by the caller, skips the one-row dims probe job."""
+    from pyspark.sql import Window
 
-        w = Window.partitionBy("sub").orderBy(
-            F.md5(F.col("vec_id").cast("string")), "vec_id"
-        )
-        seed_rows = (
-            subvecs.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select("sub", (F.col("rk") - 1).alias("cid"), "sv")
-            .collect()
-        )
-        books: list[list[list[float]]] = [
-            [None] * k for _ in range(m)  # type: ignore[list-item]
-        ]
-        for r in seed_rows:
-            books[r.sub][r.cid] = list(r.sv)
-        with _lloyd_scope(subvecs):
+    with _tiny_if_small(emb) as (emb,):
+        vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
+        subvecs = _subvec_frame(vecs, m, dims=dims).persist()
+        try:
+            w = Window.partitionBy("sub").orderBy(
+                F.md5(F.col("vec_id").cast("string")), "vec_id"
+            )
+            seed_rows = (
+                subvecs.withColumn("rk", F.row_number().over(w))
+                .filter(F.col("rk") <= k)
+                .select("sub", (F.col("rk") - 1).alias("cid"), "sv")
+                .collect()
+            )
+            books: list[list[list[float]]] = [
+                [None] * k for _ in range(m)  # type: ignore[list-item]
+            ]
+            for r in seed_rows:
+                books[r.sub][r.cid] = list(r.sv)
             for _ in range(iters):
                 assigned = _pq_assign(subvecs, books)
-                # r14: collect the M×K×(D/M) (sub, cid, pos, mu)
-                # scalars directly and assemble per-codeword arrays on
-                # the driver — same dense-position argument as
-                # train_ivf_centroids, minus one shuffle + one AQE
-                # stage per Lloyd round.
+                # Collect the M×K×(D/M) (sub, cid, pos, mu) scalars
+                # directly and assemble per-codeword arrays on the
+                # driver — same dense-position argument as
+                # train_ivf_centroids, one shuffle per Lloyd round.
                 rows = (
                     assigned.select(
                         "sub", "cid", F.posexplode("sv").alias("pos", "x")
@@ -803,9 +764,9 @@ def train_pq_codebooks(
                     ]
                     for s in range(m)
                 ]
-        return books
-    finally:
-        subvecs.unpersist()
+            return books
+        finally:
+            subvecs.unpersist()
 
 
 def pq_encode(emb: DataFrame, codebooks) -> DataFrame:

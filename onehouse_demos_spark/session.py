@@ -11,8 +11,11 @@ master, which callers override via `SPARK_MASTER` or the builder.
 from __future__ import annotations
 
 import os
+import uuid
+from contextlib import contextmanager
+from typing import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Confs that matter at 100 TB as much as on a laptop. AQE handles
 #: runtime shuffle-partition coalescing and skew-join splitting so we
@@ -77,3 +80,58 @@ def session_builder(
 def get_spark(**kwargs) -> SparkSession:
     """Get-or-create the engine session."""
     return session_builder(**kwargs).getOrCreate()
+
+
+#: Confs of the tiny-job session: AQE off, so a plan runs as ONE job
+#: instead of one submitted job plus a re-optimization per query stage,
+#: and 1-partition shuffles, the count AQE's coalescer would pick for
+#: byte-sized exchanges anyway.
+TINY_CONFS: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "1",
+}
+
+
+def is_tiny(df: DataFrame) -> bool:
+    """True when `df` plans fewer partitions than the cluster default
+    parallelism: single-row-group local files and small batches, where
+    AQE's per-stage job round-trips cost more than the work. At scale
+    (thousands of splits) it is False, so AQE's coalescing and skew
+    handling stay on."""
+    sc = df.sparkSession.sparkContext
+    return df.rdd.getNumPartitions() < sc.defaultParallelism
+
+
+@contextmanager
+def tiny_scope(*dfs: DataFrame) -> Iterator[tuple[DataFrame, ...]]:
+    """Yield `dfs` re-bound into a fresh clone of their session that
+    runs with `TINY_CONFS`.
+
+    The clone copies the caller's whole runtime conf (time zone,
+    nanosAsLong, ...) at entry and shares its SparkContext and
+    CacheManager, so persisted inputs still hit their cache. The
+    caller's conf is never touched: the engine plans writes from
+    concurrent threads, which would observe a flip on the shared
+    session. Frames move across through uniquely named global temp
+    views, dropped on exit without uncaching what they point at.
+    Frames already on a tiny session are yielded unchanged.
+    """
+    spark = dfs[0].sparkSession
+    if all(spark.conf.get(k) == v for k, v in TINY_CONFS.items()):
+        yield dfs
+        return
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for key, value in TINY_CONFS.items():
+        clone.conf.set(key, value)
+    names: list[str] = []
+    try:
+        for df in dfs:
+            names.append(f"__oh_tiny_{uuid.uuid4().hex}")
+            df.createGlobalTempView(names[-1])
+        yield tuple(clone.table(f"global_temp.{n}") for n in names)
+    finally:
+        # The session catalog's drop, not `spark.catalog`'s: the latter
+        # also uncaches the view's plan, i.e. a persisted input.
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for name in names:
+            catalog.dropGlobalTempView(name)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from onehouse_demos_spark.session import tiny_scope
 from onehouse_demos_spark.tables.manifest import Manifest
 from onehouse_demos_spark.tables.timeline import FileMeta, Instant, Timeline
 
@@ -181,66 +182,22 @@ def _footer_col_stats(pf) -> dict:
     return out
 
 
-#: r14 measurement toggle for the write-path workload persist.
-_WRITE_PERSIST = True
-
-#: r15 measurement toggle for the scalar-collect AQE bypass below
-#: (tools/ab_build_scalar.py interleaves both variants in one JVM).
-_SCALAR_COLLECT = True
-
-
 def _scalar_rows(df: DataFrame) -> list:
     """Collect a METADATA-SCALE frame (scalar aggregates, pruned file
-    lists, distinct partition values) as ONE Spark job instead of the
-    2-4 query-stage jobs AQE submits for the same plan.
+    lists, distinct partition values) as ONE Spark job, in
+    `session.tiny_scope`, instead of the 2-4 query-stage jobs AQE
+    submits for the same plan.
 
-    Why: the write path's per-commit bookkeeping collects (candidate
-    key-range aggregate, probe-join file list, overwrite partition
-    set) return a handful of rows, but under AQE every Exchange in
-    their plans becomes a separately submitted stage job plus a
-    re-optimization pass — measured 4 jobs for one candidate
-    aggregate, 3 for one probe (plans/r15/build_jobs_before.txt).
-    AQE buys nothing on these queries at ANY scale: their outputs are
-    scalar/metadata-sized, the partial aggregation before the single-
-    partition exchange is already distributed, and there is no join
-    skew to split (the probe variant is routed here only when its key
-    side is broadcast-sized — above BROADCAST_KEY_ROWS the caller
+    The write path's per-commit bookkeeping collects (candidate
+    key-range aggregate, probe-join file list, overwrite partition set)
+    return a handful of rows; AQE buys nothing on them at any scale:
+    the partial aggregation before the single-partition exchange is
+    already distributed, and the probe variant is routed here only when
+    its key side is broadcast-sized (above BROADCAST_KEY_ROWS the caller
     keeps the AQE path for the shuffle join).
-
-    Why not spark.conf.set: the session conf is process-global and the
-    three-table build pipeline plans layout-sensitive write jobs from
-    CONCURRENT threads (mutations._build) — a scoped flip could be
-    observed by another thread's write planning and change its file
-    layout. Instead the collect runs in a dedicated `newSession()`
-    (isolated SQLConf, AQE off; shared SparkContext, shared
-    CacheManager so the caller's persisted frames still hit) through a
-    uniquely named global temp view. No global state is ever mutated.
     """
-    spark = df.sparkSession
-    if not _SCALAR_COLLECT:
-        return df.collect()
-    scalar = getattr(spark, "_oh_scalar_session", None)
-    if scalar is None:
-        scalar = spark.newSession()
-        scalar.conf.set("spark.sql.adaptive.enabled", "false")
-        # newSession() starts from the context's SparkConf, not the
-        # parent's runtime conf — carry the two runtime settings that
-        # affect these plans' execution.
-        for key in (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.legacy.parquet.nanosAsLong",
-        ):
-            try:
-                scalar.conf.set(key, spark.conf.get(key))
-            except Exception:
-                pass
-        spark._oh_scalar_session = scalar
-    name = f"__oh_scalar_{uuid.uuid4().hex}"
-    df.createOrReplaceGlobalTempView(name)
-    try:
-        return scalar.table(f"global_temp.{name}").collect()
-    finally:
-        spark.catalog.dropGlobalTempView(name)
+    with tiny_scope(df) as (tiny,):
+        return tiny.collect()
 
 
 def _harvest_one(abs_path: str, base_path: str, kind: str) -> FileMeta:
@@ -1015,20 +972,19 @@ class LakehouseTable:
             sort_cols = [c for c in (PP_COL if pp is not None else None, KEY_COL)
                          if c is not None and c in writer.columns]
             if sort_cols:
-                # r14: persist the merge result for the duration of the
+                # Persist the merge result for the duration of the
                 # write — repartitionByRange runs a range-boundary
                 # SAMPLING job over its input before the write job, so
                 # an unpersisted merge plan (carried files + anti-join +
-                # union on the upsert/delete path) executed TWICE per
-                # commit. The frame is write-amplification-bounded
+                # union on the upsert/delete path) would execute TWICE
+                # per commit. The frame is write-amplification-bounded
                 # (rewritten files + batch, ~approx_rows), the same
                 # frame Hudi caches as its write workload
                 # (MEMORY_AND_DISK: spills rather than OOMs at scale).
                 # Unpersisted in the finally below once the files and
                 # their footer stats are on disk.
-                if _WRITE_PERSIST:
-                    writer = writer.persist()
-                    persisted = writer
+                writer = writer.persist()
+                persisted = writer
                 writer = writer.repartitionByRange(
                     n, *[F.col(c) for c in sort_cols]
                 ).sortWithinPartitions(*sort_cols)

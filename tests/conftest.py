@@ -30,11 +30,11 @@ def _full_tier_ids() -> set[str]:
 
 
 def pytest_collection_modifyitems(config, items):
-    """r15 (VERDICT r14 ask #1): apply the `full` marker to the
-    measured heavy tail listed in tests/full_tier.txt. Data-driven so
-    the tier can be regenerated from a --durations=0 log without
-    editing dozens of test files; pytest.ini's `-m "not full"` addopts
-    deselect the tier from the default run."""
+    """Apply the `full` marker to the measured heavy tail listed in
+    tests/full_tier.txt. Data-driven so the tier can be regenerated
+    from a --durations=0 log without editing dozens of test files;
+    pytest.ini's `-m "not full"` addopts deselect the tier from the
+    default run."""
     tier = _full_tier_ids()
     if not tier:
         return
@@ -44,6 +44,19 @@ def pytest_collection_modifyitems(config, items):
             nodeid = nodeid.removeprefix("tests/")
         if nodeid in tier:
             item.add_marker(pytest.mark.full)
+
+
+def pytest_terminal_summary(terminalreporter):
+    n = sum(
+        1
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("full")
+    )
+    if n:
+        terminalreporter.write_line(
+            f'{n} full-tier tests deselected; run -m "full or not full" '
+            "to include them"
+        )
 
 
 @pytest.fixture(scope="session")
