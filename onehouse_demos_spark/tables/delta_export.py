@@ -17,10 +17,10 @@ Semantics:
 
 - **Snapshot personality.** Version N of the Delta log lists exactly
   the table's live BASE files at sync time — plus, for MOR tables
-  with live log content (r14), personality-owned COW rewrite files:
+  with live log content, personality-owned COW rewrite files:
   the Delta protocol has no row-level delete/append vocabulary below
   deletion vectors, so the sync rewrites ONLY the log-bearing file
-  groups (group-pruned, tables/rt_delta.py) into digest-named
+  groups (group-pruned, tables/personality.py) into digest-named
   `rtcow-*` parquet holding the merged winners and swaps them in for
   the stale candidate base files. The personality then serves the
   engine's real-time merge (`_rt`) for updates, inserts and deletes
@@ -61,11 +61,11 @@ action); building a version touches only the manifest plus one
 `os.stat` per *newly added* file (size is cached back into the log,
 never re-stat'ed).
 
-Concurrency + durability (r13, VERDICT r12 #1): every byte the
+Concurrency + durability: every byte the
 personality WRITES — version JSON, checkpoint parquet,
 `_last_checkpoint`, clean's deletes — flows through the
 ObjectStoreClient S3 contract (tables/object_publish.py), the same
-seam the Hudi personality adopted in r12. The version file is the
+seam the Hudi personality publishes through. The version file is the
 commit point: `PutObject + If-None-Match: *`, so concurrent syncers
 serialize on version numbers exactly like Delta's own `_delta_log`
 protocol requires and readers can never observe a torn or clobbered
@@ -88,14 +88,20 @@ import uuid
 from urllib.parse import quote, unquote
 
 from onehouse_demos_spark.tables.object_publish import Publisher, publisher
-from onehouse_demos_spark.tables.rt_delta import (
-    publish_group_rewrite,
+from onehouse_demos_spark.tables.personality import (
+    assert_no_tombstones,
+    harvest,
+    partition_columns,
+    partition_values,
+    read_mapped,
     rewrite_digest,
     rt_group_rewrite,
+    stage_files,
+    sweep_owned,
+    to_physical,
 )
 from onehouse_demos_spark.tables.table import (
     DELETED_COL,
-    HIVE_DEFAULT_PARTITION,
     PP_COL,
     LakehouseTable,
 )
@@ -257,38 +263,6 @@ def _read_log_state(
     return (versions[-1] if versions else ckpt), live, meta, tombstones
 
 
-def _partition_columns(table: LakehouseTable) -> list[str]:
-    """Partition columns the Delta personality declares: the physical
-    `partition_by` source columns (identity partitioning, the only
-    kind the on-disk layout encodes losslessly). Derived
-    `partition_expr` tables export unpartitioned — Delta has no
-    writer-independent way to declare an expression-partitioned spec,
-    and the expression's source value is not recoverable per file."""
-    return list(table.config.partition_by or [])
-
-
-def _partition_values(fm, cols: list[str]) -> dict[str, str | None]:
-    """Decode a file's hive partition path into per-column Delta
-    `partitionValues` (string-serialized per PROTOCOL.md; NULL
-    partitions — hive `__HIVE_DEFAULT_PARTITION__` — map to JSON
-    null). Multi-column paths join with '/' on the write side
-    (`table._partition_path_expr`), so the decode is a split."""
-    if not cols:
-        return {}
-    parts = (fm.partition or "").split("/")
-    if len(parts) != len(cols):
-        raise RuntimeError(
-            f"file {fm.path}: partition path {fm.partition!r} does not "
-            f"decode into {len(cols)} column value(s) {cols} — a "
-            "partition value containing '/' cannot be exported as a "
-            "Delta partition spec"
-        )
-    return {
-        c: (None if p == HIVE_DEFAULT_PARTITION else p)
-        for c, p in zip(cols, parts)
-    }
-
-
 def _schema_string(table: LakehouseTable, last_meta: dict | None = None) -> str:
     """Delta's schemaString IS the Spark StructType JSON format — the
     one part of the protocol Spark defined. Drop the on-disk partition
@@ -399,65 +373,6 @@ def _file_stats_json(fm) -> str:
     return json.dumps(out)
 
 
-def _assert_no_tombstones(files) -> None:
-    for fm in files:
-        st = (fm.col_stats or {}).get(DELETED_COL)
-        if st is not None and st[1] is True:
-            raise RuntimeError(
-                f"live base file {fm.path} carries _oh_is_deleted=true "
-                "rows (un-compacted MOR delete); a Delta personality "
-                "over raw base files would resurrect them. Run "
-                "compaction first, or export a materialized snapshot "
-                "(interop.export_snapshot)."
-            )
-
-
-def _assert_no_log_tombstones(table) -> None:
-    """Guard for base-files-only personality modes: MOR deletes live
-    in LOG files, which base-file stats never see — serving raw base
-    files would resurrect the deleted rows. Since r13/r14 the Delta
-    and Iceberg exporters export the log delta instead of refusing;
-    the remaining caller is the HUDI personality's plain (non-rt,
-    non-compacting) mode, whose read-optimized contract keeps the
-    refusal."""
-    for fm in table.manifest.live_files(include_logs=True):
-        if fm.kind != "log":
-            continue
-        st = (fm.col_stats or {}).get(DELETED_COL)
-        if st is not None and st[1] is True:
-            raise RuntimeError(
-                f"live log file {fm.path} carries un-compacted delete "
-                "tombstones; a base-files-only personality would serve "
-                "the deleted rows. Run compaction first."
-            )
-
-
-def _rtcow_file_meta(table: LakehouseTable, rel_path: str):
-    """Re-harvest a previously-published rewrite file (digest-stable
-    name found in the synced state): footer rows/stats + hive
-    partition string, so a spec-change re-add emits faithful
-    stats/partitionValues without restaging."""
-    import pyarrow.parquet as pq
-
-    from onehouse_demos_spark.tables.table import _footer_col_stats
-    from onehouse_demos_spark.tables.timeline import FileMeta
-
-    abs_path = os.path.join(table.base_path, rel_path)
-    pf = pq.ParquetFile(abs_path)
-    segs = [
-        unquote(s.split("=", 1)[1])
-        for s in rel_path.split("/")[:-1]
-        if "=" in s
-    ]
-    return FileMeta(
-        path=rel_path,
-        partition="/".join(segs) if segs else None,
-        rows=pf.metadata.num_rows,
-        kind="base",
-        col_stats=_footer_col_stats(pf),
-    )
-
-
 def sync_delta_log(
     table: LakehouseTable,
     now_ms: int | None = None,
@@ -478,22 +393,20 @@ def sync_delta_log(
     """
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     files = table.manifest.live_files(include_logs=False)
-    _assert_no_tombstones(files)
+    assert_no_tombstones(files)
     log_dir = _log_dir(table)
     pub = publisher(table.base_path, store)
     last_version, synced, last_meta, _ = _read_log_state(log_dir, pub)
-    part_cols = _partition_columns(table)
+    part_cols = partition_columns(table)
 
-    # Live MOR log content (r14, VERDICT r13 #3): Delta's protocol has
-    # no row-level delete/append vocabulary below deletion vectors, so
-    # the personality takes the COW lane — rewrite ONLY the
-    # log-bearing file groups (group-pruned, tables/rt_delta.py) into
-    # personality-owned `rtcow-<digest>-*` parquet and swap them in
+    # Live MOR log content: Delta's protocol has no row-level
+    # delete/append vocabulary below deletion vectors, so the
+    # personality rewrites ONLY the log-bearing file groups into
+    # personality-owned `rtcow-<digest>-*` parquet and swaps them in
     # for the stale candidate base files. Digest-stable names make an
     # unchanged log tail a no-op re-sync (the published files are
     # reused by name); any new log write changes the digest, removes
-    # the old rewrite files from the log and adds fresh ones. Until
-    # r14 this sync REFUSED log tombstones and served updates stale.
+    # the old rewrite files from the log and adds fresh ones.
     rewrite = rt_group_rewrite(table)
     rewrite_fms: list = []
     if rewrite is not None:
@@ -507,40 +420,20 @@ def sync_delta_log(
             if os.path.basename(unquote(p)).startswith(prefix)
         )
         if existing:
-            rewrite_fms = [
-                _rtcow_file_meta(table, rel) for rel in existing
-            ]
+            rewrite_fms = [harvest(table, rel) for rel in existing]
         else:
-            # stage under PHYSICAL column names, matching the base
-            # files, so the published column mapping resolves every
-            # data file the same way after a RENAME (a logical-named
-            # rewrite file would null-fill the renamed column)
-            from pyspark.sql import functions as F
-
-            from onehouse_demos_spark.tables.table import (
-                PHYSICAL_META_KEY,
-            )
-
-            merged = rewrite["merged"]
-            schema = table._latest_schema()
-            pmap = {
-                f.name: (f.metadata or {}).get(PHYSICAL_META_KEY, f.name)
-                for f in (schema.fields if schema is not None else [])
-            }
-            if any(pmap.get(c, c) != c for c in merged.columns):
-                merged = merged.select(
-                    *[
-                        F.col(c).alias(pmap.get(c, c))
-                        for c in merged.columns
-                    ]
+            # partition columns cannot be renamed, so `part_cols` are
+            # already their physical names
+            rewrite_fms = [
+                fm
+                for fm, _size in stage_files(
+                    table,
+                    to_physical(rewrite["merged"], table._latest_schema()),
+                    part_cols,
+                    pub,
+                    f"rtcow-{digest}",
                 )
-            rewrite_fms = publish_group_rewrite(
-                table,
-                merged,
-                [pmap.get(c, c) for c in part_cols],
-                pub,
-                digest,
-            )
+            ]
 
     # Delta-encode each live file path (URL-encoded, '/' and '=' kept
     # so hive-style segments stay readable — matches delta-spark).
@@ -633,7 +526,7 @@ def sync_delta_log(
             {
                 "add": {
                     "path": path,
-                    "partitionValues": _partition_values(fm, part_cols),
+                    "partitionValues": partition_values(fm, part_cols),
                     "size": size,
                     "modificationTime": now_ms,
                     "dataChange": True,
@@ -877,8 +770,8 @@ def clean_delta_log(
     (`rewrite_grace_ms`, default the remove-retention window): an
     unmentioned rewrite file younger than the guard may belong to a
     concurrent in-flight sync that has published its files but not yet
-    committed its version JSON — deleting it would corrupt that
-    sync's committed adds (r14 review)."""
+    committed its version JSON; deleting it would corrupt that sync's
+    committed adds."""
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     log_dir = _log_dir(table)
     pub = publisher(table.base_path, store)
@@ -908,13 +801,11 @@ def clean_delta_log(
             and int(n.split(".", 1)[0]) < ckpt
         ):
             pub.delete(os.path.join(log_dir, n))
-    # Personality-owned COW rewrite files (`rtcow-*`, r14) whose every
+    # Personality-owned COW rewrite files (`rtcow-*`) whose every
     # reference fell below the checkpoint horizon are unreachable by
-    # any retained replay — physically remove them (the expire analog
-    # of iceberg_export.expire_iceberg_snapshots; engine files are
-    # never candidates because only rtcow- names qualify). A file
-    # mentioned by ANY retained log object — checkpoint state or a
-    # surviving JSON's add/remove — is conservatively kept.
+    # any retained replay: physically remove them. A file mentioned by
+    # ANY retained log object (checkpoint state or a surviving JSON's
+    # add/remove) is conservatively kept.
     mentioned: set[str] = set()
     for n in _list_log(log_dir, pub):
         if n.endswith(".json") and n[:-5].isdigit():
@@ -936,23 +827,15 @@ def clean_delta_log(
                 continue
             mentioned.update(unquote(p) for p in live)
             mentioned.update(unquote(p) for p in tombs)
-    for dirpath, _dirs, fnames in os.walk(table.base_path):
-        if _LOG_DIR in dirpath.split(os.sep):
-            continue
-        for fn in fnames:
-            if not (fn.startswith("rtcow-") and fn.endswith(".parquet")):
-                continue
-            rel = os.path.relpath(
-                os.path.join(dirpath, fn), table.base_path
-            ).replace(os.sep, "/")
-            if rel in mentioned:
-                continue
-            mt = pub.mtime_ms(os.path.join(table.base_path, rel))
-            if mt is not None and now_ms - mt < rewrite_grace_ms:
-                continue  # possibly an in-flight sync's publish
-            pub.delete(os.path.join(table.base_path, rel))
-            removed += 1
-    return removed
+    return removed + sweep_owned(
+        table,
+        pub,
+        lambda rel: rel.rsplit("/", 1)[-1].startswith("rtcow-")
+        and rel.endswith(".parquet"),
+        mentioned,
+        now_ms,
+        rewrite_grace_ms,
+    )
 
 
 def delta_pruned_files(
@@ -1001,8 +884,6 @@ def read_delta_snapshot(
     )
     if last_version < 0:
         raise FileNotFoundError(f"no _delta_log under {delta_path}")
-    from urllib.parse import unquote
-
     if partition_predicate:
         declared = list((meta or {}).get("partitionColumns") or [])
         for col in partition_predicate:
@@ -1023,31 +904,15 @@ def read_delta_snapshot(
     paths = [os.path.join(delta_path, unquote(p)) for p in live if p in keep]
     import pyspark.sql.types as T
 
+    # Column mapping (mode=name): each logical field resolves through
+    # delta.columnMapping.physicalName, its on-file name.
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    if not paths:
-        return spark.createDataFrame([], schema)
-    # Column mapping (mode=name): a real Delta reader resolves each
-    # logical field through delta.columnMapping.physicalName — renamed
-    # columns keep their original on-file name.
-    phys = {
-        f["name"]: (f.get("metadata") or {}).get(
-            "delta.columnMapping.physicalName", f["name"]
-        )
-        for f in json.loads(meta["schemaString"])["fields"]
-    }
-    # Read with the metaData schema (physical names), exactly like a
-    # real Delta client: files written BEFORE a schema evolution lack
-    # the newer columns, and a bare parquet read would silently drop
-    # them (first-file schema wins) — the explicit schema resolves by
-    # name and fills missing columns with null.
-    reader_schema = T.StructType(
-        [T.StructField(phys[f.name], f.dataType, True) for f in schema.fields]
+    return read_mapped(
+        spark,
+        paths,
+        schema.fields,
+        {
+            f.name: f.metadata.get("delta.columnMapping.physicalName", f.name)
+            for f in schema.fields
+        },
     )
-    df = spark.read.schema(reader_schema).parquet(*paths)
-    if any(phys[n] != n for n in phys):
-        from pyspark.sql import functions as F
-
-        df = df.select(
-            *[F.col(phys[f.name]).alias(f.name) for f in schema.fields]
-        )
-    return df

@@ -98,12 +98,14 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from onehouse_demos_spark.tables.delta_export import (
-    _assert_no_tombstones,
-    _partition_columns,
-    _partition_values,
-)
 from onehouse_demos_spark.tables.object_publish import Publisher, default_store
+from onehouse_demos_spark.tables.personality import (
+    assert_no_log_tombstones,
+    assert_no_tombstones,
+    partition_columns,
+    partition_values,
+    read_mapped,
+)
 from onehouse_demos_spark.tables.table import (
     DELETED_COL,
     HIVE_DEFAULT_PARTITION,
@@ -154,6 +156,29 @@ def _avro_type(dt: T.DataType):
     # containers/structs: string-encode (personality schema is
     # informational; the parquet footer remains the source of truth)
     return "string"
+
+
+#: Avro primitive -> Spark type, the inverse of `_AVRO_PRIMITIVES`
+#: (short and byte widen to int one-way).
+_SPARK_OF_AVRO = {
+    v: k()
+    for k, v in _AVRO_PRIMITIVES.items()
+    if k not in (T.ShortType, T.ByteType)
+}
+
+
+def _spark_of_avro(at) -> T.DataType | None:
+    """Inverse of `_avro_type`; None for an Avro type it never writes
+    (a foreign writer's records, enums, other logical types)."""
+    if isinstance(at, dict):
+        lt = at.get("logicalType")
+        if lt == "decimal":
+            return T.DecimalType(at["precision"], at["scale"])
+        return {
+            "date": T.DateType(),
+            "timestamp-micros": T.TimestampType(),
+        }.get(lt)
+    return _SPARK_OF_AVRO.get(at)
 
 
 def _avro_schema(schema: T.StructType, name: str) -> str:
@@ -455,11 +480,7 @@ def _mor_log_guard(table: LakehouseTable, compact_mor: bool) -> None:
 
         run_compaction(table)
         return
-    from onehouse_demos_spark.tables.delta_export import (
-        _assert_no_log_tombstones,
-    )
-
-    _assert_no_log_tombstones(table)
+    assert_no_log_tombstones(table)
 
 
 #: rt-mode log-sync size gate: the driver encodes the un-compacted
@@ -554,8 +575,8 @@ def _sync_hudi_metadata_locked(
         for f in table.manifest.live_files(include_logs=False)
         if f.kind == "base"
     ]
-    _assert_no_tombstones(live)
-    part_cols = _partition_columns(table)
+    assert_no_tombstones(live)
+    part_cols = partition_columns(table)
     hoodie = _hoodie_dir(table)
     os.makedirs(hoodie, exist_ok=True)
     if pub is None:
@@ -653,7 +674,7 @@ def _sync_hudi_metadata_locked(
         known[p]["partition"] for p in known if p not in set(removed)
     }
     for fm in adds:
-        values = _partition_values(fm, part_cols)
+        values = partition_values(fm, part_cols)
         partition = _partition_rel_dir(part_cols, values)
         file_id = _file_id_for(fm.path)
         hudi_name = f"{file_id}_{_WRITE_TOKEN}_{instant}.parquet"
@@ -851,7 +872,7 @@ def _sync_rt_logs(
     for p in new_paths:
         fm = live_logs[p]
         partition = _partition_rel_dir(
-            part_cols, _partition_values(fm, part_cols)
+            part_cols, partition_values(fm, part_cols)
         )
         part_groups = groups.get(partition)
         if not part_groups:
@@ -3227,6 +3248,49 @@ def _instant_path(hoodie: str, instant: str, action: str) -> str:
     return os.path.join(hoodie, "archived", f"{instant}.{action}")
 
 
+def _base_fields(
+    spark: SparkSession,
+    base_path: str,
+    paths: list[str],
+    as_of: str | None = None,
+) -> list[T.StructField]:
+    """The fields a Hudi client's snapshot query reads base slices
+    with: the schema the newest completed commit (at or before `as_of`)
+    records in `extraMetadata.schema`, so a file written before an ADD
+    COLUMN null-fills it and a widened column reads at its new type.
+    Where the newest slice's footer type maps onto the recorded Avro
+    type, the footer type is kept: `_avro_type` records containers and
+    timestamp_ntz as string and short/byte as int. Without a recorded
+    schema, the newest footer."""
+    # `<fileId>_<token>_<instant>.parquet`: the newest instant sorts last
+    newest = max(paths, key=lambda p: os.path.basename(p).rsplit("_", 1)[1])
+    footer = spark.read.parquet(newest).schema
+    hoodie = _hoodie_dir(base_path)
+    recorded = None
+    for instant, action in reversed(_completed_instants(hoodie)):
+        if as_of is not None and instant > as_of:
+            continue
+        with open(_instant_path(hoodie, instant, action)) as fh:
+            raw = (json.load(fh).get("extraMetadata") or {}).get("schema")
+        if raw and raw != "{}":
+            recorded = json.loads(raw)["fields"]
+            break
+    if recorded is None:
+        return footer.fields
+    by_name = {f.name: f.dataType for f in footer.fields}
+    fields = []
+    for f in recorded:
+        at = f["type"]
+        if isinstance(at, list):
+            at = next((a for a in at if a != "null"), "null")
+        ft = by_name.get(f["name"])
+        inv = _spark_of_avro(at)
+        if ft is not None and (inv is None or _avro_type(ft) == at):
+            inv = ft
+        fields.append(T.StructField(f["name"], inv or T.StringType(), True))
+    return fields
+
+
 def hudi_live_files(
     base_path: str,
     partitions: list[str] | None = None,
@@ -3523,12 +3587,17 @@ def read_hudi_rt(
         for k, (_, rel) in groups.items()
         if k in logs
     )
+    fields = _base_fields(
+        spark, base_path, untouched_paths + logged_paths, as_of
+    )
     untouched_df = (
-        spark.read.parquet(*untouched_paths) if untouched_paths else None
+        read_mapped(spark, untouched_paths, fields, {})
+        if untouched_paths
+        else None
     )
     merged = None
     if logged_paths:
-        logged_base = spark.read.parquet(*logged_paths)
+        logged_base = read_mapped(spark, logged_paths, fields, {})
         records: list[dict] = []
         for key in sorted(logs):
             for _ver, rel in logs[key]:
@@ -3626,30 +3695,18 @@ def read_hudi_snapshot(
                 return not (ent["max"] < lo or ent["min"] > hi)
 
             kept = [(p, n) for p, n in pairs if _keep(p, n)]
-            if not kept and pairs:
-                # pruned to ZERO files: keep the table schema (one
-                # footer-only read of a listed file) so downstream
-                # filters still resolve columns
-                p0, n0 = pairs[0]
-                schema_path = (
-                    os.path.join(base_path, n0)
-                    if p0 == _MDT_ROOT_PARTITION
-                    else os.path.join(base_path, p0, n0)
-                )
-                df = spark.createDataFrame(
-                    [], spark.read.parquet(schema_path).schema
-                )
-                meta_cols = [
-                    c for c in df.columns if c.startswith("_hoodie_")
-                ]
-                return df.drop(*meta_cols) if meta_cols else df
-            pairs = kept
-        paths = sorted(
-            os.path.join(base_path, name)
-            if part == _MDT_ROOT_PARTITION
-            else os.path.join(base_path, part, name)
-            for part, name in pairs
-        )
+        else:
+            kept = pairs
+
+        def _abs(part: str, name: str) -> str:
+            return (
+                os.path.join(base_path, name)
+                if part == _MDT_ROOT_PARTITION
+                else os.path.join(base_path, part, name)
+            )
+
+        listed = [_abs(p, n) for p, n in pairs]
+        paths = sorted(_abs(p, n) for p, n in kept)
     else:
         if stats_filter is not None:
             raise ValueError(
@@ -3657,9 +3714,13 @@ def read_hudi_snapshot(
                 "column_stats partition — use via_metadata=True"
             )
         paths = hudi_live_files(base_path, partitions=partitions, as_of=as_of)
-    if not paths:
-        schema = T.StructType([])
-        return spark.createDataFrame([], schema)
-    df = spark.read.parquet(*paths)
+        listed = paths
+    if not listed:
+        return spark.createDataFrame([], T.StructType([]))
+    # pruned to zero files keeps the table schema, so downstream
+    # filters still resolve columns
+    df = read_mapped(
+        spark, paths, _base_fields(spark, base_path, listed, as_of), {}
+    )
     meta_cols = [c for c in df.columns if c.startswith("_hoodie_")]
     return df.drop(*meta_cols) if meta_cols else df

@@ -28,11 +28,10 @@ CDC path golden-byte-pinned against the published Avro spec
 Personality semantics mirror the Delta exporter: snapshot = live BASE
 files plus the exported log delta, engine meta columns exposed like
 Hudi's `_hoodie_*`, refusal to export base files whose footer stats
-show live soft-delete tombstone ROWS. Un-compacted MOR LOG content no
-longer refuses and no longer goes stale: the sync computes the
-group-pruned base-vs-realtime delta (tables/rt_delta.py — only the
-log-bearing file groups are scanned) and exports it in the spec's own
-vocabulary (r13 deletes, r14 updates/inserts):
+show live soft-delete tombstone ROWS. Un-compacted MOR LOG content is
+exported, not refused: the sync computes the group-pruned
+base-vs-realtime delta (tables/personality.py — only the log-bearing
+file groups are scanned) and exports it in the spec's own vocabulary:
 
 - EQUALITY DELETE files (content=2, `equality_ids` on the record key,
   partition-scoped parquet of `_oh_record_key`) mask every base row
@@ -75,14 +74,21 @@ import os
 import time
 import uuid
 
+from pyspark.sql import types as T
+
 from onehouse_demos_spark.sources.avro_codec import read_ocf, write_ocf
-from onehouse_demos_spark.tables.delta_export import _assert_no_tombstones
 from onehouse_demos_spark.tables.object_publish import Publisher, publisher
-from onehouse_demos_spark.tables.table import (
-    HIVE_DEFAULT_PARTITION,
-    PP_COL,
-    LakehouseTable,
+from onehouse_demos_spark.tables.personality import (
+    assert_no_tombstones,
+    partition_columns,
+    partition_values,
+    read_mapped,
+    rt_delta,
+    stage_files,
+    sweep_owned,
+    to_physical,
 )
+from onehouse_demos_spark.tables.table import PP_COL, LakehouseTable
 
 _META_DIR = "metadata"
 #: Iceberg convention: partition-spec field ids start at 1000.
@@ -91,29 +97,29 @@ _PARTITION_FIELD_ID_START = 1000
 # ---------------------------------------------------------------- schema
 
 
-def _iceberg_type(dt) -> object:
-    from pyspark.sql import types as T
+#: Spark type class -> Iceberg primitive, read in both directions:
+#: forward by `_iceberg_type`, inverted by `_spark_type` for the reader.
+#: Iceberg has no 16-bit int, so ShortType -> int is forward-only;
+#: decimal is the one parameterized type and is parsed separately.
+_ICEBERG_TYPES = {
+    T.LongType: "long",
+    T.IntegerType: "int",
+    T.DoubleType: "double",
+    T.FloatType: "float",
+    T.StringType: "string",
+    T.BooleanType: "boolean",
+    T.TimestampType: "timestamptz",
+    T.TimestampNTZType: "timestamp",
+    T.DateType: "date",
+    T.BinaryType: "binary",
+    T.ShortType: "int",
+}
+_SPARK_TYPES = {
+    v: k() for k, v in _ICEBERG_TYPES.items() if k is not T.ShortType
+}
 
-    if isinstance(dt, T.LongType):
-        return "long"
-    if isinstance(dt, T.IntegerType) or isinstance(dt, T.ShortType):
-        return "int"
-    if isinstance(dt, T.DoubleType):
-        return "double"
-    if isinstance(dt, T.FloatType):
-        return "float"
-    if isinstance(dt, T.StringType):
-        return "string"
-    if isinstance(dt, T.BooleanType):
-        return "boolean"
-    if isinstance(dt, T.TimestampType):
-        return "timestamptz"
-    if isinstance(dt, T.TimestampNTZType):
-        return "timestamp"
-    if isinstance(dt, T.DateType):
-        return "date"
-    if isinstance(dt, T.BinaryType):
-        return "binary"
+
+def _iceberg_type(dt) -> str:
     if isinstance(dt, T.DecimalType):
         return f"decimal({dt.precision}, {dt.scale})"
     if isinstance(dt, T.ArrayType):
@@ -121,7 +127,27 @@ def _iceberg_type(dt) -> object:
             "nested list columns in the Iceberg personality need "
             "element-id assignment — not required by any engine table"
         )
-    raise NotImplementedError(f"no Iceberg mapping for {dt}")
+    if type(dt) not in _ICEBERG_TYPES:
+        raise NotImplementedError(f"no Iceberg mapping for {dt}")
+    return _ICEBERG_TYPES[type(dt)]
+
+
+def _spark_type(ice_type: str):
+    if ice_type.startswith("decimal("):
+        p, sc = ice_type[8:-1].split(",")
+        return T.DecimalType(int(p), int(sc))
+    return _SPARK_TYPES[ice_type]
+
+
+def _mapped_names(meta: dict) -> dict[int, str]:
+    """field id -> on-file name from the metadata's name mapping
+    (`schema.name-mapping.default`); empty when nothing was renamed."""
+    raw = (meta.get("properties") or {}).get("schema.name-mapping.default")
+    return {
+        e["field-id"]: e["names"][0]
+        for e in json.loads(raw or "[]")
+        if e.get("names")
+    }
 
 
 def _iceberg_schema(
@@ -150,14 +176,7 @@ def _iceberg_schema(
             for s in prev_meta["schemas"]
             if s["schema-id"] == prev_meta["current-schema-id"]
         )
-        names_by_id: dict[int, str] = {}
-        nm_raw = (prev_meta.get("properties") or {}).get(
-            "schema.name-mapping.default"
-        )
-        if nm_raw:
-            for e in json.loads(nm_raw):
-                if e.get("names"):
-                    names_by_id[e["field-id"]] = e["names"][0]
+        names_by_id = _mapped_names(prev_meta)
         for f in prev_schema["fields"]:
             prev_ids_by_phys[names_by_id.get(f["id"], f["name"])] = f["id"]
         next_id = prev_meta.get("last-column-id", 0) + 1
@@ -209,9 +228,10 @@ def _avro_partition_type(ice_type: str) -> object:
     )
 
 
-def _decode_partition_value(raw: str, ice_type: str):
-    """Typed identity partition value from its hive path segment."""
-    if raw == HIVE_DEFAULT_PARTITION:
+def _decode_partition_value(raw: str | None, ice_type: str):
+    """Typed identity partition value from its decoded hive segment
+    (`personality.partition_values`; None is the NULL partition)."""
+    if raw is None:
         return None
     if ice_type in ("int", "long"):
         return int(raw)
@@ -233,7 +253,7 @@ def _partition_spec(table: LakehouseTable, schema: dict) -> list[dict]:
     source-ids resolved against the exported schema and field-ids from
     the spec's conventional 1000 range. Derived `partition_expr`
     tables (no physical source column) export an unpartitioned spec."""
-    cols = list(table.config.partition_by or [])
+    cols = partition_columns(table)
     if not cols:
         return []
     by_name = {f["name"]: f for f in schema["fields"]}
@@ -271,30 +291,6 @@ def _partition_spec(table: LakehouseTable, schema: dict) -> list[dict]:
             }
         )
     return fields
-
-
-def _partition_struct_values(
-    fm, spec_fields: list[dict], schema: dict
-) -> dict:
-    """Per-file typed `partition` struct decoded from the hive path
-    ('/'-joined on the write side, mirroring
-    delta_export._partition_values)."""
-    if not spec_fields:
-        return {}
-    parts = (fm.partition or "").split("/")
-    if len(parts) != len(spec_fields):
-        raise RuntimeError(
-            f"file {fm.path}: partition path {fm.partition!r} does not "
-            f"decode into {len(spec_fields)} value(s) for spec "
-            f"{[f['name'] for f in spec_fields]}"
-        )
-    by_id = {f["id"]: f for f in schema["fields"]}
-    return {
-        pf["name"]: _decode_partition_value(
-            raw, by_id[pf["source-id"]]["type"]
-        )
-        for pf, raw in zip(spec_fields, parts)
-    }
 
 
 # ------------------------------------------------- manifest avro schemas
@@ -394,14 +390,6 @@ def _meta_dir(table: LakehouseTable) -> str:
 
 # --------------------------------- v2 equality deletes + update export
 
-# The group-pruned base-vs-realtime delta is shared with the Delta
-# exporter's COW rewrite lane (tables/rt_delta.py); this module keeps
-# the historical underscore names its tests and callers use.
-from onehouse_demos_spark.tables.rt_delta import (  # noqa: E402
-    _overlapping,  # noqa: F401 — re-exported for tests
-    rt_delta as _rt_delta,
-)
-
 
 def _frame_digest(df, cols: list[str]) -> str:
     """Order-free change-detection digest of a key/version frame:
@@ -416,114 +404,6 @@ def _frame_digest(df, cols: list[str]) -> str:
         ).alias("h"),
     ).first()
     return f"{row.n}:{row.h}"
-
-
-def _publish_part_files(
-    table: LakehouseTable,
-    df,
-    part_cols: list[str],
-    spec_fields: list[dict],
-    schema: dict,
-    pub: Publisher,
-    prefix: str,
-) -> list[dict]:
-    """Write a frame as parquet files named `<prefix>-<uuid>.parquet`
-    — partition-scoped when the table is partitioned (executors write
-    per-partition part files in parallel; each becomes one manifest
-    entry, pruning-friendly for spec-aware planners), one global set
-    otherwise — and publish each through the store seam. Shared by
-    the EQUALITY DELETE export (`eqdel`) and the log-borne
-    update/insert data export (`morrow`, r14). Staging lives OUTSIDE
-    the table directory (tempfile — r13 review: a crash must not
-    leave a staging tree inside the published layout). Returns
-    manifest-entry payloads [{path, partition, rows, size}]."""
-    import shutil
-    import tempfile
-    from urllib.parse import unquote
-
-    import pyarrow.parquet as pq
-
-    from onehouse_demos_spark.tables.table import HIVE_DEFAULT_PARTITION
-
-    from pyspark.sql import functions as F
-
-    staging = tempfile.mkdtemp(prefix="oh_ice_staging_")
-    # Partition the staged write by SHADOW copies of the partition
-    # columns: Spark's partitionBy strips the partitioning column from
-    # the parquet data, but identity-partitioned Iceberg data files
-    # must carry the source column physically (the base files do) —
-    # without this, appended rows read back with a null partition
-    # column (r14 fix, caught by the update-export oracle).
-    shadow = [f"_oh_stage_pp_{i}" for i in range(len(part_cols))]
-    stage_df = df
-    for s, c in zip(shadow, part_cols):
-        stage_df = stage_df.withColumn(s, F.col(c))
-    writer = stage_df.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*shadow)
-    writer.parquet(staging)
-    by_id = {f["id"]: f for f in schema["fields"]}
-    shadow_of = {
-        pf["name"]: shadow[i] for i, pf in enumerate(spec_fields)
-    }
-    out: list[dict] = []
-    try:
-        for dirpath, _dirs, names in os.walk(staging):
-            rel = os.path.relpath(dirpath, staging)
-            for n in names:
-                if not (n.endswith(".parquet") and n.startswith("part-")):
-                    continue
-                src = os.path.join(dirpath, n)
-                rows = pq.ParquetFile(src).metadata.num_rows
-                if rows == 0:
-                    continue
-                # decode hive `col=value` segments into the typed
-                # partition struct of spec 0
-                values: dict = {}
-                if rel != ".":
-                    segs = dict(
-                        s.split("=", 1) for s in rel.split(os.sep)
-                    )
-                    for pf in spec_fields:
-                        raw = unquote(segs[shadow_of[pf["name"]]])
-                        values[pf["name"]] = (
-                            None
-                            if raw == HIVE_DEFAULT_PARTITION
-                            else _decode_partition_value(
-                                raw, by_id[pf["source-id"]]["type"]
-                            )
-                        )
-                part_dir = (
-                    "/".join(
-                        f"{pf['name']}={segs[shadow_of[pf['name']]]}"
-                        for pf in spec_fields
-                    )
-                    if rel != "."
-                    else ""
-                )
-                dst = os.path.join(
-                    table.base_path,
-                    part_dir,
-                    f"{prefix}-{uuid.uuid4().hex}.parquet",
-                )
-                pub.put_file(dst, src)
-                out.append(
-                    {
-                        "path": dst,
-                        "partition": values,
-                        "rows": rows,
-                        "size": os.path.getsize(src),
-                    }
-                )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    if not out:
-        raise RuntimeError(
-            f"{prefix} export: the change digest saw rows but none "
-            "were staged — refusing to publish a personality that "
-            "would diverge from the real-time view"
-        )
-    return out
 
 
 def _rebase(stored: str, meta_location: str, table_path: str) -> str:
@@ -623,7 +503,7 @@ def sync_iceberg_metadata(
     file I/O over the materialized layout."""
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     files = table.manifest.live_files(include_logs=False)
-    _assert_no_tombstones(files)
+    assert_no_tombstones(files)
     meta_dir = _meta_dir(table)
     pub = publisher(table.base_path, store)
     version = _current_version(meta_dir, pub)
@@ -655,18 +535,17 @@ def sync_iceberg_metadata(
         prev_meta = json.loads(raw)
 
     schema, phys_map = _iceberg_schema(table, prev_meta)
-    part_cols = list(table.config.partition_by or [])
+    part_cols = partition_columns(table)
     # Un-compacted MOR log content: export v2 EQUALITY DELETES for
     # deleted AND updated keys plus an appended data file of the
-    # log-borne winners (r13 deletes, r14 updates/inserts) instead of
-    # serving stale base rows — the personality then matches the
-    # engine's real-time merge exactly. Both change sets enter the
-    # version digest so a new log write (or a compaction clearing the
-    # logs) produces a new version even with an unchanged base-file
-    # set.
+    # log-borne winners instead of serving stale base rows, so the
+    # personality matches the engine's real-time merge exactly. Both
+    # change sets enter the version digest so a new log write (or a
+    # compaction clearing the logs) produces a new version even with an
+    # unchanged base-file set.
     from onehouse_demos_spark.tables.table import COMMIT_COL, KEY_COL
 
-    delta = _rt_delta(table, part_cols)
+    delta = rt_delta(table, part_cols)
     eqdel = new_rows = None
     del_digest = upd_digest = "0:None"
     if delta is not None:
@@ -692,7 +571,7 @@ def sync_iceberg_metadata(
 
     # Everything from digesting to manifest publication can raise
     # (conditional-put conflicts, publish failures): the cached delta
-    # frames must not outlive the attempt (r14 review).
+    # frames must not outlive the attempt.
     try:
         paths = sorted(f.path for f in files)
         # A metadata-only schema change (RENAME/DROP COLUMN) must produce a
@@ -723,14 +602,51 @@ def sync_iceberg_metadata(
         # newer sequence — apply to them). New files inherit this
         # snapshot's sequence.
         spec_fields = _partition_spec(table, schema)
+        spec_cols = [pf["name"] for pf in spec_fields]
+        by_id = {f["id"]: f for f in schema["fields"]}
+
+        def part_struct(fm) -> dict:
+            """The typed `partition` struct of spec 0 for one file."""
+            raw = partition_values(fm, spec_cols)
+            return {
+                pf["name"]: _decode_partition_value(
+                    raw[pf["name"]], by_id[pf["source-id"]]["type"]
+                )
+                for pf in spec_fields
+            }
+
+        def publish(frame, prefix: str) -> list[dict]:
+            """Stage `frame` as `<prefix>-<uuid>-<n>.parquet` files (one
+            manifest entry each, partition-scoped for pruning) and
+            return their manifest-entry payloads."""
+            staged = stage_files(
+                table, frame, part_cols, pub, f"{prefix}-{uuid.uuid4().hex}"
+            )
+            if not staged:
+                raise RuntimeError(
+                    f"{prefix} export: the change digest saw rows but "
+                    "none were staged — refusing to publish a "
+                    "personality that would diverge from the real-time "
+                    "view"
+                )
+            return [
+                {
+                    "path": os.path.join(table.base_path, fm.path),
+                    "partition": part_struct(fm),
+                    "rows": fm.rows,
+                    "size": size,
+                }
+                for fm, size in staged
+            ]
+
         prev_seqs = _prev_file_seqs(prev_meta, pub, table.base_path)
         n_added = sum(1 for fm in files if fm.path not in prev_seqs)
         # Two-snapshot shape decided BEFORE the manifest is written so the
         # data manifest's attribution (entry snapshot_id + the manifest
         # row's added_snapshot_id) names the APPEND snapshot consistently
-        # in both manifest lists (r13 review: a reused row claiming the
-        # delete snapshot's id mis-attributes adds to time-travel and
-        # incremental consumers).
+        # in both manifest lists: a reused row claiming the delete
+        # snapshot's id would mis-attribute adds to time-travel and
+        # incremental consumers.
         two_snapshots = (
             eqdel is not None or new_rows is not None
         ) and n_added > 0
@@ -761,9 +677,7 @@ def sync_iceberg_metadata(
                         "content": 0,  # DATA
                         "file_path": abs_path,
                         "file_format": "PARQUET",
-                        "partition": _partition_struct_values(
-                            fm, spec_fields, schema
-                        ),
+                        "partition": part_struct(fm),
                         "record_count": fm.rows,
                         "file_size_in_bytes": size,
                     },
@@ -788,8 +702,8 @@ def sync_iceberg_metadata(
         pub.put_bytes(manifest_path, manifest_bytes)  # uuid-named, atomic
 
         # min_sequence_number over the sequences of the entries ACTUALLY
-        # listed (r13 review: min over all previous sequences could
-        # understate the true minimum when a file dropped out)
+        # listed (a min over all previous sequences could understate the
+        # true minimum once a file dropped out)
         entry_seqs = [
             e["sequence_number"]
             for e in entries
@@ -837,9 +751,7 @@ def sync_iceberg_metadata(
                     "equality-delete export needs the record-key column "
                     f"{KEY_COL!r} in the exported schema"
                 )
-            delete_files = _publish_part_files(
-                table, eqdel, part_cols, spec_fields, schema, pub, "eqdel"
-            )
+            delete_files = publish(eqdel, "eqdel")
             del_entries = [
                 {
                     "status": 1,  # ADDED
@@ -895,7 +807,7 @@ def sync_iceberg_metadata(
                 }
             )
 
-        # ---- log-winner data manifest (r14): the appended parquet of
+        # ---- log-winner data manifest: the appended parquet of
         # log-borne update/insert winners, ADDED at the delete sequence —
         # strictly newer than every base entry (so it is never masked by
         # this sync's equality deletes) and exactly the rows the engine's
@@ -903,19 +815,8 @@ def sync_iceberg_metadata(
         n_upd_rows = 0
         upd_files: list[dict] = []
         if new_rows is not None:
-            from pyspark.sql.functions import col as F_col
-
-            # write under PHYSICAL column names, matching the base files,
-            # so the published name-mapping resolves every data file the
-            # same way after a RENAME
-            out_rows = new_rows.select(
-                *[
-                    F_col(f["name"]).alias(phys_map[f["name"]])
-                    for f in schema["fields"]
-                ]
-            )
-            upd_files = _publish_part_files(
-                table, out_rows, part_cols, spec_fields, schema, pub, "morrow"
+            upd_files = publish(
+                to_physical(new_rows, table._latest_schema()), "morrow"
             )
             upd_entries = [
                 {
@@ -1132,16 +1033,15 @@ def expire_iceberg_snapshots(
     store=None,
     orphan_grace_ms: int = 7 * 24 * 3600 * 1000,
 ) -> int:
-    """Iceberg `expire_snapshots` analog for the personality (r13
-    review: superseded equality-delete / log-winner data files from
-    prior syncs were never cleaned). Publishes a new metadata version
+    """Iceberg `expire_snapshots` analog for the personality. Publishes
+    a new metadata version
     retaining only the newest `keep_last` snapshots (the current one
     always survives), then sweeps every personality-OWNED object on
     disk that NO retained snapshot references: manifest lists,
     manifests, and the exporter's own `eqdel-*` / `morrow-*` parquet.
     The sweep runs even when nothing expires, so garbage from a
     crashed pre-commit sync or an expire that died mid-delete is
-    re-collected by the next call (r14 review). An age guard
+    re-collected by the next call. An age guard
     (`orphan_grace_ms`, VACUUM-style) protects objects a concurrent
     in-flight sync has published but not yet committed. Engine-owned
     data files are never candidates — the exporter publishes metadata
@@ -1169,8 +1069,8 @@ def expire_iceberg_snapshots(
     loc0 = meta.get("location", table.base_path)
     if len(snapshots) <= keep_last:
         # nothing to expire from history — still sweep orphans
-        _sweep_iceberg_orphans(
-            table, pub,
+        sweep_owned(
+            table, pub, _iceberg_owned,
             _iceberg_refs(pub, table.base_path, loc0, snapshots),
             now_ms, orphan_grace_ms,
         )
@@ -1216,8 +1116,8 @@ def expire_iceberg_snapshots(
     # leaves only already-unreferenced garbage, re-collected by the
     # NEXT call's sweep (which keys on on-disk owned objects vs
     # retained refs, not on the now-forgotten expired snapshots).
-    _sweep_iceberg_orphans(
-        table, pub, kept_refs, now_ms, orphan_grace_ms
+    sweep_owned(
+        table, pub, _iceberg_owned, kept_refs, now_ms, orphan_grace_ms
     )
     return new_version
 
@@ -1248,39 +1148,13 @@ def _iceberg_refs(pub: Publisher, base_path: str, loc: str, snaps) -> set[str]:
     return out
 
 
-def _sweep_iceberg_orphans(
-    table: LakehouseTable,
-    pub: Publisher,
-    kept_refs: set[str],
-    now_ms: int,
-    grace_ms: int,
-) -> int:
-    """Delete personality-owned on-disk objects (metadata avro,
-    eqdel-/morrow- parquet) no retained snapshot references. The age
-    guard skips objects younger than `grace_ms`: an unmentioned young
-    object may belong to a concurrent in-flight sync that published
-    its files but has not yet hit its conditional-put commit point."""
-    removed = 0
-    for dirpath, _dirs, names in os.walk(table.base_path):
-        for fn in names:
-            rel = os.path.relpath(
-                os.path.join(dirpath, fn), table.base_path
-            ).replace(os.sep, "/")
-            name = rel.rsplit("/", 1)[-1]
-            owned = (
-                rel.startswith("metadata/") and name.endswith(".avro")
-            ) or (
-                name.startswith(("eqdel-", "morrow-"))
-                and name.endswith(".parquet")
-            )
-            if not owned or rel in kept_refs:
-                continue
-            mt = pub.mtime_ms(os.path.join(table.base_path, rel))
-            if mt is not None and now_ms - mt < grace_ms:
-                continue
-            pub.delete(os.path.join(table.base_path, rel))
-            removed += 1
-    return removed
+def _iceberg_owned(rel: str) -> bool:
+    """Personality-owned objects: metadata avro (manifest lists and
+    manifests) and the exporter's eqdel-/morrow- parquet."""
+    name = rel.rsplit("/", 1)[-1]
+    return (rel.startswith("metadata/") and name.endswith(".avro")) or (
+        name.startswith(("eqdel-", "morrow-")) and name.endswith(".parquet")
+    )
 
 
 def iceberg_pruned_files(
@@ -1380,71 +1254,24 @@ def read_iceberg_snapshot(spark, table_path: str):
             elif df_rec.get("content", 0) == 0:
                 data_files.append((fpath, eff))
     paths = [p for p, _ in data_files]
-    # Reconstruct the table schema from the metadata (inverse of
-    # _iceberg_type) and read WITH it, exactly like an Iceberg client
-    # resolving by field name: files written before a schema evolution
-    # lack the newer columns and a bare parquet read would silently
-    # drop them (first-file schema wins); the explicit schema fills
-    # them with null. Also keeps an emptied table reading with its
-    # columns — parity with read_delta_snapshot.
-    from pyspark.sql import types as T
-
+    # Read WITH the metadata schema, like an Iceberg client: fields
+    # resolve by name, through the name mapping's PHYSICAL name when the
+    # files carry no field-id annotations (the post-RENAME read path).
     schema_json = next(
         s for s in meta["schemas"]
         if s["schema-id"] == meta["current-schema-id"]
     )
-    inverse = {
-        "long": T.LongType(), "int": T.IntegerType(),
-        "double": T.DoubleType(), "float": T.FloatType(),
-        "string": T.StringType(), "boolean": T.BooleanType(),
-        "timestamptz": T.TimestampType(),
-        "timestamp": T.TimestampNTZType(), "date": T.DateType(),
-        "binary": T.BinaryType(),
-    }
-
-    def to_spark(t):
-        if isinstance(t, str) and t.startswith("decimal("):
-            p, sc = t[8:-1].split(",")
-            return T.DecimalType(int(p), int(sc))
-        return inverse[t]
-
     fields = [
-        T.StructField(f["name"], to_spark(f["type"]), True)
+        T.StructField(f["name"], _spark_type(f["type"]), True)
         for f in schema_json["fields"]
     ]
-    schema = T.StructType(fields)
-    if not paths:
-        return spark.createDataFrame([], schema)
-    # Name mapping (schema.name-mapping.default): files without
-    # field-id annotations resolve each field through its mapped
-    # PHYSICAL name — the post-RENAME read path of a real Iceberg
-    # client.
-    names_by_id: dict[int, str] = {}
-    nm_raw = (meta.get("properties") or {}).get("schema.name-mapping.default")
-    if nm_raw:
-        for e in json.loads(nm_raw):
-            if e.get("names"):
-                names_by_id[e["field-id"]] = e["names"][0]
+    names_by_id = _mapped_names(meta)
     phys = {
         f["name"]: names_by_id.get(f["id"], f["name"])
         for f in schema_json["fields"]
     }
-    reader_schema = T.StructType(
-        [T.StructField(phys[f.name], f.dataType, True) for f in schema.fields]
-    )
-
-    def _read(pp):
-        d = spark.read.schema(reader_schema).parquet(*pp)
-        if any(phys[n] != n for n in phys):
-            from pyspark.sql import functions as F
-
-            d = d.select(
-                *[F.col(phys[f.name]).alias(f.name) for f in schema.fields]
-            )
-        return d
-
-    if not eq_deletes:
-        return _read(paths)
+    if not eq_deletes or not paths:
+        return read_mapped(spark, paths, fields, phys)
 
     # Apply equality deletes: group data files by effective sequence
     # (one group per export generation — small), anti-join each group
@@ -1458,7 +1285,7 @@ def read_iceberg_snapshot(spark, table_path: str):
     for p, eff in data_files:
         by_seq.setdefault(eff, []).append(p)
     for eff, group_paths in sorted(by_seq.items()):
-        d = _read(group_paths)
+        d = read_mapped(spark, group_paths, fields, phys)
         applicable = [
             (dp, ids) for dp, dseq, ids in eq_deletes if dseq > eff
         ]

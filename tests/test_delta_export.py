@@ -579,33 +579,82 @@ def test_personality_tracks_restore(spark, tmp_base):
     assert got["k01"] == 101.0  # pre-upsert value restored
 
 
-def test_schema_evolution_reaches_personality_readers(spark, tmp_base):
-    """ALTER-style schema evolution: files written BEFORE the evolution
-    lack the new column; both personality readers must apply the
-    metadata schema so old rows surface the column as NULL instead of
-    dropping it (first-file-schema parquet behavior)."""
+def _personalities():
+    from onehouse_demos_spark.tables.hudi_export import (
+        read_hudi_snapshot,
+        sync_hudi_metadata,
+    )
     from onehouse_demos_spark.tables.iceberg_export import (
         read_iceberg_snapshot,
         sync_iceberg_metadata,
     )
 
+    return (
+        (sync_delta_log, read_delta_snapshot),
+        (sync_iceberg_metadata, read_iceberg_snapshot),
+        (sync_hudi_metadata, read_hudi_snapshot),
+    )
+
+
+def test_schema_evolution_reaches_personality_readers(spark, tmp_base):
+    """ALTER-style schema evolution: files written BEFORE the evolution
+    lack the new column; every personality reader must apply the
+    synced schema so old rows surface the column as NULL instead of
+    dropping it (first-file-schema parquet behavior). The evolved row
+    lands in a partition that sorts after the others, so the first
+    listed file is always a pre-evolution one."""
     t = _mk(spark, tmp_base)
-    sync_delta_log(t)
-    sync_iceberg_metadata(t)
+    for sync, _read in _personalities():
+        sync(t)
     t.evolve_schema([("rating", "int")])
     t.upsert(spark.createDataFrame(
-        [("k99", 1, "GOOG", 5.0, 9)],
+        [("k99", 1, "ZZZ", 5.0, 9)],
         "key string, ver int, sym string, px double, rating int"))
-    assert sync_delta_log(t) >= 1
-    sync_iceberg_metadata(t)
+    versions = [sync(t) for sync, _read in _personalities()]
+    assert versions[0] >= 1  # the Delta log gained a version
 
-    for reader in (read_delta_snapshot, read_iceberg_snapshot):
+    for _sync, reader in _personalities():
         df = reader(spark, t.base_path)
         assert "rating" in df.columns, reader.__name__
         got = {r.key: r.rating for r in df.select("key", "rating").collect()}
-        assert got["k99"] == 9
+        assert got["k99"] == 9, reader.__name__
         assert got["k00"] is None  # pre-evolution file, NULL-filled
         assert df.count() == 21
+
+
+def test_widened_column_reaches_personality_readers(spark, tmp_base):
+    """ALTER COLUMN TYPE int -> bigint is metadata-only: old files keep
+    INT32. Every personality reader must read at the synced (wide)
+    type, so a post-widening value beyond int range survives and old
+    values upcast, whichever file is listed first."""
+    ddl = DDL + ", q int"
+    t = LakehouseTable.create(
+        spark,
+        f"{tmp_base}/widen_src",
+        TableConfig(
+            name="widen_src", record_key=["key"], precombine="ver",
+            partition_by=["sym"],
+        ),
+    )
+    t.insert(spark.createDataFrame(
+        [(f"k{i:02d}", 1, "GOOG" if i % 2 else "MSFT", 100.0 + i, i)
+         for i in range(20)], ddl))
+    for sync, _read in _personalities():
+        sync(t)
+    t.widen_column("q", "bigint")
+    t.upsert(spark.createDataFrame(
+        [("k99", 1, "ZZZ", 5.0, 2**40)],
+        "key string, ver int, sym string, px double, q bigint"))
+    for sync, _read in _personalities():
+        sync(t)
+
+    for _sync, reader in _personalities():
+        df = reader(spark, t.base_path)
+        assert dict(df.dtypes)["q"] == "bigint", reader.__name__
+        got = {r.key: r.q for r in df.select("key", "q").collect()}
+        assert got["k99"] == 2**40, reader.__name__
+        assert got["k03"] == 3
+        assert len(got) == 21
 
 
 REF_DELTA = "/root/reference/hudi-spark-minio-trino/data/db/delta_dimGeography"

@@ -444,7 +444,7 @@ def test_delta_scans_prune_to_log_bearing_groups(spark, tmp_base):
     rescan the other partition's base files. At 100 TB with a small
     hot log tail this is the difference between a metadata-scale sync
     and two full-table scans."""
-    from onehouse_demos_spark.tables.iceberg_export import _rt_delta
+    from onehouse_demos_spark.tables.personality import rt_delta
 
     t = _mk(spark, tmp_base)  # partitions sym=GOOG / sym=MSFT
     t.delete(spark.createDataFrame([("k1",), ("k3",)], "key string"))
@@ -455,7 +455,7 @@ def test_delta_scans_prune_to_log_bearing_groups(spark, tmp_base):
         f.path for f in files if f.partition == "MSFT" and f.kind == "base"
     }
     assert msft_base, "test needs untouched MSFT base files"
-    delta = _rt_delta(t, ["sym"])
+    delta = rt_delta(t, ["sym"])
     assert delta is not None
     assert set(delta["base_paths"]) <= goog
     assert not set(delta["base_paths"]) & msft_base
@@ -683,3 +683,60 @@ def test_twin_base_rows_with_log_winner_export_once(spark, tmp_base):
         (r.key, r.ver, r.px)
         for r in t.snapshot().select("key", "ver", "px").collect()
     )
+
+
+@pytest.mark.parametrize("sym", [None, "a:b c"], ids=["null", "escaped"])
+def test_log_borne_changes_in_odd_partitions_reach_both_stagers(
+    spark, tmp_base, sym
+):
+    """Pin for the shared stager: a NULL partition and one whose value
+    Spark escapes in its directory name (`a%3Ab c`) both carry a
+    log-borne update, insert and delete, as does GOOG. Delta stages
+    rtcow- rewrites and Iceberg stages eqdel-/morrow- files for them;
+    both personalities must read back exactly the engine snapshot."""
+    from onehouse_demos_spark.tables.delta_export import (
+        read_delta_snapshot,
+        sync_delta_log,
+    )
+
+    t = LakehouseTable.create(
+        spark,
+        os.path.join(tmp_base, "t"),
+        TableConfig(
+            name="stage_pin",
+            record_key=["key"],
+            precombine="ver",
+            partition_by=["sym"],
+            table_type="mor",
+        ),
+    )
+    parts = ["GOOG", sym]
+    t.insert(spark.createDataFrame(
+        [(f"k{i}", 1, parts[i % 2], 100.0 + i) for i in range(8)], DDL
+    ))
+    sync_delta_log(t)
+    sync_iceberg_metadata(t)
+    t.upsert(spark.createDataFrame(
+        [("k0", 2, "GOOG", 1.0), ("k1", 2, sym, 2.0),
+         ("n0", 1, "GOOG", 3.0), ("n1", 1, sym, 4.0)],
+        DDL,
+    ))
+    t.delete(spark.createDataFrame([("k2",), ("k3",)], "key string"))
+    logged = {
+        f.partition
+        for f in t.manifest.live_files(include_logs=True)
+        if f.kind == "log"
+    }
+    assert len(logged) == 2, logged  # both partitions go down the log path
+    sync_delta_log(t)
+    sync_iceberg_metadata(t)
+
+    def rows(df):
+        return sorted(
+            tuple(r) for r in df.select("key", "ver", "sym", "px").collect()
+        )
+
+    want = rows(t.snapshot())
+    assert len(want) == 8
+    for reader in (read_delta_snapshot, read_iceberg_snapshot):
+        assert rows(reader(spark, t.base_path)) == want, reader.__name__

@@ -275,3 +275,29 @@ def test_duckdb_reads_seam_materialized_delta(spark, tmp_base):
             {"files": files},
         ).fetchall()
     assert set(duck) == POST
+
+
+def test_exporters_share_one_commit_view():
+    """Structure pin: the Delta, Iceberg and Hudi exporters import
+    nothing from each other (their shared half lives in
+    tables/personality.py), and only that module stages files."""
+    import ast
+    import pathlib
+
+    import onehouse_demos_spark
+
+    tables = pathlib.Path(onehouse_demos_spark.__file__).parent / "tables"
+    exporters = {"delta_export", "iceberg_export", "hudi_export"}
+    for name in exporters:
+        tree = ast.parse((tables / f"{name}.py").read_text())
+        imported = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module:
+                imported.add(node.module.rsplit(".", 1)[-1])
+            elif isinstance(node, ast.Import):
+                imported.update(a.name.rsplit(".", 1)[-1] for a in node.names)
+        assert not imported & (exporters - {name}), name
+    for path in [*tables.glob("*_export.py"), tables / "personality.py"]:
+        src = path.read_text()
+        stages = "tempfile.mkdtemp" in src or "_oh_stage_pp_" in src
+        assert stages == (path.name == "personality.py"), path.name
