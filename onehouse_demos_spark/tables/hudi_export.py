@@ -109,6 +109,7 @@ from onehouse_demos_spark.tables.personality import (
 from onehouse_demos_spark.tables.table import (
     DELETED_COL,
     HIVE_DEFAULT_PARTITION,
+    PHYSICAL_META_KEY,
     LakehouseTable,
 )
 
@@ -182,15 +183,20 @@ def _spark_of_avro(at) -> T.DataType | None:
 
 
 def _avro_schema(schema: T.StructType, name: str) -> str:
+    """Avro record schema for `schema` under each column's ON-FILE
+    name: the Hudi personality publishes no column mapping, so the
+    recorded schema must name the columns the files carry (a renamed
+    column reads by its physical name, never as a NULL logical one)."""
     fields = []
     for f in schema.fields:
         at = _avro_type(f.dataType)
+        fname = (f.metadata or {}).get(PHYSICAL_META_KEY, f.name)
         if f.nullable:
             fields.append(
-                {"name": f.name, "type": ["null", at], "default": None}
+                {"name": fname, "type": ["null", at], "default": None}
             )
         else:
-            fields.append({"name": f.name, "type": at})
+            fields.append({"name": fname, "type": at})
     return json.dumps(
         {"type": "record", "name": name or "Record", "fields": fields}
     )
@@ -3258,13 +3264,20 @@ def _base_fields(
     with: the schema the newest completed commit (at or before `as_of`)
     records in `extraMetadata.schema`, so a file written before an ADD
     COLUMN null-fills it and a widened column reads at its new type.
-    Where the newest slice's footer type maps onto the recorded Avro
-    type, the footer type is kept: `_avro_type` records containers and
-    timestamp_ntz as string and short/byte as int. Without a recorded
-    schema, the newest footer."""
-    # `<fileId>_<token>_<instant>.parquet`: the newest instant sorts last
-    newest = max(paths, key=lambda p: os.path.basename(p).rsplit("_", 1)[1])
-    footer = spark.read.parquet(newest).schema
+    Where a footer type maps onto the recorded Avro type, the footer
+    type is kept: `_avro_type` records containers and timestamp_ntz as
+    string and short/byte as int. Without a recorded schema, the newest
+    footer."""
+    import pyarrow.parquet as pq
+
+    # `<fileId>_<token>_<instant>.parquet`: newest instant first; files
+    # of one instant in path order
+    order = sorted(
+        sorted(paths),
+        key=lambda p: os.path.basename(p).rsplit("_", 1)[1],
+        reverse=True,
+    )
+    footer = spark.read.parquet(order[0]).schema
     hoodie = _hoodie_dir(base_path)
     recorded = None
     for instant, action in reversed(_completed_instants(hoodie)):
@@ -3278,16 +3291,36 @@ def _base_fields(
     if recorded is None:
         return footer.fields
     by_name = {f.name: f.dataType for f in footer.fields}
-    fields = []
+    wanted = []
     for f in recorded:
         at = f["type"]
         if isinstance(at, list):
             at = next((a for a in at if a != "null"), "null")
-        ft = by_name.get(f["name"])
+        wanted.append((f["name"], at))
+    # A column the newest footer lacks (another file of the same
+    # instant predates its ADD COLUMN) and whose recorded type does not
+    # fix its file type takes the type of the newest listed file that
+    # carries it; footers are opened only while such a column is open.
+    need = {
+        n
+        for n, at in wanted
+        if n not in by_name and (at == "string" or _spark_of_avro(at) is None)
+    }
+    for p in order[1:]:
+        if not need:
+            break
+        if need & set(pq.read_schema(p).names):
+            for f in spark.read.parquet(p).schema.fields:
+                if f.name in need:
+                    by_name[f.name] = f.dataType
+                    need.discard(f.name)
+    fields = []
+    for n, at in wanted:
+        ft = by_name.get(n)
         inv = _spark_of_avro(at)
         if ft is not None and (inv is None or _avro_type(ft) == at):
             inv = ft
-        fields.append(T.StructField(f["name"], inv or T.StringType(), True))
+        fields.append(T.StructField(n, inv or T.StringType(), True))
     return fields
 
 

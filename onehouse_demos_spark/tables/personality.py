@@ -296,6 +296,7 @@ def stage_files(
     engine's base files. Sizes come from the staged file, since the
     destination need not be local under another store. An empty result
     is legal (a removes-only rewrite); a failed write raises."""
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     staging = tempfile.mkdtemp(prefix="oh_personality_staging_")
@@ -320,11 +321,11 @@ def stage_files(
                 if not (n.startswith("part-") and n.endswith(".parquet")):
                     continue
                 src = os.path.join(dirpath, n)
+                if pq.read_metadata(src).num_rows == 0:
+                    continue
                 name = f"{stem}-{len(out):04d}.parquet"
                 rel_path = f"{part_dir}/{name}" if part_dir else name
                 fm = harvest(table, rel_path, src)
-                if fm.rows == 0:
-                    continue
                 pub.put_file(os.path.join(table.base_path, rel_path), src)
                 out.append((fm, os.path.getsize(src)))
     finally:

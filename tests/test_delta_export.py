@@ -657,6 +657,89 @@ def test_widened_column_reaches_personality_readers(spark, tmp_base):
         assert len(got) == 21
 
 
+def test_renamed_column_values_reach_personality_readers(spark, tmp_base):
+    """RENAME COLUMN is metadata-only: the files keep the physical
+    name. Delta and Iceberg publish a column mapping, so their readers
+    return the data under the new name. The Hudi personality has no
+    column mapping, so its recorded schema names the on-file column and
+    both Hudi readers return the data under it: never an all-NULL
+    column under the new name with the data dropped."""
+    from onehouse_demos_spark.tables.hudi_export import (
+        read_hudi_rt,
+        read_hudi_snapshot,
+        sync_hudi_metadata,
+    )
+
+    ddl = "key string, ver int, sym string, price double"
+    t = _mk(spark, tmp_base)
+    for sync, _read in _personalities():
+        sync(t)
+    t.rename_column("px", "price")
+    t.upsert(spark.createDataFrame([("k99", 1, "ZZZ", 5.0)], ddl))
+    for sync, _read in _personalities():
+        sync(t)
+    want = {r.key: r.price for r in t.snapshot().collect()}
+    assert len(want) == 21
+
+    for _sync, reader in _personalities():
+        df = reader(spark, t.base_path)
+        col = "px" if reader is read_hudi_snapshot else "price"
+        other = "price" if col == "px" else "px"
+        assert other not in df.columns, reader.__name__
+        got = {r.key: r[col] for r in df.select("key", col).collect()}
+        assert got == want, reader.__name__
+
+    # the rt leg: a log-borne update of the renamed column merges too
+    m = LakehouseTable.create(
+        spark,
+        f"{tmp_base}/rename_mor",
+        TableConfig(
+            name="rename_mor", record_key=["key"], precombine="ver",
+            partition_by=["sym"], table_type="mor",
+        ),
+    )
+    m.insert(t.snapshot().filter("key != 'k99'"))
+    sync_hudi_metadata(m, mor_rt=True)
+    m.rename_column("price", "cost")
+    m.upsert(spark.createDataFrame(
+        [("k01", 2, "GOOG", 1.5)], ddl.replace("price", "cost")))
+    sync_hudi_metadata(m, mor_rt=True)
+    assert any(
+        f.kind == "log" for f in m.manifest.live_files(include_logs=True)
+    )
+    want = {r.key: r.cost for r in m.snapshot().collect()}
+    assert want["k01"] == 1.5
+    df = read_hudi_rt(spark, m.base_path)
+    assert "cost" not in df.columns
+    assert {r.key: r.price for r in df.select("key", "price").collect()} == want
+
+
+def test_hudi_reader_types_added_container_from_a_file_that_has_it(
+    spark, tmp_base
+):
+    """Files added in one sync share one Hudi instant, so the newest
+    footer by instant may predate an ADD COLUMN. The Hudi schema records
+    a container column as string; its read type must come from a listed
+    file that carries the column, or reading that file fails."""
+    from onehouse_demos_spark.tables.hudi_export import (
+        read_hudi_snapshot,
+        sync_hudi_metadata,
+    )
+
+    t = _mk(spark, tmp_base)
+    t.evolve_schema([("tags", "array<string>")])
+    t.upsert(spark.createDataFrame(
+        [("k99", 1, "ZZZ", 5.0, ["a", "b"])],
+        "key string, ver int, sym string, px double, tags array<string>"))
+    sync_hudi_metadata(t)
+    df = read_hudi_snapshot(spark, t.base_path)
+    assert dict(df.dtypes)["tags"] == "array<string>"
+    got = {r.key: r.tags for r in df.select("key", "tags").collect()}
+    assert got["k99"] == ["a", "b"]
+    assert got["k00"] is None
+    assert len(got) == 21
+
+
 REF_DELTA = "/root/reference/hudi-spark-minio-trino/data/db/delta_dimGeography"
 
 
