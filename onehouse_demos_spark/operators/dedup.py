@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onehouse_demos_spark.functions.text import normalize_text, shingles
+from onehouse_demos_spark.sources.batch import read_parquet
 
 N_MINHASH = 16  #: signature length
 N_BANDS = 4  #: LSH bands (rows per band = N_MINHASH / N_BANDS)
@@ -37,11 +38,10 @@ def load_docs(
     partition. For hash-heavy operators (shingling, minhash, simhash)
     pass fan_out=True: the tiny repartition shuffle (MBs) buys a
     full-width map stage. Cheap one-pass operators skip it — the
-    shuffle would cost more than it saves. (r14: the repartition is now
-    ADAPTIVE — it fires only when the planned scan parallelism is below
-    the cluster default, so at 100 TB, where the scan has thousands of
-    splits, it is a true no-op instead of a full-corpus shuffle.)"""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    shuffle would cost more than it saves. The repartition fires only
+    when the planned scan parallelism is below the cluster default, so
+    at 100 TB, where the scan has thousands of splits, it is a no-op."""
+    df = read_parquet(spark, f"{sf_dir}/documents.parquet")
     if fan_out:
         from onehouse_demos_spark.operators.relational import (
             fan_out as _fan_out,

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from onehouse_demos_spark.sources.batch import read_parquet
+
 #: magic-byte prefixes → format label (public file signatures)
 MAGIC = {
     "424D": "bmp",
@@ -337,7 +339,7 @@ def frame_sample_plan(
 # --------------------------------------------------------------------------
 
 def multimodal_metadata(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     blobs = docs.select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
     )
@@ -360,7 +362,7 @@ FROM documents
 def multimodal_features(spark, sf_dir: str) -> DataFrame:
     """Arrow-batched Pandas-UDF feature extraction, oracle-checked:
     DuckDB reproduces the hash projection bit-for-bit."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     blobs = docs.select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
     )

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onehouse_demos_spark.functions.quantize import fquant
+from onehouse_demos_spark.sources.batch import read_parquet
 
 from onehouse_demos_spark.sources.cdc import flatten_debezium, latest_change_per_key
 from onehouse_demos_spark.tables.maintenance import run_clustering, run_compaction
@@ -49,7 +50,7 @@ atexit.register(_cleanup)
 def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # o_orderdate dropped: timestamps compare via epoch in relational
     # queries; mutation oracles stick to exact-typed columns.
-    return spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    return read_parquet(spark, f"{sf_dir}/orders.parquet").select(
         "o_orderkey",
         "o_custkey",
         "o_orderstatus",
@@ -921,7 +922,7 @@ def _build_indexed(spark: SparkSession, sf_dir: str) -> LakehouseTable:
         return _IDX_CACHE[sf_dir]
     tmp = tempfile.mkdtemp(prefix="oh_idx_")
     _TMPDIRS.append(tmp)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority", "o_orderdate",
     )

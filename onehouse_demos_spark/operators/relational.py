@@ -32,6 +32,7 @@ from onehouse_demos_spark.functions.quantize import (
     fsum_sql,
 )
 from onehouse_demos_spark.session import is_tiny
+from onehouse_demos_spark.sources.batch import read_parquet
 
 #: "high-value open order" predicate shared by customers_with_big_orders
 #: and its anti-join complement customers_without_orders — one source of
@@ -41,7 +42,7 @@ BIG_OPEN_STATUS = "O"
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -79,33 +80,25 @@ def _ts_unit_from_footer(path: str) -> str | None:
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalize the events table's `ts` to a µs TimestampType column
-    regardless of how the generator wrote it. Seen in the wild:
-    TIMESTAMP(NANOS) (Spark 4 rejects by default → read nanos as long
-    and truncate, matching DuckDB's ns→µs coercion), TIMESTAMP(MICROS)
-    isAdjustedToUTC=false (reads as TIMESTAMP_NTZ → cast under the UTC
-    session timezone, an epoch-identity), and epoch-millis BIGINT."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = load(spark, sf_dir, "events")
+    """The events table with `ts` as a µs TimestampType column, whatever
+    physical type the generator wrote:
+
+    - TIMESTAMP(NANOS) reads as bigint nanos (`read_parquet`) and is
+      truncated to µs, as DuckDB coerces ns to µs.
+    - TIMESTAMP(MICROS) with isAdjustedToUTC=false reads as
+      TIMESTAMP_NTZ and is cast under the UTC session time zone, an
+      epoch identity.
+    - Unannotated int64 is epoch millis, micros or nanos.
+
+    A bigint `ts` takes its unit from the footer's annotation when it
+    has one, which is what DuckDB's reader (the oracle) trusts too, so a
+    mis-annotated file is classified as the oracle classifies it. Only
+    an unannotated int64 pays a max(abs(ts)) scan to find its scale."""
+    path = f"{sf_dir}/events.parquet"
+    ev = read_parquet(spark, path)
     ts_type = dict(ev.dtypes)["ts"]
     if ts_type == "bigint":
-        # r14: the bigint case previously ran a full max(abs(ts)) SCAN
-        # JOB (plus a collect) on EVERY load_events call — a hidden
-        # extra pass paid by all eight event queries. When the parquet
-        # footer ANNOTATES the column (TIMESTAMP(NANOS) is exactly the
-        # case nanosAsLong turns into bigint), the declared unit is
-        # authoritative — it is what DuckDB's reader uses — so a
-        # driver-side footer read (same pyarrow pattern as the stats
-        # harvester) replaces the scan job. Plain unannotated int64
-        # still uses the magnitude probe below.
-        # Known trade-off (ADVICE r14, accepted): a generator that
-        # MIS-annotates (e.g. micros values under a TIMESTAMP(NANOS)
-        # annotation) is now classified by its annotation where the
-        # old probe self-corrected — deliberately so, because DuckDB's
-        # reader (the oracle) trusts the same annotation, and agreeing
-        # with the oracle on malformed inputs beats silently diverging
-        # from it.
-        unit = _ts_unit_from_footer(f"{sf_dir}/events.parquet")
+        unit = _ts_unit_from_footer(path)
         if unit in ("ns", "us", "ms"):
             expr = {"ns": "ts div 1000", "us": "ts",
                     "ms": "ts * 1000"}[unit]

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from onehouse_demos_spark.functions.quantize import fquant
 from onehouse_demos_spark.session import is_tiny, tiny_scope
+from onehouse_demos_spark.sources.batch import read_parquet
 
 
 def _tiny_if_small(df: DataFrame):
@@ -40,7 +41,7 @@ def _tiny_if_small(df: DataFrame):
 
 
 def load_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return read_parquet(spark, f"{sf_dir}/embeddings.parquet")
 
 
 def _as_double(col) -> Column:
@@ -466,7 +467,8 @@ def train_ivf_centroids(
     keyed shuffle for the mean — no vector ever concentrates on one
     task, and only k×dims scalars return to the driver per round.
     Deterministic: seeds are the k lowest-md5 vectors, and the mean
-    aggregation is per-(cluster, dim)."""
+    aggregation is per-(cluster, dim). Fewer than k (sampled) vectors
+    raise ValueError."""
     with _tiny_if_small(emb) as (emb,):
         vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
         if sample_fraction is not None:
@@ -482,6 +484,10 @@ def train_ivf_centroids(
             .select("v")
             .collect()
         )
+        if len(seeds) < k:
+            raise ValueError(
+                f"k-means with k={k} needs at least {k} vectors; got {len(seeds)}"
+            )
         centroids = [list(r.v) for r in seeds]
         for _ in range(iters):
             centroids = _lloyd_round(vecs, centroids)
@@ -717,7 +723,8 @@ def train_pq_codebooks(
     """Train all M subspace codebooks in parallel (one job per Lloyd
     round covers every subspace). Deterministic seeding: per subspace,
     the K subvectors with the lowest md5(vec_id). `dims`, when known
-    by the caller, skips the one-row dims probe job."""
+    by the caller, skips the one-row dims probe job. Fewer than K
+    vectors raise ValueError."""
     from pyspark.sql import Window
 
     with _tiny_if_small(emb) as (emb,):
@@ -738,6 +745,11 @@ def train_pq_codebooks(
             ]
             for r in seed_rows:
                 books[r.sub][r.cid] = list(r.sv)
+            n = sum(1 for r in seed_rows if r.sub == 0)
+            if n < k:
+                raise ValueError(
+                    f"PQ training with k={k} needs at least {k} vectors; got {n}"
+                )
             for _ in range(iters):
                 assigned = _pq_assign(subvecs, books)
                 # Collect the M×K×(D/M) (sub, cid, pos, mu) scalars

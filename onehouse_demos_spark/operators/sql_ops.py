@@ -15,6 +15,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from onehouse_demos_spark.sources.batch import read_parquet
 from onehouse_demos_spark.sql import Engine
 
 _CACHE: dict[str, Engine] = {}
@@ -31,7 +32,7 @@ def _build(spark: SparkSession, sf_dir: str) -> Engine:
     _TMPDIRS.append(tmp)
     eng = Engine(spark, f"{tmp}/wh")
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet").select(
         *[c.strip() for c in _COLS.split(",")]
     )
     orders.createOrReplaceTempView("orders_src")
@@ -139,7 +140,7 @@ def _build_indexed(spark: SparkSession, sf_dir: str) -> Engine:
     _TMPDIRS.append(tmp)
     eng = Engine(spark, f"{tmp}/wh")
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet").select(
         *[c.strip() for c in _COLS.split(",")]
     )
     orders.createOrReplaceTempView("idx_orders_src")
@@ -251,7 +252,7 @@ def _build_call(spark: SparkSession, sf_dir: str) -> Engine:
     _TMPDIRS.append(tmp)
     eng = Engine(spark, f"{tmp}/wh")
 
-    spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    read_parquet(spark, f"{sf_dir}/orders.parquet").select(
         *[c.strip() for c in _COLS.split(",")]
     ).createOrReplaceTempView("call_orders_src")
 

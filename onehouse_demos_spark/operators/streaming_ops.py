@@ -18,18 +18,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onehouse_demos_spark.functions.quantize import fquant
+from onehouse_demos_spark.sources.batch import parquet_schema
+
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the events table with `ts` normalized to TimestampType.
 
-    The generator has shipped `ts` as TIMESTAMP(NANOS) (Spark reads it
-    as long under the legacy conf) and as TIMESTAMP(MICROS) ntz; sniff
-    the physical schema with a batch footer read, then declare the
-    matching stream schema and normalization — same contract as
-    operators.relational.load_events.
+    The generator has shipped `ts` as TIMESTAMP(NANOS), which the footer
+    schema reads as bigint nanos, and as TIMESTAMP(MICROS) ntz; the
+    stream declares that footer schema and the matching normalization,
+    the same contract as operators.relational.load_events.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    physical = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    physical = parquet_schema(spark, f"{sf_dir}/events.parquet")
     raw = (
         spark.readStream.schema(physical)
         .option("pathGlobFilter", "events.parquet")

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from onehouse_demos_spark.functions.quantize import fquant
 from onehouse_demos_spark.operators.relational import fan_out
+from onehouse_demos_spark.sources.batch import read_parquet
 
 from onehouse_demos_spark.functions.text import (
     LANG_MARKERS,
@@ -23,7 +24,7 @@ from onehouse_demos_spark.functions.text import (
 
 
 def load_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_parquet(spark, f"{sf_dir}/documents.parquet")
 
 
 # --------------------------------------------------------------------------

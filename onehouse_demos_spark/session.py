@@ -107,14 +107,13 @@ def tiny_scope(*dfs: DataFrame) -> Iterator[tuple[DataFrame, ...]]:
     """Yield `dfs` re-bound into a fresh clone of their session that
     runs with `TINY_CONFS`.
 
-    The clone copies the caller's whole runtime conf (time zone,
-    nanosAsLong, ...) at entry and shares its SparkContext and
-    CacheManager, so persisted inputs still hit their cache. The
-    caller's conf is never touched: the engine plans writes from
-    concurrent threads, which would observe a flip on the shared
-    session. Frames move across through uniquely named global temp
-    views, dropped on exit without uncaching what they point at.
-    Frames already on a tiny session are yielded unchanged.
+    The clone copies the caller's whole runtime conf (time zone, ...)
+    at entry and shares its SparkContext and CacheManager, so persisted
+    inputs still hit their cache. The caller's conf is never touched:
+    the engine plans writes from concurrent threads, which would observe
+    a flip on the shared session. Frames move across through uniquely
+    named global temp views, dropped on exit without uncaching what they
+    point at. Frames already on a tiny session are yielded unchanged.
     """
     spark = dfs[0].sparkSession
     if all(spark.conf.get(k) == v for k, v in TINY_CONFS.items()):

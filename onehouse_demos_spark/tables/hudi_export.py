@@ -98,6 +98,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from onehouse_demos_spark.sources.batch import parquet_schema
 from onehouse_demos_spark.tables.object_publish import Publisher, default_store
 from onehouse_demos_spark.tables.personality import (
     assert_no_log_tombstones,
@@ -1822,9 +1823,7 @@ def read_hudi_point(
                     if part == _MDT_ROOT_PARTITION
                     else os.path.join(base_path, part, name)
                 )
-                df = spark.createDataFrame(
-                    [], spark.read.parquet(p).schema
-                )
+                df = spark.createDataFrame([], parquet_schema(spark, p))
                 drop = [
                     c for c in df.columns if c.startswith("_hoodie_")
                 ]
@@ -3268,8 +3267,6 @@ def _base_fields(
     type is kept: `_avro_type` records containers and timestamp_ntz as
     string and short/byte as int. Without a recorded schema, the newest
     footer."""
-    import pyarrow.parquet as pq
-
     # `<fileId>_<token>_<instant>.parquet`: newest instant first; files
     # of one instant in path order
     order = sorted(
@@ -3277,7 +3274,7 @@ def _base_fields(
         key=lambda p: os.path.basename(p).rsplit("_", 1)[1],
         reverse=True,
     )
-    footer = spark.read.parquet(order[0]).schema
+    footer = parquet_schema(spark, order[0])
     hoodie = _hoodie_dir(base_path)
     recorded = None
     for instant, action in reversed(_completed_instants(hoodie)):
@@ -3309,11 +3306,10 @@ def _base_fields(
     for p in order[1:]:
         if not need:
             break
-        if need & set(pq.read_schema(p).names):
-            for f in spark.read.parquet(p).schema.fields:
-                if f.name in need:
-                    by_name[f.name] = f.dataType
-                    need.discard(f.name)
+        for f in parquet_schema(spark, p).fields:
+            if f.name in need:
+                by_name[f.name] = f.dataType
+                need.discard(f.name)
     fields = []
     for n, at in wanted:
         ft = by_name.get(n)
@@ -3461,9 +3457,9 @@ def read_hudi_incremental(
             groups, _logs = _live_file_groups(base_path)
             if groups:
                 any_rel = next(iter(sorted(groups.values())))[1]
-                schema = spark.read.parquet(
-                    os.path.join(base_path, any_rel)
-                ).schema
+                schema = parquet_schema(
+                    spark, os.path.join(base_path, any_rel)
+                )
         if schema is None:
             from onehouse_demos_spark.sources.avro_codec import (
                 avro_to_spark_type,

@@ -4,6 +4,7 @@ unprobed cells (file-level partition pruning over the codes table)."""
 
 import glob
 
+import pytest
 from pyspark.sql import functions as F
 
 from onehouse_demos_spark.operators.ann_index import AnnIndex
@@ -16,6 +17,14 @@ def _build(spark, tmp_base):
     return AnnIndex.build(
         emb, tmp_base + "/idx", k_coarse=8, m=8, k_pq=16, iters=3
     )
+
+
+@pytest.mark.parametrize("n, k", [(12, 16), (5, 8)])
+def test_build_on_fewer_vectors_than_k_raises(spark, tmp_base, n, k):
+    """12 vectors cover k_coarse=8 but not k_pq=16; 5 cover neither."""
+    emb = load_emb(spark, SF_DIR).orderBy("vec_id").limit(n)
+    with pytest.raises(ValueError, match=rf"k={k} needs at least {k} vectors; got {n}$"):
+        AnnIndex.build(emb, tmp_base + "/idx", k_coarse=8, k_pq=16, iters=2)
 
 
 def test_build_load_search_recall(spark, tmp_base):

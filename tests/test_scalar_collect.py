@@ -203,11 +203,6 @@ _CONF_SET_ALLOWED = {
     ("session.py", "tiny_scope", "clone.conf"),
     # reference-faithful conf-steered incremental read
     ("operators/mutations.py", "tbl_conf_incremental_read", "spark.conf"),
-    # nanosecond parquet timestamps, read as longs; the driver hands
-    # its own session to `entry(spark)`, so a construction-time conf
-    # cannot replace these
-    ("operators/relational.py", "load_events", "spark.conf"),
-    ("operators/streaming_ops.py", "_events_stream", "spark.conf"),
 }
 
 
