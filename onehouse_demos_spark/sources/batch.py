@@ -7,28 +7,12 @@ surface is enumerable; each maps 1:1 to a reference demo pattern.
 from __future__ import annotations
 
 import json
-import threading
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-#: SQL confs that steer Spark's Parquet → Spark type conversion, besides
-#: nanosAsLong, which `parquet_schema` fixes to true.
-_CONVERTER_CONFS = (
-    "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.caseSensitive",
-    "spark.sql.parquet.inferTimestampNTZ.enabled",
-    "spark.sql.parquet.fieldId.read.enabled",
-    "spark.sql.parquet.ignoreVariantAnnotation",
-    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
-)
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
-#: Footer schemas kept; the oldest entry is evicted first.
-_SCHEMA_CACHE_SIZE = 1024
-_schemas: dict[tuple, str] = {}
-_schemas_lock = threading.Lock()
 
 
 def read_csv(spark: SparkSession, path: str, header: bool = True) -> DataFrame:
@@ -46,14 +30,13 @@ def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
     binaryAsString, Spark's row-metadata key), except that
     TIMESTAMP(NANOS) always maps to bigint: the converter runs on a
     clone of the session's SQL conf with nanosAsLong on, and the
-    session's own conf is never written. No Spark job runs. Schemas are
-    cached per qualified path, file length, modification time and the
-    converter's confs, so a rewritten file is read again. A path that is
-    not a file (a directory, a missing path) gets Spark's inference, and
-    its errors."""
+    session's own conf is never written. No Spark job runs, and the
+    footer is read on every call, so a rewritten file is seen at once.
+    A path that is not a file (a directory, a missing path) gets
+    Spark's inference, and its errors."""
     jvm = spark._jvm
-    jsession = spark._jsparkSession
-    hconf = jsession.sessionState().newHadoopConf()
+    state = spark._jsparkSession.sessionState()
+    hconf = state.newHadoopConf()
     p = jvm.org.apache.hadoop.fs.Path(path)
     try:
         status = p.getFileSystem(hconf).getFileStatus(p)
@@ -61,32 +44,19 @@ def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
         status = None
     if status is None or not status.isFile():
         return spark.read.parquet(path).schema
-    sqlconf = jsession.sessionState().conf()
-    key = (
-        status.getPath().toString(),
-        status.getLen(),
-        status.getModificationTime(),
-        tuple(sqlconf.getConfString(k) for k in _CONVERTER_CONFS),
+    conf = state.conf().clone()
+    conf.setConfString(_NANOS_AS_LONG, "true")
+    meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        hconf,
+        status,
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
     )
-    found = _schemas.get(key)
-    if found is None:
-        conf = sqlconf.clone()
-        conf.setConfString(_NANOS_AS_LONG, "true")
-        meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-            hconf,
-            status,
-            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
-        )
-        fmt = jvm.org.apache.spark.sql.execution.datasources.parquet
-        found = fmt.ParquetFileFormat.readSchemaFromFooter(
-            jvm.org.apache.parquet.hadoop.Footer(status.getPath(), meta),
-            fmt.ParquetToSparkSchemaConverter(conf),
-        ).json()
-        with _schemas_lock:
-            if len(_schemas) >= _SCHEMA_CACHE_SIZE:
-                del _schemas[next(iter(_schemas))]
-            _schemas[key] = found
-    return T.StructType.fromJson(json.loads(found))
+    fmt = jvm.org.apache.spark.sql.execution.datasources.parquet
+    schema = fmt.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(status.getPath(), meta),
+        fmt.ParquetToSparkSchemaConverter(conf),
+    )
+    return T.StructType.fromJson(json.loads(schema.json()))
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

@@ -3267,6 +3267,8 @@ def _base_fields(
     type is kept: `_avro_type` records containers and timestamp_ntz as
     string and short/byte as int. Without a recorded schema, the newest
     footer."""
+    import pyarrow.parquet as pq
+
     # `<fileId>_<token>_<instant>.parquet`: newest instant first; files
     # of one instant in path order
     order = sorted(
@@ -3306,10 +3308,11 @@ def _base_fields(
     for p in order[1:]:
         if not need:
             break
-        for f in parquet_schema(spark, p).fields:
-            if f.name in need:
-                by_name[f.name] = f.dataType
-                need.discard(f.name)
+        if need & set(pq.read_schema(p).names):
+            for f in parquet_schema(spark, p).fields:
+                if f.name in need:
+                    by_name[f.name] = f.dataType
+                    need.discard(f.name)
     fields = []
     for n, at in wanted:
         ft = by_name.get(n)

@@ -3,9 +3,8 @@
 
 - the footer schema equals what Spark infers, for every source file;
 - a rewritten file (new length or modification time) is read again;
-- concurrent reads through an evicting cache stay correct;
 - TIMESTAMP(NANOS) maps to bigint without touching the session's conf,
-  and `load_events` turns it into µs timestamps;
+  and `load_events` and the events stream turn it into µs timestamps;
 - building a Parquet-sourced query's DataFrame submits no Spark job.
 """
 
@@ -13,18 +12,17 @@ from __future__ import annotations
 
 import glob
 import os
-import sys
-import threading
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 import onehouse_demos_spark.operators as operators
 from onehouse_demos_spark.operators.relational import load_events
 from onehouse_demos_spark.operators.streaming_ops import _events_stream
-from onehouse_demos_spark.sources import batch
 from onehouse_demos_spark.sources.batch import parquet_schema, read_parquet
 
 from tests.conftest import SF_DIR
@@ -71,42 +69,10 @@ def test_rewritten_file_is_read_again(spark, tmp_base):
     assert parquet_schema(spark, path).names == ["a", "cc"]
 
 
-def test_concurrent_reads_through_an_evicting_cache(spark, tmp_base, monkeypatch):
-    """Threads sharing a cache smaller than their file set: every read
-    returns its own file's schema and no eviction races another."""
-    paths = []
-    for i in range(4):
-        paths.append(f"{tmp_base}/f{i}.parquet")
-        pq.write_table(pa.table({f"c{i}": [i]}), paths[-1])
-    monkeypatch.setattr(batch, "_SCHEMA_CACHE_SIZE", 2)
-    monkeypatch.setattr(batch, "_schemas", {})
-    errors: list[BaseException] = []
-
-    def run(k):
-        try:
-            for j in range(40):
-                i = (k + j) % len(paths)
-                assert parquet_schema(spark, paths[i]).names == [f"c{i}"]
-        except BaseException as exc:  # surfaced below
-            errors.append(exc)
-
-    interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [threading.Thread(target=run, args=(k,)) for k in range(8)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=120)
-    finally:
-        sys.setswitchinterval(interval)
-    assert not any(t.is_alive() for t in threads)
-    assert not errors, errors
-    assert len(batch._schemas) <= 2
-
-
 def test_nanos_events_load_as_micros_and_leave_conf_alone(spark, tmp_base):
     ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_001]
+    src = f"{tmp_base}/src"
+    os.makedirs(src)
     pq.write_table(
         pa.table(
             {
@@ -114,14 +80,32 @@ def test_nanos_events_load_as_micros_and_leave_conf_alone(spark, tmp_base):
                 "ts": pa.array(ns, pa.timestamp("ns", tz="UTC")),
             }
         ),
-        f"{tmp_base}/events.parquet",
+        f"{src}/events.parquet",
     )
     before = spark.conf.get(NANOS_AS_LONG)
-    ev = load_events(spark, tmp_base)
+    ev = load_events(spark, src)
     assert ev.schema["ts"].dataType == T.TimestampType()
     got = [r.us for r in ev.selectExpr("unix_micros(ts) AS us").orderBy("us").collect()]
     assert got == [v // 1000 for v in ns]
-    assert _events_stream(spark, tmp_base).schema["ts"].dataType == T.TimestampType()
+
+    stream = _events_stream(spark, src)
+    assert stream.schema["ts"].dataType == T.TimestampType()
+    view = f"nanos_stream_{uuid.uuid4().hex[:8]}"
+    q = (
+        stream.select(F.unix_micros("ts").alias("us"))
+        .writeStream.format("memory")
+        .queryName(view)
+        .option("checkpointLocation", f"{tmp_base}/checkpoint")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    streamed = sorted(r.us for r in spark.table(view).collect())
+    spark.catalog.dropTempView(view)
+    assert streamed == [v // 1000 for v in ns]
     assert spark.conf.get(NANOS_AS_LONG) == before
 
 
