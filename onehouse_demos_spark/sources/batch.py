@@ -32,29 +32,29 @@ def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
     clone of the session's SQL conf with nanosAsLong on, and the
     session's own conf is never written. No Spark job runs, and the
     footer is read on every call, so a rewritten file is seen at once.
-    A path that is not a file (a directory, a missing path) gets
-    Spark's inference, and its errors."""
+    A path whose footer cannot be read (a directory, a missing path)
+    gets Spark's inference, and its errors."""
+    # Classes are looked up by their full name: one Py4J round trip
+    # each, where `jvm.org.apache...` takes one per package segment.
     jvm = spark._jvm
     state = spark._jsparkSession.sessionState()
-    hconf = state.newHadoopConf()
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    p = getattr(jvm, "org.apache.hadoop.fs.Path")(path)
     try:
-        status = p.getFileSystem(hconf).getFileStatus(p)
+        meta = getattr(jvm, "org.apache.parquet.hadoop.ParquetFileReader").readFooter(
+            state.newHadoopConf(),
+            p,
+            getattr(
+                jvm, "org.apache.parquet.format.converter.ParquetMetadataConverter"
+            ).SKIP_ROW_GROUPS,
+        )
     except Py4JJavaError:
-        status = None
-    if status is None or not status.isFile():
         return spark.read.parquet(path).schema
     conf = state.conf().clone()
     conf.setConfString(_NANOS_AS_LONG, "true")
-    meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        hconf,
-        status,
-        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
-    )
-    fmt = jvm.org.apache.spark.sql.execution.datasources.parquet
-    schema = fmt.ParquetFileFormat.readSchemaFromFooter(
-        jvm.org.apache.parquet.hadoop.Footer(status.getPath(), meta),
-        fmt.ParquetToSparkSchemaConverter(conf),
+    fmt = "org.apache.spark.sql.execution.datasources.parquet."
+    schema = getattr(jvm, fmt + "ParquetFileFormat").readSchemaFromFooter(
+        getattr(jvm, "org.apache.parquet.hadoop.Footer")(p, meta),
+        getattr(jvm, fmt + "ParquetToSparkSchemaConverter")(conf),
     )
     return T.StructType.fromJson(json.loads(schema.json()))
 
