@@ -19,13 +19,16 @@ Layout under `path/`:
   index, and the index is M bytes/vector, not D floats
 - ``meta.json``          — dims / m / k / sizes
 
-100 TB design: build is the Lloyd/encode pipeline from
-operators.similarity (broadcast-codebook map stages + (sub,cid,dim)
-mean shuffles; only codebook scalars ever reach the driver); the codes
-write is one shuffle on cell. Query reads centroids+codebooks (KB) to
-the driver, compiles the per-cell ADC lookup tables into the plan, and
-TakeOrders a shortlist that an optional exact re-rank (semi-join back
-to the vector table) refines — the full corpus is never scanned.
+Build trains both quantizers on the driver over one collect of the
+training vectors (`similarity._lloyd`: n x dims doubles in driver
+memory, 1 MB at sf0.1; sample first past that), then encodes the corpus
+on Spark against the broadcast centroids and codebooks, with one
+shuffle on cell for the codes write. Only the encode and the write
+scale with the corpus. A query reads centroids and codebooks (KB) on
+the driver with pyarrow, compiles the per-cell ADC lookup tables into
+the plan, and TakeOrders a shortlist that an optional exact re-rank
+(semi-join back to the vector table) refines; the full corpus is never
+scanned.
 
 (Reference analog: the lakehouse keeps derived tables queryable by any
 engine — hudi-spark-minio-trino/README.md:312-380; the index here is
@@ -36,7 +39,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+from contextlib import nullcontext
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,14 +51,32 @@ from onehouse_demos_spark.operators.similarity import (
     _as_double,
     _assign_to_centroids,
     _centroid_df,
+    _collect_vectors,
+    _lloyd,
+    _nearest,
     _pq_assign,
-    _pq_codebook_df,
     _subvec_frame,
-    _tiny_if_small,
+    _train_pq,
     cosine,
-    train_ivf_centroids,
-    train_pq_codebooks,
 )
+from onehouse_demos_spark.session import is_tiny, tiny_scope
+
+
+def _tiny_if_small(df: DataFrame):
+    """`session.tiny_scope(df)` when `is_tiny(df)`, else `(df,)` as is.
+
+    The encode chain (assignment, residuals, PQ codes, codes write) is a
+    few small dependent jobs on tiny inputs; the scope runs each as one
+    job with 1-partition shuffles, which also gives one codes file per
+    cell directory. The codes do not depend on the partitioning."""
+    return tiny_scope(df) if is_tiny(df) else nullcontext((df,))
+
+
+def _write_one_file(path: str, table: pa.Table) -> None:
+    """Replace the directory `path` with one `part-00000.parquet`."""
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
 
 class AnnIndex:
@@ -80,94 +105,87 @@ class AnnIndex:
         k_pq: int = 16,
         iters: int = 4,
     ) -> "AnnIndex":
-        spark = emb.sparkSession
-        # The whole build is a chain of ~30 small dependent jobs (train
-        # rounds, assignment, encode, three writes). Only when
-        # `is_tiny(emb)` it runs in `session.tiny_scope`, whose
-        # 1-partition shuffles give the codes write one file per cell
-        # directory. The index does not depend on the partitioning
-        # (centroids and codewords sit on the 6-decimal grid), and the
-        # returned index stays bound to the caller's session.
+        """Train and persist an IVF-PQ index over `emb` (vec_id,
+        embedding). The training vectors are collected once and held on
+        the driver (n x dims doubles); the coarse quantizer trains on
+        them, PQ on their residuals to the assigned centroid (IVFADC:
+        PQ quantizes what the coarse cell did not explain). Fewer
+        vectors than `k_coarse` or `k_pq` raise ValueError."""
+        ids, X = _collect_vectors(emb)
+        C = _lloyd(ids, X, k_coarse, iters)
+        books = _train_pq(ids, X - C[_nearest(X, C)], m, k_pq, iters)
+        centroids = C.tolist()
+        meta = {
+            "dims": X.shape[1],
+            "k_coarse": k_coarse,
+            "m": m,
+            "k_pq": k_pq,
+            "n_vectors": len(ids),
+        }
+        idx = AnnIndex(emb.sparkSession, path, centroids, books, meta)
         with _tiny_if_small(emb) as (emb,):
-            vecs = emb.select(
-                "vec_id", _as_double(F.col("embedding")).alias("v")
-            ).persist()
-            resid = None
-            try:
-                dims = len(vecs.select("v").first().v)
-                # 1. coarse quantizer
-                centroids = train_ivf_centroids(
-                    vecs.select("vec_id", F.col("v").alias("embedding")),
-                    k=k_coarse,
-                    iters=iters,
-                )
-                assigned = _assign_to_centroids(
-                    vecs.select("vec_id", "v"), centroids
-                ).withColumnRenamed("cid", "cell")
-                # 2. residuals vs the assigned centroid (IVFADC): PQ
-                # quantizes what the coarse cell did NOT explain, which
-                # is where its accuracy over plain PQ comes from.
-                cdf = _centroid_df(vecs, centroids).withColumnRenamed(
-                    "cid", "cell"
-                )
-                resid = assigned.join(F.broadcast(cdf), "cell").select(
-                    "vec_id",
-                    "cell",
-                    F.zip_with("v", "c", lambda a, b: a - b).alias("v"),
-                ).persist()
-                # 3. PQ codebooks on residuals + encode
-                books = train_pq_codebooks(
-                    resid.select("vec_id", F.col("v").alias("embedding")),
-                    m=m,
-                    k=k_pq,
-                    iters=iters,
-                    dims=dims,
-                )
-                codes = (
-                    _pq_assign(
-                        _subvec_frame(
-                            resid.select("vec_id", "v"), m, dims=dims
-                        ),
-                        books,
-                    )
-                    .groupBy("vec_id")
-                    .agg(
-                        F.array_sort(
-                            F.collect_list(F.struct("sub", "cid"))
-                        ).alias("sc")
-                    )
-                    .select(
-                        "vec_id",
-                        F.transform("sc", lambda s: s["cid"]).alias("codes"),
-                    )
-                    .join(resid.select("vec_id", "cell"), "vec_id")
-                )
-                # 4. persist: codes partitioned by cell → probed-cell
-                # file pruning at query time; codebooks/centroids are
-                # tiny.
-                codes.repartition("cell").write.mode(
-                    "overwrite"
-                ).partitionBy("cell").parquet(f"{path}/codes")
-                _centroid_df(vecs, centroids).write.mode(
-                    "overwrite"
-                ).parquet(f"{path}/centroids.parquet")
-                _pq_codebook_df(vecs.sparkSession, books).write.mode(
-                    "overwrite"
-                ).parquet(f"{path}/codebooks.parquet")
-                meta = {
-                    "dims": dims,
-                    "k_coarse": k_coarse,
-                    "m": m,
-                    "k_pq": k_pq,
-                    "n_vectors": vecs.count(),
-                }
-            finally:
-                vecs.unpersist()
-                if resid is not None:
-                    resid.unpersist()
+            idx._write_codes(emb, "overwrite")
+        _write_one_file(
+            f"{path}/centroids.parquet",
+            pa.table({
+                "cid": pa.array(range(k_coarse), pa.int32()),
+                "c": pa.array(centroids, pa.list_(pa.float64())),
+            }),
+        )
+        _write_one_file(
+            f"{path}/codebooks.parquet",
+            pa.table({
+                "sub": pa.array(
+                    [s for s in range(m) for _ in range(k_pq)], pa.int32()
+                ),
+                "cid": pa.array(list(range(k_pq)) * m, pa.int32()),
+                "c": pa.array(
+                    [c for book in books for c in book], pa.list_(pa.float64())
+                ),
+            }),
+        )
         with open(f"{path}/meta.json", "w") as fh:
             json.dump(meta, fh)
-        return AnnIndex(spark, path, centroids, books, meta)
+        return idx
+
+    def _write_codes(self, emb: DataFrame, mode: str) -> None:
+        """Encode `emb` (vec_id, embedding) against the index's frozen
+        quantizers and write the codes under `codes/`, hive-partitioned
+        by cell, with write `mode`: cell assignment (broadcast
+        centroids), the residual to the cell centroid, PQ codes
+        (broadcast codebooks), one shuffle on cell. Callers run it in
+        `_tiny_if_small(emb)`."""
+        vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
+        cells = _assign_to_centroids(vecs, self.centroids).withColumnRenamed(
+            "cid", "cell"
+        )
+        cdf = _centroid_df(vecs, self.centroids).withColumnRenamed("cid", "cell")
+        resid = cells.join(F.broadcast(cdf), "cell").select(
+            "vec_id",
+            "cell",
+            F.zip_with("v", "c", lambda a, b: a - b).alias("v"),
+        )
+        codes = (
+            _pq_assign(
+                _subvec_frame(
+                    resid.select("vec_id", "v"),
+                    self.meta["m"],
+                    dims=self.meta["dims"],
+                ),
+                self.codebooks,
+            )
+            .groupBy("vec_id")
+            .agg(
+                F.array_sort(F.collect_list(F.struct("sub", "cid"))).alias("sc")
+            )
+            .select(
+                "vec_id", F.transform("sc", lambda s: s["cid"]).alias("codes")
+            )
+            .join(resid.select("vec_id", "cell"), "vec_id")
+        )
+        codes.repartition("cell").write.mode(mode).partitionBy("cell").parquet(
+            f"{self.path}/codes"
+        )
 
     # ------------------------------------------------------- incremental
 
@@ -178,65 +196,24 @@ class AnnIndex:
         until then inserts assign against the existing geometry, same
         as FAISS `IndexIVF.add`). Returns the number of rows appended.
 
-        Scale shape: every job here is over the BATCH only — assign
-        cells (broadcast centroids), residual-encode with the existing
-        codebooks (broadcast), one shuffle on `cell`, and an APPEND of
-        new files inside the existing hive cell partitions, so
-        probed-cell file pruning keeps working unchanged and the
-        existing codes are never read or rewritten. Many small batches
-        leave a small-file tail per cell — rebuild (or re-write the
-        hot cells) on the usual maintenance cadence, exactly like
-        table file-sizing.
+        Scale shape: every job here is over the BATCH only (the encode
+        chain of `_write_codes`) and APPENDS new files inside the
+        existing hive cell partitions, so probed-cell file pruning
+        keeps working unchanged and the existing codes are never read
+        or rewritten. Many small batches leave a small-file tail per
+        cell — rebuild (or re-write the hot cells) on the usual
+        maintenance cadence, exactly like table file-sizing.
 
         `vec_id`s must be new: the index never rescans itself to check
         (that would read the whole corpus per insert) — dedupe
         upstream like any append-only ingest."""
-        # Same tiny scope as build, guarded on the batch alone.
         with _tiny_if_small(emb) as (emb,):
-            vecs = emb.select(
-                "vec_id", _as_double(F.col("embedding")).alias("v")
-            ).persist()
+            vecs = emb.select("vec_id", "embedding").persist()
             try:
                 n = vecs.count()
                 if n == 0:
                     return 0
-                assigned = _assign_to_centroids(
-                    vecs.select("vec_id", "v"), self.centroids
-                ).withColumnRenamed("cid", "cell")
-                cdf = _centroid_df(vecs, self.centroids).withColumnRenamed(
-                    "cid", "cell"
-                )
-                resid = assigned.join(F.broadcast(cdf), "cell").select(
-                    "vec_id",
-                    "cell",
-                    F.zip_with("v", "c", lambda a, b: a - b).alias("v"),
-                )
-                codes = (
-                    _pq_assign(
-                        _subvec_frame(
-                            resid.select("vec_id", "v"),
-                            self.meta["m"],
-                            dims=self.meta["dims"],
-                        ),
-                        self.codebooks,
-                    )
-                    .groupBy("vec_id")
-                    .agg(
-                        F.array_sort(
-                            F.collect_list(F.struct("sub", "cid"))
-                        ).alias("sc")
-                    )
-                    .select(
-                        "vec_id",
-                        F.transform("sc", lambda s: s["cid"]).alias(
-                            "codes"
-                        ),
-                    )
-                    .join(resid.select("vec_id", "cell"), "vec_id")
-                )
-                codes.repartition("cell").write.mode("append").partitionBy(
-                    "cell"
-                ).parquet(f"{self.path}/codes")
+                self._write_codes(vecs, "append")
             finally:
                 vecs.unpersist()
         self.meta["n_vectors"] = int(self.meta.get("n_vectors", 0)) + n
@@ -250,18 +227,17 @@ class AnnIndex:
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "AnnIndex":
+        """The index at `path`, read on the driver with pyarrow (no
+        Spark job). Spark-written `centroids.parquet`/`codebooks.parquet`
+        directories load too: pyarrow skips `_SUCCESS` and `.crc`."""
         with open(os.path.join(path, "meta.json")) as fh:
             meta = json.load(fh)
-        crows = spark.read.parquet(f"{path}/centroids.parquet").collect()
         centroids = [None] * meta["k_coarse"]
-        for r in crows:
-            centroids[r.cid] = list(r.c)
-        brows = spark.read.parquet(f"{path}/codebooks.parquet").collect()
-        books = [
-            [None] * meta["k_pq"] for _ in range(meta["m"])
-        ]
-        for r in brows:
-            books[r.sub][r.cid] = list(r.c)
+        for r in pq.read_table(f"{path}/centroids.parquet").to_pylist():
+            centroids[r["cid"]] = r["c"]
+        books = [[None] * meta["k_pq"] for _ in range(meta["m"])]
+        for r in pq.read_table(f"{path}/codebooks.parquet").to_pylist():
+            books[r["sub"]][r["cid"]] = r["c"]
         return AnnIndex(spark, path, centroids, books, meta)
 
     # ----------------------------------------------------------- search

@@ -1,36 +1,32 @@
-"""DuckDB oracle SQL for the trained-quantizer ANN queries.
+"""DuckDB oracle SQL for the trained-quantizer ANN queries
+(`knn_ivf_trained`, `pq_adc_topk`, `ann_index_search`,
+`ann_index_incremental`).
 
-r2 verdict asked for oracles on the 3 ANN queries that were only
-recall-gated (`knn_ivf_trained`, `pq_adc_topk`, `ann_index_search`).
-k-means IS expressible in SQL — each Lloyd round is one
-nearest-centroid window + one per-dimension mean — so instead of
-self-certifying, the oracle REPLAYS the exact training pipeline:
-deterministic md5 seeding, a fixed number of Lloyd rounds, assignment,
-(for PQ) sub-vector codebooks and ADC scoring, shortlist, exact
-cosine re-rank.
+k-means is expressible in SQL (each Lloyd round is one
+nearest-centroid window plus one per-dimension mean), so the oracle
+replays the exact training pipeline: deterministic md5 seeding, a fixed
+number of Lloyd rounds, assignment, (for PQ) sub-vector codebooks and
+ADC scoring, shortlist, exact cosine re-rank.
 
-Cross-engine float discipline (mirrored by operators/similarity.py and
-operators/ann_index.py): every Lloyd mean and every
-assignment/probe/LUT distance lands on a 6-decimal grid with explicit
-cid/vec_id tie-breaks, so summation-order noise (Spark shuffle order,
-DuckDB parallel aggregation, Python fold order) cannot flip an argmin
-— both engines feed bit-identical centroids into every round. The
-final cosine rounds to 4 decimals like every other similarity oracle.
+Cross-engine float discipline (shared with similarity._lloyd, the
+Spark-side assignment and operators/ann_index.py): every Lloyd mean and
+every assignment/probe/LUT distance lands on a 6-decimal grid with
+explicit cid/vec_id tie-breaks, so summation-order noise (Spark shuffle
+order, DuckDB parallel aggregation, numpy or Python fold order) cannot
+flip an argmin, and both engines feed identical centroids into every
+round. The final cosine rounds to 4 decimals like every other
+similarity oracle.
 
 The SQL is generated (a Lloyd round is a CTE template applied `iters`
-times) — that keeps the Spark implementation and the oracle pinned to
-the same hyperparameters by construction.
+times), which pins the Spark implementation and the oracle to the same
+hyperparameters by construction.
 
-Every CTE is declared ``AS MATERIALIZED`` (r14 optimization): DuckDB
-inlines plain CTEs at each reference site, and round ``i``'s centroid
-CTE references round ``i-1``'s twice (assignment join + empty-cell
-carry), so an `iters`-round chain re-derived the whole training
-lineage O(2^iters) times — `ann_index_search` spent ~150 s at sf0.01
-in the correctness sweep. Materialization evaluates each round once
-and is result-identical by construction (same rows, same rounding
-discipline; proven by exact old-vs-new comparison at sf0.001/0.01/0.1
-— see OPTIMIZATION_r14.md): 28 s → 0.6 s at sf0.01 for the search
-oracle, 33 s → 0.4 s for the incremental one.
+Every CTE is declared ``AS MATERIALIZED``: DuckDB inlines plain CTEs at
+each reference site, and round ``i``'s centroid CTE references round
+``i-1``'s twice (assignment join + empty-cell carry), so an
+`iters`-round chain would re-derive the whole training lineage
+O(2^iters) times. Materialization evaluates each round once and gives
+the same rows.
 """
 
 from __future__ import annotations
@@ -62,8 +58,8 @@ def _kmeans_ctes(prefix: str, src: str, k: int, iters: int) -> str:
     grp=sub for per-subspace PQ codebooks). Final centroids land in
     `{prefix}_c{iters}(grp, cid, c)`.
 
-    Matches similarity.train_ivf_centroids / train_pq_codebooks:
-    seeds = k lowest (md5(id), id) per grp; each round assigns by
+    Matches similarity._lloyd, the engine's one k-means: seeds = k
+    lowest (md5(id), id) per grp; each round assigns by
     ROUND(euclidean, 6) with cid tie-break and re-centers with
     ROUND(avg, 6) per dimension; empty cells carry the previous
     centroid."""

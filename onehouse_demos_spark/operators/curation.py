@@ -53,6 +53,7 @@ from onehouse_demos_spark.operators.similarity import (
     cosine,
     load_emb,
 )
+from onehouse_demos_spark.sources.batch import parquet_num_rows
 
 #: Fraction of candidate pairs treated as "semantic duplicates": the
 #: cosine threshold is the rank-ceil(SEMDEDUP_TOP_FRAC * n_pairs)-th
@@ -150,7 +151,9 @@ def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_emb(spark, sf_dir).select(
         "vec_id", _as_double(F.col("embedding")).alias("v")
     )
-    bits = _adaptive_bits(load_emb(spark, sf_dir).count())
+    bits = _adaptive_bits(
+        parquet_num_rows(spark, f"{sf_dir}/embeddings.parquet")
+    )
     emb = emb.withColumn("bucket", _sign_bucket_str(F.col("v"), bits))
     a, b = emb.alias("a"), emb.alias("b")
     pairs = (

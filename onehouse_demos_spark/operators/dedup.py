@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onehouse_demos_spark.functions.text import normalize_text, shingles
-from onehouse_demos_spark.sources.batch import read_parquet
+from onehouse_demos_spark.sources.batch import parquet_num_rows, read_parquet
 
 N_MINHASH = 16  #: signature length
 N_BANDS = 4  #: LSH bands (rows per band = N_MINHASH / N_BANDS)
@@ -753,10 +753,10 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     rest = sh.filter(F.col("doc_id") % 50 != 0)
     # A REAL benchmark set is small → broadcast. The doc_id%50 stand-in
     # grows with the corpus (2% of docs), so gate the hint on a
-    # metadata-only doc count: past ~5M benchmark docs' worth of
+    # footer row count (no Spark job): past ~5M benchmark docs' worth of
     # shingles, fall back to a shuffle join rather than OOM on an
     # unbroadcastable build side.
-    n_bench_docs = load_docs(spark, sf_dir).count() // 50
+    n_bench_docs = parquet_num_rows(spark, f"{sf_dir}/documents.parquet") // 50
     bench_side = F.broadcast(bench) if n_bench_docs <= 100_000 else bench
     hits = (
         rest.join(bench_side.withColumn("_hit", F.lit(1)), "shingle", "left")

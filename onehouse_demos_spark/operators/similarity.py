@@ -19,25 +19,15 @@ decimals with deterministic id tie-breaks.
 
 from __future__ import annotations
 
-from contextlib import nullcontext
+import hashlib
+from decimal import ROUND_HALF_UP, Context, Decimal
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onehouse_demos_spark.functions.quantize import fquant
-from onehouse_demos_spark.session import is_tiny, tiny_scope
-from onehouse_demos_spark.sources.batch import read_parquet
-
-
-def _tiny_if_small(df: DataFrame):
-    """`session.tiny_scope(df)` when `is_tiny(df)`, else `(df,)` as is.
-
-    Lloyd training and the ANN build/insert chains are sequences of
-    small dependent jobs; on tiny inputs the scope runs each as one job
-    (no AQE stage round-trips, 1-partition shuffles). Results do not
-    depend on the partitioning: the aggregations are deterministic and
-    every round's centroids are rounded to the 6-decimal grid."""
-    return tiny_scope(df) if is_tiny(df) else nullcontext((df,))
+from onehouse_demos_spark.sources.batch import parquet_num_rows, read_parquet
 
 
 def load_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,9 +220,10 @@ LIMIT 10
 # quadratic in bucket size, so the sign-bit count must GROW with the
 # corpus — bits = clamp(ceil(log2(n / TARGET_BUCKET_ROWS)), 6..24)
 # keeps expected bucket size ≈ TARGET_BUCKET_ROWS at any scale (2^24
-# buckets bounds shuffle-key cardinality). The Spark side derives n
-# from a metadata-only count; the DuckDB oracle derives the SAME bits
-# with an identical scalar subquery, so both engines bucket alike.
+# buckets bounds shuffle-key cardinality). The Spark side reads n from
+# the source's footer (`parquet_num_rows`, no Spark job); the DuckDB
+# oracle derives the SAME bits with an identical scalar subquery, so
+# both engines bucket alike.
 # --------------------------------------------------------------------------
 
 TARGET_BUCKET_ROWS = 1024
@@ -289,7 +280,9 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_emb(spark, sf_dir).select(
         "vec_id", _as_double(F.col("embedding")).alias("v")
     )
-    bits = _adaptive_bits(load_emb(spark, sf_dir).count())
+    bits = _adaptive_bits(
+        parquet_num_rows(spark, f"{sf_dir}/embeddings.parquet")
+    )
     emb = emb.withColumn("bucket", _sign_bucket_str(F.col("v"), bits))
     a = emb.alias("a")
     b = emb.alias("b")
@@ -342,7 +335,9 @@ WHERE ROUND(list_dot_product(a.v, b.v)
 def knn_batch_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    bits = _adaptive_bits(load_emb(spark, sf_dir).count())
+    bits = _adaptive_bits(
+        parquet_num_rows(spark, f"{sf_dir}/embeddings.parquet")
+    )
     emb = load_emb(spark, sf_dir).select(
         "vec_id", _as_double(F.col("embedding")).alias("v")
     ).withColumn("bucket", _sign_bucket_str(F.col("v"), bits))
@@ -447,14 +442,102 @@ FROM s
 
 
 # --------------------------------------------------------------------------
-# Trained IVF: a REAL k-means coarse quantizer (Lloyd iterations as
-# DataFrame ops) instead of the data-oblivious sign-bit hash. At scale:
-# train on a sample (centroids are metadata — k×dims doubles live on
-# the driver and broadcast to executors), assign the full corpus once
-# (pure map stage vs the broadcast centroid table), and probe only the
-# query's `nprobe` nearest cells. This is the standard IVF recall/cost
-# dial; the sign-bit variant remains as the zero-training fallback.
+# Trained IVF: a k-means coarse quantizer instead of the data-oblivious
+# sign-bit hash. The quantizer trains on the driver over the collected
+# training set; assigning the corpus is a pure map stage against the
+# broadcast centroid table, and a query probes only its `nprobe`
+# nearest cells. The sign-bit variant remains as the zero-training
+# fallback.
+#
+# Every k-means here, coarse cells and PQ subspaces alike, is `_lloyd`,
+# and ann_oracle_sql._kmeans_ctes replays the same rules in DuckDB:
+#   - seeds: the k rows with the lowest (md5(str(vec_id)), vec_id);
+#   - assignment: argmin of round(sqrt(sum((a - b)^2)), 6), lowest cid
+#     on ties, the sum folded dimension by dimension in order;
+#   - update: round(sum / count, 6) per dimension; an empty cell keeps
+#     its previous centroid.
+# `round` is Spark's round(double, 6) (`_round6`), so the driver-side
+# training and the Spark-side assignment (`_assign_to_centroids`,
+# `_pq_assign`) put every vector in the same cell. Training holds its
+# set on the driver, n x dims doubles (1 MB at sf0.1); past driver
+# memory, train on a sample.
 # --------------------------------------------------------------------------
+
+_GRID = Decimal("1e-6")
+_EXACT = Context(prec=400, rounding=ROUND_HALF_UP)
+
+
+def _round6(x: np.ndarray) -> np.ndarray:
+    """Spark's `round(x, 6)` over a float64 array, bit for bit.
+
+    Spark rounds `BigDecimal.valueOf(x)`, i.e. the `Double.toString`
+    digits, HALF_UP, and converts back to the nearest double. The binary
+    `floor(|x| * 1e6 + 0.5)` picks the same integer except within a few
+    ulps of a half-way point; those entries, and magnitudes past 2^52
+    micro-units, are rounded with `decimal` on the shortest round-trip
+    digits (`repr`). NaN and infinities pass through; -0.0 becomes 0.0,
+    as a BigDecimal has no negative zero."""
+    x = np.asarray(x, dtype=np.float64)
+    y = np.abs(x) * 1e6
+    with np.errstate(invalid="ignore"):
+        out = np.copysign(np.floor(y + 0.5), x) / 1e6 + 0.0
+        near_half = np.abs(y - np.floor(y) - 0.5) <= 1e-9 * (1.0 + y)
+    finite = np.isfinite(x)
+    for i in zip(*np.nonzero(finite & (near_half | (y >= 2.0**52)))):
+        out[i] = float(_EXACT.quantize(Decimal(repr(float(x[i]))), _GRID))
+    return np.where(finite, out, x)
+
+
+def _nearest(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Per row of `X`, the cid of its nearest row of `C` by the shared
+    assignment rule."""
+    acc = np.zeros((len(X), len(C)))
+    for j in range(X.shape[1]):
+        diff = X[:, j, None] - C[None, :, j]
+        acc += diff * diff
+    return np.argmin(_round6(np.sqrt(acc)), axis=1)
+
+
+def _lloyd(ids: list, X: np.ndarray, k: int, iters: int) -> np.ndarray:
+    """k-means over the rows of `X` (float64, row i belongs to `ids[i]`):
+    the k x dims centroids after `iters` Lloyd rounds, by the shared
+    rules above. Fewer than k rows raise ValueError."""
+    if len(ids) < k:
+        raise ValueError(
+            f"k-means with k={k} needs at least {k} vectors; got {len(ids)}"
+        )
+    order = sorted(
+        range(len(ids)),
+        key=lambda i: (hashlib.md5(str(ids[i]).encode()).hexdigest(), ids[i]),
+    )
+    C = X[order[:k]]
+    for _ in range(iters):
+        cell = _nearest(X, C)
+        sums = np.zeros_like(C)
+        np.add.at(sums, cell, X)
+        count = np.bincount(cell, minlength=k)
+        live = count > 0
+        C[live] = _round6(sums[live] / count[live, None])
+    return C
+
+
+def _collect_vectors(emb: DataFrame) -> tuple[list, np.ndarray]:
+    """`(ids, X)` of a (vec_id, embedding) frame in one collect; X is
+    n x dims float64."""
+    rows = emb.select("vec_id", "embedding").collect()
+    X = np.array([r.embedding for r in rows], dtype=np.float64)
+    return [r.vec_id for r in rows], X.reshape(len(rows), -1 if rows else 0)
+
+
+def _train_pq(ids: list, X: np.ndarray, m: int, k: int, iters: int):
+    """One `_lloyd` codebook per subspace: column slice s covers dims
+    [s*sd, (s+1)*sd), sd = dims // m, as `_subvec_frame` cuts them."""
+    sd = X.shape[1] // m
+    return [
+        _lloyd(ids, X[:, s * sd:(s + 1) * sd], k, iters).tolist()
+        for s in range(m)
+    ]
+
 
 def train_ivf_centroids(
     emb: DataFrame,
@@ -462,72 +545,17 @@ def train_ivf_centroids(
     iters: int = 5,
     sample_fraction: float | None = None,
 ) -> list[list[float]]:
-    """Lloyd k-means over the embedding column. Each iteration is one
-    assignment map stage (broadcast centroids) + one (cluster, dim)-
-    keyed shuffle for the mean — no vector ever concentrates on one
-    task, and only k×dims scalars return to the driver per round.
-    Deterministic: seeds are the k lowest-md5 vectors, and the mean
-    aggregation is per-(cluster, dim). Fewer than k (sampled) vectors
-    raise ValueError."""
-    with _tiny_if_small(emb) as (emb,):
-        vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-        if sample_fraction is not None:
-            # deterministic hash sample — reproducible across runs/shards
-            vecs = vecs.filter(
-                F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 4), 16, 10)
-                .cast("long") % F.lit(int(1 / sample_fraction)) == 0
-            )
-        seeds = (
-            vecs.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-            .orderBy("h", "vec_id")
-            .limit(k)
-            .select("v")
-            .collect()
+    """k-means centroids of the embedding column: one collect of
+    (vec_id, embedding), then `_lloyd` on the driver. The training set
+    must fit in driver memory; `sample_fraction` keeps a deterministic
+    md5 hash sample of it, filtered in Spark before the collect. Fewer
+    than k (sampled) vectors raise ValueError."""
+    if sample_fraction is not None:
+        emb = emb.filter(
+            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 4), 16, 10)
+            .cast("long") % F.lit(int(1 / sample_fraction)) == 0
         )
-        if len(seeds) < k:
-            raise ValueError(
-                f"k-means with k={k} needs at least {k} vectors; got {len(seeds)}"
-            )
-        centroids = [list(r.v) for r in seeds]
-        for _ in range(iters):
-            centroids = _lloyd_round(vecs, centroids)
-    return centroids
-
-
-def _lloyd_round(
-    vecs: DataFrame, centroids: list[list[float]]
-) -> list[list[float]]:
-    """One Lloyd iteration: assign → per-(cid, pos) mean → driver-side
-    array assembly, empty cells carry the previous centroid."""
-    assigned = _assign_to_centroids(vecs, centroids)
-    comps = assigned.select(
-        "cid", F.posexplode(F.col("v")).alias("pos", "x")
-    )
-    # Means round to 6 decimals: cross-engine determinism — the
-    # DuckDB oracle replays the same Lloyd iterations, and rounding
-    # each round's centroids makes both engines feed IDENTICAL
-    # inputs to the next round instead of compounding last-ulp
-    # summation-order drift. Quality impact is nil (1e-6 abs on
-    # O(1) components).
-    # Collect the k×dims (cid, pos, m) scalars directly and assemble
-    # per-cid arrays on the driver — posexplode emits the full dense
-    # 0..dims-1 position range for every assigned vector, so no
-    # second-level collect_list groupBy (one more shuffle per round)
-    # is needed.
-    rows = (
-        comps.groupBy("cid", "pos")
-        .agg(F.round(F.avg("x"), 6).alias("m"))
-        .collect()
-    )
-    by_cid: dict[int, dict[int, float]] = {}
-    for r in rows:
-        by_cid.setdefault(r.cid, {})[r.pos] = r.m
-    return [
-        [by_cid[i][p] for p in range(len(by_cid[i]))]
-        if i in by_cid
-        else centroids[i]
-        for i in range(len(centroids))
-    ]
+    return _lloyd(*_collect_vectors(emb), k, iters).tolist()
 
 
 def _centroid_df(emb: DataFrame, centroids: list[list[float]]):
@@ -540,25 +568,17 @@ def _centroid_df(emb: DataFrame, centroids: list[list[float]]):
 def _assign_to_centroids(
     vecs: DataFrame, centroids: list[list[float]]
 ) -> DataFrame:
-    """Nearest-centroid assignment: broadcast the tiny centroid table,
-    score per row (map stage), keep the argmin via one window-free
-    groupBy on vec_id? — no: min_by keeps it a single aggregation.
-
-    r14 measured note: a literal-inlined variant (centroids compiled
-    into the expression tree, array_min over (d, cid) structs — no
-    join, no argmin stage) was built and interleave-A/B'd at sf0.01:
-    isolated assignment med 0.87 s vs 0.78 s for this join path, full
-    ann_index_search min 10.5 vs 9.8 s — the broadcast+min_by stages
-    are NOT the per-round bottleneck (per-job fixed costs dominate at
-    tiny data, and unique-literal plans defeat the codegen cache that
-    this value-independent plan hits every round). Kept as-is."""
+    """Nearest-centroid assignment (vec_id, cid, v): the centroid table
+    is broadcast, every row is scored in a map stage, and one min_by
+    aggregation on vec_id keeps the argmin. The plan does not depend on
+    the centroid values, so repeated calls reuse its generated code."""
     cdf = _centroid_df(vecs, centroids)
     # Euclidean distance, rounded to 6 decimals before the argmin:
     # the 6-decimal grid (with the cid tie-break below) makes the
     # assignment identical in any engine that computes the same
-    # formula — last-ulp summation-order noise can no longer flip a
-    # nearest-centroid decision. sqrt (not the squared distance) so
-    # the DuckDB oracle can use its native list_distance.
+    # formula, `_nearest` on the driver included. sqrt (not the
+    # squared distance) so the DuckDB oracle can use its native
+    # list_distance.
     scored = vecs.join(F.broadcast(cdf)).withColumn(
         "d",
         F.round(
@@ -633,23 +653,20 @@ def knn_ivf_trained(
 # --------------------------------------------------------------------------
 # Product quantization (PQ): split each D-dim vector into M subspaces,
 # k-means each subspace to a K-entry codebook, store M small codes per
-# vector. 100 TB design:
-#   - training is M simultaneous k-means over a (vec_id, sub, subvec)
-#     frame — one broadcast-codebook assignment map stage plus one
-#     (sub, cid, pos)-keyed mean shuffle per Lloyd round; only M×K×(D/M)
-#     scalars ever return to the driver;
-#   - encoding is the same broadcast assignment (pure map stage);
+# vector.
+#   - training is one `_lloyd` per subspace on the driver; the
+#     codebooks are M x K x (D/M) doubles;
+#   - encoding is a broadcast-codebook assignment (pure map stage plus
+#     one min_by aggregation), the part that scales with the corpus;
 #   - ADC search scores the compact codes table against a query's
-#     M×K distance lookup table compiled into the plan — the corpus
-#     vectors themselves are never read at query time, which is the
-#     whole point: the scan is over M small ints per vector instead of
-#     D floats (16× less I/O here).
-# K-means itself is not SQL-expressible, so the driver check for the
-# summary is the self-certified-invariant pattern (the oracle pins
-# booleans the Spark side must prove). The SEARCH queries, by
-# contrast, carry full DuckDB oracles (ann_oracle_sql.py replays the
-# training in SQL on a 6-decimal grid); recall is additionally
-# pytest-gated against brute force in tests/test_plans.py.
+#     M x K distance lookup table compiled into the plan; the corpus
+#     vectors are never read at query time, so the scan is over M small
+#     ints per vector instead of D floats (16x less I/O here).
+# `pq_reconstruction_summary` is checked as self-certified invariants
+# (the oracle pins booleans the Spark side must prove); the search
+# queries carry full DuckDB oracles (ann_oracle_sql.py replays the
+# training in SQL on the 6-decimal grid), and recall is pytest-gated
+# against brute force in tests/test_plans.py.
 # --------------------------------------------------------------------------
 
 _PQ_M = 8
@@ -685,10 +702,8 @@ def _pq_codebook_df(spark: SparkSession, codebooks):
 
 
 def _pq_assign(subvecs: DataFrame, codebooks) -> DataFrame:
-    """Nearest-codeword per (vec_id, sub): broadcast the M×K codebook,
-    score map-side, min_by aggregation — mirrors _assign_to_centroids
-    but keyed by subspace (and shares its r14 measured note: the
-    literal-inlined variant was A/B'd and rejected)."""
+    """Nearest codeword per (vec_id, sub): `_assign_to_centroids`
+    keyed by subspace, against the broadcast M×K codebook table."""
     cb = _pq_codebook_df(subvecs.sparkSession, codebooks)
     # rounded-distance grid + cid tie-break: engine-independent
     # codeword choice (see _assign_to_centroids)
@@ -718,67 +733,12 @@ def train_pq_codebooks(
     m: int = _PQ_M,
     k: int = _PQ_K,
     iters: int = 4,
-    dims: int | None = None,
 ) -> list[list[list[float]]]:
-    """Train all M subspace codebooks in parallel (one job per Lloyd
-    round covers every subspace). Deterministic seeding: per subspace,
-    the K subvectors with the lowest md5(vec_id). `dims`, when known
-    by the caller, skips the one-row dims probe job. Fewer than K
-    vectors raise ValueError."""
-    from pyspark.sql import Window
-
-    with _tiny_if_small(emb) as (emb,):
-        vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-        subvecs = _subvec_frame(vecs, m, dims=dims).persist()
-        try:
-            w = Window.partitionBy("sub").orderBy(
-                F.md5(F.col("vec_id").cast("string")), "vec_id"
-            )
-            seed_rows = (
-                subvecs.withColumn("rk", F.row_number().over(w))
-                .filter(F.col("rk") <= k)
-                .select("sub", (F.col("rk") - 1).alias("cid"), "sv")
-                .collect()
-            )
-            books: list[list[list[float]]] = [
-                [None] * k for _ in range(m)  # type: ignore[list-item]
-            ]
-            for r in seed_rows:
-                books[r.sub][r.cid] = list(r.sv)
-            n = sum(1 for r in seed_rows if r.sub == 0)
-            if n < k:
-                raise ValueError(
-                    f"PQ training with k={k} needs at least {k} vectors; got {n}"
-                )
-            for _ in range(iters):
-                assigned = _pq_assign(subvecs, books)
-                # Collect the M×K×(D/M) (sub, cid, pos, mu) scalars
-                # directly and assemble per-codeword arrays on the
-                # driver — same dense-position argument as
-                # train_ivf_centroids, one shuffle per Lloyd round.
-                rows = (
-                    assigned.select(
-                        "sub", "cid", F.posexplode("sv").alias("pos", "x")
-                    )
-                    .groupBy("sub", "cid", "pos")
-                    .agg(F.round(F.avg("x"), 6).alias("mu"))
-                    .collect()
-                )
-                fresh: dict[tuple[int, int], dict[int, float]] = {}
-                for r in rows:
-                    fresh.setdefault((r.sub, r.cid), {})[r.pos] = r.mu
-                books = [
-                    [
-                        [fresh[(s, c)][p] for p in range(len(fresh[(s, c)]))]
-                        if (s, c) in fresh
-                        else books[s][c]
-                        for c in range(k)
-                    ]
-                    for s in range(m)
-                ]
-            return books
-        finally:
-            subvecs.unpersist()
+    """M subspace codebooks of K codewords each: one collect of
+    (vec_id, embedding), then `_lloyd` per subspace on the driver. The
+    training set must fit in driver memory; sample the frame first when
+    it does not. Fewer than K vectors raise ValueError."""
+    return _train_pq(*_collect_vectors(emb), m, k, iters)
 
 
 def pq_encode(emb: DataFrame, codebooks) -> DataFrame:

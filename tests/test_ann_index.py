@@ -3,6 +3,7 @@ approximate brute force, and the query scan must physically prune
 unprobed cells (file-level partition pruning over the codes table)."""
 
 import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -228,3 +229,143 @@ def test_ann_oracle_ctes_all_materialized():
             "unmaterialized CTE definition in ANN oracle SQL"
         )
         assert "AS MATERIALIZED (" in sql
+
+
+def test_round6_equals_spark_round(spark):
+    """`_round6` is Spark's `round(x, 6)` bit for bit: seeded doubles at
+    several magnitudes plus constructed half-way cases (±d.dddddd5,
+    values below 1e-3 that Java prints in E-notation, negatives)."""
+    import numpy as np
+
+    from onehouse_demos_spark.operators.similarity import _round6
+
+    rng = np.random.default_rng(20261018)
+    halves = (rng.integers(0, 10**7, 500) * 10 + 5) / 1e7
+    tiny_halves = (rng.integers(0, 10**4, 500) * 10 + 5) / 1e10
+    xs = np.concatenate([
+        rng.normal(size=4000),
+        rng.normal(size=2000) * 1e-4,
+        rng.uniform(-1e4, 1e4, 2000),
+        halves, -halves, 1 + halves, -(3 + halves),
+        tiny_halves, -tiny_halves,
+        [0.0, -0.0, 5e-7, -5e-7, 1.5e-6, -2.5e-6, 1e-300, 1e300],
+    ])
+    assert len(xs) >= 10_000
+    rows = (
+        spark.createDataFrame(
+            [(i, float(x)) for i, x in enumerate(xs)], "i int, x double"
+        )
+        .repartition(2)
+        .select("i", F.round("x", 6).alias("r"))
+        .collect()
+    )
+    want = np.empty(len(xs))
+    for r in rows:
+        want[r.i] = r.r
+    got = _round6(xs)
+    bad = np.nonzero(got.view(np.int64) != want.view(np.int64))[0]
+    assert not len(bad), [(xs[i], want[i], got[i]) for i in bad[:5]]
+
+
+def test_training_equals_duckdb_kmeans_reference(spark):
+    """The driver-side k-means equals, value for value, the centroids
+    DuckDB computes from the oracles' `_kmeans_ctes` on the same data."""
+    import duckdb
+
+    from onehouse_demos_spark.operators.ann_oracle_sql import (
+        _kmeans_ctes,
+        _subvec_cte,
+    )
+    from onehouse_demos_spark.operators.similarity import (
+        train_ivf_centroids,
+        train_pq_codebooks,
+    )
+
+    emb = load_emb(spark, SF_DIR)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{SF_DIR}/embeddings.parquet')"
+    )
+
+    def duck(body: str, final: str) -> list[list[list[float]]]:
+        rows = con.execute(
+            f"WITH vsrc AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v "
+            f"FROM embeddings),\n{body}\n"
+            f"SELECT grp, cid, c FROM {final} ORDER BY grp, cid"
+        ).fetchall()
+        out: dict[int, list] = {}
+        for grp, cid, c in rows:
+            out.setdefault(grp, []).append(list(c))
+        return [out[g] for g in sorted(out)]
+
+    ivf = duck(
+        "src AS (SELECT 0 AS grp, id, v FROM vsrc),\n"
+        + _kmeans_ctes("kc", "src", 8, 3),
+        "kc_c3",
+    )
+    assert train_ivf_centroids(emb, k=8, iters=3) == ivf[0]
+    pq_books = duck(
+        _subvec_cte("sub_src", "vsrc", 8)
+        + ",\n"
+        + _kmeans_ctes("pb", "sub_src", 16, 3),
+        "pb_c3",
+    )
+    assert train_pq_codebooks(emb, m=8, k=16, iters=3) == pq_books
+
+
+def _build_jobs(spark, path, iters):
+    sc = spark.sparkContext
+    group = f"ann-build-{iters}"
+    sc.setJobGroup(group, group)
+    try:
+        AnnIndex.build(
+            load_emb(spark, SF_DIR), path, k_coarse=8, m=8, k_pq=16, iters=iters
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_build_jobs_do_not_grow_with_iters(spark, tmp_base):
+    """Training submits no job per Lloyd round: a build with 5 rounds
+    runs as many Spark jobs as one with 1."""
+    one = _build_jobs(spark, tmp_base + "/i1", 1)
+    five = _build_jobs(spark, tmp_base + "/i5", 5)
+    assert one == five, (one, five)
+
+
+def test_load_reads_spark_written_quantizers_without_a_job(spark, tmp_base):
+    """`load` reads the quantizer files on the driver: the files `build`
+    writes, and Spark-written directories of the same tables (with
+    `_SUCCESS` and `.crc` beside the parts) alike, and submits no job."""
+    from onehouse_demos_spark.operators.similarity import (
+        _centroid_df,
+        _pq_codebook_df,
+    )
+
+    path = tmp_base + "/sw"
+    idx = _build(spark, path)
+    sc = spark.sparkContext
+    sc.setJobGroup("ann-load", "ann-load")
+    try:
+        fresh = AnnIndex.load(spark, path + "/idx")
+        jobs = sc.statusTracker().getJobIdsForGroup("ann-load")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert (fresh.centroids, fresh.codebooks) == (idx.centroids, idx.codebooks)
+
+    emb = load_emb(spark, SF_DIR)
+    _centroid_df(emb, idx.centroids).repartition(3).write.mode("overwrite").parquet(
+        path + "/idx/centroids.parquet"
+    )
+    _pq_codebook_df(spark, idx.codebooks).repartition(3).write.mode(
+        "overwrite"
+    ).parquet(path + "/idx/codebooks.parquet")
+    names = os.listdir(path + "/idx/centroids.parquet")
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    again = AnnIndex.load(spark, path + "/idx")
+    assert (again.centroids, again.codebooks) == (idx.centroids, idx.codebooks)

@@ -6,7 +6,7 @@
 - The scope never changes the caller session: its conf, its global temp
   views and its cache are the same after the scope, also when the body
   raises, and while an ANN build runs beside a table write.
-- Lloyd training gives identical results on the tiny and non-tiny paths.
+- k-means training gives identical results on a tiny and a wide frame.
 - No library code sets conf on a caller's session outside a short,
   pinned allow-list.
 """

@@ -1,7 +1,8 @@
-"""The footer-schema reader for Parquet source files
-(`sources.batch.parquet_schema` / `read_parquet`):
+"""The footer reader for Parquet source files
+(`sources.batch.parquet_schema` / `read_parquet` / `parquet_num_rows`):
 
 - the footer schema equals what Spark infers, for every source file;
+- the footer row count equals Spark's `count()`;
 - a rewritten file (new length or modification time) is read again;
 - TIMESTAMP(NANOS) maps to bigint without touching the session's conf,
   and `load_events` and the events stream turn it into µs timestamps;
@@ -23,7 +24,11 @@ from pyspark.sql import types as T
 import onehouse_demos_spark.operators as operators
 from onehouse_demos_spark.operators.relational import load_events
 from onehouse_demos_spark.operators.streaming_ops import _events_stream
-from onehouse_demos_spark.sources.batch import parquet_schema, read_parquet
+from onehouse_demos_spark.sources.batch import (
+    parquet_num_rows,
+    parquet_schema,
+    read_parquet,
+)
 
 from tests.conftest import SF_DIR
 
@@ -45,6 +50,21 @@ def test_footer_schema_equals_inferred_schema(spark):
         want = _inferred(spark, path)
         assert parquet_schema(spark, path) == want, path
         assert read_parquet(spark, path).schema == want, path
+
+
+def test_footer_row_count_equals_count(spark, tmp_base):
+    """`parquet_num_rows` sums the footer's row groups (a file with
+    several is written here) and equals Spark's `count()`; a directory
+    falls back to the `count()` itself."""
+    path = f"{tmp_base}/groups.parquet"
+    pq.write_table(pa.table({"a": list(range(1000))}), path, row_group_size=64)
+    assert pq.ParquetFile(path).num_row_groups > 1
+    files = sorted(glob.glob(f"{SF_DIR}/*.parquet")) + [path]
+    for p in files:
+        assert parquet_num_rows(spark, p) == spark.read.parquet(p).count(), p
+    d = f"{tmp_base}/dir"
+    spark.range(7).repartition(2).write.parquet(d)
+    assert parquet_num_rows(spark, d) == 7
 
 
 def test_rewritten_file_is_read_again(spark, tmp_base):
@@ -135,11 +155,6 @@ _EAGER = {
     "near_dup_canonical",
     "near_dup_components_star",
     "leakage_free_split",
-    # size their hash/LSH parameters from a source row count
-    "contamination_check",
-    "embedding_near_dup_pairs",
-    "knn_batch_join",
-    "semantic_dedup_keep",
 }
 
 
