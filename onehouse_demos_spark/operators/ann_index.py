@@ -16,19 +16,21 @@ Layout under `path/`:
 - ``codes/``             — per-vector codes, hive-PARTITIONED BY cell:
   searches filter on ``cell`` so Spark prunes unprobed cells at the
   FILE level — a query with nprobe=2 of 16 cells reads ~1/8 of the
-  index, and the index is M bytes/vector, not D floats
+  index, and the index is M bytes/vector, not D floats. Each write
+  (the build, every ``add_batch``) adds one ``part-<uuid>.parquet``
+  per cell it touches: (vec_id, codes list<int32>)
 - ``meta.json``          — dims / m / k / sizes
 
-Build trains both quantizers on the driver over one collect of the
-training vectors (`similarity._lloyd`: n x dims doubles in driver
-memory, 1 MB at sf0.1; sample first past that), then encodes the corpus
-on Spark against the broadcast centroids and codebooks, with one
-shuffle on cell for the codes write. Only the encode and the write
-scale with the corpus. A query reads centroids and codebooks (KB) on
-the driver with pyarrow, compiles the per-cell ADC lookup tables into
-the plan, and TakeOrders a shortlist that an optional exact re-rank
-(semi-join back to the vector table) refines; the full corpus is never
-scanned.
+Build collects the vectors once (`similarity._collect_vectors`: n x dims
+doubles that must fit in driver memory, 1 MB at sf0.1) and does the
+rest on the driver: it trains both quantizers (`similarity._lloyd`),
+encodes every vector against them (`AnnIndex._encode`, the assignment
+rule of the Spark-side operators and the DuckDB oracle) and writes the
+codes with pyarrow, so the collect is its only Spark job. A query reads
+centroids and codebooks (KB) on the driver with pyarrow, compiles the
+per-cell ADC lookup tables into the plan, and TakeOrders a shortlist
+that an optional exact re-rank (semi-join back to the vector table)
+refines; the full corpus is never scanned.
 
 (Reference analog: the lakehouse keeps derived tables queryable by any
 engine — hudi-spark-minio-trino/README.md:312-380; the index here is
@@ -40,36 +42,23 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from contextlib import nullcontext
+import uuid
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 from onehouse_demos_spark.operators.similarity import (
     _as_double,
-    _assign_to_centroids,
-    _centroid_df,
     _collect_vectors,
     _lloyd,
     _nearest,
-    _pq_assign,
-    _subvec_frame,
     _train_pq,
     cosine,
 )
-from onehouse_demos_spark.session import is_tiny, tiny_scope
-
-
-def _tiny_if_small(df: DataFrame):
-    """`session.tiny_scope(df)` when `is_tiny(df)`, else `(df,)` as is.
-
-    The encode chain (assignment, residuals, PQ codes, codes write) is a
-    few small dependent jobs on tiny inputs; the scope runs each as one
-    job with 1-partition shuffles, which also gives one codes file per
-    cell directory. The codes do not depend on the partitioning."""
-    return tiny_scope(df) if is_tiny(df) else nullcontext((df,))
 
 
 def _write_one_file(path: str, table: pa.Table) -> None:
@@ -106,14 +95,17 @@ class AnnIndex:
         iters: int = 4,
     ) -> "AnnIndex":
         """Train and persist an IVF-PQ index over `emb` (vec_id,
-        embedding). The training vectors are collected once and held on
-        the driver (n x dims doubles); the coarse quantizer trains on
-        them, PQ on their residuals to the assigned centroid (IVFADC:
-        PQ quantizes what the coarse cell did not explain). Fewer
-        vectors than `k_coarse` or `k_pq` raise ValueError."""
+        embedding). The vectors are collected once, the build's only
+        Spark job, and held on the driver (n x dims doubles); the coarse
+        quantizer trains on them, PQ on their residuals to the assigned
+        centroid (IVFADC: PQ quantizes what the coarse cell did not
+        explain), and every vector is encoded there with the cells
+        training assigned. Fewer vectors than `k_coarse` or `k_pq`
+        raise ValueError."""
         ids, X = _collect_vectors(emb)
         C = _lloyd(ids, X, k_coarse, iters)
-        books = _train_pq(ids, X - C[_nearest(X, C)], m, k_pq, iters)
+        cell = _nearest(X, C)
+        books = _train_pq(ids, X - C[cell], m, k_pq, iters)
         centroids = C.tolist()
         meta = {
             "dims": X.shape[1],
@@ -123,8 +115,8 @@ class AnnIndex:
             "n_vectors": len(ids),
         }
         idx = AnnIndex(emb.sparkSession, path, centroids, books, meta)
-        with _tiny_if_small(emb) as (emb,):
-            idx._write_codes(emb, "overwrite")
+        shutil.rmtree(f"{path}/codes", ignore_errors=True)
+        idx._write_codes(emb, ids, X, cell)
         _write_one_file(
             f"{path}/centroids.parquet",
             pa.table({
@@ -148,44 +140,61 @@ class AnnIndex:
             json.dump(meta, fh)
         return idx
 
-    def _write_codes(self, emb: DataFrame, mode: str) -> None:
-        """Encode `emb` (vec_id, embedding) against the index's frozen
-        quantizers and write the codes under `codes/`, hive-partitioned
-        by cell, with write `mode`: cell assignment (broadcast
-        centroids), the residual to the cell centroid, PQ codes
-        (broadcast codebooks), one shuffle on cell. Callers run it in
-        `_tiny_if_small(emb)`."""
-        vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-        cells = _assign_to_centroids(vecs, self.centroids).withColumnRenamed(
-            "cid", "cell"
-        )
-        cdf = _centroid_df(vecs, self.centroids).withColumnRenamed("cid", "cell")
-        resid = cells.join(F.broadcast(cdf), "cell").select(
-            "vec_id",
-            "cell",
-            F.zip_with("v", "c", lambda a, b: a - b).alias("v"),
-        )
-        codes = (
-            _pq_assign(
-                _subvec_frame(
-                    resid.select("vec_id", "v"),
-                    self.meta["m"],
-                    dims=self.meta["dims"],
-                ),
-                self.codebooks,
-            )
-            .groupBy("vec_id")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("sub", "cid"))).alias("sc")
-            )
-            .select(
-                "vec_id", F.transform("sc", lambda s: s["cid"]).alias("codes")
-            )
-            .join(resid.select("vec_id", "cell"), "vec_id")
-        )
-        codes.repartition("cell").write.mode(mode).partitionBy("cell").parquet(
-            f"{self.path}/codes"
-        )
+    def _encode(self, X: np.ndarray, cell: np.ndarray | None = None):
+        """`(cell, codes)` of the rows of `X` against the frozen
+        quantizers: the nearest centroid (computed unless `cell` is
+        given), then per subspace s the nearest codeword to the residual
+        `X - C[cell]` over dims [s*sd, (s+1)*sd), sd = dims // m, as
+        int32. `_nearest` is the rule `_assign_to_centroids` and
+        `_pq_assign` apply in Spark, and the residual the same IEEE
+        subtraction, so the codes equal a Spark encode's."""
+        C = np.array(self.centroids)
+        if cell is None:
+            cell = _nearest(X, C)
+        R = X - C[cell]
+        sd = self.meta["dims"] // self.meta["m"]
+        codes = np.empty((len(X), self.meta["m"]), dtype=np.int32)
+        for s, book in enumerate(self.codebooks):
+            codes[:, s] = _nearest(R[:, s * sd:(s + 1) * sd], np.array(book))
+        return cell, codes
+
+    def _write_codes(
+        self, emb: DataFrame, ids: list, X: np.ndarray, cell=None
+    ) -> None:
+        """Encode the collected rows `(ids, X)` of `emb` and add one
+        `codes/cell=<c>/part-<uuid>.parquet` per cell they fall in,
+        holding (vec_id, codes); vec_id keeps `emb`'s type. Every file
+        is written under a hidden name (a leading `.`, which Spark's
+        file listing skips) and renamed into place only once all cells
+        are written; on an exception the files of this write are
+        removed, so a reader sees all of it or none."""
+        cell, codes = self._encode(X, cell)
+        vec_ids = pa.array(ids, to_arrow_type(emb.schema["vec_id"].dataType))
+        moves = []
+        try:
+            for c in np.unique(cell):
+                rows = np.flatnonzero(cell == c)
+                d = f"{self.path}/codes/cell={c}"
+                os.makedirs(d, exist_ok=True)
+                name = f"part-{uuid.uuid4()}.parquet"
+                moves.append((f"{d}/.{name}", f"{d}/{name}"))
+                pq.write_table(
+                    pa.table({
+                        "vec_id": vec_ids.take(rows),
+                        "codes": pa.array(
+                            codes[rows].tolist(), pa.list_(pa.int32())
+                        ),
+                    }),
+                    moves[-1][0],
+                )
+            for staged, final in moves:
+                os.rename(staged, final)
+        except BaseException:
+            for move in moves:
+                for p in move:
+                    if os.path.exists(p):
+                        os.remove(p)
+            raise
 
     # ------------------------------------------------------- incremental
 
@@ -196,32 +205,29 @@ class AnnIndex:
         until then inserts assign against the existing geometry, same
         as FAISS `IndexIVF.add`). Returns the number of rows appended.
 
-        Scale shape: every job here is over the BATCH only (the encode
-        chain of `_write_codes`) and APPENDS new files inside the
-        existing hive cell partitions, so probed-cell file pruning
-        keeps working unchanged and the existing codes are never read
-        or rewritten. Many small batches leave a small-file tail per
-        cell — rebuild (or re-write the hot cells) on the usual
-        maintenance cadence, exactly like table file-sizing.
+        The batch is collected to the driver in one Spark job and held
+        there (n x dims doubles), encoded with `_encode` and written as
+        one new file per touched cell inside the existing hive cell
+        partitions, so probed-cell file pruning keeps working unchanged
+        and the existing codes are never read or rewritten. A batch
+        must fit in driver memory; split a larger one. Many small
+        batches leave a small-file tail per cell — rebuild (or re-write
+        the hot cells) on the usual maintenance cadence, exactly like
+        table file-sizing. An empty batch writes nothing.
 
         `vec_id`s must be new: the index never rescans itself to check
         (that would read the whole corpus per insert) — dedupe
         upstream like any append-only ingest."""
-        with _tiny_if_small(emb) as (emb,):
-            vecs = emb.select("vec_id", "embedding").persist()
-            try:
-                n = vecs.count()
-                if n == 0:
-                    return 0
-                self._write_codes(vecs, "append")
-            finally:
-                vecs.unpersist()
-        self.meta["n_vectors"] = int(self.meta.get("n_vectors", 0)) + n
+        ids, X = _collect_vectors(emb)
+        if not ids:
+            return 0
+        self._write_codes(emb, ids, X)
+        self.meta["n_vectors"] = int(self.meta.get("n_vectors", 0)) + len(ids)
         tmp = f"{self.path}/meta.json.tmp"
         with open(tmp, "w") as fh:
             json.dump(self.meta, fh)
         os.replace(tmp, f"{self.path}/meta.json")
-        return n
+        return len(ids)
 
     # ------------------------------------------------------------- load
 

@@ -61,10 +61,9 @@ def cosine(a, b) -> Column:
 # --------------------------------------------------------------------------
 
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r14: adaptive fan-out for the probe side — the cosine HOF over
-    # 256-dim arrays is pure per-row CPU on a single-row-group scan
-    # (one task otherwise). Measured A/B sf0.1: 0.58 s → 0.50 s. The
-    # tiny 1-row query side stays unfanned.
+    # Adaptive fan-out for the probe side: the cosine HOF over 256-dim
+    # arrays is pure per-row CPU on a single-row-group scan, one task
+    # otherwise. The 1-row query side stays unfanned.
     from onehouse_demos_spark.operators.relational import fan_out
 
     emb = load_emb(spark, sf_dir)
@@ -121,7 +120,7 @@ def label_centroid_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_comp"),
             # per-component floor-quantized integer sum: the double
             # sum over label-many components is order-dependent and
-            # ROUND's half rule is engine-specific (VERDICT r11 #2)
+            # ROUND's half rule is engine-specific
             F.sum(fquant(F.col("x"), 6)).alias(
                 "sum_all_e6"
             ),
@@ -457,10 +456,10 @@ FROM s
 #   - update: round(sum / count, 6) per dimension; an empty cell keeps
 #     its previous centroid.
 # `round` is Spark's round(double, 6) (`_round6`), so the driver-side
-# training and the Spark-side assignment (`_assign_to_centroids`,
-# `_pq_assign`) put every vector in the same cell. Training holds its
-# set on the driver, n x dims doubles (1 MB at sf0.1); past driver
-# memory, train on a sample.
+# training and encode (`_nearest`) and the Spark-side assignment
+# (`_assign_to_centroids`, `_pq_assign`) put every vector in the same
+# cell. Training holds its set on the driver, n x dims doubles (1 MB at
+# sf0.1); past driver memory, train on a sample.
 # --------------------------------------------------------------------------
 
 _GRID = Decimal("1e-6")
@@ -651,13 +650,15 @@ def knn_ivf_trained(
 
 
 # --------------------------------------------------------------------------
-# Product quantization (PQ): split each D-dim vector into M subspaces,
-# k-means each subspace to a K-entry codebook, store M small codes per
-# vector.
+# Product quantization (PQ) queries: split each D-dim vector into M
+# subspaces, k-means each subspace to a K-entry codebook, store M small
+# codes per vector.
 #   - training is one `_lloyd` per subspace on the driver; the
 #     codebooks are M x K x (D/M) doubles;
-#   - encoding is a broadcast-codebook assignment (pure map stage plus
-#     one min_by aggregation), the part that scales with the corpus;
+#   - `pq_encode` and the queries encode in Spark with `_pq_assign`, a
+#     broadcast-codebook assignment (map stage plus one min_by
+#     aggregation); `AnnIndex` encodes on the driver with `_nearest`,
+#     the same rule;
 #   - ADC search scores the compact codes table against a query's
 #     M x K distance lookup table compiled into the plan; the corpus
 #     vectors are never read at query time, so the scan is over M small
@@ -673,13 +674,11 @@ _PQ_M = 8
 _PQ_K = 16
 
 
-def _subvec_frame(vecs: DataFrame, m: int, dims: int | None = None) -> DataFrame:
+def _subvec_frame(vecs: DataFrame, m: int) -> DataFrame:
     """(vec_id, v) → (vec_id, sub, sv): M subvectors per vector, built
-    with slice+explode in one map stage (no shuffle). Pass `dims` when
-    the caller already knows it (index meta, an earlier probe) to skip
-    the one-row probe JOB this otherwise runs."""
-    d = dims if dims is not None else len(vecs.select("v").first().v)
-    sd = d // m
+    with slice+explode in one map stage (no shuffle); the dims come from
+    a one-row probe job."""
+    sd = len(vecs.select("v").first().v) // m
     subs = F.array(*[
         F.struct(
             F.lit(s).alias("sub"),

@@ -132,7 +132,7 @@ def test_filtered_search_prefilters_candidates(spark, tmp_base):
 
 
 def test_add_batch_incremental_insert(spark, tmp_base):
-    """r6: `add_batch` appends vectors with FROZEN quantizers — the
+    """`add_batch` appends vectors with FROZEN quantizers — the
     full index must contain every vector, recall vs brute force holds,
     existing code files are never rewritten, and meta.n_vectors
     tracks the appends across a reload."""
@@ -198,7 +198,7 @@ def test_add_batch_empty_is_noop(spark, tmp_base):
 
 
 def test_ann_oracle_ctes_all_materialized():
-    """r14: every CTE in the generated k-means oracles must be AS
+    """Every CTE in the generated k-means oracles must be AS
     MATERIALIZED — DuckDB inlines plain CTEs at each reference site,
     and the Lloyd-round chain references each round's centroid CTE
     twice, so one unmaterialized definition regresses the oracle to
@@ -212,8 +212,8 @@ def test_ann_oracle_ctes_all_materialized():
         pq_adc_topk_sql,
     )
 
-    # r15 (ADVICE r14): deliberately NOT the rewrite's column-0 regex —
-    # a CTE definition is the only construct in these templates where
+    # Not a column-0 regex like the MATERIALIZED rewrite's: a CTE
+    # definition is the only construct in these templates where
     # `AS` is immediately followed by an opening paren (column aliases
     # are `expr AS name`, table aliases put the paren after the name),
     # so any position-independent `AS (` hit is an unmaterialized CTE,
@@ -314,18 +314,25 @@ def test_training_equals_duckdb_kmeans_reference(spark):
     assert train_pq_codebooks(emb, m=8, k=16, iters=3) == pq_books
 
 
-def _build_jobs(spark, path, iters):
+def _jobs(spark, group, fn):
+    """`(fn(), number of Spark jobs it submitted)`."""
     sc = spark.sparkContext
-    group = f"ann-build-{iters}"
     sc.setJobGroup(group, group)
     try:
-        AnnIndex.build(
-            load_emb(spark, SF_DIR), path, k_coarse=8, m=8, k_pq=16, iters=iters
-        )
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _build_jobs(spark, path, iters):
+    emb = load_emb(spark, SF_DIR)
+    return _jobs(
+        spark,
+        f"ann-build-{iters}",
+        lambda: AnnIndex.build(emb, path, k_coarse=8, m=8, k_pq=16, iters=iters),
+    )[1]
 
 
 def test_build_jobs_do_not_grow_with_iters(spark, tmp_base):
@@ -334,6 +341,150 @@ def test_build_jobs_do_not_grow_with_iters(spark, tmp_base):
     one = _build_jobs(spark, tmp_base + "/i1", 1)
     five = _build_jobs(spark, tmp_base + "/i5", 5)
     assert one == five, (one, five)
+
+
+def _files(path):
+    """Every file under `path`, hidden names included."""
+    return sorted(
+        os.path.relpath(os.path.join(d, n), path)
+        for d, _, files in os.walk(path)
+        for n in files
+    )
+
+
+def _codes(spark, path):
+    return sorted(
+        (r.cell, r.vec_id, list(r.codes))
+        for r in spark.read.parquet(path + "/codes").collect()
+    )
+
+
+def _spark_encode(emb, idx):
+    """The (cell, vec_id, codes) rows of a Spark encode of `emb` against
+    `idx`'s quantizers: `_assign_to_centroids`, the residual by
+    `zip_with`, `_pq_assign` per subspace."""
+    from onehouse_demos_spark.operators.similarity import (
+        _assign_to_centroids,
+        _centroid_df,
+        _pq_assign,
+        _subvec_frame,
+    )
+
+    vecs = emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    resid = (
+        _assign_to_centroids(vecs, idx.centroids)
+        .join(F.broadcast(_centroid_df(vecs, idx.centroids)), "cid")
+        .select(
+            "vec_id",
+            F.col("cid").alias("cell"),
+            F.zip_with("v", "c", lambda a, b: a - b).alias("v"),
+        )
+        .persist()
+    )
+    try:
+        cells = {r.vec_id: r.cell for r in resid.select("vec_id", "cell").collect()}
+        codes = {v: [None] * idx.meta["m"] for v in cells}
+        for r in _pq_assign(
+            _subvec_frame(resid.select("vec_id", "v"), idx.meta["m"]),
+            idx.codebooks,
+        ).collect():
+            codes[r.vec_id][r.sub] = r.cid
+    finally:
+        resid.unpersist()
+    return sorted((cells[v], v, codes[v]) for v in cells)
+
+
+@pytest.mark.parametrize("vec_type", ["bigint", "int"])
+def test_codes_equal_the_spark_encode(spark, tmp_base, vec_type):
+    """Build on the even vec_ids, add the odd ones: every (cell, vec_id,
+    codes) row equals a Spark encode with the same quantizers, and Spark
+    reads the codes back with `vec_id` of the input's type."""
+    emb = load_emb(spark, SF_DIR).withColumn(
+        "vec_id", F.col("vec_id").cast(vec_type)
+    )
+    path = tmp_base + "/enc"
+    idx = AnnIndex.build(
+        emb.filter(F.col("vec_id") % 2 == 0), path, k_coarse=8, m=8, k_pq=16,
+        iters=3,
+    )
+    idx.add_batch(emb.filter(F.col("vec_id") % 2 == 1))
+    assert spark.read.parquet(path + "/codes").schema.simpleString() == (
+        f"struct<vec_id:{vec_type},codes:array<int>,cell:int>"
+    )
+    got = _codes(spark, path)
+    assert len(got) == emb.count()
+    assert got == _spark_encode(emb, idx)
+
+
+def test_build_and_add_batch_run_one_job_each(spark, tmp_base):
+    """`build` and `add_batch` each submit one Spark job, the collect of
+    their vectors; an empty batch also runs its one collect, then writes
+    no file and leaves meta.json as it was."""
+    emb = load_emb(spark, SF_DIR)
+    path = tmp_base + "/jobs"
+    idx, n = _jobs(
+        spark,
+        "ann-build",
+        lambda: AnnIndex.build(
+            emb.filter(F.col("vec_id") % 2 == 0), path, k_coarse=8, m=8,
+            k_pq=16, iters=3,
+        ),
+    )
+    assert n == 1
+    added, n = _jobs(
+        spark, "ann-add", lambda: idx.add_batch(emb.filter(F.col("vec_id") % 2 == 1))
+    )
+    assert added > 0 and n == 1
+    files = _files(path)
+    with open(path + "/meta.json") as fh:
+        meta = fh.read()
+    added, n = _jobs(
+        spark, "ann-add-empty", lambda: idx.add_batch(emb.filter(F.col("vec_id") < 0))
+    )
+    assert (added, n) == (0, 1)
+    assert _files(path) == files
+    with open(path + "/meta.json") as fh:
+        assert fh.read() == meta
+
+
+def test_failed_add_batch_leaves_the_index_as_it_was(spark, tmp_base, monkeypatch):
+    """A write that fails on its second cell file leaves no file behind,
+    visible or staged: the codes and meta.json are those before the
+    batch, and a retry of the batch succeeds."""
+    from onehouse_demos_spark.operators import ann_index
+
+    emb = load_emb(spark, SF_DIR)
+    path = tmp_base + "/atomic"
+    idx = AnnIndex.build(
+        emb.filter(F.col("vec_id") % 2 == 0), path, k_coarse=8, m=8, k_pq=16,
+        iters=3,
+    )
+    codes, files = _codes(spark, path), _files(path)
+    with open(path + "/meta.json") as fh:
+        meta = fh.read()
+    write = ann_index.pq.write_table
+    calls = []
+
+    def fail_second(table, where, **kw):
+        calls.append(where)
+        if len(calls) == 2:
+            raise OSError("no space left on device")
+        return write(table, where, **kw)
+
+    monkeypatch.setattr(ann_index.pq, "write_table", fail_second)
+    batch = emb.filter(F.col("vec_id") % 2 == 1)
+    with pytest.raises(OSError, match="no space left"):
+        idx.add_batch(batch)
+    assert len(calls) == 2
+    assert _files(path) == files
+    assert _codes(spark, path) == codes
+    with open(path + "/meta.json") as fh:
+        assert fh.read() == meta
+    monkeypatch.undo()
+    assert idx.add_batch(batch) == batch.count()
+    assert len(_codes(spark, path)) == emb.count()
 
 
 def test_load_reads_spark_written_quantizers_without_a_job(spark, tmp_base):
