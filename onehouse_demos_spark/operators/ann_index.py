@@ -164,20 +164,20 @@ class AnnIndex:
         """Encode the collected rows `(ids, X)` of `emb` and add one
         `codes/cell=<c>/part-<uuid>.parquet` per cell they fall in,
         holding (vec_id, codes); vec_id keeps `emb`'s type. Every file
-        is written under a hidden name (a leading `.`, which Spark's
-        file listing skips) and renamed into place only once all cells
-        are written; on an exception the files of this write are
-        removed, so a reader sees all of it or none."""
+        is first written to `<index>/.staging-<uuid>/cell=<c>/`, outside
+        `codes/`, so no reader of `codes/` (Spark's listing, a
+        `codes/*/*.parquet` glob) sees a partial write; the files are
+        renamed into `codes/` only once all cells are written. On an
+        exception the files of this write are removed."""
         cell, codes = self._encode(X, cell)
         vec_ids = pa.array(ids, to_arrow_type(emb.schema["vec_id"].dataType))
-        moves = []
+        staging = f"{self.path}/.staging-{uuid.uuid4()}"
+        staged, moved = [], []
         try:
             for c in np.unique(cell):
                 rows = np.flatnonzero(cell == c)
-                d = f"{self.path}/codes/cell={c}"
-                os.makedirs(d, exist_ok=True)
-                name = f"part-{uuid.uuid4()}.parquet"
-                moves.append((f"{d}/.{name}", f"{d}/{name}"))
+                name = f"cell={c}/part-{uuid.uuid4()}.parquet"
+                os.makedirs(f"{staging}/cell={c}")
                 pq.write_table(
                     pa.table({
                         "vec_id": vec_ids.take(rows),
@@ -185,16 +185,20 @@ class AnnIndex:
                             codes[rows].tolist(), pa.list_(pa.int32())
                         ),
                     }),
-                    moves[-1][0],
+                    f"{staging}/{name}",
                 )
-            for staged, final in moves:
-                os.rename(staged, final)
+                staged.append(name)
+            for name in staged:
+                final = f"{self.path}/codes/{name}"
+                os.makedirs(os.path.dirname(final), exist_ok=True)
+                os.rename(f"{staging}/{name}", final)
+                moved.append(final)
         except BaseException:
-            for move in moves:
-                for p in move:
-                    if os.path.exists(p):
-                        os.remove(p)
+            for final in moved:
+                os.remove(final)
             raise
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
 
     # ------------------------------------------------------- incremental
 

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from onehouse_demos_spark.tables.table import counted
+
 #: Marker column carrying delete-ness through the flatten, consumed by
 #: apply_cdc_batch / LakehouseTable soft-delete handling.
 CDC_DELETED = "_cdc_is_deleted"
@@ -64,15 +66,17 @@ def apply_cdc_batch(table, envelopes: DataFrame, drop_meta: bool = True) -> None
     changes = latest_change_per_key(
         flatten_debezium(envelopes), [c for c in table.config.record_key]
     )
-    upserts = changes.filter(~F.col(CDC_DELETED)).drop(CDC_DELETED, CDC_TS)
-    deletes = changes.filter(F.col(CDC_DELETED)).drop(CDC_DELETED, CDC_TS)
-    # Deletes first, then upserts: within one batch the per-key collapse
-    # already picked a single winner, so order only matters across keys
-    # where it is independent.
-    if deletes.limit(1).count() > 0:
-        table.delete(deletes)
-    if upserts.limit(1).count() > 0:
-        table.upsert(upserts)
+    deleted = F.col(CDC_DELETED)
+    # The collapse (a shuffle) runs once: one aggregate counts both
+    # sides and fills the cache both writes read. Deletes first, then
+    # upserts: within one batch the per-key collapse already picked a
+    # single winner, so order only matters across keys where it is
+    # independent. An empty side makes no commit.
+    with counted(changes, deletes=deleted, upserts=~deleted) as (changes, n):
+        if n["deletes"]:
+            table.delete(changes.filter(deleted).drop(CDC_DELETED, CDC_TS))
+        if n["upserts"]:
+            table.upsert(changes.filter(~deleted).drop(CDC_DELETED, CDC_TS))
 
 
 #: Dead-letter column added by `on_error="quarantine"` decodes: NULL
@@ -473,15 +477,12 @@ def apply_mongo_cdc_batch(table, envelopes: DataFrame, doc_schema) -> None:
         F.col(id_field).alias("_k"),
         F.aggregate("_evs", init, fold_step).alias("_state"),
     ).select("_state.*")
-    # The fold plan (snapshot seed join + collect/sort/aggregate) feeds
-    # four actions below — persist once so it runs once, not four times
-    folded = folded.persist()
-    try:
-        upserts = folded.filter(~F.col("_deleted")).drop("_deleted")
-        deletes = folded.filter(F.col("_deleted")).select(id_field)
-        if deletes.limit(1).count() > 0:
-            table.delete(deletes)
-        if upserts.limit(1).count() > 0:
-            table.upsert(upserts)
-    finally:
-        folded.unpersist()
+    # The fold plan (snapshot seed join + collect/sort/aggregate) runs
+    # once: one aggregate counts both sides and fills the cache both
+    # writes read.
+    deleted = F.col("_deleted")
+    with counted(folded, deletes=deleted, upserts=~deleted) as (folded, n):
+        if n["deletes"]:
+            table.delete(folded.filter(deleted).select(id_field))
+        if n["upserts"]:
+            table.upsert(folded.filter(~deleted).drop("_deleted"))

@@ -55,7 +55,7 @@ from onehouse_demos_spark.sql.predicate import (
     tokenize,
     validate_expression,
 )
-from onehouse_demos_spark.tables.table import LakehouseTable, TableConfig
+from onehouse_demos_spark.tables.table import LakehouseTable, TableConfig, counted
 
 #: table-name pattern: dotted words, each part optionally backticked
 #: (masked identifier contents are word chars, so this matches the
@@ -2689,20 +2689,21 @@ class Engine:
                 f"WHERE {prefix_where}"
             )
 
-        upserts = []
-        delete_wheres = []
+        # (gate, SELECT) per upsert clause; the gate of each delete clause
+        upserts: list[tuple[str, str]] = []
+        delete_wheres: list[str] = []
         m_conds = [c for c, _k, _a in matched_clauses]
         for i, (_c, kind, action) in enumerate(matched_clauses):
             w = gate("__matched", m_conds, i)
             if kind == "update":
-                upserts.append(update_select(action, w))
+                upserts.append((w, update_select(action, w)))
             else:
                 delete_wheres.append(w)
         s_conds = [c for c, _k, _a in by_source_clauses]
         for i, (_c, kind, action) in enumerate(by_source_clauses):
             w = gate("__tgt_only", s_conds, i)
             if kind == "update":
-                upserts.append(update_select(action, w))
+                upserts.append((w, update_select(action, w)))
             else:
                 delete_wheres.append(w)
         i_conds = [c for c, _a in insert_clauses]
@@ -2730,21 +2731,28 @@ class Engine:
                     f"({mapping[c]}) AS {c}" if c in mapping else f"NULL AS {c}"
                     for c in tcols
                 )
-            upserts.append(f"SELECT {sel} FROM __merge_joined WHERE {w}")
-        if upserts:
-            batch = self.spark.sql(" UNION ALL ".join(f"({u})" for u in upserts))
-            if batch.limit(1).count() > 0:
+            upserts.append((w, f"SELECT {sel} FROM __merge_joined WHERE {w}"))
+        # The joined frame (source, target read and join) runs once: one
+        # aggregate counts every clause's rows and fills the cache that
+        # both writes read, so both see the same target state. Clauses
+        # that match no row drop out; an empty group makes no commit.
+        gates = {f"u{i}": w for i, (w, _u) in enumerate(upserts)}
+        gates.update({f"d{i}": w for i, w in enumerate(delete_wheres)})
+        with counted(
+            joined, **{k: F.expr(w) for k, w in gates.items()}
+        ) as (_joined, n):
+            live = [f"({u})" for i, (_w, u) in enumerate(upserts) if n[f"u{i}"]]
+            if live:
+                batch = self.spark.sql(" UNION ALL ".join(live))
                 t.upsert(self._align(t, batch))
-        if delete_wheres:
             kproj = ", ".join(
                 f"__t_{k} AS {k}" for k in t.config.record_key
             )
-            doomed = self.spark.sql(
-                " UNION ALL ".join(
-                    f"(SELECT {kproj} FROM __merge_joined WHERE {w})"
-                    for w in delete_wheres
-                )
-            )
-            if doomed.limit(1).count() > 0:
-                t.delete(doomed)
+            live = [
+                f"(SELECT {kproj} FROM __merge_joined WHERE {w})"
+                for i, w in enumerate(delete_wheres)
+                if n[f"d{i}"]
+            ]
+            if live:
+                t.delete(self.spark.sql(" UNION ALL ".join(live)))
         return self.spark.createDataFrame([], "result string")

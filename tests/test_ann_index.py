@@ -487,6 +487,45 @@ def test_failed_add_batch_leaves_the_index_as_it_was(spark, tmp_base, monkeypatc
     assert len(_codes(spark, path)) == emb.count()
 
 
+def test_codes_glob_never_sees_a_staged_file(spark, tmp_base, monkeypatch):
+    """While `add_batch` writes its second cell file, a DuckDB
+    `codes/*/*.parquet` glob still sees exactly the rows from before the
+    batch: staged files live outside `codes/`."""
+    import duckdb
+
+    from onehouse_demos_spark.operators import ann_index
+
+    emb = load_emb(spark, SF_DIR)
+    path = tmp_base + "/staged"
+    idx = AnnIndex.build(
+        emb.filter(F.col("vec_id") % 2 == 0), path, k_coarse=8, m=8, k_pq=16,
+        iters=3,
+    )
+    con = duckdb.connect()
+    query = (
+        "SELECT vec_id FROM "
+        f"read_parquet('{path}/codes/*/*.parquet') ORDER BY vec_id"
+    )
+    before = con.execute(query).fetchall()
+    write = ann_index.pq.write_table
+    calls, seen = [], []
+
+    def glob_on_second(table, where, **kw):
+        calls.append(where)
+        if len(calls) == 2:
+            seen.append(con.execute(query).fetchall())
+        return write(table, where, **kw)
+
+    monkeypatch.setattr(ann_index.pq, "write_table", glob_on_second)
+    batch = emb.filter(F.col("vec_id") % 2 == 1)
+    assert idx.add_batch(batch) == batch.count()
+    assert len(calls) > 2
+    assert seen == [before]
+    monkeypatch.undo()
+    assert len(con.execute(query).fetchall()) == emb.count()
+    assert not [f for f in _files(path) if ".staging-" in f]
+
+
 def test_load_reads_spark_written_quantizers_without_a_job(spark, tmp_base):
     """`load` reads the quantizer files on the driver: the files `build`
     writes, and Spark-written directories of the same tables (with

@@ -54,8 +54,9 @@ def test_bloom_prunes_interleaved_files(spark, tmp_base):
     probe = spark.createDataFrame(
         [("000002",), ("000100",), ("001998",)], "k string"
     ).select(F.col("k").alias(KEY_COL))
-    cand, n = t._candidate_files(probe)
+    cand, n, keys = t._candidate_files(probe)
     assert n == 3
+    assert sorted(keys) == ["000002", "000100", "001998"]
     assert len(cand) == 1, [f.path for f in cand]
     evens_file = cand[0]
     # and the kept file really is the even one
@@ -73,8 +74,9 @@ def test_bloom_pruning_skipped_for_bulk_batches(spark, tmp_base):
     probe = spark.range(big).select(
         F.format_string("%06d", F.col("id")).alias(KEY_COL)
     )
-    kept = t._prune_by_bloom(files, probe, big)
+    kept, keys = t._prune_by_bloom(files, probe, big)
     assert kept == files
+    assert keys is None
 
 
 def test_upsert_correct_after_bloom_pruning(spark, tmp_base):

@@ -560,7 +560,7 @@ def test_bucket_upsert_plans_no_probe_join(spark, tmp_path):
             [(i, f"v{i}", 1) for i in range(200)], "id int, v string, ver int"
         )
     )
-    files, n = t._candidate_files(
+    files, n, _keys = t._candidate_files(
         t._with_meta(
             spark.createDataFrame([(5, "x", 2)], "id int, v string, ver int"),
             "99999999999999999999",

@@ -1,13 +1,34 @@
-"""Parse a Spark event log (single uncompressed file or v2 dir) and
-print per-job durations attributed to SQL-execution descriptions.
-Usage: python tools/parse_evlog.py [/tmp/oh_evlog]"""
+"""Parse a Spark event log (single file or v2 dir) and print per-job
+durations attributed to SQL-execution descriptions.
+Usage: python tools/parse_evlog.py [/tmp/oh_evlog]
+
+Plain and zstd-compressed logs (`*.zstd`, Spark 4's default codec) are
+read; zstd needs the `zstd` CLI on PATH."""
 
 from __future__ import annotations
 
 import glob
 import json
 import os
+import shutil
+import subprocess
 import sys
+
+
+def _lines(path: str) -> list[str]:
+    """The text lines of one event-log file, decompressed if needed."""
+    if path.endswith(".zstd"):
+        zstd = shutil.which("zstd")
+        if zstd is None:
+            raise SystemExit(
+                f"{path}: reading a zstd event log needs the `zstd` CLI on "
+                "PATH; or rerun Spark with spark.eventLog.compress=false"
+            )
+        return subprocess.run(
+            [zstd, "-dcq", path], check=True, capture_output=True, text=True
+        ).stdout.splitlines()
+    with open(path) as fh:
+        return fh.read().splitlines()
 
 
 def main() -> int:
@@ -20,28 +41,27 @@ def main() -> int:
     execs: dict[int, str] = {}
     jobs: dict[int, dict] = {}
     for path in sorted(paths):
-        with open(path) as fh:
-            for line in fh:
-                try:
-                    ev = json.loads(line)
-                except Exception:
-                    continue
-                et = ev.get("Event", "")
-                if et.endswith("SparkListenerSQLExecutionStart"):
-                    execs[ev["executionId"]] = ev.get("description", "?")
-                elif et == "SparkListenerJobStart":
-                    props = ev.get("Properties") or {}
-                    jobs[ev["Job ID"]] = {
-                        "t0": ev["Submission Time"],
-                        "site": props.get("callSite.short"),
-                        "desc": props.get("spark.job.description"),
-                        "eid": props.get("spark.sql.execution.id"),
-                        "n_stages": len(ev.get("Stage IDs", [])),
-                    }
-                elif et == "SparkListenerJobEnd":
-                    j = jobs.get(ev["Job ID"])
-                    if j is not None:
-                        j["t1"] = ev["Completion Time"]
+        for line in _lines(path):
+            try:
+                ev = json.loads(line)
+            except Exception:
+                continue
+            et = ev.get("Event", "")
+            if et.endswith("SparkListenerSQLExecutionStart"):
+                execs[ev["executionId"]] = ev.get("description", "?")
+            elif et == "SparkListenerJobStart":
+                props = ev.get("Properties") or {}
+                jobs[ev["Job ID"]] = {
+                    "t0": ev["Submission Time"],
+                    "site": props.get("callSite.short"),
+                    "desc": props.get("spark.job.description"),
+                    "eid": props.get("spark.sql.execution.id"),
+                    "n_stages": len(ev.get("Stage IDs", [])),
+                }
+            elif et == "SparkListenerJobEnd":
+                j = jobs.get(ev["Job ID"])
+                if j is not None:
+                    j["t1"] = ev["Completion Time"]
 
     done = {k: v for k, v in jobs.items() if "t1" in v}
     if not done:
