@@ -60,7 +60,7 @@ def latest_change_per_key(changes: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
-def apply_cdc_batch(table, envelopes: DataFrame, drop_meta: bool = True) -> None:
+def apply_cdc_batch(table, envelopes: DataFrame) -> None:
     """Apply one batch of Debezium envelopes to a LakehouseTable:
     flatten → collapse per key → upserts + deletes (EP3 step 3)."""
     changes = latest_change_per_key(

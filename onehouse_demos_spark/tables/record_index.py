@@ -3,7 +3,7 @@ mapping that turns the upsert/delete probe into a metadata lookup.
 
 Motivation (100 TB design): the COW merge path must answer "which live
 base files contain these incoming keys?". Partition + key-range + bloom
-pruning (``table.py:_candidate_files``) shrink the candidate set, but
+pruning (``table.py:_files_for_keys``) shrink the candidate set, but
 the remaining probe is still a key-column scan of candidate DATA files.
 On a multi-TB table with random-key point upserts — the dominant CDC
 shape — that scan dwarfs the write itself. A record-level index answers
@@ -660,9 +660,9 @@ class RecordIndex:
     # --------------------------------------------------------------- probe
 
     #: Probe fast path: point batches (≤ this many keys — a ~few-MB
-    #: driver collect, metadata-scale) against index leaves totalling
-    #: ≤ the byte cap match on the driver with pyarrow — zero Spark
-    #: jobs beyond the one tiny probe collect.
+    #: driver collect, metadata-scale, made by the caller) against
+    #: index leaves totalling ≤ the byte cap match on the driver with
+    #: pyarrow — no Spark job of the probe's own.
     DRIVER_PROBE_MAX_KEYS = 65536
     DRIVER_PROBE_MAX_BYTES = 64 * 1024 * 1024
 
@@ -702,20 +702,23 @@ class RecordIndex:
         key_col: str,
         live_files,  # list[FileMeta] (base files)
         path_to_instant: dict[str, str],
-        on_partition: bool = False,
         part_expr=None,
-        n_rows: int | None = None,
+        rows: list | None = None,
     ) -> list | None:
         """Exact set of live base files containing any incoming key, or
         None when coverage is incomplete (caller falls back to the scan
-        probe). ``keys_df`` must be small-ish on the driver-collect side
-        ONLY for its distinct bucket set (≤ ``self.buckets`` ints) —
-        except on the point-batch fast path, which collects the (tiny)
-        probe itself.
+        probe).
 
-        on_partition: partition-scoped tables match (key, partition) —
-        a key living in an untouched partition must not be rewritten;
-        global scope matches the key alone."""
+        part_expr: partition-scoped tables pass the partition-path
+        expression and match (key, partition) — a key living in an
+        untouched partition must not be rewritten; None (global scope)
+        matches the key alone.
+
+        rows: a point batch's distinct probe values, already collected
+        by the caller — string keys, or (key, partition) tuples when
+        `part_expr` is given. They are matched on the driver. Without
+        them ``keys_df`` is probed in Spark, collecting only its
+        distinct bucket set (≤ ``self.buckets`` ints)."""
         covered = self.covered_instants()
         if any(
             path_to_instant.get(f.path) not in covered for f in live_files
@@ -723,27 +726,23 @@ class RecordIndex:
             return None
         if not live_files:
             return []
-        with_part = on_partition and part_expr is not None
+        with_part = part_expr is not None
         probe = keys_df.select(
             F.col(key_col).cast("string").alias(VAL_COL),
             self._bucket_expr(F.col(key_col).cast("string")).alias(BUCKET_COL),
             *([part_expr.alias(IPART_COL)] if with_part else []),
         )
         manifests = self._manifests()
-        if n_rows is not None and n_rows <= self.DRIVER_PROBE_MAX_KEYS:
-            rows = probe.collect()  # point batch: tiny by contract
-            buckets = sorted({r[BUCKET_COL] for r in rows})
+        if rows is not None:
+            vals = [r[0] for r in rows] if with_part else rows
+            buckets = {self._bucket_py(v) for v in vals if v is not None}
             paths, total = self._leaf_files(manifests, buckets)
             if not paths:
                 return []
             if total <= self.DRIVER_PROBE_MAX_BYTES:
-                probe_rows = {
-                    (r[VAL_COL], r[IPART_COL]) if with_part else r[VAL_COL]
-                    for r in rows
-                }
                 live_paths = {f.path for f in live_files}
                 touched = self._match_driver(
-                    paths, probe_rows, live_paths, with_part
+                    paths, set(rows), live_paths, with_part
                 )
                 if touched is None:  # leaf vanished: scan-probe instead
                     return None

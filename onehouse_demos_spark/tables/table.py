@@ -186,17 +186,24 @@ def _footer_col_stats(pf) -> dict:
 
 def _scalar_rows(df: DataFrame) -> list:
     """Collect a METADATA-SCALE frame (scalar aggregates, pruned file
-    lists, distinct partition values) as ONE Spark job, in
-    `session.tiny_scope`, instead of the 2-4 query-stage jobs AQE
-    submits for the same plan.
+    lists, a point batch's keys) in `session.tiny_scope`, instead of
+    with the 2-4 query-stage jobs AQE submits for the same plan.
 
-    The write path's per-commit bookkeeping collects (candidate
-    key-range aggregate, probe-join file list, overwrite partition set)
-    return a handful of rows; AQE buys nothing on them at any scale:
-    the partial aggregation before the single-partition exchange is
-    already distributed, and the probe variant is routed here only when
-    its key side is broadcast-sized (above BROADCAST_KEY_ROWS the caller
-    keeps the AQE path for the shuffle join).
+    That is ONE Spark job when the frame reads files or a filled cache,
+    plus one per broadcast exchange in its plan (the probe join's key
+    side). Over a persisted frame whose cache is still empty, the first
+    call runs one more: the cache's plan was built at `persist()` in
+    the caller's session, so filling it keeps the caller's AQE, whose
+    shuffle-map stage runs as a job of its own (see `counted`).
+
+    The write path's per-commit bookkeeping collects (the
+    `_files_for_keys` aggregate and key collect, the probe-join file
+    list, the overwrite partition set) return a handful of rows; AQE
+    buys nothing on them at any scale: the partial aggregation before
+    the single-partition exchange is already distributed, and the probe
+    join comes here only while its key side is broadcast-sized (above
+    BROADCAST_KEY_ROWS the caller keeps the AQE path for the shuffle
+    join).
     """
     with tiny_scope(df) as (tiny,):
         return tiny.collect()
@@ -1564,72 +1571,103 @@ class LakehouseTable:
             .select(*cols)
         )
 
-    def _candidate_files(
-        self, prepared_keys: DataFrame, include_logs: bool = False
-    ) -> tuple[list[FileMeta], int, list | None]:
-        """Prune live base files to those that could contain the
-        incoming keys: partition pruning + key-range-stats pruning.
-        Returns (candidate files, batch row count, probe keys): the
-        first two from one job whose values are metadata-scale
-        (distinct partitions, global key min/max), never row-scale;
-        the distinct keys the bloom test collected, or None when it
-        collected none.
+    def _files_for_keys(
+        self, keys: DataFrame, include_logs: bool = False
+    ) -> tuple[list[FileMeta], int, list | None, bool]:
+        """The live files that can hold any key of `keys`: the one
+        place that chooses between the record index and stats pruning.
+        Returns (files, batch row count, distinct probe keys or None
+        when none were collected, exact).
 
-        `include_logs=True` (MOR point reads) prunes LOG files by
-        the same partition + key-range stats (logs carry footer key
-        ranges like any written file; they have no blooms, so bloom
-        pruning conservatively keeps them) — every file that COULD
-        hold any version of a probe key survives, which is what makes
-        a pruned MOR merge exact for the probe keys."""
+        One `_scalar_rows` aggregate yields the count, the key range
+        and the partition and bucket sets, whatever the index state.
+        A point-sized batch then has its distinct probe rows (the key,
+        plus the partition path for a partition-scoped index probe)
+        collected at most once; the record index and the bloom test
+        share them. `exact` is True only when the record index
+        answered: its file set holds exactly the files with a probe
+        key. A coverage gap degrades to stats pruning, never corrupts.
+
+        `include_logs=True` (MOR key reads) prunes LOG files by the
+        same partition + key-range stats. The record index covers base
+        files only, so it is not consulted then."""
         if self.config.bucket_index_buckets:
             # Another process may have split/resized since this handle
             # opened: re-derive the routing map from the timeline so
             # bucket pruning always pairs the map with the live files
             # it routed (metadata-scale replay, no jobs).
             self._replay_bucket_layout()
-        files = self.manifest.live_files(include_logs=include_logs)
-        pp = self._partition_path_expr()
-        # Partition pruning is opportunistic: possible only when the
-        # probe frame still carries the partition-source columns
-        # (a bare key list can't be mapped to partitions). Key range and
-        # partition set come from ONE aggregation job — both are
-        # metadata-scale scalars.
+        # Partition pruning is possible only when the probe frame can
+        # evaluate the partition-path expression (a bare key list
+        # cannot); global scope matches keys across partitions.
+        part = self._scoped_partition_expr(keys.columns)
         aggs = [
+            F.count(F.lit(1)).alias("n"),
             F.min(KEY_COL).alias("lo"),
             F.max(KEY_COL).alias("hi"),
-            F.count(F.lit(1)).alias("n"),
         ]
-        # The probe frame must actually be able to EVALUATE the
-        # partition-path expression: for `partition_by` tables that
-        # means carrying the partition columns; for `partition_expr`
-        # tables it means carrying the expression's source columns (a
-        # bare key list can't — without this source-column check the
-        # empty-partition_by subset test is vacuously true and the
-        # aggregate below fails analysis).
-        can_prune_parts = (
-            self.config.index_scope != "global"
-            and pp is not None
-            and self._partition_source_cols() <= set(prepared_keys.columns)
-        )
-        if can_prune_parts:
-            aggs.append(
-                F.collect_set(
-                    F.coalesce(pp, F.lit(HIVE_DEFAULT_PARTITION))
-                ).alias("parts")
-            )
-        # Bucket layout: the batch's touched buckets come out of the
-        # SAME single aggregation job (≤bucket_index_buckets distinct
-        # ints — metadata-scale). Pure hash of the keys: no probe, no
-        # index read, no stats dependence.
+        if part is not None:
+            aggs.append(F.collect_set(part).alias("parts"))
+        # Bucket layout: the batch's touched buckets (at most
+        # bucket_index_buckets ints). A pure hash of the keys.
         if self.config.bucket_index_buckets:
             aggs.append(
                 F.collect_set(self._bucket_layout_expr()).alias("buckets")
             )
-        # Metadata-scale scalars: one job, not AQE's stage jobs.
-        row = _scalar_rows(prepared_keys.agg(*aggs))[0]
-        if can_prune_parts:
+        row = _scalar_rows(keys.agg(*aggs))[0]
+        n = int(row["n"])
+        index = None if include_logs else self.record_index
+        probe_keys = None
+        if index is not None:
+            base = self.manifest.live_files(include_logs=False)
+            rows = None
+            if base and n <= index.DRIVER_PROBE_MAX_KEYS:
+                cols = [F.col(KEY_COL)] + ([part] if part is not None else [])
+                rows = list(
+                    {
+                        tuple(r) if part is not None else r[0]
+                        for r in _scalar_rows(keys.select(*cols))
+                    }
+                )
+                probe_keys = (
+                    list({r[0] for r in rows}) if part is not None else rows
+                )
+            files = index.probe_files(
+                self.spark,
+                keys,
+                KEY_COL,
+                base,
+                self._path_instants(),
+                part_expr=part,
+                rows=rows,
+            )
+            if files is not None:
+                return files, n, probe_keys, True
+        files = self._candidate_files(row, include_logs)
+        if n <= self.BLOOM_PROBE_MAX_KEYS and any(f.key_bloom for f in files):
+            if probe_keys is None:
+                probe_keys = list(
+                    {r[0] for r in _scalar_rows(keys.select(KEY_COL))}
+                )
+            files = self._prune_by_bloom(files, probe_keys)
+        return files, n, probe_keys, False
+
+    def _candidate_files(
+        self, row, include_logs: bool = False
+    ) -> list[FileMeta]:
+        """Stats pruning: the live files that survive partition,
+        bucket and key-range pruning by the `_files_for_keys`
+        aggregate `row` (driver only, no job).
+
+        `include_logs=True` keeps LOG files under the same partition +
+        key-range tests (logs carry footer key ranges like any written
+        file; they have no blooms, so bloom pruning keeps them): every
+        file that COULD hold any version of a probe key survives, which
+        is what makes a pruned MOR merge exact for the probe keys."""
+        files = self.manifest.live_files(include_logs=include_logs)
+        if "parts" in row:
             files = Manifest.prune_by_partition(files, set(row["parts"]))
-        if self.config.bucket_index_buckets:
+        if "buckets" in row:
             touched = set(row["buckets"])
             # Files without a bucket id (written before the layout, or
             # by a path that couldn't route) are conservatively kept.
@@ -1638,9 +1676,7 @@ class LakehouseTable:
             ]
         if row["lo"] is not None:
             files = Manifest.prune_by_key_range(files, row["lo"], row["hi"])
-        n = int(row["n"])
-        files, keys = self._prune_by_bloom(files, prepared_keys, n)
-        return files, n, keys
+        return files
 
     #: Bloom pruning runs only for probe batches up to this many keys.
     #: The math: a file of r rows with a b-bit-per-key bloom matches a
@@ -1652,40 +1688,20 @@ class LakehouseTable:
     #: eliminate files that overlapping key ranges cannot.
     BLOOM_PROBE_MAX_KEYS = 8192
 
-    def _prune_by_bloom(
-        self, files: list[FileMeta], prepared_keys: DataFrame, n_keys: int
-    ) -> tuple[list[FileMeta], list | None]:
-        """Point-lookup pruning: drop candidate files whose key bloom
-        matches NONE of the incoming keys (no false negatives → safe).
-        Range pruning degrades to all-files once every file spans the
-        key space (random-key workloads); blooms stay sharp there.
-        One key-column collect of a ≤8192-key batch — metadata-scale.
-        Returns the kept files and the distinct keys collected (None
-        when the test did not run)."""
-        if n_keys > self.BLOOM_PROBE_MAX_KEYS:
-            return files, None
-        with_bloom = [(i, f) for i, f in enumerate(files) if f.key_bloom]
-        if not with_bloom:
-            return files, None
+    @staticmethod
+    def _prune_by_bloom(files: list[FileMeta], keys: list) -> list[FileMeta]:
+        """Point-lookup pruning: drop files whose key bloom matches
+        NONE of `keys` (no false negatives, so safe). Range pruning
+        degrades to all-files once every file spans the key space
+        (random-key workloads); blooms stay sharp there."""
         from onehouse_demos_spark.tables.bloom import KeyBloom
 
-        keys = [
-            r[0]
-            for r in _scalar_rows(
-                prepared_keys.select(KEY_COL).distinct()
-            )
-        ]
-        keep_idx = {
-            i
-            for i, f in with_bloom
-            if KeyBloom.from_b64(f.key_bloom).might_contain_any(keys)
-        }
-        kept = [
+        return [
             f
-            for i, f in enumerate(files)
-            if f.key_bloom is None or i in keep_idx
+            for f in files
+            if f.key_bloom is None
+            or KeyBloom.from_b64(f.key_bloom).might_contain_any(keys)
         ]
-        return kept, keys
 
     def _path_instants(self) -> dict[str, str]:
         """Live path -> adding instant (metadata-scale timeline replay);
@@ -1697,45 +1713,6 @@ class LakehouseTable:
             for fm in inst.adds:
                 m[fm.path] = inst.instant
         return m
-
-    def _index_touched(
-        self, prepared_keys: DataFrame
-    ) -> tuple[list[FileMeta] | None, int]:
-        """Record-index probe: the EXACT set of live base files holding
-        any incoming key — no data file opened, only the touched index
-        bucket directories. Returns (None, n) when the index is absent
-        or has a coverage gap; the caller then takes the legacy
-        stats-prune + scan-probe path (degrade, never corrupt)."""
-        # A scalar count: one job, not AQE's stage jobs.
-        n = int(
-            _scalar_rows(prepared_keys.agg(F.count(F.lit(1)).alias("n")))[
-                0
-            ].n
-        )
-        if self.record_index is None:
-            return None, n
-        pp = self._partition_path_expr()
-        on_partition = (
-            self.config.index_scope != "global"
-            and pp is not None
-            and self._partition_source_cols() <= set(prepared_keys.columns)
-        )
-        part_expr = (
-            F.coalesce(pp, F.lit(HIVE_DEFAULT_PARTITION))
-            if on_partition
-            else None
-        )
-        files = self.record_index.probe_files(
-            self.spark,
-            prepared_keys,
-            KEY_COL,
-            self.manifest.live_files(include_logs=False),
-            self._path_instants(),
-            on_partition=on_partition,
-            part_expr=part_expr,
-            n_rows=n,
-        )
-        return files, n
 
     def _partition_source_cols(self) -> set[str]:
         """Columns the partition-path expression reads. Structural
@@ -2125,71 +2102,21 @@ class LakehouseTable:
         # profiling caches the same way in production engines).
         prepared = self._dedupe_incoming(self._with_meta(df, instant)).persist()
         try:
-            idx_files = None
-            batch_rows = 0
-            if self.record_index is not None:
-                idx_files, batch_rows = self._index_touched(prepared)
-            if idx_files is not None:
-                # Index-exact probe: `idx_files` IS the touched set —
-                # no candidate scan, no probe join, no heuristics.
-                candidates: list[FileMeta] = idx_files
-            else:
-                candidates, batch_rows, _keys = self._candidate_files(prepared)
-            touched: list[str] = []
+            candidates, batch_rows, _keys, exact = self._files_for_keys(
+                prepared
+            )
+            touched = [f.path for f in candidates]
             merged = prepared
             carry_rows = 0
-            existing = self._read_files(candidates)
-            if existing is not None and idx_files is not None:
-                touched = [f.path for f in candidates]
-            elif existing is not None:
-                cand_rows = sum(f.rows for f in candidates)
-                if cand_rows <= 4 * max(1, batch_rows):
-                    # Probe-skip heuristic: the pruned candidate set is
-                    # already batch-sized (≤4× write amplification), so
-                    # rewriting it outright beats paying a probe job to
-                    # narrow it. At scale, partition + key-range pruning
-                    # keeps candidates small; the probe pays off only
-                    # when stats pruning was too coarse.
-                    touched = [f.path for f in candidates]
-                else:
-                    # Phase 1 (column-pruned probe): which candidate
-                    # files actually hold incoming keys? `prepared` is
-                    # already one-row-per-key (window dedup) — no
-                    # distinct needed before the broadcast.
-                    probe = (
-                        existing.select(KEY_COL)
-                        .withColumn("_oh_file", F.input_file_name())
-                        .join(
-                            self._probe_side(
-                                prepared.select(KEY_COL), batch_rows
-                            ),
-                            KEY_COL,
-                            "inner",
-                        )
-                        .select("_oh_file")
-                        .distinct()
-                    )
-                    # The touched-file list is metadata-scale: one job
-                    # while the key side is broadcast-sized; above that
-                    # the shuffle join keeps the AQE path.
-                    probe_rows = (
-                        _scalar_rows(probe)
-                        if batch_rows <= self.BROADCAST_KEY_ROWS
-                        else probe.collect()
-                    )
-                    touched_abs = [_uri_to_path(r[0]) for r in probe_rows]
-                    # abs->manifest-path map (NOT relpath): bootstrap
-                    # files live outside the base path under absolute
-                    # manifest paths.
-                    abs_map = {
-                        os.path.abspath(
-                            os.path.join(self.base_path, f.path)
-                        ): f.path
-                        for f in candidates
-                    }
-                    touched = [
-                        abs_map[os.path.abspath(p)] for p in touched_abs
-                    ]
+            if not exact and sum(f.rows for f in candidates) > 4 * max(
+                1, batch_rows
+            ):
+                # Probe-skip rule: a stats-pruned candidate set that is
+                # already batch-sized (≤4× write amplification) is
+                # rewritten outright, which beats paying a probe job to
+                # narrow it. The probe pays off only when stats pruning
+                # was too coarse.
+                touched = self._touched_files(candidates, prepared, batch_rows)
             if touched:
                 by_path = {f.path: f for f in candidates}
                 carry_rows = sum(by_path[p].rows for p in touched)
@@ -2249,6 +2176,43 @@ class LakehouseTable:
             return F.broadcast(keys)
         return keys
 
+    def _touched_files(
+        self, candidates: list[FileMeta], keys: DataFrame, n_rows: int
+    ) -> list[str]:
+        """Manifest paths of the candidate files that hold any key of
+        `keys` (one row per key): a column-pruned probe join of the
+        candidates' key column against the key set."""
+        existing = self._read_files(candidates)
+        if existing is None:
+            return []
+        probe = (
+            existing.select(KEY_COL)
+            .withColumn("_oh_file", F.input_file_name())
+            .join(
+                self._probe_side(keys.select(KEY_COL), n_rows),
+                KEY_COL,
+                "inner",
+            )
+            .select("_oh_file")
+            .distinct()
+        )
+        # The file list is metadata-scale: one job while the key side
+        # is broadcast-sized; above that the shuffle join keeps AQE.
+        probe_rows = (
+            _scalar_rows(probe)
+            if n_rows <= self.BROADCAST_KEY_ROWS
+            else probe.collect()
+        )
+        # abs -> manifest path (NOT relpath): bootstrap files live
+        # outside the base path under absolute manifest paths.
+        abs_map = {
+            os.path.abspath(os.path.join(self.base_path, f.path)): f.path
+            for f in candidates
+        }
+        return [
+            abs_map[os.path.abspath(_uri_to_path(r[0]))] for r in probe_rows
+        ]
+
     def delete(self, keys_df: DataFrame) -> Instant:
         """Hard delete by key (reference M4 `DeleteNode`). `keys_df`
         needs the record-key columns (extra columns ignored)."""
@@ -2263,55 +2227,22 @@ class LakehouseTable:
             .persist()
         )
         try:
-            idx_files = None
-            n_keys = 0
-            if self.record_index is not None:
-                idx_files, n_keys = self._index_touched(del_keys)
-            if idx_files is not None:
-                candidates: list[FileMeta] = idx_files
-            else:
-                candidates, n_keys, _keys = self._candidate_files(del_keys)
-            existing = self._read_files(candidates)
+            candidates, n_keys, _keys, exact = self._files_for_keys(del_keys)
+            touched = (
+                [f.path for f in candidates]
+                if exact
+                else self._touched_files(candidates, del_keys, n_keys)
+            )
             adds: list[FileMeta] = []
-            touched: list[str] = []
-            if existing is not None and idx_files is not None:
-                touched = [f.path for f in candidates]
-            elif existing is not None:
-                probe = (
-                    existing.select(KEY_COL)
-                    .withColumn("_oh_file", F.input_file_name())
-                    .join(
-                        self._probe_side(del_keys.select(KEY_COL), n_keys),
-                        KEY_COL,
-                        "inner",
-                    )
-                    .select("_oh_file")
-                    .distinct()
+            if touched:
+                by_path = {f.path: f for f in candidates}
+                carry = self._read_files([by_path[p] for p in touched])
+                remaining = self._anti_by_key(carry, del_keys, n_keys)
+                adds = self._write_files(
+                    remaining,
+                    instant,
+                    approx_rows=sum(by_path[p].rows for p in touched),
                 )
-                # Metadata-scale file list, collected as in upsert.
-                probe_rows = (
-                    _scalar_rows(probe)
-                    if n_keys <= self.BROADCAST_KEY_ROWS
-                    else probe.collect()
-                )
-                touched_abs = [_uri_to_path(r[0]) for r in probe_rows]
-                abs_map = {
-                    os.path.abspath(
-                        os.path.join(self.base_path, f.path)
-                    ): f.path
-                    for f in candidates
-                }
-                touched = [abs_map[os.path.abspath(p)] for p in touched_abs]
-            if existing is not None:
-                if touched:
-                    by_path = {f.path: f for f in candidates}
-                    carry = self._read_files([by_path[p] for p in touched])
-                    remaining = self._anti_by_key(carry, del_keys, n_keys)
-                    adds = self._write_files(
-                        remaining,
-                        instant,
-                        approx_rows=sum(by_path[p].rows for p in touched),
-                    )
             return self._commit(
                 instant,
                 "commit",
@@ -2795,7 +2726,9 @@ class LakehouseTable:
             # the bloom test already collected when there is one (no
             # job), else by a broadcast semi-join of the point-DML-sized
             # key set. Both drop NULL keys and compare strings equally.
-            files, _n, keys = self._candidate_files(probe, include_logs=True)
+            files, _n, keys, _exact = self._files_for_keys(
+                probe, include_logs=True
+            )
             if len(files) < len(files_all):
                 self.last_key_read_probe = {
                     "mode": "mor-stats",
@@ -2821,17 +2754,11 @@ class LakehouseTable:
                 "files_live": len(files_all),
             }
             return self.snapshot(keep_meta=keep_meta)
-        idx_files = None
-        if self.record_index is not None:
-            idx_files, _n = self._index_touched(probe)
-        if idx_files is not None:
-            files: list[FileMeta] = idx_files
+        files, _n, _keys, exact = self._files_for_keys(probe)
+        if exact:
             mode = "index"
         else:
-            files, _n, _keys = self._candidate_files(probe)
-            mode = (
-                "bucket" if self.config.bucket_index_buckets else "stats"
-            )
+            mode = "bucket" if self.config.bucket_index_buckets else "stats"
         self.last_key_read_probe = {
             "mode": mode,
             "files_read": len(files),

@@ -4,6 +4,7 @@ import os
 import shutil
 import sys
 import tempfile
+import uuid
 
 import pytest
 
@@ -12,6 +13,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 _FULL_TIER_FILE = os.path.join(os.path.dirname(__file__), "full_tier.txt")
+
+
+def count_jobs(spark, group, fn):
+    """`(fn(), number of Spark jobs it submitted)`, read from the status
+    tracker under a job group of its own (`group` plus a unique suffix,
+    so a repeated or parametrized call never counts another's jobs)."""
+    group = f"{group}-{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _full_tier_ids() -> set[str]:

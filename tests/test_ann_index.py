@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from onehouse_demos_spark.operators.ann_index import AnnIndex
 from onehouse_demos_spark.operators.similarity import knn_bruteforce, load_emb
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, count_jobs
 
 
 def _build(spark, tmp_base):
@@ -314,21 +314,9 @@ def test_training_equals_duckdb_kmeans_reference(spark):
     assert train_pq_codebooks(emb, m=8, k=16, iters=3) == pq_books
 
 
-def _jobs(spark, group, fn):
-    """`(fn(), number of Spark jobs it submitted)`."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _build_jobs(spark, path, iters):
     emb = load_emb(spark, SF_DIR)
-    return _jobs(
+    return count_jobs(
         spark,
         f"ann-build-{iters}",
         lambda: AnnIndex.build(emb, path, k_coarse=8, m=8, k_pq=16, iters=iters),
@@ -424,7 +412,7 @@ def test_build_and_add_batch_run_one_job_each(spark, tmp_base):
     no file and leaves meta.json as it was."""
     emb = load_emb(spark, SF_DIR)
     path = tmp_base + "/jobs"
-    idx, n = _jobs(
+    idx, n = count_jobs(
         spark,
         "ann-build",
         lambda: AnnIndex.build(
@@ -433,14 +421,14 @@ def test_build_and_add_batch_run_one_job_each(spark, tmp_base):
         ),
     )
     assert n == 1
-    added, n = _jobs(
+    added, n = count_jobs(
         spark, "ann-add", lambda: idx.add_batch(emb.filter(F.col("vec_id") % 2 == 1))
     )
     assert added > 0 and n == 1
     files = _files(path)
     with open(path + "/meta.json") as fh:
         meta = fh.read()
-    added, n = _jobs(
+    added, n = count_jobs(
         spark, "ann-add-empty", lambda: idx.add_batch(emb.filter(F.col("vec_id") < 0))
     )
     assert (added, n) == (0, 1)

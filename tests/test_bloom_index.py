@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from onehouse_demos_spark import LakehouseTable, TableConfig
 from onehouse_demos_spark.tables.bloom import KeyBloom
 from onehouse_demos_spark.tables.table import KEY_COL
+from tests.conftest import count_jobs
 
 
 def test_bloom_no_false_negatives_and_low_fpp():
@@ -54,8 +55,9 @@ def test_bloom_prunes_interleaved_files(spark, tmp_base):
     probe = spark.createDataFrame(
         [("000002",), ("000100",), ("001998",)], "k string"
     ).select(F.col("k").alias(KEY_COL))
-    cand, n, keys = t._candidate_files(probe)
+    cand, n, keys, exact = t._files_for_keys(probe)
     assert n == 3
+    assert not exact
     assert sorted(keys) == ["000002", "000100", "001998"]
     assert len(cand) == 1, [f.path for f in cand]
     evens_file = cand[0]
@@ -66,17 +68,22 @@ def test_bloom_prunes_interleaved_files(spark, tmp_base):
 
 
 def test_bloom_pruning_skipped_for_bulk_batches(spark, tmp_base):
-    """Above the key threshold the collect is pure cost — the pruner
-    must pass candidates through untouched."""
+    """Above the key threshold the collect is pure cost — the resolver
+    must pass candidates through untouched, with its one aggregate as
+    the only job."""
     t = _interleaved_table(spark, tmp_base)
     files = t.manifest.live_files(include_logs=False)
     big = t.BLOOM_PROBE_MAX_KEYS + 1
     probe = spark.range(big).select(
         F.format_string("%06d", F.col("id")).alias(KEY_COL)
     )
-    kept, keys = t._prune_by_bloom(files, probe, big)
+    (kept, n, keys, _exact), jobs = count_jobs(
+        spark, "bloom-bulk", lambda: t._files_for_keys(probe)
+    )
+    assert n == big
     assert kept == files
     assert keys is None
+    assert jobs == 1
 
 
 def test_upsert_correct_after_bloom_pruning(spark, tmp_base):

@@ -157,7 +157,7 @@ def test_conditional_put_is_the_idempotency_guard(spark, tmp_base, spy_factory):
         "_oh_record_key",
         t.manifest.live_files(include_logs=False),
         t._path_instants(),
-        n_rows=1,
+        rows=["K1"],
     )
     assert probed and len(probed) == 1
 
@@ -194,7 +194,7 @@ def test_unpublished_leaves_invisible_and_probe_falls_back_on_race(
         "_oh_record_key",
         live,
         t._path_instants(),
-        n_rows=1,
+        rows=["K1"],
     )
     # bucket of K1 may or may not be "0"; when it is, the vanished
     # leaf forces the scan fallback (None); when not, the probe

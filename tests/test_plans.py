@@ -543,7 +543,7 @@ def test_q10_broadcasts_every_join(spark):
 
 
 def test_bucket_upsert_plans_no_probe_join(spark, tmp_path):
-    """r8: on a bucket-layout table the candidate resolution is ONE
+    """On a bucket-layout table the candidate resolution is ONE
     aggregation job over the incoming batch — the upsert never plans
     the key-probe join (candidates come from the key hash), and a
     point write's rewrite set is confined to its bucket."""
@@ -560,7 +560,7 @@ def test_bucket_upsert_plans_no_probe_join(spark, tmp_path):
             [(i, f"v{i}", 1) for i in range(200)], "id int, v string, ver int"
         )
     )
-    files, n, _keys = t._candidate_files(
+    files, n, _keys, _exact = t._files_for_keys(
         t._with_meta(
             spark.createDataFrame([(5, "x", 2)], "id int, v string, ver int"),
             "99999999999999999999",

@@ -281,7 +281,7 @@ def test_spark_and_driver_paths_agree(spark, tmp_base, monkeypatch):
             "_oh_record_key",
             t.manifest.live_files(include_logs=False),
             t._path_instants(),
-            n_rows=1,
+            rows=["K1"],
         )
         assert got and all("data/" in f.path for f in got)
 
@@ -350,7 +350,7 @@ def test_base_path_containing_data_segment(spark, tmp_base, monkeypatch):
         "_oh_record_key",
         t.manifest.live_files(include_logs=False),
         p2i,
-        n_rows=1,
+        rows=["K1"],
     )
     assert probed is not None and len(probed) == 1
     t.upsert(spark.createDataFrame(ROWS2, SCHEMA))
@@ -382,6 +382,6 @@ def test_streaming_ingest_maintains_index(spark, tmp_base):
         "_oh_record_key",
         t.manifest.live_files(include_logs=False),
         t._path_instants(),
-        n_rows=7,
+        rows=[f"K{j}" for j in range(7)],
     )
     assert probed is not None and len(probed) >= 1

@@ -227,7 +227,7 @@ def test_create_index_ddl_backfills_existing_table(spark, tmp_base):
         "_oh_record_key",
         t.manifest.live_files(include_logs=False),
         t._path_instants(),
-        n_rows=1,
+        rows=["3"],
     )
     assert probed is not None and len(probed) >= 1
     assert filtered_rows(t, "g1") == plain_rows(t, "g1")

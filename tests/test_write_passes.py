@@ -12,6 +12,12 @@ column:
   batch or a MERGE that touches nothing makes none;
 - `counted` caches its frame with the caller's shuffle partitioning
   and drops the cache when its block exits, also on an exception.
+
+On a COPY_ON_WRITE table partitioned by a column, with and without the
+record index, an upsert, a delete and a key read each submit a pinned
+number of Spark jobs (one `_files_for_keys` aggregate, one collect of
+the point batch's keys shared by the index and the bloom test), and
+the key read returns every live row of its keys.
 """
 
 from __future__ import annotations
@@ -26,7 +32,7 @@ from onehouse_demos_spark.sources.cdc import apply_cdc_batch
 from onehouse_demos_spark.sql import Engine
 from onehouse_demos_spark.tables.table import counted
 
-from tests.test_ann_index import _jobs
+from tests.conftest import count_jobs
 
 ROW = "k long, status string, price double"
 
@@ -91,7 +97,7 @@ def _snapshot(t):
 def test_cdc_batch_jobs(spark, orders):
     _engine, t = orders
     env = _envelopes(spark, [("d", 3), ("d", 4), ("u", 5), ("c", 500)])
-    new, jobs = _jobs(
+    new, jobs = count_jobs(
         spark, "cdc-batch", lambda: _new_instants(
             t, lambda: apply_cdc_batch(t, env)
         )
@@ -114,7 +120,7 @@ def test_merge_jobs(spark, orders):
         "WHEN NOT MATCHED THEN INSERT (k, status, price) "
         "VALUES (s.k, s.status, s.price)"
     )
-    new, jobs = _jobs(
+    new, jobs = count_jobs(
         spark, "sql-merge", lambda: _new_instants(t, lambda: engine.sql(sql))
     )
     assert new == [("deltacommit", "upsert")]
@@ -126,7 +132,7 @@ def test_merge_jobs(spark, orders):
 def test_key_read_after_log_commit_jobs(spark, orders):
     _engine, t = orders
     kdf = spark.createDataFrame([(1,), (9,)], "k long")
-    rows, jobs = _jobs(
+    rows, jobs = count_jobs(
         spark, "key-read", lambda: t.snapshot_for_keys(kdf).collect()
     )
     assert t.last_key_read_probe["mode"] == "mor-stats"
@@ -164,6 +170,77 @@ def test_merge_that_touches_nothing_makes_no_commit(spark, orders):
     before = _snapshot(t)
     assert _new_instants(t, lambda: engine.sql(sql)) == []
     assert _snapshot(t) == before
+
+
+@pytest.fixture(params=[False, True], ids=["stats", "index"])
+def cow(request, spark, tmp_base):
+    """A 4000-row COW table in two partitions, bulk-inserted as 8
+    files; `record_index` is the fixture parameter."""
+    t = LakehouseTable.create(
+        spark,
+        os.path.join(tmp_base, "cow"),
+        TableConfig(
+            name="cow",
+            record_key=["k"],
+            partition_by=["status"],
+            record_index=request.param,
+        ),
+    )
+    t.bulk_insert(spark.createDataFrame(_rows(range(4000)), ROW), num_files=8)
+    return t
+
+
+#: Jobs per COW op, without and with the record index. The upsert's
+#: and the delete's first aggregate over their persisted batch runs 2
+#: jobs (the cache fill keeps the caller's AQE); the rest are the
+#: point-batch key collect, the probe join (stats only) and the write.
+COW_JOBS = {
+    False: {"upsert": 10, "delete": 9, "read": 3},
+    True: {"upsert": 8, "delete": 7, "read": 3},
+}
+
+
+def test_cow_key_ops_jobs(spark, cow):
+    t = cow
+    want = COW_JOBS[t.record_index is not None]
+    up = spark.createDataFrame(_rows(range(100, 4000, 200), price=5.0), ROW)
+    _, jobs = count_jobs(spark, "cow-upsert", lambda: t.upsert(up))
+    assert jobs == want["upsert"]
+    gone = spark.createDataFrame([(k,) for k in range(50, 4000, 400)], "k long")
+    _, jobs = count_jobs(spark, "cow-delete", lambda: t.delete(gone))
+    assert jobs == want["delete"]
+    kdf = spark.createDataFrame([(300,), (301,), (302,)], "k long")
+    rows, jobs = count_jobs(
+        spark, "cow-read", lambda: t.snapshot_for_keys(kdf).collect()
+    )
+    assert jobs == want["read"]
+    prices = {r.k: r.price for r in t.snapshot().collect()}
+    assert len(prices) == 3990
+    assert prices[300] == 305.0 and prices[301] == 302.0
+    assert all(k not in prices for k in range(50, 4000, 400))
+    assert {(r.k, r.price) for r in rows} >= {
+        (300, 305.0), (301, 302.0), (302, 303.0)
+    }
+
+
+def test_cow_key_read_matches_snapshot(spark, cow):
+    """Index-exact and stats-pruned reads hold every live row of the
+    probe keys; a duplicate and an absent probe key change nothing."""
+    t = cow
+    kdf = spark.createDataFrame(
+        [(7,), (7,), (1234,), (3999,), (999999,)], "k long"
+    )
+    got = t.snapshot_for_keys(kdf)
+    assert t.last_key_read_probe["mode"] == (
+        "index" if t.record_index is not None else "stats"
+    )
+    assert t.last_key_read_probe["files_read"] < 8
+
+    def semi(df):
+        return sorted(tuple(r) for r in df.join(kdf, "k", "left_semi").collect())
+
+    assert semi(got) == semi(t.snapshot())
+    assert [r[0] for r in semi(got)] == [7, 1234, 3999]
 
 
 def _cached(spark) -> dict[int, tuple[int, int]]:
