@@ -24,13 +24,19 @@ Layout under `path/`:
 Build collects the vectors once (`similarity._collect_vectors`: n x dims
 doubles that must fit in driver memory, 1 MB at sf0.1) and does the
 rest on the driver: it trains both quantizers (`similarity._lloyd`),
-encodes every vector against them (`AnnIndex._encode`, the assignment
-rule of the Spark-side operators and the DuckDB oracle) and writes the
+encodes every vector against them (`AnnIndex._encode`) and writes the
 codes with pyarrow, so the collect is its only Spark job. A query reads
-centroids and codebooks (KB) on the driver with pyarrow, compiles the
-per-cell ADC lookup tables into the plan, and TakeOrders a shortlist
-that an optional exact re-rank (semi-join back to the vector table)
-refines; the full corpus is never scanned.
+centroids and codebooks (KB) on the driver with pyarrow, ranks its probe
+cells, compiles the per-cell ADC lookup tables into the plan, and
+TakeOrders a shortlist that an optional exact re-rank (semi-join back
+to the vector table) refines; the full corpus is never scanned.
+
+Encoding, probing and the lookup tables all run on the numpy kernel of
+`similarity` (`_nearest`, `_ranked_cells`, `_adc_lut` over `_sq_dists`,
+rounded by `_round6` as Spark rounds), so a query probes the cell its
+own vector was encoded into, and the codes equal those the Spark
+operators compute with `_nearest_col` and the DuckDB oracle with
+`ROUND(list_distance(...), 6)`.
 
 (Reference analog: the lakehouse keeps derived tables queryable by any
 engine — hudi-spark-minio-trino/README.md:312-380; the index here is
@@ -52,12 +58,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 
 from onehouse_demos_spark.operators.similarity import (
-    _as_double,
+    _adc_lut,
+    _adc_topk,
     _collect_vectors,
+    _lit_array,
     _lloyd,
     _nearest,
+    _ranked_cells,
+    _rerank,
     _train_pq,
-    cosine,
 )
 
 
@@ -145,9 +154,9 @@ class AnnIndex:
         quantizers: the nearest centroid (computed unless `cell` is
         given), then per subspace s the nearest codeword to the residual
         `X - C[cell]` over dims [s*sd, (s+1)*sd), sd = dims // m, as
-        int32. `_nearest` is the rule `_assign_to_centroids` and
-        `_pq_assign` apply in Spark, and the residual the same IEEE
-        subtraction, so the codes equal a Spark encode's."""
+        int32. `_nearest` is the rule `_nearest_col` applies per row in
+        Spark, and the residual the same IEEE subtraction, so the codes
+        equal a Spark encode's."""
         C = np.array(self.centroids)
         if cell is None:
             cell = _nearest(X, C)
@@ -253,42 +262,9 @@ class AnnIndex:
     # ----------------------------------------------------------- search
 
     def probe_cells(self, qvec: list[float], nprobe: int) -> list[int]:
-        # rounded distance + cid tie-break, identical to the build-time
-        # assignment rule — engine-independent probe choice
-        import math
-
-        d2 = [
-            (
-                round(
-                    math.sqrt(sum((a - b) ** 2 for a, b in zip(qvec, c))), 6
-                ),
-                i,
-            )
-            for i, c in enumerate(self.centroids)
-        ]
-        return [i for _, i in sorted(d2)[:nprobe]]
-
-    def _cell_lut(self, qvec: list[float], cell: int) -> list[list[float]]:
-        """ADC table for one cell: distances from the query's RESIDUAL
-        in that cell to every PQ codeword, per subspace."""
-        m, k = self.meta["m"], self.meta["k_pq"]
-        sd = self.meta["dims"] // m
-        resid = [q - c for q, c in zip(qvec, self.centroids[cell])]
-        # 6-decimal grid, same as the PQ training distances — the SQL
-        # oracle recomputes identical LUT entries
-        return [
-            [
-                round(
-                    sum(
-                        (resid[s * sd + i] - self.codebooks[s][c][i]) ** 2
-                        for i in range(sd)
-                    ),
-                    6,
-                )
-                for c in range(k)
-            ]
-            for s in range(m)
-        ]
+        """The `nprobe` cells nearest to `qvec`, nearest first, by the
+        rule the build assigned every vector's cell with."""
+        return _ranked_cells(qvec, self.centroids)[:nprobe]
 
     def search(
         self,
@@ -302,10 +278,11 @@ class AnnIndex:
     ) -> DataFrame:
         """ADC search over the probed cells only. The scan carries a
         `cell IN (...)` filter that Spark pushes into partition
-        pruning — unprobed cells' files are never opened. With
-        `rerank_with` (vec_id, embedding), the shortlist is re-ranked
-        by exact cosine against the original vectors (reads only
-        `shortlist` rows of the vector table)."""
+        pruning — unprobed cells' files are never opened. A cell's
+        lookup table is `_adc_lut` of the query's residual to that
+        cell's centroid. With `rerank_with` (vec_id, embedding), the
+        shortlist is re-ranked by exact cosine against the original
+        vectors (reads only `shortlist` rows of the vector table)."""
         cells = self.probe_cells(qvec, nprobe)
         codes = self.spark.read.parquet(f"{self.path}/codes").filter(
             F.col("cell").isin(cells)
@@ -321,48 +298,19 @@ class AnnIndex:
             codes = codes.join(
                 allowed.select("vec_id"), "vec_id", "left_semi"
             )
-        lut_col = F.map_from_arrays(
+        q = np.asarray(qvec, dtype=np.float64)
+        C = np.asarray(self.centroids, dtype=np.float64)
+        luts = F.map_from_arrays(
             F.array(*[F.lit(c) for c in cells]),
-            F.array(*[
-                F.array(*[
-                    F.array(*[F.lit(float(x)) for x in row])
-                    for row in self._cell_lut(qvec, c)
-                ])
-                for c in cells
-            ]),
+            _lit_array([_adc_lut(q - C[c], self.codebooks) for c in cells]),
         )
-        scored = codes.select(
-            "vec_id",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        lut_col[F.col("cell")],
-                        F.col("codes"),
-                        lambda row, code: F.element_at(row, code + 1),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("adc_dist"),
-        )
-        cand = scored.orderBy(F.asc("adc_dist"), F.asc("vec_id")).limit(
-            shortlist if rerank_with is not None else top_k
+        cand = _adc_topk(
+            codes,
+            luts[F.col("cell")],
+            shortlist if rerank_with is not None else top_k,
         )
         if rerank_with is None:
             return cand.select(
                 "vec_id", F.round("adc_dist", 4).alias("adc_dist")
             )
-        qcol = F.array(*[F.lit(float(x)) for x in qvec])
-        vecs = rerank_with.select(
-            "vec_id", _as_double(F.col("embedding")).alias("v")
-        )
-        return (
-            vecs.join(F.broadcast(cand.select("vec_id")), "vec_id")
-            .select(
-                "vec_id",
-                F.round(cosine(F.col("v"), qcol), 4).alias("cos_sim"),
-            )
-            .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-            .limit(top_k)
-        )
+        return _rerank(rerank_with, cand, qvec, top_k)

@@ -9,13 +9,13 @@ number of Lloyd rounds, assignment, (for PQ) sub-vector codebooks and
 ADC scoring, shortlist, exact cosine re-rank.
 
 Cross-engine float discipline (shared with similarity._lloyd, the
-Spark-side assignment and operators/ann_index.py): every Lloyd mean and
-every assignment/probe/LUT distance lands on a 6-decimal grid with
-explicit cid/vec_id tie-breaks, so summation-order noise (Spark shuffle
-order, DuckDB parallel aggregation, numpy or Python fold order) cannot
-flip an argmin, and both engines feed identical centroids into every
-round. The final cosine rounds to 4 decimals like every other
-similarity oracle.
+Spark-side assignment similarity._nearest_col and
+operators/ann_index.py): every Lloyd mean and every
+assignment/probe/LUT distance lands on a 6-decimal grid with explicit
+cid/vec_id tie-breaks, so summation-order noise (Spark shuffle order,
+DuckDB parallel aggregation, numpy fold order) cannot flip an argmin,
+and both engines feed identical centroids into every round. The final
+cosine rounds to 4 decimals like every other similarity oracle.
 
 The SQL is generated (a Lloyd round is a CTE template applied `iters`
 times), which pins the Spark implementation and the oracle to the same
@@ -114,8 +114,9 @@ def _assign_cte(name: str, src: str, cents: str) -> str:
 
 
 def _subvec_cte(name: str, src: str, m: int) -> str:
-    """(grp=sub, id, v=subvector) frame: equal slices of `src(id, v)`
-    — mirrors similarity._subvec_frame."""
+    """(grp=sub, id, v=subvector) frame: subspace s of `src(id, v)` is
+    dims [s*sd, (s+1)*sd), sd = dims // m, the slices the engine trains
+    (`similarity._train_pq`) and encodes (`similarity._pq_codes`) on."""
     return f"""{name} AS (
   SELECT t.s AS grp, id,
          v[(t.s * (array_length(v) // {m})) + 1 :

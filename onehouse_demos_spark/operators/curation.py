@@ -49,7 +49,11 @@ from onehouse_demos_spark.operators.similarity import (
     _SIGN_BUCKET_STR_SQL,
     _adaptive_bits,
     _as_double,
+    _collect_vectors,
+    _lloyd,
+    _nearest_col,
     _sign_bucket_str,
+    _with_quantizers,
     cosine,
     load_emb,
 )
@@ -607,13 +611,13 @@ FROM shared, z
 # (md5-lowest seeds, 6-decimal Lloyd rounds) so the DuckDB oracle
 # replays training exactly (operators/ann_oracle_sql.py machinery).
 #
-# Scale shape: training is the IVF trainer (broadcast centroids, one
-# (cluster, dim) shuffle per round, k×dims scalars to the driver);
-# assignment is a broadcast map stage + min_by aggregation; the
-# per-cell rank is a Window partitioned BY CELL — bounded because k
-# scales with the corpus (cluster_balanced_frame auto-sizes
-# k = ceil(N / target_cell_rows) via cbs_k_for, exactly like the IVF
-# index sizes its cells), so a cell's sort stays ~target_cell_rows at
+# Scale shape: one collect of (vec_id, embedding) trains the quantizer
+# on the driver (`_lloyd`, n x dims doubles held there) and gives n for
+# the cap; assignment is one map stage against the broadcast centroids
+# (`_nearest_col`); the per-cell rank is a Window partitioned BY CELL
+# — bounded because k scales with the corpus (cluster_balanced_frame
+# auto-sizes k = ceil(N / target_cell_rows) via cbs_k_for, exactly like
+# the IVF index sizes its cells), so a cell's sort stays ~target_cell_rows at
 # any corpus size. Never a global sort. The oracle-gated query pins
 # k=CBS_K only so DuckDB can replay the k-means training.
 # --------------------------------------------------------------------------
@@ -647,43 +651,33 @@ def cluster_balanced_frame(
     target_cell_rows: int = CBS_TARGET_CELL_ROWS,
 ) -> DataFrame:
     """Library-level cluster-balanced subsampling over any frame with
-    (vec_id, embedding) columns. `k=None` auto-sizes via `cbs_k_for`
-    (one metadata-scale count job), so the per-cell cap is
-    ceil(keep_frac * n / k) <= ~keep_frac * target_cell_rows by
-    construction — bounded as the corpus scales. Pass an explicit `k`
-    to pin the cell count (the oracle-gated query does, so DuckDB can
-    replay training deterministically)."""
-    from onehouse_demos_spark.operators.similarity import (
-        _assign_to_centroids,
-        train_ivf_centroids,
-    )
+    (vec_id, embedding) columns. The training collect also gives the
+    corpus size n: `k=None` auto-sizes via `cbs_k_for(n)`, so the
+    per-cell cap ceil(keep_frac * n / k) <= ~keep_frac *
+    target_cell_rows by construction — bounded as the corpus scales.
+    Pass an explicit `k` to pin the cell count (the oracle-gated query
+    does, so DuckDB can replay training deterministically)."""
+    import math
 
+    ids, X = _collect_vectors(emb)
     if k is None:
-        k = cbs_k_for(emb.count(), target_cell_rows)
-    centroids = train_ivf_centroids(emb, k=k, iters=iters)
+        k = cbs_k_for(len(ids), target_cell_rows)
+    centroids = _lloyd(ids, X, k, iters).tolist()
+    # (keep_frac * n) / k in doubles: the oracle's CEIL(0.5 * COUNT(*) / 8.0)
+    cap = math.ceil(keep_frac * len(ids) / k)
     vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    assigned = _assign_to_centroids(vecs, centroids)
-    # one-row corpus size frame (broadcast by the crossJoin below)
-    n_frame = assigned.agg(
-        F.ceil(
-            F.lit(keep_frac) * F.count(F.lit(1)) / F.lit(k)
-        ).alias("cap")
+    assigned = _with_quantizers(vecs, cs=centroids).select(
+        "vec_id", _nearest_col(F.col("v"), F.col("cs")).alias("cid")
     )
-    ranked = assigned.withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy("cid").orderBy(
-                F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
-            )
-        ),
-    )
-    return (
-        ranked.crossJoin(F.broadcast(n_frame))  # 1-row cap frame
-        .select(
-            "vec_id",
-            F.col("cid").cast("long").alias("cid"),
-            (F.col("rn") <= F.col("cap")).alias("keep"),
+    rn = F.row_number().over(
+        Window.partitionBy("cid").orderBy(
+            F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
         )
+    )
+    return assigned.select(
+        "vec_id",
+        F.col("cid").cast("long").alias("cid"),
+        (rn <= cap).alias("keep"),
     )
 
 

@@ -444,9 +444,8 @@ FROM s
 # Trained IVF: a k-means coarse quantizer instead of the data-oblivious
 # sign-bit hash. The quantizer trains on the driver over the collected
 # training set; assigning the corpus is a pure map stage against the
-# broadcast centroid table, and a query probes only its `nprobe`
-# nearest cells. The sign-bit variant remains as the zero-training
-# fallback.
+# broadcast centroids, and a query probes only its `nprobe` nearest
+# cells. The sign-bit variant remains as the zero-training fallback.
 #
 # Every k-means here, coarse cells and PQ subspaces alike, is `_lloyd`,
 # and ann_oracle_sql._kmeans_ctes replays the same rules in DuckDB:
@@ -455,11 +454,15 @@ FROM s
 #     on ties, the sum folded dimension by dimension in order;
 #   - update: round(sum / count, 6) per dimension; an empty cell keeps
 #     its previous centroid.
-# `round` is Spark's round(double, 6) (`_round6`), so the driver-side
-# training and encode (`_nearest`) and the Spark-side assignment
-# (`_assign_to_centroids`, `_pq_assign`) put every vector in the same
-# cell. Training holds its set on the driver, n x dims doubles (1 MB at
-# sf0.1); past driver memory, train on a sample.
+# `round` is Spark's round(double, 6) (`_round6` on the driver). The
+# assignment rule is written twice, once per engine: `_nearest` in numpy
+# (training, `AnnIndex`, and the probe ranking `_ranked_cells`, all on
+# the squared-distance kernel `_sq_dists`) and `_nearest_col`, one Spark
+# expression per row, for the query operators. tests/test_ann_index.py
+# checks each against the other. The ADC lookup table (`_adc_lut`) is
+# the same kernel on the 6-decimal grid without the sqrt. Training holds
+# its set on the driver, n x dims doubles (1 MB at sf0.1); past driver
+# memory, train on a sample.
 # --------------------------------------------------------------------------
 
 _GRID = Decimal("1e-6")
@@ -487,14 +490,140 @@ def _round6(x: np.ndarray) -> np.ndarray:
     return np.where(finite, out, x)
 
 
-def _nearest(X: np.ndarray, C: np.ndarray) -> np.ndarray:
-    """Per row of `X`, the cid of its nearest row of `C` by the shared
-    assignment rule."""
+def _sq_dists(X, C) -> np.ndarray:
+    """len(X) x len(C) squared Euclidean distances between the rows of
+    `X` and of `C`, each folded dimension by dimension in order, as
+    `_sq_dist` folds it in Spark."""
+    X = np.asarray(X, dtype=np.float64)
+    C = np.asarray(C, dtype=np.float64)
     acc = np.zeros((len(X), len(C)))
     for j in range(X.shape[1]):
         diff = X[:, j, None] - C[None, :, j]
         acc += diff * diff
-    return np.argmin(_round6(np.sqrt(acc)), axis=1)
+    return acc
+
+
+def _nearest(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Per row of `X`, the cid of its nearest row of `C` by the shared
+    assignment rule (argmin takes the lowest cid on ties)."""
+    return np.argmin(_round6(np.sqrt(_sq_dists(X, C))), axis=1)
+
+
+def _ranked_cells(q, C) -> list[int]:
+    """Every cid of `C`, nearest to the vector `q` first, by the shared
+    assignment rule's key (rounded distance, cid); its head is
+    `_nearest`'s choice for `q`."""
+    d = _round6(np.sqrt(_sq_dists([q], C)[0]))
+    return np.argsort(d, kind="stable").tolist()
+
+
+def _adc_lut(r, books) -> list[list[float]]:
+    """The ADC lookup table of the vector `r` (a query, or its residual
+    to a cell): per subspace s, round(squared distance, 6) from dims
+    [s*sd, (s+1)*sd) of `r` to every codeword of `books[s]`."""
+    r = np.asarray(r, dtype=np.float64)
+    sd = len(books[0][0])
+    return [
+        _round6(_sq_dists([r[s * sd:(s + 1) * sd]], book)[0]).tolist()
+        for s, book in enumerate(books)
+    ]
+
+
+def _sq_dist(a, b) -> Column:
+    """Squared Euclidean distance of two array<double> columns, folded
+    dimension by dimension in order."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _nearest_col(v, cs) -> Column:
+    """The cid (int, 0-based) of the element of `cs`
+    (array<array<double>>) nearest to `v` by the shared assignment rule:
+    the lowest (round(sqrt(distance), 6), cid) struct, so ties go to the
+    lowest cid, as in `_nearest`."""
+    return F.array_min(
+        F.transform(
+            cs,
+            lambda c, i: F.struct(
+                F.round(F.sqrt(_sq_dist(v, c)), 6).alias("d"), i.alias("cid")
+            ),
+        )
+    )["cid"]
+
+
+def _pq_codes(v, books, m: int, sd: int) -> Column:
+    """array<int> of the `m` PQ codes of `v`: per subspace s,
+    `_nearest_col` of dims [s*sd, (s+1)*sd) against the codebook
+    `books[s]` (`books` is array<array<array<double>>>)."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda s: _nearest_col(F.slice(v, s * sd + 1, F.lit(sd)), books[s]),
+    )
+
+
+def _with_quantizers(df: DataFrame, **quantizers) -> DataFrame:
+    """`df` with each keyword quantizer (nested lists of floats: k x dims
+    centroids, m x k x sd codebooks) as a column of that name, from a
+    one-row frame joined by a broadcast crossJoin. The plan holds no
+    literal of a quantizer, so it does not grow with k x dims. The row
+    is one partition: a local list would get `defaultParallelism`
+    partitions, each a Python task of the broadcast's job."""
+
+    def typ(x) -> str:
+        return f"array<{typ(x[0])}>" if isinstance(x, list) else "double"
+
+    spark = df.sparkSession
+    row = spark.createDataFrame(
+        spark.sparkContext.parallelize([tuple(quantizers.values())], 1),
+        ", ".join(f"{name} {typ(q)}" for name, q in quantizers.items()),
+    )
+    return df.crossJoin(F.broadcast(row))
+
+
+def _lit_array(x) -> Column:
+    """A (nested) sequence of numbers as an array literal of doubles."""
+    if isinstance(x, (list, np.ndarray)):
+        return F.array(*map(_lit_array, x))
+    return F.lit(float(x))
+
+
+def _adc_topk(codes: DataFrame, lut: Column, n: int) -> DataFrame:
+    """The `n` rows of `codes` (vec_id, codes) nearest by asymmetric
+    distance, as (vec_id, adc_dist): round(sum over s of
+    lut[s][codes[s]], 6) per vector, ties to the lowest vec_id. A
+    TakeOrdered over the codes alone; the vectors are not read."""
+    adc = F.aggregate(
+        F.zip_with(
+            lut, F.col("codes"), lambda row, code: F.element_at(row, code + 1)
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return (
+        codes.select("vec_id", F.round(adc, 6).alias("adc_dist"))
+        .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
+        .limit(n)
+    )
+
+
+def _rerank(emb: DataFrame, cand: DataFrame, q, top_k: int) -> DataFrame:
+    """Exact-cosine re-rank against `q` of the vectors of `emb` (vec_id,
+    embedding) whose vec_id is in `cand`: the `top_k` best as (vec_id,
+    cos_sim), ties to the lowest vec_id. `cand` is broadcast, so the
+    join reads only its rows' vectors."""
+    vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
+    return (
+        vecs.join(F.broadcast(cand.select("vec_id")), "vec_id")
+        .select(
+            "vec_id",
+            F.round(cosine(F.col("v"), _lit_array(q)), 4).alias("cos_sim"),
+        )
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+        .limit(top_k)
+    )
 
 
 def _lloyd(ids: list, X: np.ndarray, k: int, iters: int) -> np.ndarray:
@@ -530,7 +659,7 @@ def _collect_vectors(emb: DataFrame) -> tuple[list, np.ndarray]:
 
 def _train_pq(ids: list, X: np.ndarray, m: int, k: int, iters: int):
     """One `_lloyd` codebook per subspace: column slice s covers dims
-    [s*sd, (s+1)*sd), sd = dims // m, as `_subvec_frame` cuts them."""
+    [s*sd, (s+1)*sd), sd = dims // m, as `_pq_codes` cuts them."""
     sd = X.shape[1] // m
     return [
         _lloyd(ids, X[:, s * sd:(s + 1) * sd], k, iters).tolist()
@@ -557,51 +686,6 @@ def train_ivf_centroids(
     return _lloyd(*_collect_vectors(emb), k, iters).tolist()
 
 
-def _centroid_df(emb: DataFrame, centroids: list[list[float]]):
-    spark = emb.sparkSession
-    return spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], "cid int, c array<double>"
-    )
-
-
-def _assign_to_centroids(
-    vecs: DataFrame, centroids: list[list[float]]
-) -> DataFrame:
-    """Nearest-centroid assignment (vec_id, cid, v): the centroid table
-    is broadcast, every row is scored in a map stage, and one min_by
-    aggregation on vec_id keeps the argmin. The plan does not depend on
-    the centroid values, so repeated calls reuse its generated code."""
-    cdf = _centroid_df(vecs, centroids)
-    # Euclidean distance, rounded to 6 decimals before the argmin:
-    # the 6-decimal grid (with the cid tie-break below) makes the
-    # assignment identical in any engine that computes the same
-    # formula, `_nearest` on the driver included. sqrt (not the
-    # squared distance) so the DuckDB oracle can use its native
-    # list_distance.
-    scored = vecs.join(F.broadcast(cdf)).withColumn(
-        "d",
-        F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("v"), F.col("c"), lambda a, b: (a - b) * (a - b)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-            6,
-        ),
-    )
-    return (
-        scored.groupBy("vec_id")
-        .agg(
-            F.min_by("cid", F.struct("d", "cid")).alias("cid"),
-            F.first("v").alias("v"),
-        )
-    )
-
-
 def knn_ivf_trained(
     spark: SparkSession,
     sf_dir: str,
@@ -609,40 +693,31 @@ def knn_ivf_trained(
     nprobe: int = 2,
     top_k: int = 10,
 ) -> DataFrame:
-    """IVF search with the trained quantizer: probe the query's
-    `nprobe` nearest cells only — scan cost ≈ nprobe/k of the corpus."""
+    """IVF search with the trained quantizer. One collect trains the
+    centroids on the driver and supplies the query vector (vec_id = 0),
+    whose `nprobe` nearest cells are ranked there (`_ranked_cells`).
+    The query then assigns EVERY corpus vector to its cell in one map
+    stage (`_nearest_col`) and scores by exact cosine only the vectors
+    in the probed cells, so it reads the whole corpus; `AnnIndex` is
+    the persisted form whose scan reads only the probed cells' files."""
     emb = load_emb(spark, sf_dir)
-    centroids = train_ivf_centroids(emb, k=k_centroids, iters=4)
-    vecs = emb.select(
+    ids, X = _collect_vectors(emb)
+    C = _lloyd(ids, X, k_centroids, 4)
+    q = X[ids.index(0)]
+    vecs = emb.filter(F.col("vec_id") != 0).select(
         "vec_id", "label", _as_double(F.col("embedding")).alias("v")
     )
-    assigned = _assign_to_centroids(
-        vecs.select("vec_id", "v"), centroids
-    ).join(vecs.select("vec_id", "label"), "vec_id")
-    q = assigned.filter(F.col("vec_id") == 0).collect()[0]
-    import math
-
-    # same rounded-distance + cid tie-break rule as the distributed
-    # assignment, so the probed-cell choice is engine-independent
-    dists = sorted(
-        range(len(centroids)),
-        key=lambda i: (
-            round(
-                math.sqrt(sum((a - b) ** 2 for a, b in zip(q.v, centroids[i]))),
-                6,
-            ),
-            i,
-        ),
-    )
-    probe_cells = dists[:nprobe]
-    qvec = F.array(*[F.lit(float(x)) for x in q.v])
     return (
-        assigned.filter(F.col("cid").isin(probe_cells))
-        .filter(F.col("vec_id") != 0)
+        _with_quantizers(vecs, cs=C.tolist())
+        .filter(
+            _nearest_col(F.col("v"), F.col("cs")).isin(
+                _ranked_cells(q, C)[:nprobe]
+            )
+        )
         .select(
             "vec_id",
             "label",
-            F.round(cosine(F.col("v"), qvec), 4).alias("cos_sim"),
+            F.round(cosine(F.col("v"), _lit_array(q)), 4).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(top_k)
@@ -651,18 +726,19 @@ def knn_ivf_trained(
 
 # --------------------------------------------------------------------------
 # Product quantization (PQ) queries: split each D-dim vector into M
-# subspaces, k-means each subspace to a K-entry codebook, store M small
-# codes per vector.
+# subspaces of sd = D // M dims (subspace s is dims [s*sd, (s+1)*sd)),
+# k-means each subspace to a K-entry codebook, store M small codes per
+# vector.
 #   - training is one `_lloyd` per subspace on the driver; the
-#     codebooks are M x K x (D/M) doubles;
-#   - `pq_encode` and the queries encode in Spark with `_pq_assign`, a
-#     broadcast-codebook assignment (map stage plus one min_by
-#     aggregation); `AnnIndex` encodes on the driver with `_nearest`,
-#     the same rule;
-#   - ADC search scores the compact codes table against a query's
-#     M x K distance lookup table compiled into the plan; the corpus
-#     vectors are never read at query time, so the scan is over M small
-#     ints per vector instead of D floats (16x less I/O here).
+#     codebooks are M x K x sd doubles;
+#   - a code is the nearest codeword to its subspace by the shared
+#     assignment rule: `_pq_codes` per row in Spark against the
+#     broadcast codebooks, `_nearest` in `AnnIndex` on the driver;
+#   - ADC search (`_adc_topk`) scores the compact codes against the
+#     query's M x K lookup table (`_adc_lut`) compiled into the plan; the
+#     corpus vectors are never read by that scan, which touches M small
+#     ints per vector instead of D floats (16x less I/O here), and an
+#     exact-cosine re-rank (`_rerank`) reads only the shortlist's vectors.
 # `pq_reconstruction_summary` is checked as self-certified invariants
 # (the oracle pins booleans the Spark side must prove); the search
 # queries carry full DuckDB oracles (ann_oracle_sql.py replays the
@@ -672,59 +748,6 @@ def knn_ivf_trained(
 
 _PQ_M = 8
 _PQ_K = 16
-
-
-def _subvec_frame(vecs: DataFrame, m: int) -> DataFrame:
-    """(vec_id, v) → (vec_id, sub, sv): M subvectors per vector, built
-    with slice+explode in one map stage (no shuffle); the dims come from
-    a one-row probe job."""
-    sd = len(vecs.select("v").first().v) // m
-    subs = F.array(*[
-        F.struct(
-            F.lit(s).alias("sub"),
-            F.slice("v", s * sd + 1, sd).alias("sv"),
-        )
-        for s in range(m)
-    ])
-    return vecs.select(
-        "vec_id", F.explode(subs).alias("e")
-    ).select("vec_id", F.col("e.sub").alias("sub"), F.col("e.sv").alias("sv"))
-
-
-def _pq_codebook_df(spark: SparkSession, codebooks):
-    rows = [
-        (s, c, list(map(float, vec)))
-        for s, book in enumerate(codebooks)
-        for c, vec in enumerate(book)
-    ]
-    return spark.createDataFrame(rows, "sub int, cid int, c array<double>")
-
-
-def _pq_assign(subvecs: DataFrame, codebooks) -> DataFrame:
-    """Nearest codeword per (vec_id, sub): `_assign_to_centroids`
-    keyed by subspace, against the broadcast M×K codebook table."""
-    cb = _pq_codebook_df(subvecs.sparkSession, codebooks)
-    # rounded-distance grid + cid tie-break: engine-independent
-    # codeword choice (see _assign_to_centroids)
-    scored = subvecs.join(F.broadcast(cb), "sub").withColumn(
-        "dist",
-        F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("sv"), F.col("c"), lambda a, b: (a - b) * (a - b)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-            6,
-        ),
-    )
-    return scored.groupBy("vec_id", "sub").agg(
-        F.min_by("cid", F.struct("dist", "cid")).alias("cid"),
-        F.first("sv").alias("sv"),
-    )
 
 
 def train_pq_codebooks(
@@ -742,17 +765,14 @@ def train_pq_codebooks(
 
 def pq_encode(emb: DataFrame, codebooks) -> DataFrame:
     """(vec_id, codes array<int>): the compact PQ representation —
-    M log2(K)-bit codes per vector."""
+    M log2(K)-bit codes per vector, one map stage against the broadcast
+    codebooks."""
     vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    assigned = _pq_assign(_subvec_frame(vecs, len(codebooks)), codebooks)
-    return (
-        assigned.groupBy("vec_id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("sub", "cid"))).alias("sc")
-        )
-        .select(
-            "vec_id", F.transform("sc", lambda s: s["cid"]).alias("codes")
-        )
+    codes = _pq_codes(
+        F.col("v"), F.col("books"), len(codebooks), len(codebooks[0][0])
+    )
+    return _with_quantizers(vecs, books=codebooks).select(
+        "vec_id", codes.alias("codes")
     )
 
 
@@ -767,48 +787,30 @@ def pq_reconstruction_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate codebook) are quality gates, not query results."""
     emb = load_emb(spark, sf_dir)
     books = train_pq_codebooks(emb, m=_PQ_M, k=_PQ_K, iters=3)
-    vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    subvecs = _subvec_frame(vecs, _PQ_M)
-    assigned = _pq_assign(subvecs, books)
-    cb = _pq_codebook_df(spark, books)
-    err = assigned.join(F.broadcast(cb), ["sub", "cid"]).withColumn(
-        "se",
-        F.aggregate(
-            F.zip_with(F.col("sv"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
+    sd = len(books[0][0])
     # Variance baseline: squared error against the per-subspace mean
-    # vector (what a K=1 codebook would give).
-    mean_books = [
-        [
-            [
-                sum(book[c][i] for c in range(_PQ_K)) / _PQ_K
-                for i in range(len(book[0]))
-            ]
-        ]
+    # codeword (what a K=1 codebook would give), concatenated.
+    mean = [
+        sum(book[c][i] for c in range(_PQ_K)) / _PQ_K
         for book in books
+        for i in range(sd)
     ]
-    base = _pq_assign(subvecs, mean_books).join(
-        F.broadcast(_pq_codebook_df(spark, mean_books)), ["sub", "cid"]
-    ).withColumn(
-        "se0",
-        F.aggregate(
-            F.zip_with(F.col("sv"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
+    vecs = emb.select(_as_double(F.col("embedding")).alias("v"))
+    coded = _with_quantizers(vecs, books=books, mean=mean).select(
+        "v",
+        "mean",
+        "books",
+        _pq_codes(F.col("v"), F.col("books"), _PQ_M, sd).alias("codes"),
     )
-    stats = err.agg(
-        F.count_distinct("vec_id").alias("n_vectors"),
-        F.sum("se").alias("sse"),
-        F.max("cid").alias("max_cid"),
-        F.min("cid").alias("min_cid"),
-        F.count(F.lit(1)).alias("n_codes"),
-    )
-    base_stats = base.agg(F.sum("se0").alias("sse0"))
-    return stats.crossJoin(base_stats).select(
+    recon = F.flatten(F.transform("codes", lambda c, s: F.col("books")[s][c]))
+    return coded.agg(
+        F.count(F.lit(1)).alias("n_vectors"),
+        F.sum(_sq_dist(F.col("v"), recon)).alias("sse"),
+        F.sum(_sq_dist(F.col("v"), F.col("mean"))).alias("sse0"),
+        F.max(F.array_max("codes")).alias("max_cid"),
+        F.min(F.array_min("codes")).alias("min_cid"),
+        F.sum(F.size("codes")).alias("n_codes"),
+    ).select(
         "n_vectors",
         F.lit(_PQ_M).alias("m"),
         F.lit(_PQ_K).alias("k"),
@@ -843,80 +845,27 @@ def pq_adc_topk(
     Distance Computation with exact re-ranking — the production PQ
     search shape:
 
-    1. precompute the query's M×K table of subspace distances (tiny,
-       compiled into the plan as an array literal);
+    1. one collect trains the codebooks and supplies the query, whose
+       M×K table of subspace distances (`_adc_lut`) is compiled into
+       the plan as an array literal;
     2. score EVERY vector's code array with one array lookup per
-       subspace — this scan touches only the compact codes (M small
-       ints/vector), never the original vectors, which is where the
-       16×-less-I/O win comes from at 100 TB;
+       subspace (`_adc_topk`) — this scan touches only the compact
+       codes (M small ints/vector), never the original vectors, which
+       is where the 16×-less-I/O win comes from at 100 TB;
     3. exact-cosine re-rank only the `shortlist` ADC survivors against
-       their original vectors (a TakeOrdered over the codes scan, then
-       a semi-join back to the vector table that reads `shortlist`
-       rows), returning the same (vec_id, cos_sim) shape as
-       knn_bruteforce so recall is directly measurable."""
+       their original vectors (`_rerank`), returning the same
+       (vec_id, cos_sim) shape as knn_bruteforce so recall is directly
+       measurable."""
     emb = load_emb(spark, sf_dir)
-    books = train_pq_codebooks(emb, m=m, k=k, iters=3)
-    codes = pq_encode(emb, books)
-    q = (
-        emb.filter(F.col("vec_id") == 0)
-        .select(_as_double(F.col("embedding")).alias("v"))
-        .first()
-        .v
+    ids, X = _collect_vectors(emb)
+    books = _train_pq(ids, X, m, k, 3)
+    q = X[ids.index(0)]
+    cand = _adc_topk(
+        pq_encode(emb, books).filter(F.col("vec_id") != 0),
+        _lit_array(_adc_lut(q, books)),
+        shortlist,
     )
-    sd = len(q) // m
-    # LUT entries and the ADC total both live on a 6-decimal grid
-    # (with the vec_id tie-break below): the DuckDB oracle recomputes
-    # the same sums from the same rounded codebooks and lands on the
-    # same shortlist.
-    lut = [
-        [
-            round(
-                sum(
-                    (q[s * sd + i] - books[s][c][i]) ** 2 for i in range(sd)
-                ),
-                6,
-            )
-            for c in range(k)
-        ]
-        for s in range(m)
-    ]
-    lut_col = F.array(*[
-        F.array(*[F.lit(float(x)) for x in row]) for row in lut
-    ])
-    cand = (
-        codes.filter(F.col("vec_id") != 0)
-        .select(
-            "vec_id",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        lut_col,
-                        F.col("codes"),
-                        lambda row, code: F.element_at(row, code + 1),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("adc_dist"),
-        )
-        .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-        .limit(shortlist)
-        .select("vec_id")
-    )
-    qvec = F.array(*[F.lit(float(x)) for x in q])
-    vecs = emb.select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
-    )
-    return (
-        vecs.join(F.broadcast(cand), "vec_id")
-        .select(
-            "vec_id",
-            F.round(cosine(F.col("v"), qvec), 4).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(top_k)
-    )
+    return _rerank(emb, cand, q, top_k)
 
 
 _ANN_INDEX_CACHE: dict = {}

@@ -349,39 +349,28 @@ def _codes(spark, path):
 
 def _spark_encode(emb, idx):
     """The (cell, vec_id, codes) rows of a Spark encode of `emb` against
-    `idx`'s quantizers: `_assign_to_centroids`, the residual by
-    `zip_with`, `_pq_assign` per subspace."""
+    `idx`'s quantizers: the cell by `_nearest_col`, the residual by
+    `zip_with`, the codes by `_pq_codes` (`_nearest_col` per subspace)."""
     from onehouse_demos_spark.operators.similarity import (
-        _assign_to_centroids,
-        _centroid_df,
-        _pq_assign,
-        _subvec_frame,
+        _nearest_col,
+        _pq_codes,
+        _with_quantizers,
     )
 
+    m = idx.meta["m"]
     vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    resid = (
-        _assign_to_centroids(vecs, idx.centroids)
-        .join(F.broadcast(_centroid_df(vecs, idx.centroids)), "cid")
-        .select(
-            "vec_id",
-            F.col("cid").alias("cell"),
-            F.zip_with("v", "c", lambda a, b: a - b).alias("v"),
-        )
-        .persist()
-    )
-    try:
-        cells = {r.vec_id: r.cell for r in resid.select("vec_id", "cell").collect()}
-        codes = {v: [None] * idx.meta["m"] for v in cells}
-        for r in _pq_assign(
-            _subvec_frame(resid.select("vec_id", "v"), idx.meta["m"]),
-            idx.codebooks,
-        ).collect():
-            codes[r.vec_id][r.sub] = r.cid
-    finally:
-        resid.unpersist()
-    return sorted((cells[v], v, codes[v]) for v in cells)
+    cells = _with_quantizers(
+        vecs, cs=idx.centroids, books=idx.codebooks
+    ).withColumn("cell", _nearest_col(F.col("v"), F.col("cs")))
+    resid = F.zip_with("v", F.col("cs")[F.col("cell")], lambda a, b: a - b)
+    rows = cells.select(
+        "cell",
+        "vec_id",
+        _pq_codes(resid, F.col("books"), m, idx.meta["dims"] // m).alias("codes"),
+    ).collect()
+    return sorted((r.cell, r.vec_id, list(r.codes)) for r in rows)
 
 
 @pytest.mark.parametrize("vec_type", ["bigint", "int"])
@@ -518,11 +507,6 @@ def test_load_reads_spark_written_quantizers_without_a_job(spark, tmp_base):
     """`load` reads the quantizer files on the driver: the files `build`
     writes, and Spark-written directories of the same tables (with
     `_SUCCESS` and `.crc` beside the parts) alike, and submits no job."""
-    from onehouse_demos_spark.operators.similarity import (
-        _centroid_df,
-        _pq_codebook_df,
-    )
-
     path = tmp_base + "/sw"
     idx = _build(spark, path)
     sc = spark.sparkContext
@@ -536,14 +520,106 @@ def test_load_reads_spark_written_quantizers_without_a_job(spark, tmp_base):
     assert jobs == []
     assert (fresh.centroids, fresh.codebooks) == (idx.centroids, idx.codebooks)
 
-    emb = load_emb(spark, SF_DIR)
-    _centroid_df(emb, idx.centroids).repartition(3).write.mode("overwrite").parquet(
+    spark.createDataFrame(
+        list(enumerate(idx.centroids)), "cid int, c array<double>"
+    ).repartition(3).write.mode("overwrite").parquet(
         path + "/idx/centroids.parquet"
     )
-    _pq_codebook_df(spark, idx.codebooks).repartition(3).write.mode(
-        "overwrite"
-    ).parquet(path + "/idx/codebooks.parquet")
+    spark.createDataFrame(
+        [
+            (s, c, vec)
+            for s, book in enumerate(idx.codebooks)
+            for c, vec in enumerate(book)
+        ],
+        "sub int, cid int, c array<double>",
+    ).repartition(3).write.mode("overwrite").parquet(
+        path + "/idx/codebooks.parquet"
+    )
     names = os.listdir(path + "/idx/centroids.parquet")
     assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
     again = AnnIndex.load(spark, path + "/idx")
     assert (again.centroids, again.codebooks) == (idx.centroids, idx.codebooks)
+
+
+def test_probe_rounds_half_up_as_spark_does():
+    """Distances 0.123457 to cid 0 and 0.1234565 to cid 1 are both
+    0.123457 on Spark's 6-decimal grid, so the probe ranks cid 0 first,
+    as the build's `_nearest` assigns; Python's `round` makes the second
+    0.123456 and would probe cid 1. Likewise a lookup-table entry of
+    2.5e-06 is 3e-06 on Spark's grid, not `round`'s 2e-06."""
+    import numpy as np
+
+    from onehouse_demos_spark.operators.similarity import _adc_lut, _nearest
+
+    C = [[-0.123457], [0.1234565]]
+    assert AnnIndex(None, "", C, [], {}).probe_cells([0.0], 1) == [0]
+    assert _nearest(np.zeros((1, 1)), np.array(C)).tolist() == [0]
+    assert _adc_lut([0.0005, 0.0015], [[[0.0, 0.0]]]) == [[3e-06]]
+
+
+def test_nearest_col_equals_nearest(spark):
+    """The Spark and numpy implementations of the assignment rule agree
+    row for row, and the probe ranking's head with both: on seeded
+    vectors, on exact ties (a duplicated centroid, vectors equal to
+    centroids) that go to the lowest cid, and on the half-way distance
+    above; Spark's rounded squared distance of the half-way lookup-table
+    case equals `_adc_lut`'s entry."""
+    import numpy as np
+
+    from onehouse_demos_spark.operators.similarity import (
+        _nearest,
+        _nearest_col,
+        _ranked_cells,
+        _sq_dist,
+    )
+
+    rng = np.random.default_rng(20261019)
+    C = np.round(rng.normal(size=(6, 4)), 1)
+    C[4] = C[1]
+    cases = [
+        (np.concatenate([np.round(rng.normal(size=(300, 4)), 1), C]), C),
+        (np.zeros((1, 1)), np.array([[-0.123457], [0.1234565]])),
+        (np.array([[0.0005, 0.0015]]), np.zeros((1, 2))),
+    ]
+    data = [
+        (n, i, x, C.tolist())
+        for n, (X, C) in enumerate(cases)
+        for i, x in enumerate(X.tolist())
+    ]
+    rows = (
+        spark.createDataFrame(
+            spark.sparkContext.parallelize(data, 1),
+            "n int, i int, v array<double>, cs array<array<double>>",
+        )
+        .select(
+            "n",
+            "i",
+            _nearest_col(F.col("v"), F.col("cs")).alias("cid"),
+            F.round(_sq_dist(F.col("v"), F.col("cs")[0]), 6).alias("d0"),
+        )
+        .collect()
+    )
+    for n, (X, C) in enumerate(cases):
+        got = sorted((r.i, r.cid) for r in rows if r.n == n)
+        assert [cid for _, cid in got] == _nearest(X, C).tolist()
+        assert [_ranked_cells(x, C)[0] for x in X] == _nearest(X, C).tolist()
+    assert [r.d0 for r in rows if r.n == 2] == [3e-06]
+
+
+@pytest.mark.parametrize(
+    "query, jobs",
+    [
+        ("knn_ivf_trained", 3),
+        ("pq_adc_topk", 4),
+        ("pq_reconstruction_summary", 4),
+        ("cluster_balanced_sample", 4),
+    ],
+)
+def test_trained_ann_queries_job_counts(spark, query, jobs):
+    """Building and collecting each query runs `jobs` Spark jobs: the
+    training collect, which also gives the query vector and the corpus
+    size, then one pass per row against the broadcast quantizers."""
+    from onehouse_demos_spark.operators import curation, similarity
+
+    fn = {**similarity.QUERIES, **curation.QUERIES}[query]
+    assert count_jobs(spark, query, lambda: fn(spark, SF_DIR).collect())[1] == jobs

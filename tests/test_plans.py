@@ -297,25 +297,23 @@ def test_pq_adc_recall_vs_bruteforce(spark):
     assert recall >= 0.5, (exact, approx)
 
 
-def test_pq_assignment_broadcasts_codebook(spark):
-    from pyspark.sql import functions as F
-
-    from onehouse_demos_spark.operators.similarity import (
-        _as_double,
-        _pq_assign,
-        _subvec_frame,
-        load_emb,
-    )
-    from onehouse_demos_spark.plans import explain_str
-
-    vecs = load_emb(spark, SF_DIR).select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
-    )
-    books = [[[0.0] * 8, [1.0] * 8] for _ in range(8)]
-    assigned = _pq_assign(_subvec_frame(vecs, 8), books)
-    txt = explain_str(assigned)
+def _assert_per_row_assignment(txt):
+    """The quantizers arrive by broadcast, and every row is assigned in
+    its own map stage: no cartesian product, no aggregate, no hash
+    exchange."""
     assert "BroadcastExchange" in txt, txt[:800]
     assert "CartesianProduct" not in txt
+    assert "Aggregate" not in txt, txt[:800]
+    assert "hashpartitioning" not in txt, txt[:800]
+
+
+def test_pq_assignment_broadcasts_codebook(spark):
+    from onehouse_demos_spark.operators.similarity import load_emb, pq_encode
+    from onehouse_demos_spark.plans import explain_str
+
+    books = [[[0.0] * 8, [1.0] * 8] for _ in range(8)]
+    encoded = pq_encode(load_emb(spark, SF_DIR), books)
+    _assert_per_row_assignment(explain_str(encoded))
 
 
 def test_trained_ivf_assignment_broadcasts_centroids(spark):
@@ -323,7 +321,8 @@ def test_trained_ivf_assignment_broadcasts_centroids(spark):
 
     from onehouse_demos_spark.operators.similarity import (
         _as_double,
-        _assign_to_centroids,
+        _nearest_col,
+        _with_quantizers,
         load_emb,
     )
     from onehouse_demos_spark.plans import explain_str
@@ -331,10 +330,10 @@ def test_trained_ivf_assignment_broadcasts_centroids(spark):
     vecs = load_emb(spark, SF_DIR).select(
         "vec_id", _as_double(F.col("embedding")).alias("v")
     )
-    assigned = _assign_to_centroids(vecs, [[0.0] * 64, [1.0] * 64])
-    txt = explain_str(assigned)
-    assert "BroadcastExchange" in txt, txt[:800]
-    assert "CartesianProduct" not in txt
+    assigned = _with_quantizers(vecs, cs=[[0.0] * 64, [1.0] * 64]).select(
+        "vec_id", _nearest_col(F.col("v"), F.col("cs")).alias("cid")
+    )
+    _assert_per_row_assignment(explain_str(assigned))
 
 
 def test_ohlc_bars_aggregate_only_no_window_no_join(spark):
