@@ -668,21 +668,12 @@ def _train_pq(ids: list, X: np.ndarray, m: int, k: int, iters: int):
 
 
 def train_ivf_centroids(
-    emb: DataFrame,
-    k: int = 16,
-    iters: int = 5,
-    sample_fraction: float | None = None,
+    emb: DataFrame, k: int = 16, iters: int = 5
 ) -> list[list[float]]:
     """k-means centroids of the embedding column: one collect of
     (vec_id, embedding), then `_lloyd` on the driver. The training set
-    must fit in driver memory; `sample_fraction` keeps a deterministic
-    md5 hash sample of it, filtered in Spark before the collect. Fewer
-    than k (sampled) vectors raise ValueError."""
-    if sample_fraction is not None:
-        emb = emb.filter(
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 4), 16, 10)
-            .cast("long") % F.lit(int(1 / sample_fraction)) == 0
-        )
+    must fit in driver memory; sample the frame first when it does
+    not. Fewer than k vectors raise ValueError."""
     return _lloyd(*_collect_vectors(emb), k, iters).tolist()
 
 

@@ -53,20 +53,21 @@ Sync semantics (mirrors `sync_delta_log`'s snapshot-diff contract):
   + active instants, so snapshots, time travel (`as_of`) and
   incremental reads inside the retention window stay exact across any
   number of further syncs.
-- **Metadata table `files` partition** (r10, VERDICT r9 missing #4):
-  each sync maintains `.hoodie/metadata/` — its own `.hoodie`
-  timeline (bootstrap instant `00000000000000010` + per-sync
-  deltacommits, the fixture's exact lifecycle), a `files/` partition
-  with `.hoodie_partition_metadata`, and a newest-wins
-  `files-0000-0_*` base slice holding one record per data partition
-  (key = partition path, `filesystemMetadata` name->size map — the
-  public HoodieMetadataPayload record types 1/2). The base slice is a
-  REAL HBase HFile v3 since late-r11 (tables/hfile.py, pinned on the
-  fixture's committed base slice; legacy parquet slices still read),
-  and
-  `hoodie.table.metadata.partitions=files` is declared in the main
-  properties like the fixture does — so a reader plans from metadata
-  instead of paying an S3 LIST per query, the 100 TB story.
+- **Metadata table**: each sync maintains `.hoodie/metadata/` — its
+  own `.hoodie` timeline (bootstrap instant `00000000000000010` +
+  per-sync deltacommits, the fixture's exact lifecycle) and a `files`
+  partition holding one record per data partition (key = partition
+  path, `filesystemMetadata` name->size map — the public
+  HoodieMetadataPayload record types 1/2), plus the column_stats,
+  bloom_filters and record_index partitions when declared. Every
+  partition is file groups in Hudi's base+log shape — a REAL HBase
+  HFile v3 base (tables/hfile.py, pinned on the fixture's committed
+  base slice; legacy parquet bases still read) and HoodieLogFormat
+  delta logs attached to it — run by one lifecycle
+  (`_mdt_sync_partition`). `hoodie.table.metadata.partitions`
+  declares them in the main properties like the fixture does — so a
+  reader plans from metadata instead of paying an S3 LIST per query,
+  the 100 TB story.
 
 `read_hudi_snapshot` is the replay half: walk the completed timeline
 (archived instants included), fold `partitionToWriteStats` adds into
@@ -421,6 +422,11 @@ def _file_id_for(rel_path: str) -> str:
     return f"{uuid.uuid5(uuid.NAMESPACE_URL, 'oh-hudi:' + rel_path)}-0"
 
 
+def _base_file_name(file_id: str, instant: str) -> str:
+    """Hudi base-file name: `<fileId>_<writeToken>_<instantTime>.parquet`."""
+    return f"{file_id}_{_WRITE_TOKEN}_{instant}.parquet"
+
+
 def _partition_rel_dir(part_cols: list[str], values: dict) -> str:
     """Hive-style partition directory relative to the table base
     ('' for unpartitioned) — matches
@@ -543,15 +549,15 @@ def sync_hudi_metadata(
 
 def _sync_hudi_metadata_locked(
     table: LakehouseTable,
-    compact_mor: bool = False,
-    metadata_table: bool = True,
-    mor_rt: bool = False,
-    rt_log_gate_rows: int = RT_LOG_GATE_ROWS,
-    column_stats: bool = False,
-    bloom_filters: bool = False,
-    record_index: bool = False,
-    record_index_shards: int = _MDT_RLI_DEFAULT_SHARDS,
-    pub: _Publisher | None = None,
+    compact_mor: bool,
+    metadata_table: bool,
+    mor_rt: bool,
+    rt_log_gate_rows: int,
+    column_stats: bool,
+    bloom_filters: bool,
+    record_index: bool,
+    record_index_shards: int,
+    pub: _Publisher,
 ) -> int:
     """Write/refresh the `.hoodie` personality over the table's live
     BASE files. Returns the number of completed Hudi instants after
@@ -586,8 +592,6 @@ def _sync_hudi_metadata_locked(
     part_cols = partition_columns(table)
     hoodie = _hoodie_dir(table)
     os.makedirs(hoodie, exist_ok=True)
-    if pub is None:
-        pub = _publisher(table)
     state = _load_state(hoodie, pub)
     known = state["files"]
     live_by_path = {f.path: f for f in live}
@@ -649,16 +653,8 @@ def _sync_hudi_metadata_locked(
             n or want_cs or want_bf or want_rli
         ) and metadata_table and state["instants"]:
             _sync_metadata_table(
-                table,
-                hoodie,
-                state["instants"][-1],
-                known,
-                state,
-                column_stats=want_cs,
-                bloom_filters=want_bf,
-                record_index=want_rli,
-                record_index_shards=record_index_shards,
-                pub=pub,
+                table, hoodie, state["instants"][-1], known, state, want_cs,
+                want_bf, want_rli, record_index_shards, pub,
             )
         return len(state["instants"])
     if props_raw is None:
@@ -684,7 +680,7 @@ def _sync_hudi_metadata_locked(
         values = partition_values(fm, part_cols)
         partition = _partition_rel_dir(part_cols, values)
         file_id = _file_id_for(fm.path)
-        hudi_name = f"{file_id}_{_WRITE_TOKEN}_{instant}.parquet"
+        hudi_name = _base_file_name(file_id, instant)
         part_dir = os.path.join(table.base_path, partition) if partition else table.base_path
         os.makedirs(part_dir, exist_ok=True)
         src = os.path.join(table.base_path, fm.path)
@@ -784,16 +780,8 @@ def _sync_hudi_metadata_locked(
         # after the rt log publication so the files partition lists
         # base AND log slices, like Hudi's own metadata table
         _sync_metadata_table(
-            table,
-            hoodie,
-            state["instants"][-1],
-            known,
-            state,
-            column_stats=want_cs,
-            bloom_filters=want_bf,
-            record_index=want_rli,
-            record_index_shards=record_index_shards,
-            pub=pub,
+            table, hoodie, state["instants"][-1], known, state, want_cs,
+            want_bf, want_rli, record_index_shards, pub,
         )
     return len(state["instants"])
 
@@ -988,7 +976,7 @@ def _sync_rt_logs(
     return len(new_paths)
 
 
-# -- metadata table (`.hoodie/metadata/files`) ------------------------------
+# -- metadata table (`.hoodie/metadata`) ------------------------------------
 
 #: Hudi's bootstrap instant for the metadata table — the fixture's
 #: `.hoodie/metadata/.hoodie/00000000000000010.deltacommit`.
@@ -1006,9 +994,9 @@ _MDT_ROOT_PARTITION = "."
 
 def _mdt_properties(table_name: str) -> str:
     """`hoodie.properties` for the metadata table — the fixture's key
-    set (`hudi_dimCustomer/.hoodie/metadata/.hoodie/hoodie.properties`);
-    since late-r11 the base file format declaration matches the
-    fixture's HFILE (tables/hfile.py writes the real container)."""
+    set (`hudi_dimCustomer/.hoodie/metadata/.hoodie/hoodie.properties`),
+    including its HFILE base file format (tables/hfile.py writes the
+    real container)."""
     props = {
         "hoodie.table.name": f"{table_name}_metadata",
         "hoodie.table.type": "MERGE_ON_READ",
@@ -1041,13 +1029,14 @@ def _mdt_write_timeline(
     mdt_hoodie: str,
     instant: str,
     stats_by_partition: dict,
-    action: str = "deltacommit",
+    action: str,
 ) -> None:
     """One instant lifecycle (requested -> inflight -> completed) in
     the metadata table's own timeline — the fixture's exact
-    transition-file set per instant. One instant covers EVERY metadata
-    partition written by the sync (files + column_stats), like Hudi's
-    own MDT deltacommits. Chain compactions publish a `commit`."""
+    transition-file set per instant. One instant covers every
+    metadata partition the sync writes, like Hudi's own MDT
+    deltacommits; a sync that compacts the `files` chain publishes a
+    `commit`."""
     compacted = action == "commit"
     pub.put_text(
         os.path.join(mdt_hoodie, f"{instant}.{action}.requested"), ""
@@ -1078,21 +1067,21 @@ def _mdt_write_timeline(
     )
 
 
-#: delta log files per base slice before the chain compacts into a
-#: fresh full-listing base (Hudi's `hoodie.metadata.compact.max.delta.
-#: commits` default is 10; the chain stays metadata-scale either way)
+#: delta logs a chain holds before its next non-empty delta compacts
+#: it into a fresh base — one setting for every metadata partition,
+#: like Hudi's `hoodie.metadata.compact.max.delta.commits` (default 10)
 _MDT_COMPACT_EVERY = 10
 
 
 def _mdt_record_schema() -> str:
-    """HoodieMetadataRecord Avro schema — field-name/type parity with
-    the reference fixture's committed log-block header
+    """HoodieMetadataRecord Avro schema of the `files` partition —
+    field-name/type parity with the reference fixture's committed
+    log-block header
     (`hudi_dimCustomer/.hoodie/metadata/files/.files-0000-0_...log.2`):
     the five `_hoodie_*` meta fields, `key`, `type`, and
     `filesystemMetadata` as a map of {size: long, isDeleted: boolean}.
-    Documented deviation: the fixture's Bloom/ColumnStats/recordIndex
-    metadata-index fields are omitted — this personality publishes no
-    bloom_filters/column_stats metadata partitions."""
+    Each metadata-index partition's schema appends its own payload
+    field to this one; `_mdt_full_record_schema` carries all of them."""
     meta_fields = [
         {
             "name": n,
@@ -1148,32 +1137,6 @@ def _mdt_record_schema() -> str:
     )
 
 
-def _mdt_build_listing(
-    table: LakehouseTable, known: dict, state: dict | None
-) -> dict[str, dict[str, int]]:
-    """The current {partition: {file_name: size}} listing from the
-    personality's own live-file map (base slices + rt log slices,
-    like Hudi's own files partition). Metadata-scale by
-    construction."""
-    by_partition: dict[str, dict[str, int]] = {}
-    entries = [
-        (ent["partition"], ent["hudi_path"]) for ent in known.values()
-    ]
-    if state is not None:
-        for log_ent in state.get("logs", {}).values():
-            for sl in log_ent["slices"]:
-                entries.append((sl["partition"], sl["hudi_path"]))
-    for partition, rel in entries:
-        part = partition or _MDT_ROOT_PARTITION
-        name = os.path.basename(rel)
-        size = 0
-        abs_path = os.path.join(table.base_path, rel)
-        if os.path.exists(abs_path):
-            size = os.stat(abs_path).st_size
-        by_partition.setdefault(part, {})[name] = size
-    return by_partition
-
-
 def _mdt_full_record_schema() -> str:
     """The COMPLETE HoodieMetadataRecord schema the fixture's base
     slice embeds in its HFile file info: the files-partition fields
@@ -1190,122 +1153,75 @@ def _mdt_full_record_schema() -> str:
     return json.dumps(base)
 
 
-def _mdt_write_base_slice(
-    pub: _Publisher, files_dir: str, mdt_instant: str, by_partition: dict
-) -> tuple[str, int, int]:
-    """One full-listing base slice of the `files-0000-0` group
-    (HoodieMetadataPayload types 1/2) in the fixture's OWN container:
-    an HBase HFile v3 (tables/hfile.py — GZ blocks, CRC32C checksums,
-    embedded record schema, key riding the cell row with the value's
-    `key` field empty, exactly the committed
-    `files-0000-0_0-73-165_00000000000000010.hfile`). Returns
-    (slice_name, n_records). Until r11 this was a documented PARQUET
-    stand-in; the reader keeps consuming legacy parquet slices."""
-    from onehouse_demos_spark.sources.avro_codec import AvroSchema, encode
-    from onehouse_demos_spark.tables.hfile import hfile_bytes
+# -- metadata file-group lifecycle ------------------------------------------
+#
+# Every metadata partition (files, column_stats, bloom_filters,
+# record_index) is one or more file groups in Hudi's base+log shape:
+# an HFile base slice `<group>_<token>_<attach>.hfile`, then delta
+# logs `.<group>_<attach>.log.<v>_<token>` attached to it, v = 1, 2,
+# ... A reader folds the newest base and its chain; clean ages the
+# superseded chains. The functions below own that shape; a partition
+# supplies only its records.
 
-    slice_name = f"{_MDT_FILE_GROUP}_{_WRITE_TOKEN}_{mdt_instant}.hfile"
-    schema_json = _mdt_full_record_schema()
-    sch = AvroSchema(json.loads(schema_json))
+#: sync_state["mdt"] keys per partition: (attach instant of the
+#: current chain, its last log version, the snapshot the next sync
+#: diffs against)
+_MDT_STATE_KEYS = {
+    "files": ("base_instant", "log_version", "listing"),
+    "column_stats": ("colstats_instant", "colstats_version", "colstats_files"),
+    "bloom_filters": ("bloom_instant", "bloom_version", "bloom_files"),
+    "record_index": ("rli_instant", "rli_version", "rli_paths"),
+}
 
-    def _value(rtype: int, fsm: dict) -> bytes:
-        # fixture behavior: the record key rides the CELL ROW; the
-        # value's own `key` is empty and `_hoodie_file_name` names
-        # the slice itself
-        return encode(
-            {
-                "_hoodie_file_name": slice_name,
-                "key": "",
-                "type": rtype,
-                "filesystemMetadata": fsm,
-            },
-            sch,
-        )
-
-    cells = [
-        (
-            _MDT_ALL_PARTITIONS_KEY,
-            _value(
-                _MDT_TYPE_PARTITION_LIST,
-                {
-                    p: {"size": 0, "isDeleted": False}
-                    for p in sorted(by_partition)
-                },
-            ),
-        )
-    ] + [
-        (
-            p,
-            _value(
-                _MDT_TYPE_FILE_LIST,
-                {
-                    name: {"size": size, "isDeleted": False}
-                    for name, size in sorted(by_partition[p].items())
-                },
-            ),
-        )
-        for p in sorted(by_partition)
-    ]
-    # the fixture's "bloomFilter" meta block: a REAL Hadoop
-    # DYNAMIC_V0 bloom over the record keys (base64 text, Murmur2
-    # chain pinned against the committed fixture bytes) — a real Hudi
-    # reader's key-lookup bloom check works against our base slice
-    from onehouse_demos_spark.tables.hadoop_bloom import (
-        HadoopDynamicBloom,
-    )
-
-    bloom = HadoopDynamicBloom.build([k for k, _ in cells])
-    blob = hfile_bytes(
-        cells,
-        fileinfo_extra={
-            "schema": schema_json.encode(),
-            "bloomFilterTypeCode": b"DYNAMIC_V0",
-        },
-        meta_blocks={"bloomFilter": bloom.to_base64()},
-    )
-    pub.put_bytes(os.path.join(files_dir, slice_name), blob)
-    return slice_name, len(cells), len(blob)
+_MDT_BASE_RE = re.compile(r"^([^._][^_]*)_[^_]+_(\d+)\.(?:hfile|parquet)$")
+_MDT_LOG_RE = re.compile(r"^\.([^_]+)_(\d+)\.log\.(\d+)_[^_]+$")
 
 
-def _mdt_slice_instant(name: str) -> str:
-    """Attachment instant of a base-slice file name (either
-    container suffix)."""
-    return name.rsplit("_", 1)[1].rsplit(".", 1)[0]
+def _mdt_slice(name: str) -> tuple[str, str, int] | None:
+    """(file group, attach instant, version) of a metadata slice file
+    name: a base (HFile, or a legacy parquet base) is version 0 at its
+    own instant, a log is version v of the chain attached to base
+    `attach`. None for any other name (`.hoodie_partition_metadata`)."""
+    m = _MDT_BASE_RE.match(name)
+    if m:
+        return m.group(1), m.group(2), 0
+    m = _MDT_LOG_RE.match(name)
+    if m:
+        return m.group(1), m.group(2), int(m.group(3))
+    return None
 
 
-def _mdt_write_index_base(
+def _mdt_write_base(
     pub: _Publisher,
-    idx_dir: str,
+    part_dir: str,
     partition: str,
     group: str,
-    instant: str,
+    attach: str,
     records: list[dict],
+    op_rows_key: str = "numUpdateWrites",
 ) -> dict:
-    """Base slice of a metadata-INDEX file group (column_stats /
-    bloom_filters / record_index roll-ups and bootstraps) in the
-    fixture's container: HFile v3 cells keyed by record key, values
-    Avro HoodieMetadataRecords under the full fixture schema, plus
-    the DYNAMIC_V0 bloom meta block — the same shape as the files
-    partition's base. Records must be live (a base is a full fold;
-    absence IS deletion). Returns the MDT write stat."""
-    import json as _json
-
+    """Base slice of a metadata file group at `attach`, in the
+    fixture's container (`files-0000-0_0-73-165_00000000000000010.
+    hfile`): HFile v3 cells keyed by record key, the value's own `key`
+    empty and `_hoodie_file_name` naming the slice; values are Avro
+    HoodieMetadataRecords under the full fixture schema; a Hadoop
+    DYNAMIC_V0 bloom over the keys rides the `bloomFilter` meta block,
+    so a real Hudi reader's key-lookup bloom check works. A base is a
+    full fold: its records are live, absence is deletion. Returns the
+    MDT write stat."""
     from onehouse_demos_spark.sources.avro_codec import AvroSchema, encode
     from onehouse_demos_spark.tables.hadoop_bloom import (
         HadoopDynamicBloom,
     )
     from onehouse_demos_spark.tables.hfile import hfile_bytes
 
-    name = f"{group}_{_WRITE_TOKEN}_{instant}.hfile"
+    name = f"{group}_{_WRITE_TOKEN}_{attach}.hfile"
     schema_json = _mdt_full_record_schema()
-    sch = AvroSchema(_json.loads(schema_json))
+    sch = AvroSchema(json.loads(schema_json))
     cells = []
     for rec in sorted(records, key=lambda r: r["key"]):
-        r = dict(rec)
-        key = r["key"]
-        r["key"] = ""  # fixture behavior: key rides the cell row
-        r["_hoodie_file_name"] = name
-        cells.append((key, encode(r, sch)))
+        r = dict(rec, key="", _hoodie_file_name=name)
+        cells.append((rec["key"], encode(r, sch)))
     bloom = HadoopDynamicBloom.build([k for k, _ in cells])
     blob = hfile_bytes(
         cells,
@@ -1315,52 +1231,263 @@ def _mdt_write_index_base(
         },
         meta_blocks={"bloomFilter": bloom.to_base64()},
     )
-    pub.put_bytes(os.path.join(idx_dir, name), blob)
+    pub.put_bytes(os.path.join(part_dir, name), blob)
+    return _write_stat(
+        partition, group, f"{partition}/{name}", len(cells), len(blob),
+        op_rows_key,
+    )
+
+
+def _mdt_write_log(
+    pub: _Publisher,
+    part_dir: str,
+    partition: str,
+    group: str,
+    attach: str,
+    version: int,
+    instant: str,
+    schema: str,
+    records: list[dict],
+) -> dict:
+    """Delta log `version` of the chain attached to base `attach`: one
+    HoodieLogFormat file holding one AVRO data block of `records`
+    written at `instant`, published as one atomic PUT (one writer per
+    group and version, so retries are safe). Returns the MDT write
+    stat."""
+    from onehouse_demos_spark.tables.hudi_log import (
+        avro_log_file_bytes,
+        encode_records,
+    )
+
+    name = f".{group}_{attach}.log.{version}_{_WRITE_TOKEN}"
+    blob = avro_log_file_bytes(
+        instant, schema, encode_records(records, schema)
+    )
+    pub.put_bytes(os.path.join(part_dir, name), blob)
     stat = _write_stat(
-        partition,
-        group,
-        f"{partition}/{name}",
-        len(cells),
-        len(blob),
+        partition, group, f"{partition}/{name}", 0, len(blob),
         "numUpdateWrites",
     )
+    stat["totalLogRecords"] = len(records)
+    stat["totalLogBlocks"] = 1
     return stat
 
 
-def _mdt_index_base_records(
-    idx_dir: str, group: str, pub: _Publisher | None = None
-) -> tuple[str, list[dict]] | None:
-    """(instant, records) of a group's NEWEST base slice, with each
-    record's `key` restored from the cell row; None when the group
-    has no base (legacy pure-chain layouts keep reading). With `pub`
-    (writer-internal folds — VERDICT r13 #5) the listing AND the
-    slice bytes ride the store seam; without it (external-reader
-    APIs) the read stays direct file I/O over the materialized
+def _mdt_chain(
+    part_dir: str, group: str, pub: _Publisher | None = None
+) -> list[str]:
+    """The slices a reader folds for one file group, in fold order:
+    the newest base, then the logs attached to it by version. A group
+    without a base (legacy pure-chain layout) folds its newest chain;
+    an absent group has none. With `pub` the listing rides the store
+    seam; without it (external-reader APIs) it lists the materialized
     layout."""
+    names = pub.list_rel(part_dir) if pub is not None else os.listdir(part_dir)
+    slices = []
+    for n in names:
+        s = _mdt_slice(n)
+        if s is not None and s[0] == group:
+            slices.append((s[1], s[2], n))
+    if not slices:
+        return []
+    bases = [a for a, v, _ in slices if v == 0]
+    attach = max(bases or [a for a, _, _ in slices])
+    return [n for a, _, n in sorted(slices) if a == attach]
+
+
+def _mdt_slice_records(
+    part_dir: str, name: str, pub: _Publisher | None = None
+) -> list[dict]:
+    """The records of one slice: a base's cells with each `key`
+    restored from the cell row, or a log's records in block order.
+    With `pub` the bytes ride the store seam (writer-internal folds
+    run on a non-materializing store too); without it, direct file
+    I/O."""
     from onehouse_demos_spark.tables.hfile import (
-        read_hudi_metadata_base,
         read_hudi_metadata_base_bytes,
     )
+    from onehouse_demos_spark.tables.hudi_log import parse_log_bytes
 
-    prefix = f"{group}_"
-    names = pub.list_rel(idx_dir) if pub is not None else os.listdir(idx_dir)
-    bases = [
-        n for n in names if n.startswith(prefix) and n.endswith(".hfile")
-    ]
-    if not bases:
-        return None
-    newest = max(bases, key=_mdt_slice_instant)
-    newest_abs = os.path.join(idx_dir, newest)
+    path = os.path.join(part_dir, name)
     if pub is not None:
-        raw = pub.get_bytes(newest_abs)
+        raw = pub.get_bytes(path)
         if raw is None:
-            raise FileNotFoundError(f"listed slice vanished: {newest_abs}")
-        return (_mdt_slice_instant(newest),
-                read_hudi_metadata_base_bytes(raw, name=newest_abs))
-    return (
-        _mdt_slice_instant(newest),
-        read_hudi_metadata_base(newest_abs),
-    )
+            raise FileNotFoundError(f"listed slice vanished: {path}")
+    else:
+        with open(path, "rb") as fh:
+            raw = fh.read()
+    if name.endswith(".hfile"):
+        return read_hudi_metadata_base_bytes(raw, name=path)
+    if name.endswith(".parquet"):
+        # the files partition's base before it became an HFile
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        return [
+            dict(row, filesystemMetadata=dict(row["filesystemMetadata"] or []))
+            for row in pq.read_table(pa.BufferReader(raw)).to_pylist()
+        ]
+    return [
+        rec
+        for block in parse_log_bytes(raw, name=path)
+        for rec in block.get("records") or []
+    ]
+
+
+def _mdt_index_records(part_dir: str, group: str, pub: _Publisher | None = None):
+    """Yield a file group's records in fold order (`_mdt_chain`);
+    raises when the group has no slice."""
+    chain = _mdt_chain(part_dir, group, pub)
+    if not chain:
+        raise FileNotFoundError(f"no {group} slices under {part_dir}")
+    for name in chain:
+        yield from _mdt_slice_records(part_dir, name, pub)
+
+
+def _mdt_sync_partition(
+    pub: _Publisher,
+    hoodie: str,
+    mdt_state: dict,
+    partition: str,
+    instant: str,
+    snapshot,
+    delta,
+    write,
+) -> tuple[str | None, list[dict]]:
+    """One sync of one metadata partition: the lifecycle every
+    partition shares. The partition supplies `snapshot` (what the
+    state keeps for the next sync to diff against), `delta(prev)`
+    (this sync's change against the chain's snapshot: empty when
+    nothing changed, None when the chain cannot take a delta and must
+    be rebuilt) and `write(part_dir, kind, attach, version, change)`,
+    which publishes the slices and returns their MDT write stats. The
+    rule, the same for every partition:
+
+    - no chain (the partition's first sync, or a rebuild): a
+      `bootstrap` base;
+    - an empty delta: nothing;
+    - a chain holding `_MDT_COMPACT_EVERY` logs: a `compaction` base
+      at this instant;
+    - else one `log`, the chain's next version.
+
+    A base is version 0 at its own attach instant. Returns (kind,
+    stats); kind is None when nothing was written."""
+    attach_key, version_key, snapshot_key = _MDT_STATE_KEYS[partition]
+    part_dir = os.path.join(hoodie, "metadata", partition)
+    first = not pub.list_rel(part_dir)  # seam LIST, not a local isdir
+    os.makedirs(part_dir, exist_ok=True)
+    if first:
+        pub.put_text(
+            os.path.join(part_dir, ".hoodie_partition_metadata"),
+            "#partition metadata\n"
+            f"commitTime={_MDT_BOOTSTRAP_INSTANT}\n"
+            "partitionDepth=1\n",
+        )
+    prev = None if first else mdt_state.get(snapshot_key)
+    change = None if prev is None else delta(prev)
+    version = mdt_state.get(version_key, 0)
+    if change is None:
+        kind, version = "bootstrap", 0
+        attach = _MDT_BOOTSTRAP_INSTANT if first else instant
+    elif not change:
+        return None, []
+    elif version >= _MDT_COMPACT_EVERY:
+        kind, attach, version = "compaction", instant, 0
+    else:
+        kind, version = "log", version + 1
+        attach = mdt_state.get(attach_key, _MDT_BOOTSTRAP_INSTANT)
+    stats = write(part_dir, kind, attach, version, change)
+    mdt_state[attach_key] = attach
+    mdt_state[version_key] = version
+    mdt_state[snapshot_key] = snapshot
+    return kind, stats
+
+
+def _mdt_group_write(
+    pub: _Publisher,
+    partition: str,
+    group: str,
+    schema: str,
+    instant: str,
+    full_records,
+):
+    """`write` for a partition of one file group: a base holds
+    `full_records()`, a log this sync's delta records."""
+
+    def write(part_dir, kind, attach, version, records):
+        if kind == "log":
+            return [
+                _mdt_write_log(
+                    pub, part_dir, partition, group, attach, version,
+                    instant, schema, records,
+                )
+            ]
+        # the files listing at the bootstrap instant is the metadata
+        # table's initial insert (the fixture's bootstrap deltacommit)
+        op = (
+            "numInserts"
+            if partition == "files" and attach == _MDT_BOOTSTRAP_INSTANT
+            else "numUpdateWrites"
+        )
+        return [
+            _mdt_write_base(
+                pub, part_dir, partition, group, attach, full_records(), op
+            )
+        ]
+
+    return write
+
+
+# -- `files` partition records ------------------------------------------------
+
+
+def _mdt_build_listing(
+    table: LakehouseTable, known: dict, state: dict
+) -> dict[str, dict[str, int]]:
+    """The current {partition: {file_name: size}} listing from the
+    personality's own live-file map (base slices + rt log slices,
+    like Hudi's own files partition). Metadata-scale by
+    construction."""
+    by_partition: dict[str, dict[str, int]] = {}
+    entries = [
+        (ent["partition"], ent["hudi_path"]) for ent in known.values()
+    ]
+    for log_ent in state.get("logs", {}).values():
+        for sl in log_ent["slices"]:
+            entries.append((sl["partition"], sl["hudi_path"]))
+    for partition, rel in entries:
+        part = partition or _MDT_ROOT_PARTITION
+        name = os.path.basename(rel)
+        size = 0
+        abs_path = os.path.join(table.base_path, rel)
+        if os.path.exists(abs_path):
+            size = os.stat(abs_path).st_size
+        by_partition.setdefault(part, {})[name] = size
+    return by_partition
+
+
+def _mdt_listing_records(listing: dict[str, dict[str, int]]) -> list[dict]:
+    """The full `files` records of a listing (HoodieMetadataPayload
+    types 1/2): the partition-list record, then one file-list record
+    per partition."""
+
+    def _fsm(sizes):
+        return {n: {"size": s, "isDeleted": False} for n, s in sorted(sizes)}
+
+    return [
+        {
+            "key": _MDT_ALL_PARTITIONS_KEY,
+            "type": _MDT_TYPE_PARTITION_LIST,
+            "filesystemMetadata": _fsm((p, 0) for p in listing),
+        }
+    ] + [
+        {
+            "key": p,
+            "type": _MDT_TYPE_FILE_LIST,
+            "filesystemMetadata": _fsm(files.items()),
+        }
+        for p, files in sorted(listing.items())
+    ]
 
 
 def _mdt_delta_records(
@@ -1413,10 +1540,8 @@ def _mdt_delta_records(
     return records
 
 
-#: column_stats metadata partition (r11): HoodieMetadataRecord type 3,
-#: its own file group in Hudi's base+log shape — bootstrap/roll-up
-#: write an HFile BASE slice (tables/hfile.py), deltas attach as
-#: HoodieLogFormat log files.
+#: column_stats metadata partition: HoodieMetadataRecord type 3 in
+#: one file group.
 _MDT_COLSTATS_FILE_GROUP = "col-stats-0000-0"
 _MDT_TYPE_COLUMN_STATS = 3
 #: record-key separator inside column-stats keys (documented
@@ -1534,8 +1659,8 @@ def _mdt_colstats_schema() -> str:
     return json.dumps(base)
 
 
-#: bloom_filters metadata partition (r11): HoodieMetadataRecord
-#: type 4, one entry per (partition, base file), carrying the
+#: bloom_filters metadata partition: HoodieMetadataRecord type 4 in
+#: one file group, one entry per (partition, base file), carrying the
 #: engine's write-time key bloom — Hudi's bloom-filter metadata
 #: index, serving external point-read planning without footer reads.
 _MDT_BLOOM_FILE_GROUP = "bloom-filters-0000-0"
@@ -1634,85 +1759,37 @@ def _sync_bloom_partition(
     known: dict,
     mdt_state: dict,
     pub: _Publisher,
-) -> dict | None:
-    """Refresh `.hoodie/metadata/bloom_filters` (r11): Hudi's
-    bloom-filter metadata index in the same HFile-base + log-chain
-    shape and roll-up/clean lifecycle as column_stats. External
-    readers (and `read_hudi_point`) prune a point read to the files
-    whose bloom might contain the key, from metadata alone. Returns
-    the MDT-timeline write stat (None when unchanged)."""
-    from onehouse_demos_spark.tables.hudi_log import (
-        avro_log_file_bytes,
-        encode_records,
-    )
-
-    bf_dir = os.path.join(hoodie, "metadata", "bloom_filters")
-    first = not pub.list_rel(bf_dir)  # seam LIST, not a local isdir
-    os.makedirs(bf_dir, exist_ok=True)
-    if first:
-        pub.put_text(
-            os.path.join(bf_dir, ".hoodie_partition_metadata"),
-            "#partition metadata\n"
-            f"commitTime={_MDT_BOOTSTRAP_INSTANT}\n"
-            "partitionDepth=1\n",
-        )
+) -> list[dict]:
+    """Refresh `.hoodie/metadata/bloom_filters`, Hudi's bloom-filter
+    metadata index: external readers (and `read_hudi_point`) prune a
+    point read to the files whose bloom might contain the key, from
+    metadata alone. A delta carries the blooms of new or changed files
+    and tombstones for retired ones; the state keeps digests only, the
+    bloom bytes live in the chain. Returns the MDT write stats."""
     cur = _bloom_current(table, known)
-    cur_digests = {k: _digest(v) for k, v in cur.items()}
-    prev = mdt_state.get("bloom_files")
-    rollup = (
-        prev is not None
-        and mdt_state.get("bloom_version", 0) >= _MDT_COMPACT_EVERY
-    )
-    if prev is None or rollup:
-        # fresh BASE slice (r11 late: fixture base+log shape; see
-        # column_stats)
-        attach = _MDT_BOOTSTRAP_INSTANT if first else instant
-        stat = _mdt_write_index_base(
-            pub, bf_dir, "bloom_filters", _MDT_BLOOM_FILE_GROUP, attach,
-            [_bloom_record(k, v, instant) for k, v in sorted(cur.items())],
-        )
-        mdt_state["bloom_instant"] = attach
-        mdt_state["bloom_version"] = 0
-        mdt_state["bloom_files"] = cur_digests
-        mdt_state.pop("bloom_listing", None)
-        return stat
-    else:
-        attach = mdt_state.get("bloom_instant", _MDT_BOOTSTRAP_INSTANT)
-        records = [
+    digests = {k: _digest(v) for k, v in cur.items()}
+
+    def delta(prev):
+        return [
             _bloom_record(k, cur[k], instant)
             for k in sorted(cur)
-            if prev.get(k) != cur_digests[k]
+            if prev.get(k) != digests[k]
         ] + [
             _bloom_record(k, None, instant)
             for k in sorted(set(prev) - set(cur))
         ]
-        if not records:
-            return None
-        version = mdt_state.get("bloom_version", 0) + 1
-    log_name = (
-        f".{_MDT_BLOOM_FILE_GROUP}_{attach}.log.{version}_{_WRITE_TOKEN}"
+
+    def full_records():
+        return [_bloom_record(k, v, instant) for k, v in sorted(cur.items())]
+
+    _kind, stats = _mdt_sync_partition(
+        pub, hoodie, mdt_state, "bloom_filters", instant, digests, delta,
+        _mdt_group_write(
+            pub, "bloom_filters", _MDT_BLOOM_FILE_GROUP, _mdt_bloom_schema(),
+            instant, full_records,
+        ),
     )
-    schema = _mdt_bloom_schema()
-    blob = avro_log_file_bytes(
-        instant, schema, encode_records(records, schema)
-    )
-    pub.put_bytes(os.path.join(bf_dir, log_name), blob)
-    stat = _write_stat(
-        "bloom_filters",
-        _MDT_BLOOM_FILE_GROUP,
-        f"bloom_filters/{log_name}",
-        0,
-        len(blob),
-        "numUpdateWrites",
-    )
-    stat["totalLogRecords"] = len(records)
-    stat["totalLogBlocks"] = 1
-    mdt_state["bloom_instant"] = attach
-    mdt_state["bloom_version"] = version
-    # digests only — the bloom bytes live in the chain, not the state
-    mdt_state["bloom_files"] = cur_digests
-    mdt_state.pop("bloom_listing", None)  # pre-digest format
-    return stat
+    return stats
 
 
 def hudi_metadata_bloom_filters(base_path: str) -> dict:
@@ -1720,7 +1797,6 @@ def hudi_metadata_bloom_filters(base_path: str) -> dict:
     chain folded in version order. Returns {(partition, file_name):
     KeyBloom}. Metadata-scale read; no data file is opened."""
     from onehouse_demos_spark.tables.bloom import KeyBloom
-    from onehouse_demos_spark.tables.hudi_log import parse_log_file
 
     bf_dir = os.path.join(
         _hoodie_dir(base_path), "metadata", "bloom_filters"
@@ -1747,7 +1823,7 @@ def hudi_metadata_bloom_filters(base_path: str) -> dict:
 
 
 def hudi_files_for_keys(base_path: str, keys: list[str]) -> list[str]:
-    """Point-read planning from metadata alone (r11): the files
+    """Point-read planning from metadata alone: the files
     partition gives the live base set, the bloom_filters partition
     drops every file whose bloom excludes ALL probed keys. Files
     without a published bloom are kept (safe). Returns absolute
@@ -1834,18 +1910,18 @@ def read_hudi_point(
     return df.drop(*meta_cols) if meta_cols else df
 
 
-#: record_index metadata partition (r11 — closing the last documented
-#: metadata-partition deviation): Hudi's record-level index as SHARDED
-#: HoodieLogFormat delta chains, file groups `record-index-0000-0` ..
+#: record_index metadata partition: Hudi's record-level index
+#: (HoodieMetadataRecord type 5) SHARDED over file groups
+#: `record-index-0000-0` ..
 #: `record-index-NNNN-0` (the reference fixture's committed
 #: `hoodie.properties` names the same partition when RLI is enabled;
 #: real Hudi shards the index over `hoodie.metadata.record.index.*.
 #: filegroup.count` groups exactly like this). Per-ROW metadata means
 #: the writer must be DISTRIBUTED: beyond the driver fast-path bounds,
 #: Spark computes key->location over the changed files and the
-#: EXECUTORS write the shard log files (hash-clustered so each shard
-#: is one task's single-writer artifact) — the driver only publishes
-#: the deltacommit. Readers probe ONE shard chain per key.
+#: EXECUTORS write the shard slices (hash-clustered so each shard is
+#: one task's single-writer artifact) — the driver only publishes the
+#: deltacommit. Readers probe ONE shard chain per key.
 _MDT_TYPE_RECORD_INDEX = 5
 #: driver fast-path bounds (RecordIndex.DRIVER_UPDATE_* contract): a
 #: metadata-scale commit must not pay Spark job scheduling for its
@@ -1952,10 +2028,19 @@ def _rli_record(key: str, loc: dict | None) -> dict:
     }
 
 
+def _rli_loc_entry(loc: dict) -> tuple[str, str]:
+    """(partition, base-file name) of the slice a location names —
+    '.'-keyed root, reconstructed (the state never stores paths
+    twice)."""
+    return (
+        loc["partition"] or _MDT_ROOT_PARTITION,
+        _base_file_name(loc["file_id"], loc["instant"]),
+    )
+
+
 def _rli_loc_rel(loc: dict) -> str:
-    """Personality-relative path of the base slice a location names
-    (reconstructed — the state never stores paths twice)."""
-    name = f"{loc['file_id']}_{_WRITE_TOKEN}_{loc['instant']}.parquet"
+    """Personality-relative path of the base slice a location names."""
+    name = _base_file_name(loc["file_id"], loc["instant"])
     return f"{loc['partition']}/{name}" if loc["partition"] else name
 
 
@@ -1990,41 +2075,28 @@ def _rli_keys_driver(paths: list[str]) -> dict[str, list[str]] | None:
     return out
 
 
-def _rli_write_shard(
+def _rli_write_shard_slice(
     pub: _Publisher,
     rli_dir: str,
     shard: int,
     attach: str,
     version: int,
     instant: str,
-    schema: str,
-    records: list[dict],
+    locs: dict[str, dict | None],
 ) -> dict:
-    """Write one shard's log file for this sync and return its MDT
-    write stat. Single-writer per shard per version by construction;
-    the file publishes as ONE atomic object-store PUT (retries safe)."""
-    from onehouse_demos_spark.tables.hudi_log import (
-        avro_log_file_bytes,
-        encode_records,
-    )
-
+    """One shard's slice over {key: location} (None: tombstone): its
+    base at version 0, else log `version` of its chain. Returns the
+    MDT write stat."""
     group = _mdt_rli_group(shard)
-    name = f".{group}_{attach}.log.{version}_{_WRITE_TOKEN}"
-    blob = avro_log_file_bytes(
-        instant, schema, encode_records(records, schema)
+    records = [_rli_record(k, locs[k]) for k in sorted(locs)]
+    if version == 0:
+        return _mdt_write_base(
+            pub, rli_dir, "record_index", group, attach, records
+        )
+    return _mdt_write_log(
+        pub, rli_dir, "record_index", group, attach, version, instant,
+        _mdt_rli_schema(), records,
     )
-    pub.put_bytes(os.path.join(rli_dir, name), blob)
-    stat = _write_stat(
-        "record_index",
-        group,
-        f"record_index/{name}",
-        0,
-        len(blob),
-        "numUpdateWrites",
-    )
-    stat["totalLogRecords"] = len(records)
-    stat["totalLogBlocks"] = 1
-    return stat
 
 
 def _rli_fold_shard(
@@ -2032,35 +2104,27 @@ def _rli_fold_shard(
 ) -> dict[str, dict]:
     """Fold ONE shard's newest base slice + attached log chain:
     {key: loc-dict}. Metadata-scale — memory is bounded by a single
-    shard, which is what lets the roll-up compact a shard at a time
+    shard, which is what lets a compaction run a shard at a time
     instead of materializing the whole index. Writer-internal callers
-    (roll-up compaction) pass `pub` so the fold rides the store seam
-    end to end."""
+    pass `pub` so the fold rides the store seam end to end."""
     out: dict[str, dict] = {}
-    # a generator raises lazily: materialize the existence check by
-    # probing for any slice of this group before iterating
-    names = pub.list_rel(rli_dir) if pub is not None else os.listdir(rli_dir)
-    if not any(
-        n.startswith(f"{group}_") or n.startswith(f".{group}_")
-        for n in names
-    ):
-        return out
-    for rec in _mdt_index_records(rli_dir, group, pub):
-        if rec.get("type") != _MDT_TYPE_RECORD_INDEX:
-            continue
-        meta = rec.get("recordIndexMetadata")
-        if meta is None:
-            out.pop(rec["key"], None)
-        else:
-            out[rec["key"]] = {
-                "partition": meta["partitionName"],
-                "file_id": _file_id_from_bits(
-                    meta["fileIdHighBits"],
-                    meta["fileIdLowBits"],
-                    meta["fileIndex"],
-                ),
-                "instant": str(meta["instantTime"]).zfill(17),
-            }
+    for name in _mdt_chain(rli_dir, group, pub):
+        for rec in _mdt_slice_records(rli_dir, name, pub):
+            if rec.get("type") != _MDT_TYPE_RECORD_INDEX:
+                continue
+            meta = rec.get("recordIndexMetadata")
+            if meta is None:
+                out.pop(rec["key"], None)
+            else:
+                out[rec["key"]] = {
+                    "partition": meta["partitionName"],
+                    "file_id": _file_id_from_bits(
+                        meta["fileIdHighBits"],
+                        meta["fileIdLowBits"],
+                        meta["fileIndex"],
+                    ),
+                    "instant": str(meta["instantTime"]).zfill(17),
+                }
     return out
 
 
@@ -2073,9 +2137,7 @@ def _rli_write_spark(
     attach: str,
     version: int,
     instant: str,
-    schema: str,
     pub: _Publisher,
-    as_base: bool = False,
 ) -> list[dict]:
     """The DISTRIBUTED index write (the 100 TB path): Spark reads ONLY
     the record-key column of the changed files, attributes each row to
@@ -2083,11 +2145,12 @@ def _rli_write_spark(
     raises — an under-approximate record index would send point reads
     to the wrong file, the one failure the contract cannot absorb),
     anti-joins the removed files' keys into tombstones, hash-clusters
-    by shard (same shard -> same task, so every shard log file keeps
+    by shard (same shard -> same task, so every shard file keeps
     Hudi's single-writer invariant) and the EXECUTORS write the shard
-    files — each through the pickled ObjectStoreClient publisher, one
-    atomic PUT per shard file (VERDICT r11 #3). The driver sees only
-    a ≤`shards`-row summary."""
+    slices (version 0: bases, else logs) through the same writers as
+    the driver — each through the pickled ObjectStoreClient publisher,
+    one atomic PUT per shard file. The driver sees only a
+    ≤`shards`-row summary of write stats."""
     import pandas as pd  # noqa: F401 (mapInPandas contract)
     from pyspark.sql import functions as F
 
@@ -2159,7 +2222,7 @@ def _rli_write_spark(
     def _write_partition(batches):
         import pandas as _pd
 
-        by_shard: dict[int, list] = {}
+        by_shard: dict[int, dict] = {}
         for pdf in batches:
             for key, part, fid, inst, shard in zip(
                 pdf["key"], pdf["part"], pdf["fid"], pdf["inst"],
@@ -2167,85 +2230,40 @@ def _rli_write_spark(
             ):
                 # tombstone rows carry null location columns; pandas
                 # may surface them as None or NaN — normalize to None
-                fid = fid if isinstance(fid, str) else None
-                by_shard.setdefault(int(shard), []).append(
-                    (key, part, fid, inst)
+                loc = (
+                    {"partition": part, "file_id": fid, "instant": inst}
+                    if isinstance(fid, str)
+                    else None
                 )
-        rows = []
-        for shard, ents in by_shard.items():
-            records = [
-                _rli_record(
-                    k,
-                    None
-                    if fid is None
-                    else {"partition": part, "file_id": fid,
-                          "instant": inst},
-                )
-                for k, part, fid, inst in sorted(
-                    ents, key=lambda e: e[0]
-                )
-            ]
-            if as_base:
-                # bootstrap/rebuild: executors write the shard's
-                # HFile BASE slice (tombstones cannot occur — a fresh
-                # index has no prior entries to delete)
-                stat = _rli_write_shard_base(
-                    pub, rli_dir, shard, attach, records
-                )
-            else:
-                stat = _rli_write_shard(
-                    pub, rli_dir, shard, attach, version, instant,
-                    schema, records,
-                )
-            rows.append((shard, stat["path"], stat["fileSizeInBytes"],
-                         len(records)))
-        yield _pd.DataFrame(
-            rows, columns=["shard", "path", "size", "n"]
-        )
+                by_shard.setdefault(int(shard), {})[key] = loc
+        rows = [
+            (
+                shard,
+                json.dumps(
+                    _rli_write_shard_slice(
+                        pub, rli_dir, shard, attach, version, instant,
+                        locs,
+                    )
+                ),
+            )
+            for shard, locs in by_shard.items()
+        ]
+        yield _pd.DataFrame(rows, columns=["shard", "stat"])
 
     summary = entries.mapInPandas(
-        _write_partition, "shard int, path string, size long, n long"
+        _write_partition, "shard int, stat string"
     ).collect()
-    stats = []
-    for row in sorted(summary, key=lambda r: r.shard):
-        stat = _write_stat(
-            "record_index",
-            _mdt_rli_group(row.shard),
-            row.path,
-            0,
-            int(row.size),
-            "numUpdateWrites",
-        )
-        stat["totalLogRecords"] = int(row.n)
-        stat["totalLogBlocks"] = 1
-        stats.append(stat)
-    return stats
-
-
-def _rli_write_shard_base(
-    pub: _Publisher, rli_dir: str, shard: int, instant: str,
-    records: list[dict],
-) -> dict:
-    """One shard's BASE slice (bootstrap / roll-up): an HFile in the
-    fixture's own container, like every other metadata partition."""
-    return _mdt_write_index_base(
-        pub, rli_dir, "record_index", _mdt_rli_group(shard), instant,
-        records,
-    )
+    return [json.loads(r.stat) for r in sorted(summary, key=lambda r: r.shard)]
 
 
 def _rli_compact_shard(
-    pub: _Publisher, rli_dir: str, group: str, shard: int, instant: str
-) -> tuple[int, str, int, int]:
-    """Fold ONE shard's base+chain and write its compacted BASE
-    slice — the per-shard unit both the driver loop and the
-    distributed compaction run. Returns (shard, file rel name, n)."""
-    locs = _rli_fold_shard(rli_dir, group, pub)
-    stat = _rli_write_shard_base(
-        pub, rli_dir, shard, instant,
-        [_rli_record(k, locs[k]) for k in sorted(locs)],
-    )
-    return shard, stat["path"], stat["fileSizeInBytes"], len(locs)
+    pub: _Publisher, rli_dir: str, shard: int, instant: str
+) -> dict:
+    """Fold ONE shard's base+chain and write its compacted base at
+    `instant` — the unit one task of `_rli_compact_spark` runs.
+    Returns the MDT write stat."""
+    locs = _rli_fold_shard(rli_dir, _mdt_rli_group(shard), pub)
+    return _rli_write_shard_slice(pub, rli_dir, shard, instant, 0, instant, locs)
 
 
 def _rli_compact_spark(
@@ -2257,32 +2275,17 @@ def _rli_compact_spark(
 ) -> list[dict]:
     """DISTRIBUTED chain compaction: one task per shard folds that
     shard's base+chain and writes the compacted base slice — memory
-    per task is one shard, the driver sees only a ≤`n_shards`-row
-    summary. This is what keeps the chain bounded when EVERY sync's
+    per task is one shard, the driver sees only the `n_shards` write
+    stats. This is what keeps the chain bounded when EVERY sync's
     delta takes the distributed write path (a driver fold would be
     the bottleneck the shards exist to avoid)."""
     sc = table.spark.sparkContext
-    results = (
+    stats = (
         sc.parallelize(range(n_shards), n_shards)
-        .map(
-            lambda s: _rli_compact_shard(
-                pub, rli_dir, _mdt_rli_group(s), s, instant
-            )
-        )
+        .map(lambda s: _rli_compact_shard(pub, rli_dir, s, instant))
         .collect()
     )
-    stats = []
-    for shard, rel, size, n in sorted(results):
-        stat = _write_stat(
-            "record_index",
-            _mdt_rli_group(shard),
-            rel,
-            n,
-            size,
-            "numUpdateWrites",
-        )
-        stats.append(stat)
-    return stats
+    return sorted(stats, key=lambda st: st["fileId"])
 
 
 def _sync_rli_partition(
@@ -2292,8 +2295,8 @@ def _sync_rli_partition(
     known: dict,
     mdt_state: dict,
     pub: _Publisher,
-    shards: int | None = None,
-) -> list[dict] | None:
+    shards: int,
+) -> list[dict]:
     """Refresh `.hoodie/metadata/record_index`: per sync a delta of
     type-5 records for keys whose base-file location changed —
     upserts from the ADDED files (immutability means a file's key set
@@ -2302,19 +2305,8 @@ def _sync_rli_partition(
     files that no add re-homed (the dup-key invariant guarantees a
     key lives in exactly one live base file, so removed−added IS the
     deleted-key set; the removed file's keys come from its RETAINED
-    personality copy). Chains compact every `_MDT_COMPACT_EVERY`
-    versions by per-shard FOLD of the existing chain — never a data
-    rescan. Returns the MDT write stats (None when unchanged)."""
-    rli_dir = os.path.join(hoodie, "metadata", "record_index")
-    first = not pub.list_rel(rli_dir)  # seam LIST, not a local isdir
-    os.makedirs(rli_dir, exist_ok=True)
-    if first:
-        pub.put_text(
-            os.path.join(rli_dir, ".hoodie_partition_metadata"),
-            "#partition metadata\n"
-            f"commitTime={_MDT_BOOTSTRAP_INSTANT}\n"
-            "partitionDepth=1\n",
-        )
+    personality copy). A compaction folds each shard's chain — never
+    a data rescan. Returns the MDT write stats."""
     cur = {
         p: {
             "partition": ent["partition"],
@@ -2323,7 +2315,6 @@ def _sync_rli_partition(
         }
         for p, ent in known.items()
     }
-    prev = mdt_state.get("rli_paths")
     n_shards = mdt_state.get("rli_shards")
     if n_shards is None:
         # first enablement: auto-size from the table's current row
@@ -2337,159 +2328,99 @@ def _sync_rli_partition(
         )
         n_shards = min(
             _RLI_MAX_SHARDS,
-            max(
-                int(shards or _MDT_RLI_DEFAULT_SHARDS),
-                -(-total_rows // _RLI_ROWS_PER_SHARD),  # ceil div
-            ),
+            max(int(shards), -(-total_rows // _RLI_ROWS_PER_SHARD)),
         )
     n_shards = int(n_shards)
-    fresh = prev is None
-    add_paths = sorted(cur) if fresh else sorted(set(cur) - set(prev))
-    removed = (
-        {}
-        if fresh
-        else {p: prev[p] for p in sorted(set(prev) - set(cur))}
-    )
-    # a removed file's old keys come from its retained personality
-    # copy; if clean already aged it out (an index enabled long after
-    # the fact), rebuild the chain from the current files — correct,
-    # costlier, and never hit on the normal sync-every-commit cadence
-    for ent in removed.values():
-        if not os.path.exists(
-            os.path.join(table.base_path, _rli_loc_rel(ent))
-        ):
-            fresh, add_paths, removed = True, sorted(cur), {}
-            break
-    if not fresh and not add_paths and not removed:
-        return None
-    rollup = (
-        not fresh
-        and mdt_state.get("rli_version", 0) >= _MDT_COMPACT_EVERY
-    )
-    add_locs = {
-        os.path.join(table.base_path, p): cur[p] for p in add_paths
-    }
-    removed_abs = [
-        os.path.join(table.base_path, _rli_loc_rel(ent))
-        for ent in removed.values()
-    ]
-    use_spark = (
-        len(add_locs) + len(removed_abs) > _RLI_DRIVER_MAX_FILES
-    )
-    schema = _mdt_rli_schema()
-    spark_compact = False
-    if rollup and use_spark:
-        # big delta at the compaction trigger: write the delta first
-        # (distributed), then compact the whole chain SHARD-PARALLEL —
-        # a sustained-large-commit table must not defer forever (the
-        # chain would grow unboundedly) and must not fold on the
-        # driver (the bottleneck the shards exist to avoid)
-        rollup = False
-        spark_compact = True
-    if fresh or rollup:
-        # base-slice paths (bootstrap / rebuild / roll-up): the shard
-        # files are HFile BASES at this attachment instant; later
-        # deltas attach to it as version 1, 2, ...
-        attach = _MDT_BOOTSTRAP_INSTANT if first else instant
-        version = 0
-    else:
-        attach = mdt_state.get("rli_instant", _MDT_BOOTSTRAP_INSTANT)
-        version = mdt_state.get("rli_version", 0) + 1
-    stats: list[dict]
-    add_keys = rem_keys = None
-    if not use_spark:
-        add_keys = _rli_keys_driver(sorted(add_locs))
-        rem_keys = (
-            _rli_keys_driver(sorted(removed_abs))
-            if removed_abs
-            else {}
-        )
+
+    def delta(prev):
+        removed = [
+            os.path.join(table.base_path, _rli_loc_rel(prev[p]))
+            for p in sorted(set(prev) - set(cur))
+        ]
+        # a removed file's old keys come from its retained personality
+        # copy; if clean already aged it out (an index enabled long
+        # after the fact), rebuild from the current files — correct,
+        # costlier, and never hit on the sync-every-commit cadence
+        if not all(os.path.exists(p) for p in removed):
+            return None
+        adds = {
+            os.path.join(table.base_path, p): cur[p]
+            for p in sorted(set(cur) - set(prev))
+        }
+        return (adds, removed) if adds or removed else ()
+
+    def write(rli_dir, kind, attach, version, change):
+        mdt_state["rli_shards"] = n_shards
+        if kind == "bootstrap":
+            change = ({os.path.join(table.base_path, p): cur[p] for p in cur}, [])
+        add_locs, removed_abs = change
+        add_keys = rem_keys = None
+        if len(add_locs) + len(removed_abs) <= _RLI_DRIVER_MAX_FILES:
+            add_keys = _rli_keys_driver(sorted(add_locs))
+            rem_keys = _rli_keys_driver(sorted(removed_abs))
         if add_keys is None or rem_keys is None:
-            use_spark = True
-    if use_spark:
-        stats = _rli_write_spark(
-            table, rli_dir, add_locs, removed_abs, n_shards,
-            attach, version, instant, schema, pub, as_base=fresh,
-        )
-        written = {s["fileId"] for s in stats}
-        if fresh:
-            # bootstrap writes EVERY shard (possibly empty) so readers
-            # can count file groups from the directory alone
-            for shard in range(n_shards):
-                if _mdt_rli_group(shard) not in written:
-                    stats.append(
-                        _rli_write_shard_base(
-                            pub, rli_dir, shard, attach, []
-                        )
+            if kind == "bootstrap":
+                stats = _rli_write_spark(
+                    table, rli_dir, add_locs, [], n_shards, attach, 0,
+                    instant, pub,
+                )
+                # every shard gets a base (possibly empty) so readers
+                # count file groups from the directory alone
+                written = {s["fileId"] for s in stats}
+                return stats + [
+                    _rli_write_shard_slice(
+                        pub, rli_dir, s, attach, 0, instant, {}
                     )
-        if spark_compact:
-            stats += _rli_compact_spark(
-                table, rli_dir, n_shards, instant, pub
-            )
-            attach, version = instant, 0
-    else:
-        upsert: dict[str, dict] = {}
-        for p, loc in sorted(add_locs.items()):
-            for k in add_keys[p]:
-                upsert[k] = loc
-        tombs: set[str] = set()
-        for ks in rem_keys.values():
-            tombs.update(ks)
-        tombs -= set(upsert)
-        per_shard: dict[int, list[dict]] = {}
-        if rollup:
-            # chain-fold compaction, one shard at a time: fold the old
-            # chain, apply this sync's delta, emit the full shard —
-            # memory bounded by a shard, zero data files opened beyond
-            # the delta's own
-            for shard in range(n_shards):
-                locs = _rli_fold_shard(rli_dir, _mdt_rli_group(shard), pub)
-                locs.update(
-                    {
-                        k: v
-                        for k, v in upsert.items()
-                        if _rli_shard_py(k, n_shards) == shard
-                    }
-                )
-                for k in tombs:
-                    if _rli_shard_py(k, n_shards) == shard:
-                        locs.pop(k, None)
-                per_shard[shard] = [
-                    _rli_record(k, locs[k]) for k in sorted(locs)
+                    for s in range(n_shards)
+                    if _mdt_rli_group(s) not in written
                 ]
-        else:
-            for k in sorted(upsert):
-                per_shard.setdefault(
-                    _rli_shard_py(k, n_shards), []
-                ).append(_rli_record(k, upsert[k]))
-            for k in sorted(tombs):
-                per_shard.setdefault(
-                    _rli_shard_py(k, n_shards), []
-                ).append(_rli_record(k, None))
-            if fresh:
-                for shard in range(n_shards):
-                    per_shard.setdefault(shard, [])
-        if fresh or rollup:
-            # base-slice writes: every shard gets its HFile base
-            if rollup:
-                for shard in range(n_shards):
-                    per_shard.setdefault(shard, [])
-            stats = [
-                _rli_write_shard_base(pub, rli_dir, shard, attach, recs)
-                for shard, recs in sorted(per_shard.items())
-            ]
-        else:
-            stats = [
-                _rli_write_shard(
-                    pub, rli_dir, shard, attach, version, instant,
-                    schema, recs,
+            if kind == "compaction":
+                # the delta first, as the old chain's next log; then
+                # every shard folds its chain in its own task
+                attach = mdt_state.get("rli_instant", _MDT_BOOTSTRAP_INSTANT)
+                version = mdt_state.get("rli_version", 0) + 1
+            stats = _rli_write_spark(
+                table, rli_dir, add_locs, removed_abs, n_shards, attach,
+                version, instant, pub,
+            )
+            if kind == "compaction":
+                stats += _rli_compact_spark(
+                    table, rli_dir, n_shards, instant, pub
                 )
-                for shard, recs in sorted(per_shard.items())
-            ]
-    mdt_state["rli_paths"] = cur
-    mdt_state["rli_instant"] = attach
-    mdt_state["rli_version"] = version
-    mdt_state["rli_shards"] = n_shards
+            return stats
+        upsert = {
+            k: loc for p, loc in sorted(add_locs.items()) for k in add_keys[p]
+        }
+        tombs = {k for ks in rem_keys.values() for k in ks} - set(upsert)
+        # a base covers every shard: the bootstrap from the adds, a
+        # compaction from each shard's folded chain (memory bounded by
+        # a shard); a log only the shards the delta touches
+        per_shard: dict[int, dict] = {}
+        if kind != "log":
+            for s in range(n_shards):
+                per_shard[s] = (
+                    _rli_fold_shard(rli_dir, _mdt_rli_group(s), pub)
+                    if kind == "compaction"
+                    else {}
+                )
+        for k, loc in upsert.items():
+            per_shard.setdefault(_rli_shard_py(k, n_shards), {})[k] = loc
+        for k in tombs:
+            locs = per_shard.setdefault(_rli_shard_py(k, n_shards), {})
+            if kind == "log":
+                locs[k] = None
+            else:
+                locs.pop(k, None)
+        return [
+            _rli_write_shard_slice(
+                pub, rli_dir, s, attach, version, instant, locs
+            )
+            for s, locs in sorted(per_shard.items())
+        ]
+
+    _kind, stats = _mdt_sync_partition(
+        pub, hoodie, mdt_state, "record_index", instant, cur, delta, write
+    )
     return stats
 
 
@@ -2520,10 +2451,9 @@ def hudi_metadata_record_locations(
         )
     groups = set()
     for n in os.listdir(rli_dir):
-        if n.startswith(".record-index-") and ".log." in n:
-            groups.add(n[1:].split("_")[0])
-        elif n.startswith("record-index-") and n.endswith(".hfile"):
-            groups.add(n.split("_")[0])
+        s = _mdt_slice(n)
+        if s is not None:
+            groups.add(s[0])
     if not groups:
         raise FileNotFoundError(f"no record_index chains under {rli_dir}")
     n_shards = len(groups)
@@ -2532,49 +2462,24 @@ def hudi_metadata_record_locations(
         want.setdefault(
             _mdt_rli_group(_rli_shard_py(k, n_shards)), set()
         ).add(k)
-    out: dict[str, tuple[str, str]] = {}
-    if spark is not None and len(want) > _RLI_PROBE_SPARK_SHARDS:
+    tasks = sorted((group, sorted(keyset)) for group, keyset in want.items())
+
+    def _probe(task):
+        group, ks = task
+        locs = _rli_fold_shard(rli_dir, group)
+        return [(k, locs[k]) for k in ks if k in locs]
+
+    if spark is not None and len(tasks) > _RLI_PROBE_SPARK_SHARDS:
         # wide probe: fold touched shards in executors, one task per
         # shard; only the probed keys' locations come back
-        tasks = sorted(
-            (group, sorted(keyset)) for group, keyset in want.items()
-        )
-
-        def _probe(task):
-            group, ks = task
-            locs = _rli_fold_shard(rli_dir, group)
-            return [(k, locs[k]) for k in ks if k in locs]
-
-        folded = (
+        hits = (
             spark.sparkContext.parallelize(tasks, len(tasks))
             .flatMap(_probe)
             .collect()
         )
-        hits = dict(folded)
-        for group, keyset in want.items():
-            for k in keyset:
-                loc = hits.get(k)
-                if loc is not None:
-                    name = (
-                        f"{loc['file_id']}_{_WRITE_TOKEN}_"
-                        f"{loc['instant']}.parquet"
-                    )
-                    out[k] = (
-                        loc["partition"] or _MDT_ROOT_PARTITION, name
-                    )
-        return out
-    for group, keyset in sorted(want.items()):
-        locs = _rli_fold_shard(rli_dir, group)
-        for k in keyset:
-            loc = locs.get(k)
-            if loc is None:
-                continue
-            name = (
-                f"{loc['file_id']}_{_WRITE_TOKEN}_"
-                f"{loc['instant']}.parquet"
-            )
-            out[k] = (loc["partition"] or _MDT_ROOT_PARTITION, name)
-    return out
+    else:
+        hits = [hit for task in tasks for hit in _probe(task)]
+    return {k: _rli_loc_entry(loc) for k, loc in hits}
 
 
 def _colstats_current(table: LakehouseTable, known: dict) -> dict:
@@ -2645,165 +2550,55 @@ def _sync_colstats_partition(
     known: dict,
     mdt_state: dict,
     pub: _Publisher,
-) -> dict | None:
-    """Refresh `.hoodie/metadata/column_stats` (r11): Hudi's
-    column-stats metadata index as HoodieLogFormat delta chains —
-    per sync, type-3 records for files whose stats appeared/changed
-    and isDeleted tombstones for retired files; every
-    `_MDT_COMPACT_EVERY` deltas the chain rolls up into a fresh
-    full-stats chain under a new attachment instant. External readers
-    (and `read_hudi_snapshot(stats_filter=...)`) skip files from
-    these metadata-scale stats without opening a single footer — at
-    100 TB that is Hudi's data-skipping index, not a footer-read
-    storm. Returns the write stat for the MDT timeline (None when
-    stats are unchanged)."""
-    from onehouse_demos_spark.tables.hudi_log import (
-        avro_log_file_bytes,
-        encode_records,
-    )
-
-    cs_dir = os.path.join(hoodie, "metadata", "column_stats")
-    first = not pub.list_rel(cs_dir)  # seam LIST, not a local isdir
-    os.makedirs(cs_dir, exist_ok=True)
-    if first:
-        pub.put_text(
-            os.path.join(cs_dir, ".hoodie_partition_metadata"),
-            "#partition metadata\n"
-            f"commitTime={_MDT_BOOTSTRAP_INSTANT}\n"
-            "partitionDepth=1\n",
-        )
+) -> list[dict]:
+    """Refresh `.hoodie/metadata/column_stats`, Hudi's column-stats
+    metadata index: a delta carries type-3 records for files whose
+    stats appeared or changed and isDeleted tombstones for retired
+    files and dropped columns; the state keeps a digest and the
+    column list per file, never the stat values. External readers
+    (and `read_hudi_snapshot(stats_filter=...)`) skip files from these
+    metadata-scale stats without opening a footer — at 100 TB that is
+    Hudi's data-skipping index, not a footer-read storm. Returns the
+    MDT write stats."""
     cur = _colstats_current(table, known)
-    prev = mdt_state.get("colstats_files")
-    rollup = (
-        prev is not None
-        and mdt_state.get("colstats_version", 0) >= _MDT_COMPACT_EVERY
-    )
+    snapshot = {
+        fk: [_digest(by_col), sorted(by_col)] for fk, by_col in cur.items()
+    }
 
-    def _full_records():
+    def _records(fk, cols, stats):
         return [
-            _colstats_record(f"{col}{_MDT_CS_SEP}{fk}", stat)
-            for fk, by_col in sorted(cur.items())
-            for col, stat in sorted(by_col.items())
+            _colstats_record(f"{col}{_MDT_CS_SEP}{fk}", stats and stats[col])
+            for col in sorted(cols)
         ]
 
-    if prev is None or rollup:
-        # fresh BASE slice (r11 late: the fixture's own base+log
-        # shape — bootstrap and roll-up write an HFile base holding
-        # the full current stats; later deltas attach to its instant;
-        # the superseded chain ages out via clean)
-        attach = _MDT_BOOTSTRAP_INSTANT if first else instant
-        stat = _mdt_write_index_base(
-            pub, cs_dir, "column_stats", _MDT_COLSTATS_FILE_GROUP, attach,
-            _full_records(),
-        )
-        mdt_state["colstats_instant"] = attach
-        mdt_state["colstats_version"] = 0
-        mdt_state["colstats_files"] = {
-            fk: [_digest(by_col), sorted(by_col)]
-            for fk, by_col in cur.items()
-        }
-        mdt_state.pop("colstats_listing", None)
-        return stat
-    else:
-        attach = mdt_state.get(
-            "colstats_instant", _MDT_BOOTSTRAP_INSTANT
-        )
+    def delta(prev):
         records = []
         for fk, by_col in sorted(cur.items()):
             old = prev.get(fk)
-            if old is not None and old[0] == _digest(by_col):
+            if old is not None and old[0] == snapshot[fk][0]:
                 continue  # unchanged file: no records
-            for col, stat in sorted(by_col.items()):
-                records.append(
-                    _colstats_record(f"{col}{_MDT_CS_SEP}{fk}", stat)
-                )
-            if old is not None:
-                for col in old[1]:
-                    if col not in by_col:  # column dropped
-                        records.append(
-                            _colstats_record(
-                                f"{col}{_MDT_CS_SEP}{fk}", None
-                            )
-                        )
+            records += _records(fk, by_col, by_col)
+            if old is not None:  # dropped columns
+                records += _records(fk, set(old[1]) - set(by_col), None)
         for fk in sorted(set(prev) - set(cur)):
-            for col in prev[fk][1]:
-                records.append(
-                    _colstats_record(f"{col}{_MDT_CS_SEP}{fk}", None)
-                )
-        if not records:
-            return None
-        version = mdt_state.get("colstats_version", 0) + 1
-    log_name = (
-        f".{_MDT_COLSTATS_FILE_GROUP}_{attach}.log.{version}_{_WRITE_TOKEN}"
-    )
-    schema = _mdt_colstats_schema()
-    blob = avro_log_file_bytes(
-        instant, schema, encode_records(records, schema)
-    )
-    pub.put_bytes(os.path.join(cs_dir, log_name), blob)
-    stat = _write_stat(
-        "column_stats",
-        _MDT_COLSTATS_FILE_GROUP,
-        f"column_stats/{log_name}",
-        0,
-        len(blob),
-        "numUpdateWrites",
-    )
-    stat["totalLogRecords"] = len(records)
-    stat["totalLogBlocks"] = 1
-    mdt_state["colstats_instant"] = attach
-    mdt_state["colstats_version"] = version
-    # digests only — never the stat values (state stays O(files))
-    mdt_state["colstats_files"] = {
-        fk: [_digest(by_col), sorted(by_col)]
-        for fk, by_col in cur.items()
-    }
-    mdt_state.pop("colstats_listing", None)  # pre-digest format
-    return stat
+            records += _records(fk, prev[fk][1], None)
+        return records
 
+    def full_records():
+        return [
+            rec
+            for fk, by_col in sorted(cur.items())
+            for rec in _records(fk, by_col, by_col)
+        ]
 
-def _mdt_index_records(idx_dir: str, group: str, pub: _Publisher | None = None):
-    """Yield the records of a metadata-index file group in fold
-    order: the newest BASE slice's records first (r11 late — the
-    fixture's base+log shape), then the log chain attached to that
-    base's instant in version order. Legacy pure-chain layouts (no
-    base) fold the newest chain alone. With `pub` every byte rides
-    the store seam (VERDICT r13 #5: a non-materializing store can
-    run compaction folds); without it, direct file I/O for the
-    external-reader APIs."""
-    from onehouse_demos_spark.tables.hudi_log import (
-        parse_log_bytes,
-        parse_log_file,
+    _kind, stats = _mdt_sync_partition(
+        pub, hoodie, mdt_state, "column_stats", instant, snapshot, delta,
+        _mdt_group_write(
+            pub, "column_stats", _MDT_COLSTATS_FILE_GROUP,
+            _mdt_colstats_schema(), instant, full_records,
+        ),
     )
-
-    base = _mdt_index_base_records(idx_dir, group, pub)
-    prefix = f".{group}_"
-    chains: dict[str, list[tuple[int, str]]] = {}
-    names = pub.list_rel(idx_dir) if pub is not None else os.listdir(idx_dir)
-    for n in names:
-        if not n.startswith(prefix) or ".log." not in n:
-            continue
-        attach = n[len(prefix):].split(".log.")[0]
-        ver = int(n.split(".log.")[1].split("_")[0])
-        chains.setdefault(attach, []).append((ver, n))
-    if base is None:
-        if not chains:
-            raise FileNotFoundError(f"no {group} chain under {idx_dir}")
-        attach, records = max(chains), []
-    else:
-        attach, records = base
-        yield from records
-    for _ver, n in sorted(chains.get(attach, [])):
-        abs_n = os.path.join(idx_dir, n)
-        if pub is not None:
-            raw = pub.get_bytes(abs_n)
-            if raw is None:
-                raise FileNotFoundError(f"listed log vanished: {abs_n}")
-            blocks = parse_log_bytes(raw, name=abs_n)
-        else:
-            blocks = parse_log_file(abs_n)
-        for block in blocks:
-            yield from block.get("records") or []
+    return stats
 
 
 def hudi_metadata_column_stats(base_path: str) -> dict:
@@ -2848,239 +2643,105 @@ def _sync_metadata_table(
     hoodie: str,
     instant: str,
     known: dict,
-    state: dict | None = None,
-    column_stats: bool = False,
-    bloom_filters: bool = False,
-    record_index: bool = False,
-    record_index_shards: int = _MDT_RLI_DEFAULT_SHARDS,
-    pub: _Publisher | None = None,
+    state: dict,
+    column_stats: bool,
+    bloom_filters: bool,
+    record_index: bool,
+    record_index_shards: int,
+    pub: _Publisher,
 ) -> None:
-    """Refresh `.hoodie/metadata/files` — Hudi's own base+log shape
-    (r11, VERDICT r10 missing #2): the bootstrap sync writes ONE
-    full-listing base slice of the `files-0000-0` file group (a REAL
-    HBase HFile v3 since late-r11 — tables/hfile.py, the fixture's
-    own container), and
-    every later sync appends a real HoodieLogFormat AVRO-data-block
-    log file (`.files-0000-0_<baseInstant>.log.<v>_0-0-0`, the
-    fixture's exact naming) holding HoodieMetadataPayload DELTA
-    records. Every `_MDT_COMPACT_EVERY` deltas the chain compacts
-    into a fresh full-listing base (MDT-timeline `commit`), exactly
-    Hudi's metadata compaction cadence. Readers that honor
+    """Refresh `.hoodie/metadata` — Hudi's metadata table, with its
+    own timeline: the `files` partition always, and the metadata-index
+    partitions the personality declares. Every partition runs the
+    shared file-group lifecycle (`_mdt_sync_partition`): an HFile base
+    at bootstrap, then one HoodieLogFormat delta log per changed sync
+    (`.files-0000-0_<baseInstant>.log.<v>_0-0-0`, the fixture's exact
+    naming), compacted into a fresh base every `_MDT_COMPACT_EVERY`
+    logs — Hudi's metadata compaction cadence. The metadata table's
+    first sync publishes at its bootstrap instant; one MDT instant
+    covers every partition a sync writes, a `commit` when the `files`
+    chain compacts. Readers that honor
     `hoodie.table.metadata.partitions=files` plan every query from
     this metadata-scale chain instead of LISTing the table tree — at
     100 TB that is the difference between one small read and an S3
     LIST storm per query, and the delta chain keeps each sync's
     metadata write O(changed files), not O(all partitions)."""
-    from onehouse_demos_spark.tables.hudi_log import (
-        avro_log_file_bytes,
-        encode_records,
-    )
-
-    mdt = os.path.join(hoodie, "metadata")
-    mdt_hoodie = os.path.join(mdt, _HOODIE_DIR)
-    files_dir = os.path.join(mdt, "files")
-    if pub is None:
-        pub = _publisher(table)
+    mdt_hoodie = os.path.join(hoodie, "metadata", _HOODIE_DIR)
     first = not pub.list_rel(mdt_hoodie)  # seam LIST, not a local isdir
     os.makedirs(mdt_hoodie, exist_ok=True)
-    os.makedirs(files_dir, exist_ok=True)
     if first:
         pub.put_text(
             os.path.join(mdt_hoodie, "hoodie.properties"),
             _mdt_properties(table.config.name),
         )
-        pub.put_text(
-            os.path.join(files_dir, ".hoodie_partition_metadata"),
-            "#partition metadata\n"
-            f"commitTime={_MDT_BOOTSTRAP_INSTANT}\n"
-            "partitionDepth=1\n",
-        )
-    by_partition = _mdt_build_listing(table, known, state)
-    mdt_state = (state or {}).setdefault("mdt", {}) if state is not None else {}
-    prev = mdt_state.get("listing")
-    action = "deltacommit"
-    files_stat = None
-    tl_instant = instant
-    if first or prev is None:
-        # bootstrap (or legacy state missing the listing snapshot):
-        # full base slice at the bootstrap instant, fresh chain
-        mdt_instant = _MDT_BOOTSTRAP_INSTANT if first else instant
-        tl_instant = mdt_instant
-        slice_name, n, size = _mdt_write_base_slice(
-            pub, files_dir, mdt_instant, by_partition
-        )
-        files_stat = _write_stat(
-            "files",
-            _MDT_FILE_GROUP,
-            f"files/{slice_name}",
-            n,
-            size,
-            "numInserts" if first else "numUpdateWrites",
-        )
-        mdt_state["base_instant"] = mdt_instant
-        mdt_state["log_version"] = 0
-        mdt_state["listing"] = by_partition
-    else:
-        records = _mdt_delta_records(prev, by_partition)
-        if records and mdt_state.get("log_version", 0) >= _MDT_COMPACT_EVERY:
-            # chain compaction: fresh full-listing base, new
-            # attachment instant, MDT-timeline `commit`
-            slice_name, n, size = _mdt_write_base_slice(
-                pub, files_dir, instant, by_partition
-            )
-            files_stat = _write_stat(
-                "files",
-                _MDT_FILE_GROUP,
-                f"files/{slice_name}",
-                n,
-                size,
-                "numUpdateWrites",
-            )
-            action = "commit"
-            mdt_state["base_instant"] = instant
-            mdt_state["log_version"] = 0
-            mdt_state["listing"] = by_partition
-        elif records:
-            version = mdt_state.get("log_version", 0) + 1
-            base_instant = mdt_state.get(
-                "base_instant", _MDT_BOOTSTRAP_INSTANT
-            )
-            log_name = (
-                f".{_MDT_FILE_GROUP}_{base_instant}"
-                f".log.{version}_{_WRITE_TOKEN}"
-            )
-            schema = _mdt_record_schema()
-            blob = avro_log_file_bytes(
-                instant, schema, encode_records(records, schema)
-            )
-            pub.put_bytes(os.path.join(files_dir, log_name), blob)
-            files_stat = _write_stat(
-                "files",
-                _MDT_FILE_GROUP,
-                f"files/{log_name}",
-                0,
-                len(blob),
-                "numUpdateWrites",
-            )
-            files_stat["totalLogRecords"] = len(records)
-            files_stat["totalLogBlocks"] = 1
-            mdt_state["log_version"] = version
-            mdt_state["listing"] = by_partition
-    cs_stat = None
+        instant = _MDT_BOOTSTRAP_INSTANT
+    mdt_state = state.setdefault("mdt", {})
+    listing = _mdt_build_listing(table, known, state)
+    files_kind, files_stats = _mdt_sync_partition(
+        pub, hoodie, mdt_state, "files", instant, listing,
+        lambda prev: _mdt_delta_records(prev, listing),
+        _mdt_group_write(
+            pub, "files", _MDT_FILE_GROUP, _mdt_record_schema(), instant,
+            lambda: _mdt_listing_records(listing),
+        ),
+    )
+    parts = {"files": files_stats}
     if column_stats:
-        cs_stat = _sync_colstats_partition(
-            table, hoodie, tl_instant, known, mdt_state, pub
+        parts["column_stats"] = _sync_colstats_partition(
+            table, hoodie, instant, known, mdt_state, pub
         )
-    bf_stat = None
     if bloom_filters:
-        bf_stat = _sync_bloom_partition(
-            table, hoodie, tl_instant, known, mdt_state, pub
+        parts["bloom_filters"] = _sync_bloom_partition(
+            table, hoodie, instant, known, mdt_state, pub
         )
-    rli_stats = None
     if record_index:
-        rli_stats = _sync_rli_partition(
-            table, hoodie, tl_instant, known, mdt_state, pub,
-            shards=record_index_shards,
+        parts["record_index"] = _sync_rli_partition(
+            table, hoodie, instant, known, mdt_state, pub,
+            record_index_shards,
         )
-    parts: dict[str, list] = {}
-    if files_stat is not None:
-        parts["files"] = [files_stat]
-    if cs_stat is not None:
-        parts["column_stats"] = [cs_stat]
-    if bf_stat is not None:
-        parts["bloom_filters"] = [bf_stat]
-    if rli_stats:
-        parts["record_index"] = rli_stats
+    parts = {p: stats for p, stats in parts.items() if stats}
     if parts:
-        # MDT instants must be unique: a colstats-only sync re-using
-        # the latest data instant could collide with that instant's
+        # MDT instants must be unique: an index-only sync re-using the
+        # latest data instant could collide with that instant's
         # already-written files deltacommit — bump past it.
         while pub.exists(
-            os.path.join(mdt_hoodie, f"{tl_instant}.deltacommit")
-        ) or pub.exists(os.path.join(mdt_hoodie, f"{tl_instant}.commit")):
-            tl_instant = _next_instant({"instants": [tl_instant]})
-        _mdt_write_timeline(pub, mdt_hoodie, tl_instant, parts, action)
-    if state is not None:
-        _save_state(pub, hoodie, state)
+            os.path.join(mdt_hoodie, f"{instant}.deltacommit")
+        ) or pub.exists(os.path.join(mdt_hoodie, f"{instant}.commit")):
+            instant = _next_instant({"instants": [instant]})
+        _mdt_write_timeline(
+            pub, mdt_hoodie, instant, parts,
+            "commit" if files_kind == "compaction" else "deltacommit",
+        )
+    _save_state(pub, hoodie, state)
 
 
 def hudi_metadata_listing(base_path: str) -> dict[str, dict[str, int]]:
     """Read the metadata table's `files` partition the way a
-    metadata-enabled reader plans (r11, base+log): newest
-    `files-0000-0` base slice, then its attached HoodieLogFormat
-    delta log files folded in version order with
+    metadata-enabled reader plans: the newest `files-0000-0` base
+    slice, then its attached delta logs, folded in version order with
     HoodieMetadataPayload merge semantics — newer filesystemMetadata
-    entries overwrite, `isDeleted` removes. Returns
-    {partition_path: {file_name: size}} ('.'-keyed root for
-    unpartitioned tables, Hudi's NON_PARTITIONED_NAME). One small
-    base-slice read plus a metadata-scale log tail — no table-tree
-    listing. The base slice is an HFile (r11, the fixture's own
-    container); pre-r11 PARQUET slices keep reading."""
-    from onehouse_demos_spark.tables.hudi_log import parse_log_file
-
+    entries overwrite, `isDeleted` removes a file (type 2) or a whole
+    partition (type 1). Returns {partition_path: {file_name: size}}
+    ('.'-keyed root for unpartitioned tables, Hudi's
+    NON_PARTITIONED_NAME). One small base read plus a metadata-scale
+    log tail — no table-tree listing."""
     files_dir = os.path.join(_hoodie_dir(base_path), "metadata", "files")
     if not os.path.isdir(files_dir):
         raise FileNotFoundError(f"no metadata/files partition under {base_path}")
-    names = os.listdir(files_dir)
-    slices = sorted(
-        n
-        for n in names
-        if n.startswith(_MDT_FILE_GROUP + "_")
-        and (n.endswith(".hfile") or n.endswith(".parquet"))
-    )
-    if not slices:
-        raise FileNotFoundError(f"no files-partition slice under {files_dir}")
-    newest = max(slices, key=_mdt_slice_instant)
-    base_instant = _mdt_slice_instant(newest)
     out: dict[str, dict[str, int]] = {}
-    if newest.endswith(".hfile"):
-        from onehouse_demos_spark.tables.hfile import (
-            read_hudi_metadata_base,
-        )
-
-        for rec in read_hudi_metadata_base(os.path.join(files_dir, newest)):
-            if rec.get("type") != _MDT_TYPE_FILE_LIST:
-                continue
-            out[rec["key"]] = {
-                name: meta["size"]
-                for name, meta in (rec.get("filesystemMetadata") or {}).items()
-                if not meta["isDeleted"]
-            }
-    else:
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(os.path.join(files_dir, newest))
-        for row in tbl.to_pylist():
-            if row["type"] != _MDT_TYPE_FILE_LIST:
-                continue
-            out[row["key"]] = {
-                name: meta["size"]
-                for name, meta in (row["filesystemMetadata"] or [])
-                if not meta["isDeleted"]
-            }
-    # fold the delta chain ATTACHED to this base (logs carrying an
-    # older base instant were folded into a newer base by compaction)
-    prefix = f".{_MDT_FILE_GROUP}_{base_instant}.log."
-    chain = []
-    for n in names:
-        if n.startswith(prefix):
-            ver = int(n[len(prefix) :].split("_")[0])
-            chain.append((ver, n))
-    for _ver, n in sorted(chain):
-        for block in parse_log_file(os.path.join(files_dir, n)):
-            for rec in block.get("records") or []:
-                fsm = rec.get("filesystemMetadata") or {}
-                if rec.get("type") == _MDT_TYPE_FILE_LIST:
-                    cur = out.setdefault(rec["key"], {})
-                    for name, info in fsm.items():
-                        if info["isDeleted"]:
-                            cur.pop(name, None)
-                        else:
-                            cur[name] = info["size"]
-                elif rec.get("type") == _MDT_TYPE_PARTITION_LIST:
-                    for pname, info in fsm.items():
-                        if info["isDeleted"]:
-                            out.pop(pname, None)
+    for rec in _mdt_index_records(files_dir, _MDT_FILE_GROUP):
+        fsm = rec.get("filesystemMetadata") or {}
+        if rec.get("type") == _MDT_TYPE_FILE_LIST:
+            cur = out.setdefault(rec["key"], {})
+            for name, info in fsm.items():
+                if info["isDeleted"]:
+                    cur.pop(name, None)
+                else:
+                    cur[name] = info["size"]
+        elif rec.get("type") == _MDT_TYPE_PARTITION_LIST:
+            for pname, info in fsm.items():
+                if info["isDeleted"]:
+                    out.pop(pname, None)
     return {p: files for p, files in out.items() if files}
 
 
@@ -3090,11 +2751,11 @@ def hudi_metadata_listing(base_path: str) -> dict[str, dict[str, int]]:
 def clean_hudi_personality(
     table: LakehouseTable, keep_last_instants: int = 10, store=None
 ) -> dict:
-    """Serialized like the sync (same `.hoodie`-scoped mutex, r11):
-    clean rewrites the shared sync state, so it must not interleave
-    with a concurrent syncer's read-modify-write. Deletes and the
-    archival moves flow through the same ObjectStoreClient contract
-    as the sync's publishes (VERDICT r11 #3)."""
+    """Serialized like the sync (same `.hoodie`-scoped mutex): clean
+    rewrites the shared sync state, so it must not interleave with a
+    concurrent syncer's read-modify-write. Deletes and the archival
+    moves flow through the same ObjectStoreClient contract as the
+    sync's publishes."""
     hoodie = _hoodie_dir(table)
     os.makedirs(hoodie, exist_ok=True)
     provider = table.timeline.lock_provider.scoped(hoodie)
@@ -3108,11 +2769,10 @@ def clean_hudi_personality(
 
 
 def _clean_hudi_personality_locked(
-    table: LakehouseTable, keep_last_instants: int = 10,
-    pub: _Publisher | None = None,
+    table: LakehouseTable, keep_last_instants: int, pub: _Publisher
 ) -> dict:
     """Age out retired Hudi-named slices and archive their timeline
-    instants (Hudi clean + timeline archival semantics, r10): slices
+    instants (Hudi clean + timeline archival semantics): slices
     retired by instants OLDER than the last `keep_last_instants` sync
     instants are unlinked, and completed timeline files older than
     that horizon move to `.hoodie/archived/` (the directory the
@@ -3124,8 +2784,6 @@ def _clean_hudi_personality_locked(
     time travel fails like the engine's own clean contract. Also
     drops superseded metadata-table slices past the horizon."""
     hoodie = _hoodie_dir(table)
-    if pub is None:
-        pub = _publisher(table)
     state = _load_state(hoodie, pub)
     instants = state["instants"]
     if len(instants) <= keep_last_instants:
@@ -3139,9 +2797,9 @@ def _clean_hudi_personality_locked(
             del state["retired"][rel]
     arch_dir = os.path.join(hoodie, "archived")
     archived: list[str] = []
-    # writer-internal timeline scan through the store LIST (ADVICE r12
-    # #1): clean must see the same keyspace it publishes/deletes into,
-    # or a non-materializing store would make archival a silent no-op
+    # writer-internal timeline scan through the store LIST: clean must
+    # see the same keyspace it publishes/deletes into, or a
+    # non-materializing store would make archival a silent no-op
     for name in pub.list_rel(hoodie):
         m = _COMPLETED_RE.match(name)
         stem = name.split(".", 1)[0]
@@ -3168,58 +2826,21 @@ def _clean_hudi_personality_locked(
             pub.delete(src)
             if m:
                 archived.append(stem)
-    # metadata-table slices: newest always survives; older-than-horizon
-    # superseded slices age out with the data slices they listed
-    files_dir = os.path.join(hoodie, "metadata", "files")
-    mdt_names = pub.list_rel(files_dir)
-    if mdt_names:
-        slices = sorted(
-            n
-            for n in mdt_names
-            if n.startswith(_MDT_FILE_GROUP + "_")
-            and (n.endswith(".hfile") or n.endswith(".parquet"))
-        )
-        if slices:
-            newest = max(slices, key=_mdt_slice_instant)
-            newest_inst = _mdt_slice_instant(newest)
-            for n in slices:
-                if n != newest and _mdt_slice_instant(n) < boundary:
-                    pub.delete(os.path.join(files_dir, n))
-            # delta log files attached to a SUPERSEDED base (their
-            # records were folded into a newer base by chain
-            # compaction) age out with it past the horizon
-            for n in mdt_names:
-                if not n.startswith(f".{_MDT_FILE_GROUP}_"):
-                    continue
-                if ".log." not in n:
-                    continue
-                attached = n[len(_MDT_FILE_GROUP) + 2 :].split(".log.")[0]
-                if attached != newest_inst and attached < boundary:
-                    pub.delete(os.path.join(files_dir, n))
-    # metadata-index partitions (r11): base slices + chains
-    # superseded by a roll-up (attachment instant older than the
-    # newest base's) age out the same way; sharded record_index
-    # groups age independently, newest attachment per GROUP survives
-    for part_name in ("column_stats", "bloom_filters", "record_index"):
-        idx_dir = os.path.join(hoodie, "metadata", part_name)
-        idx_names = pub.list_rel(idx_dir)
-        if not idx_names:
-            continue
+    # metadata-table slices: per file group the newest chain (base +
+    # attached logs) always survives; the slices of a superseded chain
+    # age out past the horizon with the data slices they listed
+    for partition in _MDT_STATE_KEYS:
+        part_dir = os.path.join(hoodie, "metadata", partition)
         by_group: dict[str, dict[str, str]] = {}
-        for n in idx_names:
-            if n.startswith(".") and ".log." in n:
-                group = n[1:].split("_")[0]
-                by_group.setdefault(group, {})[n] = (
-                    n[len(group) + 2:].split(".log.")[0]
-                )
-            elif n.endswith(".hfile"):
-                group = n.split("_")[0]
-                by_group.setdefault(group, {})[n] = _mdt_slice_instant(n)
-        for group, attach_of in by_group.items():
-            newest_attach = max(attach_of.values())
-            for n, attached in attach_of.items():
-                if attached != newest_attach and attached < boundary:
-                    pub.delete(os.path.join(idx_dir, n))
+        for n in pub.list_rel(part_dir):
+            s = _mdt_slice(n)
+            if s is not None:
+                by_group.setdefault(s[0], {})[n] = s[1]
+        for attach_of in by_group.values():
+            newest = max(attach_of.values())
+            for n, attach in attach_of.items():
+                if attach != newest and attach < boundary:
+                    pub.delete(os.path.join(part_dir, n))
     _save_state(pub, hoodie, state)
     return {"deleted_files": deleted, "archived_instants": archived}
 

@@ -1184,6 +1184,43 @@ def test_colstats_rollup_and_clean(spark, tmp_base):
     } == live_names
 
 
+def test_unchanged_sync_leaves_metadata_table_untouched(
+    spark, tmp_base, monkeypatch
+):
+    """A sync with no data change writes nothing to any metadata
+    partition, even when a chain is due for compaction: compaction
+    rides the next non-empty delta. files, column_stats,
+    bloom_filters and record_index all follow the one rule, so the
+    `.hoodie/metadata` tree (and its timeline) stays byte-identical."""
+    import onehouse_demos_spark.tables.hudi_export as hx
+
+    monkeypatch.setattr(hx, "_MDT_COMPACT_EVERY", 2)
+    t = _mk(spark, tmp_base, partitioned=False)
+    flags = dict(column_stats=True, bloom_filters=True, record_index=True)
+    sync_hudi_metadata(t, **flags)
+    for i in range(2):
+        t.upsert(
+            spark.createDataFrame([("k00", 2 + i, "MSFT", float(i))], DDL)
+        )
+        sync_hudi_metadata(t, **flags)
+    mdt = os.path.join(t.base_path, ".hoodie", "metadata")
+
+    def _tree():
+        out = {}
+        for root, _dirs, files in os.walk(mdt):
+            for f in files:
+                path = os.path.join(root, f)
+                with open(path, "rb") as fh:
+                    out[os.path.relpath(path, mdt)] = fh.read()
+        return out
+
+    before = _tree()
+    for part in ("files", "column_stats", "bloom_filters", "record_index"):
+        assert any(".log.2_" in n for n in os.listdir(os.path.join(mdt, part)))
+    sync_hudi_metadata(t, **flags)
+    assert _tree() == before
+
+
 def test_snapshot_via_metadata_table(spark, tmp_base):
     """via_metadata=True plans the read from the metadata table's
     files partition (one small parquet read, no timeline replay, no
