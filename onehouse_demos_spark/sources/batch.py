@@ -87,33 +87,3 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     Directory and multi-path scans stay on `spark.read.parquet`, where
     the table layer decides which file's schema wins."""
     return spark.read.schema(parquet_schema(spark, path)).parquet(path)
-
-
-def read_json_lines(
-    spark: SparkSession, path: str, schema: T.StructType | str | None = None
-) -> DataFrame:
-    """Line-delimited JSON, schema-on-read (the reference pipes
-    line-JSON batches into Kafka — `demo/data/batch_1.json`; this is
-    the same decode applied to files)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def from_rows(spark: SparkSession, rows, schema) -> DataFrame:
-    """In-memory rows source (reference S6: `createDataFrame(records,
-    schema)`, demo.md:36-55)."""
-    return spark.createDataFrame(rows, schema)
-
-
-def read_avro(spark: SparkSession, path: str) -> DataFrame:
-    """Avro file read (reference S3 DFS source payloads are Avro).
-    Requires the spark-avro module on the classpath; gated so the
-    engine works without it."""
-    try:
-        return spark.read.format("avro").load(path)
-    except Exception as exc:  # pragma: no cover - classpath-dependent
-        raise RuntimeError(
-            "avro format unavailable (spark-avro jar not on classpath)"
-        ) from exc

@@ -588,16 +588,6 @@ def parse_hfile_bytes(data: bytes, verify_checksums: bool = True) -> dict:
     }
 
 
-def hfile_schema_json(path: str) -> str | None:
-    """The Avro schema a Hudi metadata base slice embeds in its file
-    info ("schema" entry), if present."""
-    info = parse_hfile(path)["fileinfo"]
-    raw = info.get(b"schema")
-    if raw is None:
-        return None
-    return raw.decode()
-
-
 def read_hudi_metadata_base(path: str) -> list[dict]:
     """Decode a Hudi metadata-table base slice from the filesystem —
     see ``read_hudi_metadata_base_bytes``."""

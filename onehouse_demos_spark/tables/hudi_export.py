@@ -320,24 +320,23 @@ def _hoodie_dir(table_or_path) -> str:
 
 class _Publisher(Publisher):
     """Every byte the personality PUBLISHES flows through the
-    ObjectStoreClient S3 contract (VERDICT r11 #3; shared seam in
-    tables/object_publish.py since r13): atomic full-object puts,
-    conditional put (If-None-Match) at each COMPLETED-instant commit
-    point, hardlink-free semantics — a boto3-backed client drops in
-    unchanged on S3 for the WRITE path. Scope (ADVICE r12 #1): the
-    claim is exact for publishes, for the state-adjacent reads routed
-    through get_bytes (sync state, hoodie.properties, archival copy
-    sources) and for clean's timeline/metadata listings (list_keys,
-    r13). Writer-internal reads that FOLD the materialized layout
-    (HoodieLogFormat chain folds during compaction-on-sync, HFile
-    base reads) plus the external-reader replay still read the local
-    tree directly and require a store that materializes keys at the
-    local layout — i.e. the default TreeFSObjectStoreEmulator or any
-    FS-backed bucket mount. On a non-materializing store (raw S3),
-    publishing and clean work; compaction-fold maintenance must run
-    where the bucket is mounted, or those folds grow get_object
-    routing first. Picklable (store root + base string) so executors
-    publish record-index shard files through the same contract."""
+    ObjectStoreClient S3 contract (the shared seam in
+    tables/object_publish.py): atomic full-object puts, conditional
+    put (If-None-Match) at each COMPLETED-instant commit point,
+    hardlink-free semantics — a boto3-backed client drops in unchanged
+    on S3 for the WRITE path. The writer's own reads ride the same
+    seam: the state-adjacent reads through get_bytes (sync state,
+    hoodie.properties, archival copy sources), clean's
+    timeline/metadata listings (list_keys), and the metadata-table
+    folds of compaction-on-sync and the record-index shards
+    (`_mdt_chain` / `_mdt_slice_records` with `pub`, which list and
+    GET HoodieLogFormat chains and HFile bases through the store).
+    Only the external-reader APIs (`read_hudi_*`, `hudi_metadata_*`)
+    read the local tree directly, so they need a store that
+    materializes keys at the local layout — the default
+    TreeFSObjectStoreEmulator or any FS-backed bucket mount.
+    Picklable (store root + base string) so executors publish
+    record-index shard files through the same contract."""
 
     def publish_completed(self, abs_path: str, obj) -> None:
         """The commit point: S3 `PutObject + If-None-Match: *`. Under
@@ -507,7 +506,6 @@ def sync_hudi_metadata(
     compact_mor: bool = False,
     metadata_table: bool = True,
     mor_rt: bool = False,
-    rt_log_gate_rows: int = RT_LOG_GATE_ROWS,
     column_stats: bool = False,
     bloom_filters: bool = False,
     record_index: bool = False,
@@ -536,7 +534,6 @@ def sync_hudi_metadata(
             compact_mor,
             metadata_table,
             mor_rt,
-            rt_log_gate_rows,
             column_stats,
             bloom_filters,
             record_index,
@@ -552,7 +549,6 @@ def _sync_hudi_metadata_locked(
     compact_mor: bool,
     metadata_table: bool,
     mor_rt: bool,
-    rt_log_gate_rows: int,
     column_stats: bool,
     bloom_filters: bool,
     record_index: bool,
@@ -579,7 +575,7 @@ def _sync_hudi_metadata_locked(
     attached to their exact file groups, under deltacommit instants —
     external readers get the reference's headline `_rt` freshness
     (`README.md:343-344,756-776`) with no forced compaction. The log
-    tail is size-gated (`rt_log_gate_rows`); a bigger tail takes the
+    tail is size-gated (`RT_LOG_GATE_ROWS`); a bigger tail takes the
     compaction path, Hudi's own inline-compact pressure valve."""
     if table.config.table_type == "mor" and not mor_rt:
         _mor_log_guard(table, compact_mor)
@@ -637,9 +633,7 @@ def _sync_hudi_metadata_locked(
     if not adds and not removed and props_raw is not None:
         n = 0
         if mor_rt:
-            n = _sync_rt_logs(
-                table, hoodie, state, part_cols, rt_log_gate_rows, pub
-            )
+            n = _sync_rt_logs(table, hoodie, state, part_cols, pub)
         # DECLARED metadata-index partitions are self-maintaining
         # (the `hoodie.table.metadata.partitions` contract: a reader
         # that sees the declaration trusts the partition): once a
@@ -775,7 +769,7 @@ def _sync_hudi_metadata_locked(
     state["instants"].append(instant)
     _save_state(pub, hoodie, state)
     if mor_rt:
-        _sync_rt_logs(table, hoodie, state, part_cols, rt_log_gate_rows, pub)
+        _sync_rt_logs(table, hoodie, state, part_cols, pub)
     if metadata_table:
         # after the rt log publication so the files partition lists
         # base AND log slices, like Hudi's own metadata table
@@ -791,7 +785,6 @@ def _sync_rt_logs(
     hoodie: str,
     state: dict,
     part_cols: list[str],
-    gate_rows: int,
     pub: _Publisher,
 ) -> int:
     """Publish the engine's un-compacted log files as real
@@ -808,7 +801,7 @@ def _sync_rt_logs(
     included — the same columns the hardlinked base slices already
     expose) plus Hudi's public `_hoodie_is_deleted` soft-delete flag.
 
-    Driver-side encoding is size-gated (`gate_rows` across the
+    Driver-side encoding is size-gated (`RT_LOG_GATE_ROWS` across the
     un-synced tail): the tail is the fresh un-compacted delta by
     construction, and bigger tails take the compaction path —
     exactly Hudi's inline-compaction pressure valve."""
@@ -843,10 +836,10 @@ def _sync_rt_logs(
         _save_state(pub, hoodie, state)
         return 0
     total_rows = sum(live_logs[p].rows for p in new_paths)
-    if total_rows > gate_rows:
+    if total_rows > RT_LOG_GATE_ROWS:
         raise RuntimeError(
             f"rt log sync: {total_rows} un-synced log rows exceed the "
-            f"{gate_rows}-row gate; run compaction (or "
+            f"{RT_LOG_GATE_ROWS}-row gate; run compaction (or "
             "sync_hudi_metadata(compact_mor=True)) instead — the rt "
             "leg is for the fresh tail, not bulk history"
         )
@@ -3257,7 +3250,7 @@ def read_hudi_rt(
                 for block in parse_log_file(os.path.join(base_path, rel)):
                     records.extend(block.get("records") or [])
         # Driver-side decode is bounded by the sync-time
-        # `rt_log_gate_rows` contract (bigger tails take compaction).
+        # `RT_LOG_GATE_ROWS` contract (bigger tails take compaction).
         rows = [
             tuple(
                 _from_avro_value(rec.get(f.name), f.dataType)

@@ -17,7 +17,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
 
-from onehouse_demos_spark.tables.table import COMMIT_COL, KEY_COL, LakehouseTable
+from onehouse_demos_spark.tables.table import (
+    COMMIT_COL,
+    DELETED_COL,
+    HIVE_DEFAULT_PARTITION,
+    KEY_COL,
+    LakehouseTable,
+)
 from onehouse_demos_spark.tables.timeline import FileMeta
 
 
@@ -48,11 +54,9 @@ def schedule_compaction(table: LakehouseTable) -> CompactionPlan:
     `partition_expr` tables where the key's partition can't be
     probed), its delete may target ANY partition, so every base file
     must participate in the merge."""
-    from onehouse_demos_spark.tables.table import HIVE_DEFAULT_PARTITION
-
     # Maintenance rewrites route buckets through _write_files without
     # the _with_meta stamp — fold any concurrent committed split/resize
-    # first so the rewrite lays files out under the effective map (r10).
+    # first so the rewrite lays files out under the effective map.
     table._replay_bucket_layout()
     # OCC anchor FIRST, then list: a commit landing between the two is
     # then > planned_from and the publish-time conflict check sees it.
@@ -125,7 +129,7 @@ def load_compaction_plan(
     """Rehydrate a persisted request through the lock provider's read
     primitive — the same seam `publish` went through, so an
     object-store deployment loads the plan with GetObject, never a
-    local `open()` (VERDICT r5 ask #2)."""
+    local `open()`."""
     import json
 
     raw = table.timeline.lock_provider.read(
@@ -190,34 +194,27 @@ def run_compaction(
         plan = schedule_compaction(table)
     if plan.empty:
         return None
-    instant = table.timeline.begin("replacecommit")
     planned_from = plan.planned_from or table.timeline.latest_instant()
-    try:
+    with table._writing("replacecommit", planned_from) as w:
         participating = plan.base_files + plan.log_files
         df = table._read_files(participating)
         merged = table._merge_latest(df, filter_deleted=True)
         adds = table._write_files(
             merged,
-            instant,
+            w.instant,
             kind="base",
             approx_rows=sum(f.rows for f in participating),
         )
-        done = table._commit(
-            instant,
-            "replacecommit",
+        done = w.commit(
             "compaction",
             adds,
             [f.path for f in participating],
             merged.schema,
             extra={"compacted_partitions": plan.partitions},
-            planned_from=planned_from,
         )
         if request_to_clear is not None:
             table.timeline.lock_provider.unlock(request_to_clear)
         return done
-    except Exception:
-        table.timeline.abort(instant)
-        raise
 
 
 _Z_BITS = 16
@@ -344,7 +341,7 @@ def run_clustering(
     id (same OCC planned_from staleness abort as compaction) and
     clears the request marker on success."""
     table._replay_bucket_layout()  # route the rewrite under the
-    # effective (timeline-derived) bucket map, r10
+    # effective (timeline-derived) bucket map
     request_to_clear = None
     if instant is not None:
         req = load_clustering_request(table, instant)
@@ -365,8 +362,7 @@ def run_clustering(
             ]
     if not files:
         return None
-    instant = table.timeline.begin("replacecommit")
-    try:
+    with table._writing("replacecommit", planned_from) as w:
         df = table._read_files(files)
         total_rows = sum(f.rows for f in files)
         n_files = max(1, (total_rows + target_file_rows - 1) // target_file_rows)
@@ -406,44 +402,84 @@ def run_clustering(
                 df.repartitionByRange(n_files, *[F.col(c) for c in sort_columns])
                 .sortWithinPartitions(*sort_columns)
             )
-        adds = table._write_files(clustered, instant, kind="base")
-        done = table._commit(
-            instant,
-            "replacecommit",
+        adds = table._write_files(clustered, w.instant, kind="base")
+        done = w.commit(
             "clustering",
             adds,
             [f.path for f in files],
             clustered.schema,
             extra={"sort_columns": sort_columns, "strategy": strategy},
-            planned_from=planned_from,
         )
         if request_to_clear is not None:
             table.timeline.lock_provider.unlock(request_to_clear)
         return done
-    except Exception:
-        table.timeline.abort(instant)
-        raise
+
+
+def _rows_by_bucket(files: list[FileMeta]) -> dict[int, int]:
+    """Live rows per bucket id; files outside the layout are skipped."""
+    out: dict[int, int] = {}
+    for f in files:
+        if f.bucket is not None:
+            out[f.bucket] = out.get(f.bucket, 0) + f.rows
+    return out
+
+
+def _rebucket(
+    table: LakehouseTable,
+    attr: str,
+    value,
+    files: list[FileMeta],
+    planned_from: str | None,
+    operation: str,
+    extra: dict,
+):
+    """Publish a bucket-layout change as ONE replacecommit that
+    rewrites `files` routed under the new layout (`table.config.<attr>
+    = value`). MOR log files fold in through the version merge, so the
+    rewrite doubles as a compaction of those files. With no files the
+    commit adds nothing and carries no schema, but it still publishes:
+    the commit's `extra` IS the layout flip, because
+    `_replay_bucket_layout` derives the effective layout from the
+    committed timeline at load and before every routed write. A crash,
+    or a concurrent reader, between the commit and the
+    `table_config.json` rewrite therefore never pairs the old layout
+    with the new files; the sidecar is only a cache, healed on next
+    open. If the write fails, the in-memory layout rolls back."""
+    old = getattr(table.config, attr)
+    with table._writing("replacecommit", planned_from) as w:
+        setattr(table.config, attr, value)  # routes the rewrite
+        try:
+            adds, schema = [], None
+            if files:
+                df = table._read_files(files)
+                if any(f.kind == "log" for f in files):
+                    df = table._merge_latest(df)
+                df = df.filter(~F.col(DELETED_COL))
+                adds = table._write_files(df, w.instant, kind="base")
+                schema = df.schema
+            done = w.commit(
+                operation, adds, [f.path for f in files], schema, extra
+            )
+            table._rewrite_config()
+            return done
+        except Exception:
+            setattr(table.config, attr, old)
+            raise
 
 
 def split_bucket(table: LakehouseTable, bucket: int | None = None):
     """Split ONE bucket of a consistent-engine bucket table into its
-    two slot-prefix children (r9; Hudi CONSISTENT_HASHING bucket-index
+    two slot-prefix children (Hudi CONSISTENT_HASHING bucket-index
     resize analog): a single replacecommit rewrites ONLY that bucket's
-    files — O(one bucket), never O(table) — then the persisted prefix
-    map flips. This is what keeps the layout viable as a table grows
-    100×: hot buckets split as they grow, cold buckets never rewrite.
+    files — O(one bucket), never O(table) — and flips the prefix map
+    atomically with it (`_rebucket`). This is what keeps the layout
+    viable as a table grows 100×: hot buckets split as they grow, cold
+    buckets never rewrite.
 
     `bucket` is the encoded id ((len << 16) | prefix, what
     FileMeta.bucket carries); None splits the HOTTEST bucket (most
-    live rows). MOR log files of the bucket fold through the version
-    merge, so the split doubles as a per-bucket compaction. Probe-free
-    routing stays correct across the boundary — ATOMICALLY with the
-    replacecommit (r10): the commit's extra {"split", "children"} IS
-    the map flip, and `_replay_bucket_layout` derives the effective
-    map from the committed timeline at load and before every routed
-    write, so a crash (or a concurrent reader) between the commit and
-    the `table_config.json` cache rewrite can never pair the old map
-    with the new files. Time travel before the split replays the old
+    live rows). Splitting an empty bucket moves no data but still
+    publishes the flip. Time travel before the split replays the old
     files (reads never consult the map)."""
     if (
         not table.config.bucket_index_buckets
@@ -455,15 +491,11 @@ def split_bucket(table: LakehouseTable, bucket: int | None = None):
             "via resize_buckets"
         )
     table._replay_bucket_layout()  # fold any concurrent committed flip
+    planned_from = table.timeline.latest_instant()  # OCC anchor first
     prefixes = table._bucket_prefix_list()
     live = table.manifest.live_files()
     if bucket is None:
-        rows_by_bucket: dict[int, int] = {}
-        for f in live:
-            if f.bucket is not None:
-                rows_by_bucket[f.bucket] = (
-                    rows_by_bucket.get(f.bucket, 0) + f.rows
-                )
+        rows_by_bucket = _rows_by_bucket(live)
         if not rows_by_bucket:
             raise ValueError("no routed live files to split")
         bucket = max(rows_by_bucket, key=rows_by_bucket.__getitem__)
@@ -484,81 +516,26 @@ def split_bucket(table: LakehouseTable, bucket: int | None = None):
     new_map = sorted(
         [p for p in prefixes if p != bucket] + children
     )
-    files = [f for f in live if f.bucket == bucket]
-    old_map = list(table.config.bucket_prefixes)
-    planned_from = table.timeline.latest_instant()
-    if not files:
-        # Splitting an empty bucket moves no data, but the flip still
-        # publishes as a (zero-file) replacecommit: the timeline is
-        # the source of truth for the routing map (r10 —
-        # `_replay_bucket_layout` derives the effective map from
-        # committed split extras), so an uncommitted flip would be
-        # invisible to other processes and lost on reload.
-        instant = table.timeline.begin("replacecommit")
-        table.config.bucket_prefixes = new_map
-        try:
-            done = table._commit(
-                instant,
-                "replacecommit",
-                "split_bucket",
-                [],
-                [],
-                extra={"split": bucket, "children": children},
-                planned_from=planned_from,
-            )
-            table._rewrite_config()  # sidecar cache of the new map
-            return done
-        except Exception:
-            table.config.bucket_prefixes = old_map
-            table.timeline.abort(instant)
-            raise
-    instant = table.timeline.begin("replacecommit")
-    table.config.bucket_prefixes = new_map  # routes the rewrite
-    try:
-        df = table._read_files(files)
-        if any(f.kind == "log" for f in files):
-            df = table._merge_latest(df)
-        from onehouse_demos_spark.tables.table import DELETED_COL
-
-        df = df.filter(~F.col(DELETED_COL))
-        adds = table._write_files(df, instant, kind="base")
-        done = table._commit(
-            instant,
-            "replacecommit",
-            "split_bucket",
-            adds,
-            [f.path for f in files],
-            df.schema,
-            extra={"split": bucket, "children": children},
-            planned_from=planned_from,
-        )
-        # The replacecommit IS the flip (its extra carries the split;
-        # `_replay_bucket_layout` folds it at load and before every
-        # routed write) — the sidecar rewrite is only the fast-path
-        # cache, and a crash right here is healed on next open.
-        table._rewrite_config()
-        return done
-    except Exception:
-        table.config.bucket_prefixes = old_map
-        table.timeline.abort(instant)
-        raise
+    return _rebucket(
+        table,
+        "bucket_prefixes",
+        new_map,
+        [f for f in live if f.bucket == bucket],
+        planned_from,
+        "split_bucket",
+        {"split": bucket, "children": children},
+    )
 
 
 def resize_buckets(table: LakehouseTable, new_buckets: int):
-    """Re-bucket a bucket-index-layout table to `new_buckets` (r9,
-    VERDICT r8 ask #7 — the viability valve Hudi's consistent-hashing
-    bucket index provides for its simple cousin): ONE replacecommit
-    rewrites every live file hash-routed under the new count, and the
-    count flips ATOMICALLY with that replacecommit (r10): the commit's
-    extra {"buckets_before", "buckets_after"} is the authoritative
-    flip — `_replay_bucket_layout` folds the last resize extra over
-    the config at load and before every routed write, so candidate
-    resolution always pairs the count with the live files it routed
-    even across a crash between the commit and the config-cache
-    rewrite. Time travel before the resize instant replays the old
-    files (reads never consult the bucket count). MOR log files fold
-    in through the version merge, so the rewrite doubles as a
-    compaction.
+    """Re-bucket a bucket-index-layout table to `new_buckets` (the
+    viability valve Hudi's consistent-hashing bucket index provides
+    for its simple cousin): ONE replacecommit rewrites every live file
+    hash-routed under the new count and flips the count atomically
+    with it (`_rebucket`), so candidate resolution always pairs the
+    count with the live files it routed. An empty table still
+    publishes the flip. Time travel before the resize instant replays
+    the old files (reads never consult the bucket count).
 
     Cost is a full-table rewrite (the simple-bucket tradeoff; Hudi's
     consistent hashing splits hot buckets instead). At 100 TB, run it
@@ -580,61 +557,16 @@ def resize_buckets(table: LakehouseTable, new_buckets: int):
     old = table.config.bucket_index_buckets
     if new_buckets == old:
         return None
-    planned_from = table.timeline.latest_instant()
-    files = table.manifest.live_files()
-    if not files:
-        # Empty table: no rewrite, but the count flip still publishes
-        # as a zero-file replacecommit — the timeline is the source of
-        # truth for the routing map (r10, `_replay_bucket_layout`).
-        instant = table.timeline.begin("replacecommit")
-        table.config.bucket_index_buckets = new_buckets
-        try:
-            done = table._commit(
-                instant,
-                "replacecommit",
-                "resize_buckets",
-                [],
-                [],
-                extra={"buckets_before": old, "buckets_after": new_buckets},
-                planned_from=planned_from,
-            )
-            table._rewrite_config()  # sidecar cache of the new count
-            return done
-        except Exception:
-            table.config.bucket_index_buckets = old
-            table.timeline.abort(instant)
-            raise
-    instant = table.timeline.begin("replacecommit")
-    table.config.bucket_index_buckets = new_buckets  # routes the rewrite
-    try:
-        df = table._read_files(files)
-        if any(f.kind == "log" for f in files):
-            df = table._merge_latest(df)
-        from onehouse_demos_spark.tables.table import DELETED_COL
-
-        df = df.filter(~F.col(DELETED_COL))
-        adds = table._write_files(
-            df, instant, kind="base",
-        )
-        done = table._commit(
-            instant,
-            "replacecommit",
-            "resize_buckets",
-            adds,
-            [f.path for f in files],
-            df.schema,
-            extra={"buckets_before": old, "buckets_after": new_buckets},
-            planned_from=planned_from,
-        )
-        # The replacecommit IS the flip (r10): `_replay_bucket_layout`
-        # derives the effective count from the last resize extra, so a
-        # crash before this sidecar rewrite self-heals on next open.
-        table._rewrite_config()
-        return done
-    except Exception:
-        table.config.bucket_index_buckets = old
-        table.timeline.abort(instant)
-        raise
+    planned_from = table.timeline.latest_instant()  # OCC anchor first
+    return _rebucket(
+        table,
+        "bucket_index_buckets",
+        new_buckets,
+        table.manifest.live_files(),
+        planned_from,
+        "resize_buckets",
+        {"buckets_before": old, "buckets_after": new_buckets},
+    )
 
 
 def run_auto_split(
@@ -642,13 +574,12 @@ def run_auto_split(
     max_bucket_rows: int | None = None,
     max_splits: int = 64,
 ) -> list[tuple[int, str | None]]:
-    """Auto-split policy for the consistent bucket engine (r10,
-    VERDICT r9 ask #5 — the service form of `split_bucket`, like
-    `run_file_sizing` is for small files): split every bucket whose
-    LIVE rows exceed `max_bucket_rows` (default: the table's
-    target_file_rows, so each bucket stays ~one healthy file), hottest
-    first, until all buckets are under the target or `max_splits` is
-    hit. Pure manifest arithmetic decides (no data read); each split
+    """Auto-split policy for the consistent bucket engine (the
+    service form of `split_bucket`, like `run_file_sizing` is for
+    small files): split every bucket whose LIVE rows exceed
+    `max_bucket_rows` (default: the table's target_file_rows, so each
+    bucket stays ~one healthy file), hottest first, until all buckets
+    are under the target or `max_splits` is hit. Pure manifest arithmetic decides (no data read); each split
     is the usual O(one-bucket) replacecommit, so steady ingest pays a
     bounded, incremental rewrite instead of an operator watching
     bucket sizes. Returns [(bucket, instant), ...] for the splits
@@ -663,12 +594,7 @@ def run_auto_split(
         max_bucket_rows = table.config.target_file_rows
     done: list[tuple[int, str | None]] = []
     for _ in range(max_splits):
-        rows_by_bucket: dict[int, int] = {}
-        for f in table.manifest.live_files(include_logs=True):
-            if f.bucket is not None:
-                rows_by_bucket[f.bucket] = (
-                    rows_by_bucket.get(f.bucket, 0) + f.rows
-                )
+        rows_by_bucket = _rows_by_bucket(table.manifest.live_files())
         over = {
             b: r
             for b, r in rows_by_bucket.items()
@@ -688,10 +614,10 @@ def run_auto_resize(
     growth_factor: int = 2,
     max_buckets: int = 4096,
 ) -> list:
-    """Auto-resize policy for MODULO-engine bucket tables (r11,
-    VERDICT r10 next #6 — the service form of `resize_buckets`,
-    completing the pair with `run_auto_split` so BOTH bucket engines
-    survive growth without an operator watching): when pure manifest
+    """Auto-resize policy for MODULO-engine bucket tables (the
+    service form of `resize_buckets`, completing the pair with
+    `run_auto_split` so BOTH bucket engines survive growth without an
+    operator watching): when pure manifest
     arithmetic shows any bucket's LIVE rows above `max_bucket_rows`
     (default: the table's target_file_rows), re-bucket to the smallest
     `growth_factor`-power multiple of the current count that brings
@@ -714,12 +640,7 @@ def run_auto_resize(
     done: list = []
     while True:
         table._replay_bucket_layout()
-        rows_by_bucket: dict[int, int] = {}
-        for f in table.manifest.live_files(include_logs=True):
-            if f.bucket is not None:
-                rows_by_bucket[f.bucket] = (
-                    rows_by_bucket.get(f.bucket, 0) + f.rows
-                )
+        rows_by_bucket = _rows_by_bucket(table.manifest.live_files())
         if (
             not rows_by_bucket
             or max(rows_by_bucket.values()) <= max_bucket_rows
@@ -757,7 +678,7 @@ def run_file_sizing(
     rewritten, and the result is ONE replace-commit (invisible to
     incremental readers, OCC-checked like compaction/clustering).
     """
-    table._replay_bucket_layout()  # effective bucket map first (r10)
+    table._replay_bucket_layout()  # effective bucket map first
     planned_from = table.timeline.latest_instant()
     if target_file_rows is None:
         target_file_rows = table.config.target_file_rows
@@ -776,26 +697,19 @@ def run_file_sizing(
             doomed.extend(smalls)
     if not doomed:
         return None
-    instant = table.timeline.begin("replacecommit")
-    try:
+    with table._writing("replacecommit", planned_from) as w:
         df = table._read_files(doomed)
         total = sum(f.rows for f in doomed)
         adds = table._write_files(
-            df, instant, kind="base", approx_rows=total
+            df, w.instant, kind="base", approx_rows=total
         )
-        return table._commit(
-            instant,
-            "replacecommit",
+        return w.commit(
             "file_sizing",
             adds,
             [f.path for f in doomed],
             df.schema,
             extra={"packed_files": len(doomed)},
-            planned_from=planned_from,
         )
-    except Exception:
-        table.timeline.abort(instant)
-        raise
 
 
 class RestoreError(ValueError):
@@ -815,16 +729,9 @@ def create_savepoint(table: LakehouseTable, instant: str | None = None) -> str:
     known = {i.instant for i in table.timeline.instants()}
     if target not in known:
         raise RestoreError(f"unknown instant {target!r}")
-    sp = table.timeline.begin("savepoint")
-    try:
-        table._commit(
-            sp, "savepoint", "savepoint", [], [],
-            extra={"saved_instant": target},
-        )
-        return target
-    except Exception:
-        table.timeline.abort(sp)
-        raise
+    with table._writing("savepoint") as w:
+        w.commit("savepoint", [], [], extra={"saved_instant": target})
+    return target
 
 
 def list_savepoints(table: LakehouseTable) -> list[tuple[str, str]]:
@@ -908,7 +815,7 @@ def run_restore(table: LakehouseTable, instant: str) -> dict:
             if os.path.exists(abs_path):
                 os.remove(abs_path)
                 deleted.append(fm.path)
-    # Bucket layout is timeline-derived (r10): compute the create-time
+    # Bucket layout is timeline-derived: compute the create-time
     # count BEFORE dropping instants (the first resize's before-count
     # is the create count), then re-derive the effective map from the
     # surviving timeline so routing matches the restored files.
@@ -985,19 +892,13 @@ def run_clean(table: LakehouseTable, keep_last_commits: int = 10) -> list[str]:
             )
     if not doomed:
         return []
-    instant = table.timeline.begin("clean")
-    try:
+    with table._writing("clean") as w:
         for rel in doomed:
             abs_path = os.path.join(table.base_path, rel)
             if os.path.exists(abs_path):
                 os.remove(abs_path)
-        table._commit(
-            instant, "clean", "clean", [], [], extra={"deleted": sorted(doomed)}
-        )
-        return doomed
-    except Exception:
-        table.timeline.abort(instant)
-        raise
+        w.commit("clean", [], [], extra={"deleted": sorted(doomed)})
+    return doomed
 
 
 def run_orphan_clean(table: LakehouseTable, min_age_s: float = 3600.0) -> list[str]:

@@ -136,9 +136,9 @@ def _footer_col_stats(pf) -> dict:
     Parquet footers carry stats per physical LEAF column; with nested
     columns (array/map/struct) the leaf count exceeds the top-level
     field count, so indexing leaves by top-level name position would
-    MISATTRIBUTE stats to the wrong column (r11 fix — before this, a
-    nested column ordered before the record key could hand key-range
-    pruning another column's bounds). Leaves are resolved by
+    MISATTRIBUTE stats to the wrong column (a nested column ordered
+    before the record key would hand key-range pruning another
+    column's bounds). Leaves are resolved by
     `path_in_schema`: only dot-free paths (top-level primitives) are
     harvested, and per-leaf statistics access is exception-guarded —
     pyarrow raises ArrowNotImplementedError casting stats for some
@@ -466,6 +466,37 @@ class TableConfig:
     @staticmethod
     def from_json(d: dict) -> "TableConfig":
         return TableConfig(**d)
+
+
+@dataclass
+class _Write:
+    """One reserved instant inside `LakehouseTable._writing`."""
+
+    table: "LakehouseTable"
+    instant: str
+    action: str
+    planned_from: str | None
+
+    def commit(
+        self,
+        operation: str,
+        adds: list[FileMeta],
+        removes: list[str],
+        schema: T.StructType | None = None,
+        extra: dict | None = None,
+    ) -> Instant:
+        """Publish the instant: validators, index upkeep, and the OCC
+        check against the scope's anchor (`LakehouseTable._commit`)."""
+        return self.table._commit(
+            self.instant,
+            self.action,
+            operation,
+            adds,
+            removes,
+            schema,
+            extra,
+            self.planned_from,
+        )
 
 
 class LakehouseTable:
@@ -829,7 +860,7 @@ class LakehouseTable:
 
     def _replay_bucket_layout(self) -> None:
         """Derive the EFFECTIVE bucket routing map from the committed
-        timeline (r10; closes the split/resize crash window): every
+        timeline (closes the split/resize crash window): every
         `split_bucket` / `resize_buckets` replacecommit carries its
         layout change in `extra` ({"split", "children"} /
         {"buckets_before", "buckets_after"}), so the routing map the
@@ -886,9 +917,10 @@ class LakehouseTable:
                     ]
             prefixes = sorted(prefixes)
         else:
-            # No committed splits: keep the persisted map (pre-r10
-            # metadata-only splits wrote config without a commit; a
-            # crash artifact is impossible without a commit).
+            # No committed splits: keep the persisted map (tables
+            # whose splits predate split commits wrote the map to the
+            # config only; a crash artifact is impossible without a
+            # commit).
             prefixes = list(self.config.bucket_prefixes)
         if count != self.config.bucket_index_buckets or prefixes != list(
             self.config.bucket_prefixes
@@ -1063,19 +1095,19 @@ class LakehouseTable:
             for name in files:
                 if name.endswith(".parquet"):
                     paths.append(os.path.join(root, name))
-        if not paths:
-            # empty write (0-row df): record nothing
-            return []
         base = self.base_path
-        if len(paths) <= self.DRIVER_HARVEST_MAX_FILES:
-            return [_harvest_one(p, base, kind) for p in paths]
+        return self._map_files(paths, lambda p: _harvest_one(p, base, kind))
+
+    def _map_files(self, items: list, fn) -> list:
+        """`[fn(x) for x in items]`, one item per file: inline on the
+        driver up to `DRIVER_HARVEST_MAX_FILES` items, else one Spark
+        job over min(n, defaultParallelism) partitions. `fn` ships to
+        executors, so it must not capture the table."""
+        if len(items) <= self.DRIVER_HARVEST_MAX_FILES:
+            return [fn(x) for x in items]
         sc = self.spark.sparkContext
-        n = max(1, min(len(paths), sc.defaultParallelism))
-        return (
-            sc.parallelize(paths, n)
-            .map(lambda p: _harvest_one(p, base, kind))
-            .collect()
-        )
+        n = max(1, min(len(items), sc.defaultParallelism))
+        return sc.parallelize(items, n).map(fn).collect()
 
     def _pre_commit_snapshot(
         self,
@@ -1285,19 +1317,35 @@ class LakehouseTable:
                     pass
         return inst
 
+    @contextmanager
+    def _writing(
+        self, action: str, planned_from: str | None = None
+    ) -> Iterator["_Write"]:
+        """The lifecycle of every table write, one instant each:
+        reserve an `action` instant, run the body, and release the
+        reservation if the body raises (its written files stay
+        orphaned, never live). The body publishes with the yielded
+        handle's `commit`. `planned_from` is the OCC anchor: the latest
+        completed instant the writer planned against, read BEFORE it
+        lists the files it replaces, so a commit landing in between is
+        newer than the anchor and the publish-time conflict check sees
+        it. None skips the check."""
+        w = _Write(self, self.timeline.begin(action), action, planned_from)
+        try:
+            yield w
+        except Exception:
+            self.timeline.abort(w.instant)
+            raise
+
     # -- public write ops -----------------------------------------------------
 
     def insert(self, df: DataFrame) -> Instant:
         """Append rows; no key dedup against existing data (reference
         M1 `InsertNode`, test-suite/complex-dag-mor.yaml:26)."""
-        instant = self.timeline.begin("commit")
-        try:
-            prepared = self._with_meta(df, instant)
-            adds = self._write_files(prepared, instant)
-            return self._commit(instant, "commit", "insert", adds, [], prepared.schema)
-        except Exception:
-            self.timeline.abort(instant)
-            raise
+        with self._writing("commit") as w:
+            prepared = self._with_meta(df, w.instant)
+            adds = self._write_files(prepared, w.instant)
+            return w.commit("insert", adds, [], prepared.schema)
 
     def bootstrap(self, source_dir: str) -> Instant:
         """Metadata-only onboarding of an existing parquet dataset
@@ -1394,26 +1442,11 @@ class LakehouseTable:
             k = self.config.record_key[0]
             if isinstance(src_schema[k].dataType, T.StringType):
                 string_key_col = k
-        instant = self.timeline.begin("commit")
-        try:
-            jobs = list(zip(paths, partitions))
-            if len(paths) <= self.DRIVER_HARVEST_MAX_FILES:
-                adds = [
-                    _harvest_bootstrap(p, string_key_col, part)
-                    for p, part in jobs
-                ]
-            else:
-                sc = self.spark.sparkContext
-                n = max(1, min(len(paths), sc.defaultParallelism))
-                adds = (
-                    sc.parallelize(jobs, n)
-                    .map(
-                        lambda j: _harvest_bootstrap(
-                            j[0], string_key_col, j[1]
-                        )
-                    )
-                    .collect()
-                )
+        with self._writing("commit") as w:
+            adds = self._map_files(
+                list(zip(paths, partitions)),
+                lambda j: _harvest_bootstrap(j[0], string_key_col, j[1]),
+            )
             full_schema = T.StructType(
                 list(src_schema.fields)
                 + [
@@ -1422,18 +1455,13 @@ class LakehouseTable:
                     T.StructField(DELETED_COL, T.BooleanType(), True),
                 ]
             )
-            return self._commit(
-                instant,
-                "commit",
+            return w.commit(
                 "bootstrap",
                 adds,
                 [],
                 full_schema,
                 extra={"source_dir": source_base},
             )
-        except Exception:
-            self.timeline.abort(instant)
-            raise
 
     def _expr_resolves(
         self, expr: str, schema: T.StructType | None = None
@@ -1469,20 +1497,14 @@ class LakehouseTable:
         """Sorted large-batch load (reference M2 `BulkInsertNode`):
         range-partition + sort by record key so parquet min/max stats
         give disjoint key ranges per file → upsert pruning works."""
-        instant = self.timeline.begin("commit")
-        try:
-            prepared = self._with_meta(df, instant)
+        with self._writing("commit") as w:
+            prepared = self._with_meta(df, w.instant)
             n = num_files or max(1, self.spark.sparkContext.defaultParallelism)
             prepared = prepared.repartitionByRange(n, F.col(KEY_COL)).sortWithinPartitions(
                 KEY_COL
             )
-            adds = self._write_files(prepared, instant)
-            return self._commit(
-                instant, "commit", "bulk_insert", adds, [], prepared.schema
-            )
-        except Exception:
-            self.timeline.abort(instant)
-            raise
+            adds = self._write_files(prepared, w.instant)
+            return w.commit("bulk_insert", adds, [], prepared.schema)
 
     def _scoped_partition_expr(self, cols):
         """Partition-identity expression completing the per-key
@@ -1970,20 +1992,14 @@ class LakehouseTable:
                 fields.append(T.StructField(new, f.dataType, True, md))
             else:
                 fields.append(f)
-        instant = self.timeline.begin("commit")
-        try:
-            inst = self._commit(
-                instant,
-                "commit",
+        with self._writing("commit") as w:
+            inst = w.commit(
                 "alter_schema",
                 [],
                 [],
                 T.StructType(fields),
                 extra={"renamed_column": [old, new]},
             )
-        except Exception:
-            self.timeline.abort(instant)
-            raise
         if old in self.secondary_indexes:
             # The index directory is keyed by the PHYSICAL name (which
             # a rename never changes), so the persisted entries stay
@@ -2031,20 +2047,14 @@ class LakehouseTable:
             else f
             for f in schema.fields
         ]
-        instant = self.timeline.begin("commit")
-        try:
-            return self._commit(
-                instant,
-                "commit",
+        with self._writing("commit") as w:
+            return w.commit(
                 "alter_schema",
                 [],
                 [],
                 T.StructType(fields),
                 extra={"widened_column": [name, pair[0], pair[1]]},
             )
-        except Exception:
-            self.timeline.abort(instant)
-            raise
 
     def drop_column(self, name: str) -> Instant:
         """ALTER TABLE ... DROP COLUMN as a METADATA-ONLY commit: the
@@ -2072,20 +2082,14 @@ class LakehouseTable:
         ]
         if not remaining:
             raise SchemaEvolutionError("cannot drop the last data column")
-        instant = self.timeline.begin("commit")
-        try:
-            return self._commit(
-                instant,
-                "commit",
+        with self._writing("commit") as w:
+            return w.commit(
                 "alter_schema",
                 [],
                 [],
                 T.StructType([f for f in schema.fields if f.name != name]),
                 extra={"dropped_column": name},
             )
-        except Exception:
-            self.timeline.abort(instant)
-            raise
 
     def upsert(self, df: DataFrame) -> Instant:
         """Merge by record key; newest-by-precombine wins; COW rewrites
@@ -2093,76 +2097,71 @@ class LakehouseTable:
         `UpsertNode`; `README.md:213`)."""
         if self.config.table_type == "mor":
             return self._mor_write(df, "upsert")
-        instant = self.timeline.begin("commit")
-        planned_from = self.timeline.latest_instant()
-        # The incoming batch feeds several jobs (partition/key-range
-        # pruning collects, the probe join, the anti-join, the final
-        # union). Persist it once — it is batch-sized, not
-        # table-sized, so this holds at scale (write-path workload
-        # profiling caches the same way in production engines).
-        prepared = self._dedupe_incoming(self._with_meta(df, instant)).persist()
-        try:
-            candidates, batch_rows, _keys, exact = self._files_for_keys(
-                prepared
-            )
-            touched = [f.path for f in candidates]
-            merged = prepared
-            carry_rows = 0
-            if not exact and sum(f.rows for f in candidates) > 4 * max(
-                1, batch_rows
-            ):
-                # Probe-skip rule: a stats-pruned candidate set that is
-                # already batch-sized (≤4× write amplification) is
-                # rewritten outright, which beats paying a probe job to
-                # narrow it. The probe pays off only when stats pruning
-                # was too coarse.
-                touched = self._touched_files(candidates, prepared, batch_rows)
-            if touched:
-                by_path = {f.path: f for f in candidates}
-                carry_rows = sum(by_path[p].rows for p in touched)
-                carry = self._read_files([by_path[p] for p in touched])
-                if self.config.payload == "partial_update":
-                    # Column-wise merge: carried ∪ incoming folded by
-                    # last-non-null per column (the new instant
-                    # outranks every carried commit). One aggregate
-                    # over batch+carry — same shuffle count as the
-                    # overwrite path's anti-join.
-                    both = carry.unionByName(
-                        prepared, allowMissingColumns=True
+        with self._writing("commit", self.timeline.latest_instant()) as w:
+            # The incoming batch feeds several jobs (partition/key-range
+            # pruning collects, the probe join, the anti-join, the final
+            # union). Persist it once — it is batch-sized, not
+            # table-sized, so this holds at scale (write-path workload
+            # profiling caches the same way in production engines).
+            prepared = self._dedupe_incoming(
+                self._with_meta(df, w.instant)
+            ).persist()
+            try:
+                candidates, batch_rows, _keys, exact = self._files_for_keys(
+                    prepared
+                )
+                touched = [f.path for f in candidates]
+                merged = prepared
+                carry_rows = 0
+                if not exact and sum(f.rows for f in candidates) > 4 * max(
+                    1, batch_rows
+                ):
+                    # Probe-skip rule: a stats-pruned candidate set that
+                    # is already batch-sized (≤4× write amplification)
+                    # is rewritten outright, which beats paying a probe
+                    # job to narrow it. The probe pays off only when
+                    # stats pruning was too coarse.
+                    touched = self._touched_files(
+                        candidates, prepared, batch_rows
                     )
-                    order = [F.col(COMMIT_COL)]
-                    if self.config.precombine:
-                        order.append(F.col(self.config.precombine))
-                    merged = self._partial_fold(both, order)
-                else:
-                    # Incoming-wins merge without a window sort: keep
-                    # carried rows whose key is NOT incoming (anti
-                    # join), then append the (already per-key-deduped)
-                    # batch. Equivalent to _merge_latest because the
-                    # new commit instant always outranks carried rows,
-                    # but avoids a full sort of the rewritten files.
-                    carry = self._anti_by_key(carry, prepared, batch_rows)
-                    merged = carry.unionByName(
-                        prepared, allowMissingColumns=True
-                    )
-            merged = merged.filter(~F.col(DELETED_COL))
-            adds = self._write_files(
-                merged, instant, approx_rows=batch_rows + carry_rows
-            )
-            return self._commit(
-                instant,
-                "commit",
-                "upsert",
-                adds,
-                touched,
-                merged.schema,
-                planned_from=planned_from,
-            )
-        except Exception:
-            self.timeline.abort(instant)
-            raise
-        finally:
-            prepared.unpersist()
+                if touched:
+                    by_path = {f.path: f for f in candidates}
+                    carry_rows = sum(by_path[p].rows for p in touched)
+                    carry = self._read_files([by_path[p] for p in touched])
+                    if self.config.payload == "partial_update":
+                        # Column-wise merge: carried ∪ incoming folded
+                        # by last-non-null per column (the new instant
+                        # outranks every carried commit). One aggregate
+                        # over batch+carry — same shuffle count as the
+                        # overwrite path's anti-join.
+                        both = carry.unionByName(
+                            prepared, allowMissingColumns=True
+                        )
+                        order = [F.col(COMMIT_COL)]
+                        if self.config.precombine:
+                            order.append(F.col(self.config.precombine))
+                        merged = self._partial_fold(both, order)
+                    else:
+                        # Incoming-wins merge without a window sort:
+                        # keep carried rows whose key is NOT incoming
+                        # (anti join), then append the (already
+                        # per-key-deduped) batch. Equivalent to
+                        # _merge_latest because the new commit instant
+                        # always outranks carried rows, but avoids a
+                        # full sort of the rewritten files.
+                        carry = self._anti_by_key(
+                            carry, prepared, batch_rows
+                        )
+                        merged = carry.unionByName(
+                            prepared, allowMissingColumns=True
+                        )
+                merged = merged.filter(~F.col(DELETED_COL))
+                adds = self._write_files(
+                    merged, w.instant, approx_rows=batch_rows + carry_rows
+                )
+                return w.commit("upsert", adds, touched, merged.schema)
+            finally:
+                prepared.unpersist()
 
     #: Broadcast the batch key set only below this many keys (~16-byte
     #: hashes → low hundreds of MB). Above it, an explicit broadcast()
@@ -2218,44 +2217,37 @@ class LakehouseTable:
         needs the record-key columns (extra columns ignored)."""
         if self.config.table_type == "mor":
             return self._mor_delete(keys_df)
-        instant = self.timeline.begin("commit")
-        planned_from = self.timeline.latest_instant()
-        part_cols = [c for c in self.config.partition_by if c in keys_df.columns]
-        del_keys = (
-            keys_df.select(self._key_expr().alias(KEY_COL), *part_cols)
-            .distinct()
-            .persist()
-        )
-        try:
-            candidates, n_keys, _keys, exact = self._files_for_keys(del_keys)
-            touched = (
-                [f.path for f in candidates]
-                if exact
-                else self._touched_files(candidates, del_keys, n_keys)
+        with self._writing("commit", self.timeline.latest_instant()) as w:
+            part_cols = [
+                c for c in self.config.partition_by if c in keys_df.columns
+            ]
+            del_keys = (
+                keys_df.select(self._key_expr().alias(KEY_COL), *part_cols)
+                .distinct()
+                .persist()
             )
-            adds: list[FileMeta] = []
-            if touched:
-                by_path = {f.path: f for f in candidates}
-                carry = self._read_files([by_path[p] for p in touched])
-                remaining = self._anti_by_key(carry, del_keys, n_keys)
-                adds = self._write_files(
-                    remaining,
-                    instant,
-                    approx_rows=sum(by_path[p].rows for p in touched),
+            try:
+                candidates, n_keys, _keys, exact = self._files_for_keys(
+                    del_keys
                 )
-            return self._commit(
-                instant,
-                "commit",
-                "delete",
-                adds,
-                touched,
-                planned_from=planned_from,
-            )
-        except Exception:
-            self.timeline.abort(instant)
-            raise
-        finally:
-            del_keys.unpersist()
+                touched = (
+                    [f.path for f in candidates]
+                    if exact
+                    else self._touched_files(candidates, del_keys, n_keys)
+                )
+                adds: list[FileMeta] = []
+                if touched:
+                    by_path = {f.path: f for f in candidates}
+                    carry = self._read_files([by_path[p] for p in touched])
+                    remaining = self._anti_by_key(carry, del_keys, n_keys)
+                    adds = self._write_files(
+                        remaining,
+                        w.instant,
+                        approx_rows=sum(by_path[p].rows for p in touched),
+                    )
+                return w.commit("delete", adds, touched)
+            finally:
+                del_keys.unpersist()
 
     # -- MOR log path ---------------------------------------------------------
 
@@ -2263,29 +2255,22 @@ class LakehouseTable:
         """MOR upsert: append a log file set; merge deferred to read
         (`_rt`) or compaction (reference `README.md:724,730` — 'appended
         the batch to an unmerged delta (log) file')."""
-        instant = self.timeline.begin("deltacommit")
-        try:
-            prepared = self._dedupe_incoming(self._with_meta(df, instant))
+        with self._writing("deltacommit") as w:
+            prepared = self._dedupe_incoming(self._with_meta(df, w.instant))
             # Bootstrap fidelity (reference `README.md:724`): log files
             # attach to EXISTING file groups, so the first write into an
             # empty MOR table lays base parquet — `_ro` serves data
             # right after the first ingest, exactly as the walkthrough's
             # batch-1 queries show.
             kind = "log" if self.manifest.live_files() else "base"
-            adds = self._write_files(prepared, instant, kind=kind)
-            return self._commit(
-                instant, "deltacommit", operation, adds, [], prepared.schema
-            )
-        except Exception:
-            self.timeline.abort(instant)
-            raise
+            adds = self._write_files(prepared, w.instant, kind=kind)
+            return w.commit(operation, adds, [], prepared.schema)
 
     def _mor_delete(self, keys_df: DataFrame) -> Instant:
         if self.config.bucket_index_buckets:
             # tombstones route by bucket but skip _with_meta
             self._replay_bucket_layout()
-        instant = self.timeline.begin("deltacommit")
-        try:
+        with self._writing("deltacommit") as w:
             schema = self._latest_schema()
             # Tombstones MUST land in the key's actual partition:
             # partition-scoped compaction merges (base + logs) per
@@ -2314,7 +2299,7 @@ class LakehouseTable:
                     )
             tombstones = del_keys.select(
                 KEY_COL,
-                F.lit(instant).alias(COMMIT_COL),
+                F.lit(w.instant).alias(COMMIT_COL),
                 F.lit(True).alias(DELETED_COL),
                 *[c for c in del_keys.columns if c != KEY_COL],
             )
@@ -2324,24 +2309,21 @@ class LakehouseTable:
                         tombstones = tombstones.withColumn(
                             f.name, F.lit(None).cast(f.dataType)
                         )
-            adds = self._write_files(tombstones, instant, kind="log")
-            return self._commit(instant, "deltacommit", "delete", adds, [])
-        except Exception:
-            self.timeline.abort(instant)
-            raise
+            adds = self._write_files(tombstones, w.instant, kind="log")
+            return w.commit("delete", adds, [])
 
     # -- overwrite family -----------------------------------------------------
 
     def insert_overwrite(self, df: DataFrame) -> Instant:
         """Replace exactly the partitions present in `df` (reference M7
         `SparkInsertOverwriteNode`; dynamic partition overwrite)."""
-        instant = self.timeline.begin("replacecommit")
-        # Snapshot the plan point BEFORE listing live files so a commit
-        # landing between the listing and publish raises ConflictError
-        # instead of silently surviving the overwrite.
-        planned_from = self.timeline.latest_instant()
-        try:
-            prepared = self._with_meta(df, instant)
+        # The anchor is read before the live files are listed, so a
+        # commit landing between the listing and publish raises
+        # ConflictError instead of silently surviving the overwrite.
+        with self._writing(
+            "replacecommit", self.timeline.latest_instant()
+        ) as w:
+            prepared = self._with_meta(df, w.instant)
             pp = self._partition_path_expr()
             removes: list[str] = []
             if pp is not None:
@@ -2364,63 +2346,39 @@ class LakehouseTable:
                 ]
             else:
                 removes = [f.path for f in self.manifest.live_files()]
-            adds = self._write_files(prepared, instant)
-            return self._commit(
-                instant,
-                "replacecommit",
-                "insert_overwrite",
-                adds,
-                removes,
-                prepared.schema,
-                planned_from=planned_from,
+            adds = self._write_files(prepared, w.instant)
+            return w.commit(
+                "insert_overwrite", adds, removes, prepared.schema
             )
-        except Exception:
-            self.timeline.abort(instant)
-            raise
 
     def insert_overwrite_table(self, df: DataFrame) -> Instant:
         """Replace the whole table (reference M8)."""
-        instant = self.timeline.begin("replacecommit")
-        planned_from = self.timeline.latest_instant()
-        try:
-            prepared = self._with_meta(df, instant)
+        with self._writing(
+            "replacecommit", self.timeline.latest_instant()
+        ) as w:
+            prepared = self._with_meta(df, w.instant)
             removes = [f.path for f in self.manifest.live_files()]
-            adds = self._write_files(prepared, instant)
-            return self._commit(
-                instant,
-                "replacecommit",
-                "insert_overwrite_table",
-                adds,
-                removes,
-                prepared.schema,
-                planned_from=planned_from,
+            adds = self._write_files(prepared, w.instant)
+            return w.commit(
+                "insert_overwrite_table", adds, removes, prepared.schema
             )
-        except Exception:
-            self.timeline.abort(instant)
-            raise
 
     def delete_partition(self, partition_values: list[str]) -> Instant:
         """Drop whole partitions by path value (reference M9,
         `spark-delete-partition.yaml:28-31`)."""
-        instant = self.timeline.begin("replacecommit")
-        planned_from = self.timeline.latest_instant()
-        try:
+        with self._writing(
+            "replacecommit", self.timeline.latest_instant()
+        ) as w:
             parts = set(partition_values)
             removes = [
                 f.path for f in self.manifest.live_files() if f.partition in parts
             ]
-            return self._commit(
-                instant,
-                "replacecommit",
+            return w.commit(
                 "delete_partition",
                 [],
                 removes,
                 extra={"partitions": sorted(parts)},
-                planned_from=planned_from,
             )
-        except Exception:
-            self.timeline.abort(instant)
-            raise
 
     def evolve_schema(self, add_columns: list[tuple[str, str]]) -> Instant:
         """ALTER TABLE ... ADD COLUMNS as a METADATA-ONLY commit: the
@@ -2452,20 +2410,14 @@ class LakehouseTable:
             existing.add(col)
         new_schema = T.StructType(fields)
         self._check_schema_compat(new_schema)
-        instant = self.timeline.begin("commit")
-        try:
-            return self._commit(
-                instant,
-                "commit",
+        with self._writing("commit") as w:
+            return w.commit(
                 "alter_schema",
                 [],
                 [],
                 new_schema,
                 extra={"added_columns": [c for c, _ in add_columns]},
             )
-        except Exception:
-            self.timeline.abort(instant)
-            raise
 
     # ---------------------------------------------------------------- reads
 

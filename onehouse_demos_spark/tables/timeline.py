@@ -262,10 +262,6 @@ class Timeline:
             # another writer took this id — retry
         raise RuntimeError("could not reserve a commit instant (writer contention)")
 
-    #: Back-compat alias: the generic-loop mutex staleness bound now
-    #: lives on the provider (locks.py::LockProvider.MUTEX_STALE_S).
-    LOCK_STALE_S = 600.0
-
     PUBLISH_LOCK = "_publish.lock"
 
     def _acquire_publish_lock(self, timeout_s: float = 60.0) -> str:

@@ -1351,7 +1351,10 @@ def test_mor_rt_multi_group_partition_exact_assignment(spark, tmp_base):
         assert got[f"k{i:03d}"] == 9999.0
 
 
-def test_mor_rt_log_gate_refuses_bulk_tail(spark, tmp_base):
+def test_mor_rt_log_gate_refuses_bulk_tail(spark, tmp_base, monkeypatch):
+    from onehouse_demos_spark.tables import hudi_export
+
+    monkeypatch.setattr(hudi_export, "RT_LOG_GATE_ROWS", 5)
     t = _mk(spark, tmp_base, partitioned=False, table_type="mor")
     sync_hudi_metadata(t, mor_rt=True)
     t.upsert(
@@ -1360,7 +1363,7 @@ def test_mor_rt_log_gate_refuses_bulk_tail(spark, tmp_base):
         )
     )
     with pytest.raises(RuntimeError, match="gate"):
-        sync_hudi_metadata(t, mor_rt=True, rt_log_gate_rows=5)
+        sync_hudi_metadata(t, mor_rt=True)
     # the compaction path remains open
     sync_hudi_metadata(t, compact_mor=True)
     assert _rows(read_hudi_snapshot(spark, t.base_path)) == _rows(
