@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from onehouse_demos_spark.functions.hashing import md5_60
+
 #: Tiny per-language stopword marker sets for the n-gram/stopword
 #: language-ID heuristic. Deliberately small and public-knowledge; the
 #: heuristic is argmax of whole-word hit counts.
@@ -90,7 +92,7 @@ def fingerprint64(col) -> Column:
     """64-bit-ish deterministic content fingerprint: first 15 hex chars
     of md5 of the normalized text, as a BIGINT. Engine-portable (DuckDB
     computes the identical value) unlike xxhash64/murmur."""
-    return F.conv(F.substring(F.md5(normalize_text(col)), 1, 15), 16, 10).cast("long")
+    return md5_60(normalize_text(col))
 
 
 def shingles(col, n: int = 3) -> Column:

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from onehouse_demos_spark.functions.hashing import md5_60
 from onehouse_demos_spark.functions.quantize import fquant
 
 from onehouse_demos_spark.functions.text import normalize_text, token_count
@@ -114,15 +115,7 @@ _WORDS_SQL = """
   ) WHERE length(word) > 0
 """
 
-#: Portable 60-bit hash of a string (md5 prefix), mod `m`. The Spark
-#: and DuckDB forms compute bit-identical values (same construction as
-#: the MinHash base hash in operators/dedup.py).
-def _hash_mod(col, m: int):
-    return (
-        F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long") % m
-    )
-
-
+#: DuckDB form of `md5_60(col) % m` (functions/hashing.py), bit-identical.
 def _hash_mod_sql(expr: str, m: int) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT % {m})"
 
@@ -253,7 +246,7 @@ FROM e LEFT JOIN dropped ON e.vec_id = dropped.vec_id
 
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_docs(spark, sf_dir)
-    words = _words(docs).withColumn("bucket", _hash_mod(F.col("word"), DSIR_BUCKETS))
+    words = _words(docs).withColumn("bucket", md5_60(F.col("word")) % DSIR_BUCKETS)
     # 1-row frame: the target domain label + its token total.
     target_src = docs.agg(F.min("source").alias("target_source"))
     tw = words.crossJoin(F.broadcast(target_src)).filter(

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from onehouse_demos_spark.functions.hashing import md5_60
 from onehouse_demos_spark.functions.text import normalize_text, shingles
 from onehouse_demos_spark.sources.batch import parquet_num_rows, read_parquet
 
@@ -261,10 +262,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = docs.select(
         "doc_id", F.explode(shingles(F.col("text"), 3)).alias("shingle")
     )
-    x = (
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
-        % MH_P
-    )
+    x = md5_60(F.col("shingle")) % MH_P
     idx = idx.select("doc_id", x.alias("x"))
     aggs = []
     for i in range(N_MINHASH):
@@ -389,7 +387,7 @@ def simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_docs(spark, sf_dir, fan_out=True)
     hs = F.transform(
         F.split(normalize_text(F.col("text")), " "),
-        lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
+        md5_60,
     )
     docs = docs.select("doc_id", hs.alias("hs"))
 
@@ -877,12 +875,7 @@ def leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.coalesce(F.col("canonical_id"), F.col("doc_id")).alias("grp"),
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("grp").cast("string")), 1, 15), 16, 10
-        ).cast("long")
-        % 10
-    )
+    bucket = md5_60(F.col("grp").cast("string")) % 10
     return (
         assigned.withColumn(
             "split",

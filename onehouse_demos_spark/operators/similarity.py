@@ -667,16 +667,6 @@ def _train_pq(ids: list, X: np.ndarray, m: int, k: int, iters: int):
     ]
 
 
-def train_ivf_centroids(
-    emb: DataFrame, k: int = 16, iters: int = 5
-) -> list[list[float]]:
-    """k-means centroids of the embedding column: one collect of
-    (vec_id, embedding), then `_lloyd` on the driver. The training set
-    must fit in driver memory; sample the frame first when it does
-    not. Fewer than k vectors raise ValueError."""
-    return _lloyd(*_collect_vectors(emb), k, iters).tolist()
-
-
 def knn_ivf_trained(
     spark: SparkSession,
     sf_dir: str,

@@ -14,14 +14,13 @@ no weight table to broadcast and no lookup join.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from onehouse_demos_spark.functions.text import normalize_text, token_count
-from onehouse_demos_spark.operators.curation import _hash_mod, _hash_mod_sql
+from onehouse_demos_spark.functions.hashing import md5_60
+from onehouse_demos_spark.operators.curation import _hash_mod_sql
 from onehouse_demos_spark.operators.text import load_docs
 
 # --------------------------------------------------------------------------
@@ -42,9 +41,11 @@ _HASH_SPACE = 10**15
 
 def epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_docs(spark, sf_dir)
-    h = _hash_mod(
-        F.concat(F.col("doc_id").cast("string"), F.lit(":" + _EPOCH_SEED)),
-        _HASH_SPACE,
+    h = (
+        md5_60(
+            F.concat(F.col("doc_id").cast("string"), F.lit(":" + _EPOCH_SEED))
+        )
+        % _HASH_SPACE
     )
     top = (
         docs.select("doc_id", h.alias("h"))
@@ -173,7 +174,7 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.length("word") > 0)
     )
-    fid = _hash_mod(F.col("word"), _QC_DIM)
+    fid = md5_60(F.col("word")) % _QC_DIM
     w = (fid % _QC_MOD - _QC_MOD // 2).cast("long")
     scored = (
         words.select("doc_id", w.alias("w"))

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from onehouse_demos_spark.sql.lexer import (
-    finditer_masked,
     mask_literals,
     match_masked,
     split_once_top_level,
@@ -640,9 +639,13 @@ class Engine:
                 names = sorted(os.listdir(d))
                 return (fmt, tuple(names))
             if fmt == "iceberg":
-                hint = os.path.join(loc, "metadata", "version-hint.text")
-                with open(hint) as fh:
-                    return (fmt, fh.read())
+                from onehouse_demos_spark.tables.iceberg_export import (
+                    iceberg_version,
+                )
+
+                # the head a reader resolves, not the raw hint: a hint
+                # left behind by a crashed sync must not pin the view
+                return (fmt, iceberg_version(loc))
             if fmt == "hudi":
                 d = os.path.join(loc, ".hoodie")
                 names = sorted(os.listdir(d))

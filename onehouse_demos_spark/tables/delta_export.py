@@ -80,14 +80,17 @@ that consume the bucket through their own stacks.
 
 from __future__ import annotations
 
-import io
 import json
 import os
 import time
 import uuid
+from io import BytesIO
 from urllib.parse import quote, unquote
 
-from onehouse_demos_spark.tables.object_publish import Publisher, publisher
+from onehouse_demos_spark.tables.object_publish import (
+    LocalFiles,
+    publisher,
+)
 from onehouse_demos_spark.tables.personality import (
     assert_no_tombstones,
     harvest,
@@ -129,46 +132,33 @@ def _log_dir(table: LakehouseTable) -> str:
     return os.path.join(table.base_path, _LOG_DIR)
 
 
-def _fetch(log_dir: str, name: str, pub: Publisher | None) -> bytes | None:
-    """One log object's bytes: through the store seam when the caller
-    is the WRITER (pub given), direct file I/O for external replay."""
-    p = os.path.join(log_dir, name)
-    if pub is not None:
-        return pub.get_bytes(p)
-    try:
-        with open(p, "rb") as fh:
-            return fh.read()
-    except OSError:
-        return None
+# Every log read below takes an `io` with `get_bytes(abs_path)` (None
+# when absent) and `list_rel(abs_dir)`: the writer passes its
+# `Publisher`, so its state reads ride the store seam; external replay
+# passes `LocalFiles`, the direct file I/O of an engine reading the log.
 
 
-def _list_log(log_dir: str, pub: Publisher | None) -> list[str]:
-    if pub is not None:
-        return pub.list_rel(log_dir)
-    return os.listdir(log_dir) if os.path.isdir(log_dir) else []
-
-
-def _read_last_checkpoint(log_dir: str, pub: Publisher | None = None) -> int:
+def _read_last_checkpoint(log_dir: str, io) -> int:
     """Version of the newest checkpoint per `_last_checkpoint`, -1 if
     none. Falls back to listing `*.checkpoint.parquet` when the pointer
     file is missing/corrupt — the same recovery every Delta client
     performs (the pointer is an optimization, not the source of truth)."""
     try:
-        raw = _fetch(log_dir, _LAST_CHECKPOINT, pub)
+        raw = io.get_bytes(os.path.join(log_dir, _LAST_CHECKPOINT))
         if raw is None:
             raise ValueError("no _last_checkpoint")
         return int(json.loads(raw)["version"])
     except (OSError, ValueError, KeyError):
         cps = [
             int(n.split(".", 1)[0])
-            for n in _list_log(log_dir, pub)
+            for n in io.list_rel(log_dir)
             if n.endswith(".checkpoint.parquet") and n.split(".", 1)[0].isdigit()
         ]
         return max(cps) if cps else -1
 
 
 def _read_checkpoint(
-    log_dir: str, version: int, pub: Publisher | None = None
+    log_dir: str, version: int, io
 ) -> tuple[dict, dict | None, dict]:
     """Load `(live, metaData, tombstones)` state from a checkpoint
     parquet — one action per row, exactly one of the struct columns
@@ -180,10 +170,10 @@ def _read_checkpoint(
     live: dict[str, dict] = {}
     tombstones: dict[str, dict] = {}
     meta = None
-    raw = _fetch(log_dir, _checkpoint_name(version), pub)
+    raw = io.get_bytes(os.path.join(log_dir, _checkpoint_name(version)))
     if raw is None:
         raise FileNotFoundError(_checkpoint_name(version))
-    tbl = pq.read_table(io.BytesIO(raw))
+    tbl = pq.read_table(BytesIO(raw))
     for row in tbl.to_pylist():
         add = row.get("add")
         if add is not None:
@@ -208,9 +198,7 @@ def _read_checkpoint(
     return live, meta, tombstones
 
 
-def _read_log_state(
-    log_dir: str, pub: Publisher | None = None
-) -> tuple[int, dict, dict | None, dict]:
+def _read_log_state(log_dir: str, io) -> tuple[int, dict, dict | None, dict]:
     """Replay an existing `_delta_log`: returns (last_version,
     {path: add_action}, last_metaData, {path: remove_action}) —
     (-1, {}, None, {}) if absent.
@@ -222,16 +210,16 @@ def _read_log_state(
     may have been deleted by `clean_delta_log`. Tombstones accumulate
     across replay (a re-added path clears its tombstone) so the next
     checkpoint can carry the un-expired ones forward."""
-    names = _list_log(log_dir, pub)
+    names = io.list_rel(log_dir)
     if not names:
         return -1, {}, None, {}
-    ckpt = _read_last_checkpoint(log_dir, pub)
+    ckpt = _read_last_checkpoint(log_dir, io)
     live: dict[str, dict] = {}
     tombstones: dict[str, dict] = {}
     meta = None
     if ckpt >= 0:
         try:
-            live, meta, tombstones = _read_checkpoint(log_dir, ckpt, pub)
+            live, meta, tombstones = _read_checkpoint(log_dir, ckpt, io)
         except Exception:
             # Corrupt/missing checkpoint: fall back to full JSON replay
             # (the standard client recovery; clean_delta_log refuses to
@@ -245,7 +233,7 @@ def _read_log_state(
         and (v := int(n[:-5])) > ckpt
     )
     for v in versions:
-        raw = _fetch(log_dir, _version_name(v), pub)
+        raw = io.get_bytes(os.path.join(log_dir, _version_name(v)))
         if raw is None:
             raise FileNotFoundError(_version_name(v))
         for line in raw.decode("utf-8").splitlines():
@@ -741,7 +729,7 @@ def write_delta_checkpoint(
     # the new complete object — both are valid checkpoints of version
     # V; delta-spark likewise overwrites). The `_last_checkpoint`
     # pointer is a last-writer-wins hint; its fallback is the listing.
-    buf = io.BytesIO()
+    buf = BytesIO()
     pq.write_table(pa.Table.from_pylist(rows, schema=schema), buf)
     pub.put_bytes(
         os.path.join(log_dir, _checkpoint_name(version)), buf.getvalue()
@@ -788,7 +776,7 @@ def clean_delta_log(
     except Exception:
         return 0
     removed = 0
-    names = _list_log(log_dir, pub)
+    names = pub.list_rel(log_dir)
     for n in names:
         if n.endswith(".json") and n[:-5].isdigit() and int(n[:-5]) <= ckpt:
             pub.delete(os.path.join(log_dir, n))
@@ -807,9 +795,9 @@ def clean_delta_log(
     # ANY retained log object (checkpoint state or a surviving JSON's
     # add/remove) is conservatively kept.
     mentioned: set[str] = set()
-    for n in _list_log(log_dir, pub):
+    for n in pub.list_rel(log_dir):
         if n.endswith(".json") and n[:-5].isdigit():
-            raw = _fetch(log_dir, n, pub)
+            raw = pub.get_bytes(os.path.join(log_dir, n))
             for line in (raw or b"").decode().splitlines():
                 if not line.strip():
                     continue
@@ -838,34 +826,47 @@ def clean_delta_log(
     )
 
 
+def _pruned_live(
+    delta_path: str, partition_predicate: dict[str, str | None] | None
+) -> tuple[list[str], dict]:
+    """(live add paths in log order, metaData) after replaying the log
+    the way every Delta client does and keeping the files whose
+    partitionValues match `partition_predicate` — metadata only, no
+    footer reads. Values compare against the string-serialized
+    partitionValues; `None` matches the NULL partition. Raises if a
+    predicate column is not a declared partition column (an engine
+    would fall back to scanning, and a pruning test passing by
+    accident would be meaningless)."""
+    last_version, live, meta, _ = _read_log_state(
+        os.path.join(delta_path, _LOG_DIR), LocalFiles()
+    )
+    if last_version < 0:
+        raise FileNotFoundError(f"no _delta_log under {delta_path}")
+    predicate = partition_predicate or {}
+    declared = list((meta or {}).get("partitionColumns") or [])
+    for col in predicate:
+        if col not in declared:
+            raise ValueError(
+                f"{col!r} is not a declared partitionColumn {declared}"
+            )
+    return [
+        path
+        for path, add in live.items()
+        if all(
+            (add.get("partitionValues") or {}).get(c) == v
+            for c, v in predicate.items()
+        )
+    ], meta
+
+
 def delta_pruned_files(
     delta_path: str, partition_predicate: dict[str, str | None] | None = None
 ) -> list[str]:
     """The file list a partitionValues-driven external engine
     (Trino-class) would scan under an equality predicate on partition
-    columns — metadata-only, no footer reads. `None` predicate (or an
-    empty dict) returns every live file. Predicate values compare
-    against the string-serialized partitionValues; `None` matches the
-    NULL partition. Raises if a predicate column is not a declared
-    partition column (an engine would fall back to scanning, and a
-    pruning test passing by accident would be meaningless)."""
-    last_version, live, meta, _ = _read_log_state(
-        os.path.join(delta_path, _LOG_DIR)
-    )
-    if last_version < 0:
-        raise FileNotFoundError(f"no _delta_log under {delta_path}")
-    declared = list((meta or {}).get("partitionColumns") or [])
-    for col in partition_predicate or {}:
-        if col not in declared:
-            raise ValueError(
-                f"{col!r} is not a declared partitionColumn {declared}"
-            )
-    out = []
-    for path, add in live.items():
-        pv = add.get("partitionValues") or {}
-        if all(pv.get(c) == v for c, v in (partition_predicate or {}).items()):
-            out.append(path)
-    return sorted(out)
+    columns (`_pruned_live`). `None` predicate (or an empty dict)
+    returns every live file."""
+    return sorted(_pruned_live(delta_path, partition_predicate)[0])
 
 
 def read_delta_snapshot(
@@ -879,29 +880,8 @@ def read_delta_snapshot(
     alone when given, exactly like a partition-aware external engine.
     Used by tests and by engines without a Delta runtime; engines WITH
     one read `delta_path` natively."""
-    last_version, live, meta, _ = _read_log_state(
-        os.path.join(delta_path, _LOG_DIR)
-    )
-    if last_version < 0:
-        raise FileNotFoundError(f"no _delta_log under {delta_path}")
-    if partition_predicate:
-        declared = list((meta or {}).get("partitionColumns") or [])
-        for col in partition_predicate:
-            if col not in declared:
-                raise ValueError(
-                    f"{col!r} is not a declared partitionColumn {declared}"
-                )
-        keep = {
-            p
-            for p, add in live.items()
-            if all(
-                (add.get("partitionValues") or {}).get(c) == v
-                for c, v in partition_predicate.items()
-            )
-        }
-    else:
-        keep = set(live)
-    paths = [os.path.join(delta_path, unquote(p)) for p in live if p in keep]
+    live, meta = _pruned_live(delta_path, partition_predicate)
+    paths = [os.path.join(delta_path, unquote(p)) for p in live]
     import pyspark.sql.types as T
 
     # Column mapping (mode=name): each logical field resolves through

@@ -99,6 +99,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from onehouse_demos_spark.functions.hashing import md5_60, md5_60_py
 from onehouse_demos_spark.sources.batch import parquet_schema
 from onehouse_demos_spark.tables.object_publish import Publisher, default_store
 from onehouse_demos_spark.tables.personality import (
@@ -1966,14 +1967,9 @@ def _mdt_rli_schema() -> str:
 
 def _rli_shard_py(key: str, shards: int) -> int:
     """Portable 60-bit md5-prefix shard — bit-identical to the Spark
-    expression in `_rli_write_spark` (same construction as
-    RecordIndex._bucket_py), so driver writes, executor writes and
-    reader probes all agree on the shard of a key."""
-    import hashlib
-
-    return (
-        int(hashlib.md5(key.encode("utf-8")).hexdigest()[:15], 16) % shards
-    )
+    expression in `_rli_write_spark`, so driver writes, executor
+    writes and reader probes all agree on the shard of a key."""
+    return md5_60_py(key) % shards
 
 
 def _signed64(x: int) -> int:
@@ -2202,12 +2198,7 @@ def _rli_write_spark(
             )
         )
         entries = adds.unionByName(tomb)
-    shard_col = (
-        F.conv(F.substring(F.md5(F.col("key")), 1, 15), 16, 10).cast(
-            "long"
-        )
-        % shards
-    ).cast("int")
+    shard_col = (md5_60(F.col("key")) % shards).cast("int")
     entries = entries.withColumn("shard", shard_col).repartition(
         shards, F.col("shard")
     )

@@ -77,7 +77,11 @@ import uuid
 from pyspark.sql import types as T
 
 from onehouse_demos_spark.sources.avro_codec import read_ocf, write_ocf
-from onehouse_demos_spark.tables.object_publish import Publisher, publisher
+from onehouse_demos_spark.tables.object_publish import (
+    LocalFiles,
+    Publisher,
+    publisher,
+)
 from onehouse_demos_spark.tables.personality import (
     assert_no_tombstones,
     partition_columns,
@@ -91,6 +95,7 @@ from onehouse_demos_spark.tables.personality import (
 from onehouse_demos_spark.tables.table import PP_COL, LakehouseTable
 
 _META_DIR = "metadata"
+_HINT = "version-hint.text"
 #: Iceberg convention: partition-spec field ids start at 1000.
 _PARTITION_FIELD_ID_START = 1000
 
@@ -272,7 +277,7 @@ def _partition_spec(table: LakehouseTable, schema: dict) -> list[dict]:
             # Degrade to an unpartitioned spec (still a correct,
             # readable personality — file pruning just isn't offered)
             # rather than failing the whole sync for e.g. a
-            # timestamp/decimal partition column (ADVICE r4).
+            # timestamp/decimal partition column.
             import warnings
 
             warnings.warn(
@@ -333,8 +338,8 @@ def _manifest_entry_schema(
     ]
     if deletes:
         # spec field 135: the schema field ids an equality delete file
-        # matches on — only delete manifests carry it, so the data
-        # manifest byte shape is unchanged from pre-r13 syncs.
+        # matches on. Only delete manifests carry it; data manifests
+        # keep the plain v2 `data_file` shape.
         fields.append(
             {
                 "name": "equality_ids",
@@ -388,6 +393,10 @@ def _meta_dir(table: LakehouseTable) -> str:
     return os.path.join(table.base_path, _META_DIR)
 
 
+def _meta_file(meta_dir: str, version: int) -> str:
+    return os.path.join(meta_dir, f"v{version}.metadata.json")
+
+
 # --------------------------------- v2 equality deletes + update export
 
 
@@ -406,6 +415,14 @@ def _frame_digest(df, cols: list[str]) -> str:
     return f"{row.n}:{row.h}"
 
 
+# ------------------------------------------------------- metadata walk
+#
+# Every step below takes an `io` with `get_bytes(abs_path)` (None when
+# absent) and `exists(abs_path)`: the writer passes its `Publisher`, so
+# its state reads ride the store seam; external replay passes
+# `LocalFiles`, the direct file I/O of an engine reading the layout.
+
+
 def _rebase(stored: str, meta_location: str, table_path: str) -> str:
     """Resolve a metadata-stored absolute path against the CURRENT
     table location. Iceberg metadata stores absolute paths; a cloned /
@@ -418,70 +435,209 @@ def _rebase(stored: str, meta_location: str, table_path: str) -> str:
     return stored
 
 
+def _head_version(meta_dir: str, io) -> tuple[int, int]:
+    """(hinted, head) metadata versions, 0 when none. The hint is only
+    a hint: a writer that dies between the metadata.json commit and
+    the hint put leaves it behind, so the head is found the way
+    HadoopTables clients find it — probe forward from the hint with
+    HEAD requests (`exists`: metadata.json grows with history, so it
+    is never downloaded just to test for it)."""
+    raw = io.get_bytes(os.path.join(meta_dir, _HINT))
+    try:
+        hinted = int(raw.decode("utf-8").strip()) if raw is not None else 0
+    except ValueError:
+        hinted = 0
+    head = hinted
+    while io.exists(_meta_file(meta_dir, head + 1)):
+        head += 1
+    return hinted, head
+
+
+def _head(meta_dir: str, io) -> tuple[int, int, dict | None]:
+    """(hinted, head, head metadata); the metadata is None when the
+    table has no Iceberg version yet."""
+    hinted, head = _head_version(meta_dir, io)
+    if not head:
+        return hinted, 0, None
+    raw = io.get_bytes(_meta_file(meta_dir, head))
+    if raw is None:
+        raise FileNotFoundError(
+            f"version-hint names v{head} but the metadata object is missing"
+        )
+    return hinted, head, json.loads(raw)
+
+
+def _walk(
+    io, meta: dict, table_path: str, snaps=None, seen=None, content=None
+):
+    """Yield (rebased file path, effective data sequence number,
+    `data_file` record) for every live (ADDED or EXISTING) manifest
+    entry of `snaps` (default: the current snapshot), walking snapshot
+    → manifest list → manifests → entries. An entry without an
+    explicit sequence inherits its manifest's. `content` (0 data, 1
+    deletes), when given, skips the other manifests by their list row,
+    unread. `seen`, when given, collects the path of every manifest
+    list and manifest read. A referenced object that is missing raises
+    FileNotFoundError."""
+    loc = meta.get("location", table_path)
+    if snaps is None:
+        snaps = [
+            s for s in meta.get("snapshots", [])
+            if s["snapshot-id"] == meta.get("current-snapshot-id")
+        ]
+
+    def records(stored: str) -> list:
+        path = _rebase(stored, loc, table_path)
+        raw = io.get_bytes(path)
+        if raw is None:
+            raise FileNotFoundError(f"iceberg metadata names missing {path}")
+        if seen is not None:
+            seen.add(path)
+        return read_ocf(raw)[1]
+
+    for s in snaps:
+        for m in records(s["manifest-list"]):
+            if content is not None and m.get("content", 0) != content:
+                continue
+            for e in records(m["manifest_path"]):
+                if e["status"] not in (0, 1):  # EXISTING / ADDED
+                    continue
+                seq = e.get("sequence_number")
+                yield (
+                    _rebase(e["data_file"]["file_path"], loc, table_path),
+                    m["sequence_number"] if seq is None else seq,
+                    e["data_file"],
+                )
+
+
+def _put_manifest(
+    pub: Publisher,
+    meta_dir: str,
+    tag: str,
+    files: list[tuple],
+    snapshot_id: int,
+    seq: int,
+    schema: dict,
+    spec_fields: list[dict],
+    equality_ids: list[int] | None = None,
+) -> dict:
+    """Write and put one manifest, `<uuid>-<tag>.avro` (uuid-named, so
+    a plain atomic put), and return its manifest-list row. `files` are
+    (path, partition struct, rows, bytes, sequence) tuples: a None
+    sequence is ADDED by `snapshot_id` and inherits `seq`; any other
+    is an EXISTING file keeping its first-export sequence explicitly,
+    which is what lets equality deletes (strictly newer sequence)
+    apply to it. With `equality_ids` the files are equality deletes on
+    those field ids and the manifest is a delete manifest."""
+    deletes = equality_ids is not None
+    entries = [
+        {
+            "status": 1 if fseq is None else 0,  # ADDED / EXISTING
+            "snapshot_id": snapshot_id,
+            "sequence_number": fseq,  # None => inherit `seq`
+            "file_sequence_number": fseq,
+            "data_file": {
+                "content": 2 if deletes else 0,  # EQUALITY_DELETES / DATA
+                "file_path": path,
+                "file_format": "PARQUET",
+                "partition": part,
+                "record_count": rows,
+                "file_size_in_bytes": size,
+                "equality_ids": equality_ids,
+            },
+        }
+        for path, part, rows, size, fseq in files
+    ]
+    data = write_ocf(
+        entries,
+        _manifest_entry_schema(
+            _partition_record_schema(spec_fields, schema), deletes
+        ),
+        extra_meta={
+            "schema": json.dumps(schema),
+            "schema-id": "0",
+            "partition-spec": json.dumps(spec_fields),
+            "partition-spec-id": "0",
+            "format-version": "2",
+            "content": "deletes" if deletes else "data",
+        },
+    )
+    path = os.path.join(meta_dir, f"{uuid.uuid4().hex}-{tag}.avro")
+    pub.put_bytes(path, data)
+    added = [f for f in files if f[4] is None]
+    # min_sequence_number over the sequences the entries actually carry
+    # (a min over all previous sequences could understate it once a
+    # file dropped out)
+    seqs = [f[4] for f in files if f[4] is not None] + ([seq] if added else [])
+    return {
+        "manifest_path": path,
+        "manifest_length": len(data),
+        "partition_spec_id": 0,
+        "content": 1 if deletes else 0,  # DELETES / DATA
+        "sequence_number": seq,
+        "min_sequence_number": min(seqs, default=seq),
+        "added_snapshot_id": snapshot_id,
+        "added_files_count": len(added),
+        "existing_files_count": len(files) - len(added),
+        "deleted_files_count": 0,
+        "added_rows_count": sum(f[2] for f in added),
+        "existing_rows_count": sum(f[2] for f in files if f[4] is not None),
+        "deleted_rows_count": 0,
+    }
+
+
+def _put_manifest_list(
+    pub: Publisher, meta_dir: str, snapshot_id: int, rows: list[dict]
+) -> str:
+    path = os.path.join(
+        meta_dir, f"snap-{snapshot_id}-{uuid.uuid4().hex}.avro"
+    )
+    pub.put_bytes(
+        path,
+        write_ocf(rows, _MANIFEST_FILE_SCHEMA, extra_meta={"format-version": "2"}),
+    )
+    return path
+
+
+def _commit_version(
+    pub: Publisher, meta_dir: str, version: int, meta: dict
+) -> int:
+    """Publish `meta` as version `version + 1` and return it. The
+    metadata.json is the COMMIT POINT: `PutObject + If-None-Match: *`,
+    so exactly one writer owns each version and readers never see a
+    torn one (everything it references is uuid-named and already put).
+    The hint put after it is a plain atomic put: a racing reader sees
+    the old or the new number, and one left behind by a crash is
+    probed past (`_head_version`)."""
+    new_version = version + 1
+    if not pub.put_json(
+        _meta_file(meta_dir, new_version), meta, if_none_match=True
+    ):
+        raise FileExistsError(
+            f"iceberg metadata v{new_version} already published by a "
+            "concurrent writer — re-run against the new head"
+        )
+    pub.put_text(os.path.join(meta_dir, _HINT), str(new_version))
+    return new_version
+
+
 def _prev_file_seqs(
     prev_meta: dict | None, pub: Publisher, base_path: str
 ) -> dict[str, int]:
-    """LOCATION-RELATIVE file path -> effective data sequence number
-    from the previous snapshot's DATA manifests (writer-internal read
-    through the seam). Equality deletes apply only to data files with
-    a STRICTLY OLDER data sequence number (spec §scan-planning), so a
-    re-synced file must keep the sequence of its first export rather
-    than inherit the new snapshot's. Keys are relative so the
-    preservation survives a table relocation."""
+    """Rebased absolute file path -> effective data sequence number of
+    the DATA files in the previous snapshot. Equality deletes apply
+    only to data files with a STRICTLY OLDER data sequence number
+    (spec §scan-planning), so a re-synced file must keep the sequence
+    of its first export rather than inherit the new snapshot's. Keys
+    are rebased onto the current location, so the preservation
+    survives a table relocation, and a metadata-only bootstrap file
+    outside the table keeps its stored absolute path."""
     if not prev_meta:
         return {}
-    current = next(
-        (
-            s
-            for s in prev_meta.get("snapshots", [])
-            if s["snapshot-id"] == prev_meta.get("current-snapshot-id")
-        ),
-        None,
-    )
-    if current is None:
-        return {}
-    loc = prev_meta.get("location", base_path)
-    raw = pub.get_bytes(_rebase(current["manifest-list"], loc, base_path))
-    if raw is None:
-        return {}
-    _, manifests = read_ocf(raw)
-    out: dict[str, int] = {}
-    for m in manifests:
-        if m.get("content", 0) != 0:
-            continue
-        mraw = pub.get_bytes(_rebase(m["manifest_path"], loc, base_path))
-        if mraw is None:
-            continue
-        _, entries = read_ocf(mraw)
-        for e in entries:
-            if e["status"] not in (0, 1):
-                continue
-            seq = e.get("sequence_number")
-            stored = e["data_file"]["file_path"]
-            rel = (
-                stored[len(loc.rstrip("/")) + 1:]
-                if stored.startswith(loc.rstrip("/") + "/")
-                else stored
-            )
-            out[rel] = seq if seq is not None else m["sequence_number"]
-    return out
-
-
-def _current_version(meta_dir: str, pub: Publisher | None = None) -> int:
-    """Version per `version-hint.text` — through the store seam when
-    the caller is the writer (pub given), direct file I/O for the
-    external readers below."""
-    hint = os.path.join(meta_dir, "version-hint.text")
-    try:
-        if pub is not None:
-            raw = pub.get_bytes(hint)
-            if raw is None:
-                return 0
-            return int(raw.decode("utf-8").strip())
-        with open(hint) as fh:
-            return int(fh.read().strip())
-    except (FileNotFoundError, ValueError):
-        return 0
+    return {
+        path: seq
+        for path, seq, _ in _walk(pub, prev_meta, base_path, content=0)
+    }
 
 
 def sync_iceberg_metadata(
@@ -493,46 +649,20 @@ def sync_iceberg_metadata(
     `v<N>.metadata.json` → current snapshot → manifest list →
     manifest → the table's own parquet.
 
-    Every write flows through the ObjectStoreClient S3 contract
-    (tables/object_publish.py, VERDICT r12 #1): manifests and manifest
-    lists are uuid-named atomic full-object puts, the metadata.json is
-    the COMMIT POINT (`PutObject + If-None-Match: *` — exactly one
-    syncer owns version N), and version-hint.text is a last-writer-
-    wins hint put. Writer-internal state reads (hint + previous
-    metadata) ride the same seam; external readers below stay direct
-    file I/O over the materialized layout."""
+    Every write and every read of the writer's own state flows through
+    the ObjectStoreClient S3 contract (tables/object_publish.py):
+    manifests and manifest lists are uuid-named atomic full-object
+    puts, and the version commit is conditional (`_commit_version`).
+    A hint left behind by a crashed sync is repaired here, so an
+    unchanged re-sync still leaves it pointing at the head."""
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     files = table.manifest.live_files(include_logs=False)
     assert_no_tombstones(files)
     meta_dir = _meta_dir(table)
     pub = publisher(table.base_path, store)
-    version = _current_version(meta_dir, pub)
-    # The hint is a HINT: a writer that crashed between the
-    # metadata.json commit point and the hint put leaves the hint one
-    # behind, and trusting it would make the healthy retry re-mint the
-    # already-published version (conditional-put conflict on a
-    # no-contention retry). Probe forward to the true head — the same
-    # recovery HadoopTables clients perform — and repair the hint.
-    hinted = version
-    while pub.exists(
-        os.path.join(meta_dir, f"v{version + 1}.metadata.json")
-    ):  # HEAD probe — metadata.json grows with history; never GET it
-        # just to test existence (r13 review)
-        version += 1
+    hinted, version, prev_meta = _head(meta_dir, pub)
     if version != hinted:
-        pub.put_text(os.path.join(meta_dir, "version-hint.text"),
-                     str(version))
-    prev_meta = None
-    if version:
-        raw = pub.get_bytes(
-            os.path.join(meta_dir, f"v{version}.metadata.json")
-        )
-        if raw is None:
-            raise FileNotFoundError(
-                f"version-hint names v{version} but the metadata "
-                "object is missing"
-            )
-        prev_meta = json.loads(raw)
+        pub.put_text(os.path.join(meta_dir, _HINT), str(version))
 
     schema, phys_map = _iceberg_schema(table, prev_meta)
     part_cols = partition_columns(table)
@@ -594,31 +724,29 @@ def sync_iceberg_metadata(
         snapshot_id = int(
             hashlib.sha256(f"{digest}:{seq}".encode()).hexdigest()[:15], 16
         )
-
-        # ---- manifest (one per snapshot, full live file set). Files seen
-        # in a previous sync re-enter as status=EXISTING with their
-        # FIRST-export sequence number made explicit (spec-required for
-        # re-listed files; also what makes equality deletes — strictly
-        # newer sequence — apply to them). New files inherit this
-        # snapshot's sequence.
         spec_fields = _partition_spec(table, schema)
         spec_cols = [pf["name"] for pf in spec_fields]
         by_id = {f["id"]: f for f in schema["fields"]}
 
-        def part_struct(fm) -> dict:
-            """The typed `partition` struct of spec 0 for one file."""
+        def file_row(fm, size: int, fseq: int | None) -> tuple:
+            """One `_put_manifest` file tuple, with the typed
+            `partition` struct of spec 0."""
             raw = partition_values(fm, spec_cols)
-            return {
+            part = {
                 pf["name"]: _decode_partition_value(
                     raw[pf["name"]], by_id[pf["source-id"]]["type"]
                 )
                 for pf in spec_fields
             }
+            return (
+                os.path.join(table.base_path, fm.path), part, fm.rows,
+                size, fseq,
+            )
 
-        def publish(frame, prefix: str) -> list[dict]:
+        def publish(frame, prefix: str) -> list[tuple]:
             """Stage `frame` as `<prefix>-<uuid>-<n>.parquet` files (one
-            manifest entry each, partition-scoped for pruning) and
-            return their manifest-entry payloads."""
+            manifest entry each, partition-scoped for pruning), all
+            ADDED by this sync."""
             staged = stage_files(
                 table, frame, part_cols, pub, f"{prefix}-{uuid.uuid4().hex}"
             )
@@ -629,24 +757,33 @@ def sync_iceberg_metadata(
                     "personality that would diverge from the real-time "
                     "view"
                 )
-            return [
-                {
-                    "path": os.path.join(table.base_path, fm.path),
-                    "partition": part_struct(fm),
-                    "rows": fm.rows,
-                    "size": size,
-                }
-                for fm, size in staged
-            ]
+            return [file_row(fm, size, None) for fm, size in staged]
 
+        # ---- data manifest (one per snapshot, full live file set).
+        # Files seen in a previous sync re-enter as EXISTING with their
+        # first-export sequence; new files inherit this snapshot's.
         prev_seqs = _prev_file_seqs(prev_meta, pub, table.base_path)
-        n_added = sum(1 for fm in files if fm.path not in prev_seqs)
-        # Two-snapshot shape decided BEFORE the manifest is written so the
-        # data manifest's attribution (entry snapshot_id + the manifest
-        # row's added_snapshot_id) names the APPEND snapshot consistently
-        # in both manifest lists: a reused row claiming the delete
-        # snapshot's id would mis-attribute adds to time-travel and
-        # incremental consumers.
+        base_files = [
+            file_row(
+                fm,
+                os.path.getsize(os.path.join(table.base_path, fm.path)),
+                prev_seqs.get(os.path.join(table.base_path, fm.path)),
+            )
+            for fm in files
+        ]
+        n_added = sum(1 for f in base_files if f[4] is None)
+        # Log changes on a sync that also ADDS base files (first sync of
+        # a log-bearing table, or insert+delete between syncs) take the
+        # spec's two-snapshot shape: a data append at `seq`, then the
+        # delete commit at `seq + 1`, both inside the one conditional-
+        # put metadata version. Deletes must apply to EVERY live base
+        # file (strictly newer sequence) but NOT to the log-winner data
+        # file appended alongside them (same sequence: exempt), exactly
+        # the Flink CDC upsert commit shape. The shape is decided before
+        # the data manifest is written so its entries and its row name
+        # the APPEND snapshot in both manifest lists: a reused row
+        # claiming the delete snapshot's id would mis-attribute adds to
+        # time-travel and incremental consumers.
         two_snapshots = (
             eqdel is not None or new_rows is not None
         ) and n_added > 0
@@ -654,93 +791,14 @@ def sync_iceberg_metadata(
             hashlib.sha256(f"{digest}:{seq}:data".encode()).hexdigest()[:15],
             16,
         )
-        data_snap_id = snap_a_id if two_snapshots else snapshot_id
-        entries = []
-        total_rows = 0
-        added_rows = existing_rows = 0
-        for fm in files:
-            abs_path = os.path.join(table.base_path, fm.path)
-            size = os.path.getsize(abs_path)
-            total_rows += fm.rows
-            known_seq = prev_seqs.get(fm.path)
-            if known_seq is None:
-                added_rows += fm.rows
-            else:
-                existing_rows += fm.rows
-            entries.append(
-                {
-                    "status": 1 if known_seq is None else 0,  # ADDED/EXISTING
-                    "snapshot_id": data_snap_id,
-                    "sequence_number": known_seq,  # None => inherit
-                    "file_sequence_number": known_seq,
-                    "data_file": {
-                        "content": 0,  # DATA
-                        "file_path": abs_path,
-                        "file_format": "PARQUET",
-                        "partition": part_struct(fm),
-                        "record_count": fm.rows,
-                        "file_size_in_bytes": size,
-                    },
-                }
-            )
-        manifest_name = f"{uuid.uuid4().hex}-m0.avro"
-        manifest_bytes = write_ocf(
-            entries,
-            _manifest_entry_schema(
-                _partition_record_schema(spec_fields, schema)
-            ),
-            extra_meta={
-                "schema": json.dumps(schema),
-                "schema-id": "0",
-                "partition-spec": json.dumps(spec_fields),
-                "partition-spec-id": "0",
-                "format-version": "2",
-                "content": "data",
-            },
-        )
-        manifest_path = os.path.join(meta_dir, manifest_name)
-        pub.put_bytes(manifest_path, manifest_bytes)  # uuid-named, atomic
-
-        # min_sequence_number over the sequences of the entries ACTUALLY
-        # listed (a min over all previous sequences could understate the
-        # true minimum once a file dropped out)
-        entry_seqs = [
-            e["sequence_number"]
-            for e in entries
-            if e["sequence_number"] is not None
-        ] + ([seq] if n_added else [])
-        manifest_rows = [
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": len(manifest_bytes),
-                "partition_spec_id": 0,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": min(entry_seqs) if entry_seqs else seq,
-                "added_snapshot_id": data_snap_id,
-                "added_files_count": n_added,
-                "existing_files_count": len(entries) - n_added,
-                "deleted_files_count": 0,
-                "added_rows_count": added_rows,
-                "existing_rows_count": existing_rows,
-                "deleted_rows_count": 0,
-            }
-        ]
-
-        # ---- equality-delete manifest (only when the merge masks base
-        # rows). Deletes must apply to EVERY live base file, so their
-        # sequence must be strictly newer than every base entry's — but
-        # NOT to the log-winner data file appended alongside (same
-        # sequence: the spec's strictly-older rule exempts it, exactly
-        # the Flink CDC upsert commit shape). When all base entries carry
-        # explicit older sequences (the usual re-sync) the snapshot
-        # sequence already qualifies; when this sync also ADDS base files
-        # (first sync of a log-bearing table, or insert+delete between
-        # syncs) the commit takes the spec's two-snapshot shape — a data
-        # append at `seq` and a delete commit at `seq + 1`, both inside
-        # the one conditional-put metadata version.
-        n_delete_rows = 0
         seq_del = seq + 1 if two_snapshots else seq
+        data_row = _put_manifest(
+            pub, meta_dir, "m0", base_files,
+            snap_a_id if two_snapshots else snapshot_id, seq,
+            schema, spec_fields,
+        )
+        manifest_rows = [data_row]
+        n_delete_rows = n_upd_files = n_upd_rows = 0
         if eqdel is not None:
             key_fid = next(
                 (f["id"] for f in schema["fields"] if f["name"] == KEY_COL),
@@ -751,186 +809,67 @@ def sync_iceberg_metadata(
                     "equality-delete export needs the record-key column "
                     f"{KEY_COL!r} in the exported schema"
                 )
-            delete_files = publish(eqdel, "eqdel")
-            del_entries = [
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,  # inherit: the NEW sequence
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 2,  # EQUALITY_DELETES
-                        "file_path": de["path"],
-                        "file_format": "PARQUET",
-                        "partition": de["partition"],
-                        "record_count": de["rows"],
-                        "file_size_in_bytes": de["size"],
-                        "equality_ids": [key_fid],
-                    },
-                }
-                for de in delete_files
-            ]
-            n_delete_rows = sum(de["rows"] for de in delete_files)
-            del_manifest_name = f"{uuid.uuid4().hex}-m1.avro"
-            del_manifest_bytes = write_ocf(
-                del_entries,
-                _manifest_entry_schema(
-                    _partition_record_schema(spec_fields, schema),
-                    deletes=True,
-                ),
-                extra_meta={
-                    "schema": json.dumps(schema),
-                    "schema-id": "0",
-                    "partition-spec": json.dumps(spec_fields),
-                    "partition-spec-id": "0",
-                    "format-version": "2",
-                    "content": "deletes",
-                },
-            )
-            del_manifest_path = os.path.join(meta_dir, del_manifest_name)
-            pub.put_bytes(del_manifest_path, del_manifest_bytes)
-            manifest_rows.append(
-                {
-                    "manifest_path": del_manifest_path,
-                    "manifest_length": len(del_manifest_bytes),
-                    "partition_spec_id": 0,
-                    "content": 1,  # DELETES
-                    "sequence_number": seq_del,
-                    "min_sequence_number": seq_del,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(del_entries),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": n_delete_rows,
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            )
-
-        # ---- log-winner data manifest: the appended parquet of
-        # log-borne update/insert winners, ADDED at the delete sequence —
-        # strictly newer than every base entry (so it is never masked by
-        # this sync's equality deletes) and exactly the rows the engine's
-        # `_rt` merge serves for those keys.
-        n_upd_rows = 0
-        upd_files: list[dict] = []
+            manifest_rows.append(_put_manifest(
+                pub, meta_dir, "m1", publish(eqdel, "eqdel"), snapshot_id,
+                seq_del, schema, spec_fields, equality_ids=[key_fid],
+            ))
+            n_delete_rows = manifest_rows[-1]["added_rows_count"]
         if new_rows is not None:
-            upd_files = publish(
-                to_physical(new_rows, table._latest_schema()), "morrow"
-            )
-            upd_entries = [
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,  # inherit: the NEW sequence
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 0,  # DATA
-                        "file_path": uf["path"],
-                        "file_format": "PARQUET",
-                        "partition": uf["partition"],
-                        "record_count": uf["rows"],
-                        "file_size_in_bytes": uf["size"],
-                    },
-                }
-                for uf in upd_files
-            ]
-            n_upd_rows = sum(uf["rows"] for uf in upd_files)
-            upd_manifest_name = f"{uuid.uuid4().hex}-m2.avro"
-            upd_manifest_bytes = write_ocf(
-                upd_entries,
-                _manifest_entry_schema(
-                    _partition_record_schema(spec_fields, schema)
-                ),
-                extra_meta={
-                    "schema": json.dumps(schema),
-                    "schema-id": "0",
-                    "partition-spec": json.dumps(spec_fields),
-                    "partition-spec-id": "0",
-                    "format-version": "2",
-                    "content": "data",
-                },
-            )
-            upd_manifest_path = os.path.join(meta_dir, upd_manifest_name)
-            pub.put_bytes(upd_manifest_path, upd_manifest_bytes)
-            manifest_rows.append(
-                {
-                    "manifest_path": upd_manifest_path,
-                    "manifest_length": len(upd_manifest_bytes),
-                    "partition_spec_id": 0,
-                    "content": 0,  # DATA
-                    "sequence_number": seq_del,
-                    "min_sequence_number": seq_del,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(upd_entries),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": n_upd_rows,
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            )
+            # the log-borne update/insert winners: exactly the rows the
+            # engine's `_rt` merge serves for those keys
+            manifest_rows.append(_put_manifest(
+                pub, meta_dir, "m2",
+                publish(to_physical(new_rows, table._latest_schema()), "morrow"),
+                snapshot_id, seq_del, schema, spec_fields,
+            ))
+            n_upd_files = manifest_rows[-1]["added_files_count"]
+            n_upd_rows = manifest_rows[-1]["added_rows_count"]
     finally:
         _unpersist_delta()
 
     # ---- manifest list(s) + snapshot(s)
+    n_added_rows = data_row["added_rows_count"]
     new_snapshots: list[dict] = []
     if two_snapshots:
-        # data append snapshot at `seq`: the data manifest alone,
-        # attributed to snap_a_id in BOTH lists (entries included)
-        list_a_bytes = write_ocf(
-            [manifest_rows[0]],
-            _MANIFEST_FILE_SCHEMA,
-            extra_meta={"format-version": "2"},
-        )
-        list_a_path = os.path.join(
-            meta_dir, f"snap-{snap_a_id}-{uuid.uuid4().hex}.avro"
-        )
-        pub.put_bytes(list_a_path, list_a_bytes)
+        # data append snapshot at `seq`: the data manifest alone
         new_snapshots.append(
             {
                 "snapshot-id": snap_a_id,
                 "sequence-number": seq,
                 "timestamp-ms": now_ms,
-                "manifest-list": list_a_path,
+                "manifest-list": _put_manifest_list(
+                    pub, meta_dir, snap_a_id, [data_row]
+                ),
                 "summary": {
                     "operation": "overwrite" if prev_meta else "append",
                     "added-data-files": str(n_added),
-                    "added-records": str(added_rows),
+                    "added-records": str(n_added_rows),
                 },
                 "schema-id": 0,
             }
         )
-    snap_name = f"snap-{snapshot_id}-{uuid.uuid4().hex}.avro"
-    list_bytes = write_ocf(
-        manifest_rows,
-        _MANIFEST_FILE_SCHEMA,
-        extra_meta={"format-version": "2"},
-    )
-    list_path = os.path.join(meta_dir, snap_name)
-    pub.put_bytes(list_path, list_bytes)  # uuid-named, atomic
-
-    # ---- table metadata
     new_snapshots.append(
         {
             "snapshot-id": snapshot_id,
-            "sequence-number": seq_del if two_snapshots else seq,
+            "sequence-number": seq_del,
             "timestamp-ms": now_ms,
-            "manifest-list": list_path,
+            "manifest-list": _put_manifest_list(
+                pub, meta_dir, snapshot_id, manifest_rows
+            ),
             "summary": {
                 "operation": (
                     ("overwrite" if n_upd_rows else "delete")
                     if two_snapshots
                     else ("overwrite" if prev_meta else "append")
                 ),
-                # base-file adds belong to snapshot A under the
+                # base-file adds belong to the append snapshot under the
                 # two-snapshot shape; the log-winner file is this
                 # snapshot's own add either way
                 "added-data-files": str(
-                    len(upd_files) + (0 if two_snapshots else n_added)
+                    n_upd_files + (0 if two_snapshots else n_added)
                 ),
                 "added-records": str(
-                    n_upd_rows + (0 if two_snapshots else added_rows)
+                    n_upd_rows + (0 if two_snapshots else n_added_rows)
                 ),
                 **(
                     {"added-equality-deletes": str(n_delete_rows)}
@@ -941,6 +880,8 @@ def sync_iceberg_metadata(
             "schema-id": 0,
         }
     )
+
+    # ---- table metadata
     snapshots = (prev_meta or {}).get("snapshots", []) + new_snapshots
     snapshot_log = (prev_meta or {}).get("snapshot-log", []) + [
         {"timestamp-ms": now_ms, "snapshot-id": s["snapshot-id"]}
@@ -995,35 +936,14 @@ def sync_iceberg_metadata(
             [
                 {
                     "timestamp-ms": (prev_meta or {}).get("last-updated-ms"),
-                    "metadata-file": os.path.join(
-                        meta_dir, f"v{version}.metadata.json"
-                    ),
+                    "metadata-file": _meta_file(meta_dir, version),
                 }
             ]
             if prev_meta
             else []
         ),
     }
-    new_version = version + 1
-    # The COMMIT POINT: `PutObject + If-None-Match: *` through the
-    # store seam — exactly one syncer can own version N, and readers
-    # never observe a torn metadata.json. The manifests above are
-    # uuid-named (collision-free) so only the version file needs the
-    # conditional create.
-    if not pub.put_json(
-        os.path.join(meta_dir, f"v{new_version}.metadata.json"), meta,
-        if_none_match=True,
-    ):
-        raise FileExistsError(
-            f"iceberg metadata v{new_version} already published by a "
-            "concurrent syncer"
-        )
-    # version-hint is a HINT (HadoopTables convention): an atomic
-    # full-object put, so a racing reader sees either the old or the
-    # new version number, never a truncated file.
-    pub.put_text(os.path.join(meta_dir, "version-hint.text"),
-                 str(new_version))
-    return new_version
+    return _commit_version(pub, meta_dir, version, meta)
 
 
 def expire_iceberg_snapshots(
@@ -1054,24 +974,16 @@ def expire_iceberg_snapshots(
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     meta_dir = _meta_dir(table)
     pub = publisher(table.base_path, store)
-    version = _current_version(meta_dir, pub)
-    while pub.exists(
-        os.path.join(meta_dir, f"v{version + 1}.metadata.json")
-    ):
-        version += 1
-    if not version:
+    _, version, meta = _head(meta_dir, pub)
+    if meta is None:
         raise FileNotFoundError(
             f"no iceberg metadata under {table.base_path}"
         )
-    raw = pub.get_bytes(os.path.join(meta_dir, f"v{version}.metadata.json"))
-    meta = json.loads(raw)
     snapshots = meta.get("snapshots", [])
-    loc0 = meta.get("location", table.base_path)
     if len(snapshots) <= keep_last:
         # nothing to expire from history — still sweep orphans
         sweep_owned(
-            table, pub, _iceberg_owned,
-            _iceberg_refs(pub, table.base_path, loc0, snapshots),
+            table, pub, _iceberg_owned, _iceberg_refs(pub, meta, snapshots),
             now_ms, orphan_grace_ms,
         )
         return version
@@ -1082,9 +994,8 @@ def expire_iceberg_snapshots(
             s for s in snapshots if s["snapshot-id"] == current_id
         ] + keep
     keep_ids = {s["snapshot-id"] for s in keep}
-    loc = meta.get("location", table.base_path)
 
-    kept_refs = _iceberg_refs(pub, table.base_path, loc, keep)
+    kept_refs = _iceberg_refs(pub, meta, keep)
     meta = dict(meta)
     meta["snapshots"] = keep
     meta["snapshot-log"] = [
@@ -1094,24 +1005,9 @@ def expire_iceberg_snapshots(
     ]
     meta["last-updated-ms"] = now_ms
     meta["metadata-log"] = meta.get("metadata-log", []) + [
-        {
-            "timestamp-ms": now_ms,
-            "metadata-file": os.path.join(
-                meta_dir, f"v{version}.metadata.json"
-            ),
-        }
+        {"timestamp-ms": now_ms, "metadata-file": _meta_file(meta_dir, version)}
     ]
-    new_version = version + 1
-    if not pub.put_json(
-        os.path.join(meta_dir, f"v{new_version}.metadata.json"), meta,
-        if_none_match=True,
-    ):
-        raise FileExistsError(
-            f"iceberg metadata v{new_version} already published by a "
-            "concurrent writer — re-run expire against the new head"
-        )
-    pub.put_text(os.path.join(meta_dir, "version-hint.text"),
-                 str(new_version))
+    new_version = _commit_version(pub, meta_dir, version, meta)
     # physical removal AFTER the commit point: a crash mid-delete
     # leaves only already-unreferenced garbage, re-collected by the
     # NEXT call's sweep (which keys on on-disk owned objects vs
@@ -1122,30 +1018,12 @@ def expire_iceberg_snapshots(
     return new_version
 
 
-def _iceberg_refs(pub: Publisher, base_path: str, loc: str, snaps) -> set[str]:
+def _iceberg_refs(pub: Publisher, meta: dict, snaps) -> set[str]:
     """Relative keys of every metadata/data object the given snapshots
     reach (manifest lists -> manifests -> listed files)."""
-    out: set[str] = set()
-    for s in snaps:
-        ml = _rebase(s["manifest-list"], loc, base_path)
-        out.add(pub.rel(ml))
-        mraw = pub.get_bytes(ml)
-        if mraw is None:
-            continue
-        _, manifests = read_ocf(mraw)
-        for m in manifests:
-            mp = _rebase(m["manifest_path"], loc, base_path)
-            out.add(pub.rel(mp))
-            eraw = pub.get_bytes(mp)
-            if eraw is None:
-                continue
-            _, entries = read_ocf(eraw)
-            for e in entries:
-                fp = _rebase(
-                    e["data_file"]["file_path"], loc, base_path
-                )
-                out.add(pub.rel(fp))
-    return out
+    seen: set[str] = set()
+    files = {path for path, _, _ in _walk(pub, meta, pub.base, snaps, seen)}
+    return {pub.rel(p) for p in seen | files}
 
 
 def _iceberg_owned(rel: str) -> bool:
@@ -1157,6 +1035,21 @@ def _iceberg_owned(rel: str) -> bool:
     )
 
 
+def iceberg_version(table_path: str) -> int:
+    """The metadata version an external HadoopTables reader resolves
+    for `table_path` (hint, then forward probe); 0 when there is none.
+    A cheap change token: it moves with every sync and expire."""
+    return _head_version(os.path.join(table_path, _META_DIR), LocalFiles())[1]
+
+
+def _external_head(table_path: str) -> dict:
+    """The head metadata, read as an external engine reads it."""
+    _, _, meta = _head(os.path.join(table_path, _META_DIR), LocalFiles())
+    if meta is None:
+        raise FileNotFoundError(f"no iceberg metadata under {table_path}")
+    return meta
+
+
 def iceberg_pruned_files(
     table_path: str, partition_predicate: dict | None = None
 ) -> list[str]:
@@ -1165,50 +1058,27 @@ def iceberg_pruned_files(
     manifest-entry `partition` structs alone (typed values), no footer
     reads. Raises when a predicate column is not in the current
     partition spec (an engine would fall back to scanning)."""
-    meta_dir = os.path.join(table_path, _META_DIR)
-    version = _current_version(meta_dir)
-    if not version:
-        raise FileNotFoundError(f"no iceberg metadata under {table_path}")
-    with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as fh:
-        meta = json.load(fh)
+    meta = _external_head(table_path)
     spec = next(
         s for s in meta["partition-specs"]
         if s["spec-id"] == meta["default-spec-id"]
     )
     declared = {f["name"] for f in spec["fields"]}
-    for col in partition_predicate or {}:
+    predicate = partition_predicate or {}
+    for col in predicate:
         if col not in declared:
             raise ValueError(
                 f"{col!r} is not in the partition spec {sorted(declared)}"
             )
-    current = next(
-        s
-        for s in meta["snapshots"]
-        if s["snapshot-id"] == meta["current-snapshot-id"]
+    return sorted(
+        path
+        # delete manifests are never scanned
+        for path, _, df in _walk(LocalFiles(), meta, table_path, content=0)
+        if all(
+            (df.get("partition") or {}).get(c) == v
+            for c, v in predicate.items()
+        )
     )
-    loc = meta.get("location", table_path)
-    with open(_rebase(current["manifest-list"], loc, table_path), "rb") as fh:
-        _, manifests = read_ocf(fh.read())
-    out: list[str] = []
-    for m in manifests:
-        if m.get("content", 0) != 0:
-            continue  # delete manifests list no scannable data files
-        with open(_rebase(m["manifest_path"], loc, table_path), "rb") as fh:
-            _, entries = read_ocf(fh.read())
-        for e in entries:
-            if e["status"] not in (0, 1):  # EXISTING / ADDED
-                continue
-            if e["data_file"].get("content", 0) != 0:
-                continue
-            pv = e["data_file"].get("partition") or {}
-            if all(
-                pv.get(c) == v
-                for c, v in (partition_predicate or {}).items()
-            ):
-                out.append(
-                    _rebase(e["data_file"]["file_path"], loc, table_path)
-                )
-    return sorted(out)
 
 
 def read_iceberg_snapshot(spark, table_path: str):
@@ -1216,43 +1086,20 @@ def read_iceberg_snapshot(spark, table_path: str):
     snapshot → manifest list → manifest(s) → parquet scan. The same
     walk any Iceberg client performs; used by tests and by engines
     without an Iceberg runtime."""
-    meta_dir = os.path.join(table_path, _META_DIR)
-    version = _current_version(meta_dir)
-    if not version:
-        raise FileNotFoundError(f"no iceberg metadata under {table_path}")
-    with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as fh:
-        meta = json.load(fh)
-    current = next(
-        s
-        for s in meta["snapshots"]
-        if s["snapshot-id"] == meta["current-snapshot-id"]
-    )
-    loc = meta.get("location", table_path)
-    with open(_rebase(current["manifest-list"], loc, table_path), "rb") as fh:
-        _, manifests = read_ocf(fh.read())
+    meta = _external_head(table_path)
     # (path, effective data sequence number) per data file; equality
     # delete files carry (path, sequence, equality field ids). A
     # delete applies to data files whose sequence is STRICTLY older
     # (spec §scan-planning).
     data_files: list[tuple[str, int]] = []
     eq_deletes: list[tuple[str, int, list[int]]] = []
-    for m in manifests:
-        with open(_rebase(m["manifest_path"], loc, table_path), "rb") as fh:
-            _, entries = read_ocf(fh.read())
-        for e in entries:
-            if e["status"] not in (0, 1):  # EXISTING / ADDED
-                continue
-            eff = e.get("sequence_number")
-            if eff is None:
-                eff = m["sequence_number"]
-            df_rec = e["data_file"]
-            fpath = _rebase(df_rec["file_path"], loc, table_path)
-            if df_rec.get("content", 0) == 2:
-                eq_deletes.append(
-                    (fpath, eff, list(df_rec.get("equality_ids") or []))
-                )
-            elif df_rec.get("content", 0) == 0:
-                data_files.append((fpath, eff))
+    for fpath, eff, df_rec in _walk(LocalFiles(), meta, table_path):
+        if df_rec.get("content", 0) == 2:
+            eq_deletes.append(
+                (fpath, eff, list(df_rec.get("equality_ids") or []))
+            )
+        elif df_rec.get("content", 0) == 0:
+            data_files.append((fpath, eff))
     paths = [p for p, _ in data_files]
     # Read WITH the metadata schema, like an Iceberg client: fields
     # resolve by name, through the name mapping's PHYSICAL name when the

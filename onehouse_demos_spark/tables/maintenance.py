@@ -18,10 +18,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import functions as F
 
 from onehouse_demos_spark.tables.table import (
-    COMMIT_COL,
     DELETED_COL,
     HIVE_DEFAULT_PARTITION,
-    KEY_COL,
     LakehouseTable,
 )
 from onehouse_demos_spark.tables.timeline import FileMeta
@@ -212,9 +210,9 @@ def run_compaction(
             merged.schema,
             extra={"compacted_partitions": plan.partitions},
         )
-        if request_to_clear is not None:
-            table.timeline.lock_provider.unlock(request_to_clear)
-        return done
+    if request_to_clear is not None:
+        table.timeline.lock_provider.unlock(request_to_clear)
+    return done
 
 
 _Z_BITS = 16
@@ -410,9 +408,9 @@ def run_clustering(
             clustered.schema,
             extra={"sort_columns": sort_columns, "strategy": strategy},
         )
-        if request_to_clear is not None:
-            table.timeline.lock_provider.unlock(request_to_clear)
-        return done
+    if request_to_clear is not None:
+        table.timeline.lock_provider.unlock(request_to_clear)
+    return done
 
 
 def _rows_by_bucket(files: list[FileMeta]) -> dict[int, int]:
@@ -444,11 +442,13 @@ def _rebucket(
     or a concurrent reader, between the commit and the
     `table_config.json` rewrite therefore never pairs the old layout
     with the new files; the sidecar is only a cache, healed on next
-    open. If the write fails, the in-memory layout rolls back."""
+    open. If the write fails, the in-memory layout rolls back; once
+    the commit is published it stands, and a failing sidecar rewrite
+    only reaches the caller."""
     old = getattr(table.config, attr)
-    with table._writing("replacecommit", planned_from) as w:
-        setattr(table.config, attr, value)  # routes the rewrite
-        try:
+    try:
+        with table._writing("replacecommit", planned_from) as w:
+            setattr(table.config, attr, value)  # routes the rewrite
             adds, schema = [], None
             if files:
                 df = table._read_files(files)
@@ -460,11 +460,11 @@ def _rebucket(
             done = w.commit(
                 operation, adds, [f.path for f in files], schema, extra
             )
-            table._rewrite_config()
-            return done
-        except Exception:
-            setattr(table.config, attr, old)
-            raise
+    except Exception:
+        setattr(table.config, attr, old)
+        raise
+    table._rewrite_config()
+    return done
 
 
 def split_bucket(table: LakehouseTable, bucket: int | None = None):

@@ -76,6 +76,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from onehouse_demos_spark.functions.hashing import md5_60, md5_60_py
 from onehouse_demos_spark.tables.locks import (
     FSObjectStoreEmulator,
     ObjectStoreClient,
@@ -165,22 +166,13 @@ class RecordIndex:
     # ------------------------------------------------------------ maintain
 
     def _bucket_expr(self, key_col):
-        # Portable 60-bit md5-prefix hash (same construction as the
-        # operators' _hash_mod): bit-identical on the JVM and in
+        # The portable 60-bit hash is bit-identical on the JVM and in
         # _bucket_py below, which is what lets small commits index on
         # the driver without a Spark job.
-        return (
-            F.conv(F.substring(F.md5(key_col), 1, 15), 16, 10).cast("long")
-            % self.buckets
-        )
+        return md5_60(key_col) % self.buckets
 
     def _bucket_py(self, value: str) -> int:
-        import hashlib
-
-        return (
-            int(hashlib.md5(value.encode("utf-8")).hexdigest()[:15], 16)
-            % self.buckets
-        )
+        return md5_60_py(value) % self.buckets
 
     #: Optional Column synthesizing the indexed key when a file lacks
     #: the key column entirely (metadata-only bootstrapped files carry
@@ -623,11 +615,7 @@ class RecordIndex:
             # re-clustered by bucket.
             paths, _total = self._leaf_files(manifests)
             df = spark.read.parquet(*paths)
-            b_from_path = (
-                F.conv(F.substring(F.md5(F.col(VAL_COL)), 1, 15), 16, 10)
-                .cast("long") % self.buckets
-            )
-            df = df.withColumn(BUCKET_COL, b_from_path)
+            df = df.withColumn(BUCKET_COL, self._bucket_expr(F.col(VAL_COL)))
             if live_paths:
                 live = spark.createDataFrame(
                     [(p,) for p in sorted(live_paths)], f"{FILE_COL} string"

@@ -28,8 +28,8 @@ from urllib.parse import unquote
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
+from onehouse_demos_spark.functions.hashing import md5_60
 from onehouse_demos_spark.session import tiny_scope
 from onehouse_demos_spark.tables.manifest import Manifest
 from onehouse_demos_spark.tables.timeline import FileMeta, Instant, Timeline
@@ -939,7 +939,7 @@ class LakehouseTable:
         the expression stays codegen-friendly as buckets multiply."""
         n = self.config.bucket_index_buckets
         c = F.col(KEY_COL) if key_col is None else key_col
-        h = F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+        h = md5_60(c)
         if self.config.bucket_engine == "consistent":
             slot = (h % (1 << self.SLOT_BITS)).cast("int")
             by_len: dict[int, list[int]] = {}

@@ -277,7 +277,8 @@ def test_training_equals_duckdb_kmeans_reference(spark):
         _subvec_cte,
     )
     from onehouse_demos_spark.operators.similarity import (
-        train_ivf_centroids,
+        _collect_vectors,
+        _lloyd,
         train_pq_codebooks,
     )
 
@@ -304,7 +305,7 @@ def test_training_equals_duckdb_kmeans_reference(spark):
         + _kmeans_ctes("kc", "src", 8, 3),
         "kc_c3",
     )
-    assert train_ivf_centroids(emb, k=8, iters=3) == ivf[0]
+    assert _lloyd(*_collect_vectors(emb), 8, 3).tolist() == ivf[0]
     pq_books = duck(
         _subvec_cte("sub_src", "vsrc", 8)
         + ",\n"

@@ -421,3 +421,39 @@ def test_secondary_index_over_bootstrap_files(spark, tmp_base):
     t.create_secondary_index("v")
     df = t.snapshot_filtered([("v", "=", "v7")])
     assert {r.id for r in df.collect()} == {7}
+
+
+def test_iceberg_resync_keeps_bootstrap_files_existing(spark, tmp_base):
+    """Bootstrapped files live outside the table and are exported under
+    their absolute paths. A re-sync after a commit must list them as
+    EXISTING with the sequence number of their first export, and only
+    the newly written files as ADDED."""
+    import json
+
+    from onehouse_demos_spark.sources.avro_codec import read_ocf
+    from onehouse_demos_spark.tables.iceberg_export import (
+        sync_iceberg_metadata,
+    )
+
+    t, src = _bootstrapped(spark, tmp_base)
+    assert sync_iceberg_metadata(t, now_ms=1_700_000_000_000) == 1
+    t.insert(
+        spark.createDataFrame([(10_000, "new", 1)], "id int, v string, grp int")
+    )
+    assert sync_iceberg_metadata(t, now_ms=1_700_000_100_000) == 2
+    meta_dir = os.path.join(t.base_path, "metadata")
+    meta = json.load(open(os.path.join(meta_dir, "v2.metadata.json")))
+    snap = meta["snapshots"][-1]
+    _, manifests = read_ocf(open(snap["manifest-list"], "rb").read())
+    entries = [
+        e
+        for m in manifests
+        for e in read_ocf(open(m["manifest_path"], "rb").read())[1]
+    ]
+    boot = [e for e in entries if e["data_file"]["file_path"].startswith(src)]
+    new = [e for e in entries if e not in boot]
+    assert len(boot) == 4 and new
+    assert all(e["status"] == 0 and e["sequence_number"] == 1 for e in boot)
+    assert all(e["status"] == 1 for e in new)
+    assert sum(m["added_files_count"] for m in manifests) == len(new)
+    assert snap["summary"]["added-data-files"] == str(len(new))

@@ -476,6 +476,7 @@ def test_checkpoint_tombstones_survive_clean_and_expire(spark, tmp_base):
         clean_delta_log,
         write_delta_checkpoint,
     )
+    from onehouse_demos_spark.tables.object_publish import LocalFiles
 
     t = _mk(spark, tmp_base)
     sync_delta_log(t, now_ms=1_700_000_000_000)
@@ -484,7 +485,7 @@ def test_checkpoint_tombstones_survive_clean_and_expire(spark, tmp_base):
     write_delta_checkpoint(t, now_ms=1_700_000_200_000)
     clean_delta_log(t)
     log_dir = os.path.join(t.base_path, "_delta_log")
-    _, _, _, tombs = _read_log_state(log_dir)
+    _, _, _, tombs = _read_log_state(log_dir, LocalFiles())
     assert tombs, "tombstones must survive checkpoint + clean"
     # next checkpoint far in the future: tombstones expired out
     t.upsert(spark.createDataFrame([("k03", 2, "GOOG", 6.0)], DDL))
@@ -497,7 +498,7 @@ def test_checkpoint_tombstones_survive_clean_and_expire(spark, tmp_base):
     old = {r["remove"]["path"] for r in tbl if r["remove"] is not None}
     # the 8-day-old tombstones from the first upsert are gone; only the
     # fresh ones (same timestamp as the checkpoint) may remain
-    _, _, _, tombs2 = _read_log_state(log_dir)
+    _, _, _, tombs2 = _read_log_state(log_dir, LocalFiles())
     for p, rm in tombs2.items():
         if p in old:
             assert rm["deletionTimestamp"] >= 1_700_000_300_000

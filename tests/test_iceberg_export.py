@@ -374,3 +374,34 @@ def test_external_iceberg_runtime_probe(spark, tmp_base):
             "ORDER BY key, ver", {"f": files}
         ).fetchall()
         assert rows == _rows(t.snapshot())
+
+
+def test_missing_head_manifest_list_fails_sync_and_expire(spark, tmp_base):
+    """A manifest list the head snapshot references but that is gone
+    makes the writer's walk raise: sync publishes no new version, and
+    expire — on its history path and on its orphan-only sweep path —
+    publishes nothing and deletes nothing, rather than sweeping against
+    a partial reference set."""
+    from onehouse_demos_spark.tables.iceberg_export import (
+        expire_iceberg_snapshots,
+    )
+
+    t = _mk(spark, tmp_base)
+    sync_iceberg_metadata(t, now_ms=1_700_000_000_000)
+    t.upsert(spark.createDataFrame([("k01", 2, "GOOG", 9.0)], DDL))
+    assert sync_iceberg_metadata(t, now_ms=1_700_000_100_000) == 2
+    meta_dir = os.path.join(t.base_path, "metadata")
+    meta = json.load(open(os.path.join(meta_dir, "v2.metadata.json")))
+    mlist = meta["snapshots"][-1]["manifest-list"]
+    os.remove(mlist)
+    before = sorted(os.listdir(meta_dir))
+    t.upsert(spark.createDataFrame([("k03", 2, "GOOG", 8.0)], DDL))
+    with pytest.raises(FileNotFoundError):
+        sync_iceberg_metadata(t, now_ms=1_700_000_200_000)
+    for keep_last in (1, 2):  # history path, orphan-only sweep path
+        with pytest.raises(FileNotFoundError):
+            expire_iceberg_snapshots(
+                t, keep_last=keep_last, now_ms=1_800_000_000_000
+            )
+    assert sorted(os.listdir(meta_dir)) == before
+    assert open(os.path.join(meta_dir, "version-hint.text")).read() == "2"

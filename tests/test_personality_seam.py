@@ -12,7 +12,7 @@ for the other two xTable legs:
   atomic external visibility (exactly pre- or post-sync, never torn)
   and healthy-retry convergence — including Iceberg's lagging-hint
   crash (metadata.json published, hint put died), which the writer
-  recovers from by probing forward to the true head;
+  and the external readers both probe past to the true head;
 - clean_delta_log's deletes flowing through the seam.
 """
 
@@ -222,12 +222,64 @@ def test_crash_sweep_every_put_is_atomic(spark, tmp_base, fmt):
             f"  pre={sorted(pre)}\n  post={sorted(post)}\n"
             f"  seen={sorted(seen)}"
         )
+        if fmt == "iceberg" and n == total_puts:
+            # the hint put follows the metadata commit: the version is
+            # published, and readers probe past the stale hint to it
+            assert seen == post, f"lagging hint hides v2: {sorted(seen)}"
         # healthy retry converges
         sync(ct, **kw)
         assert reader(spark, ct.base_path) == post, (
             f"{fmt}: crash at #{n}: no convergence"
         )
         shutil.rmtree(clone, ignore_errors=True)
+
+
+class HintLagStore(TreeFSObjectStoreEmulator):
+    """Dies at the `version-hint.text` put, after the metadata.json
+    commit point has published the new version."""
+
+    def put_object(self, key, data, if_none_match=False):
+        if key.endswith("version-hint.text"):
+            raise RuntimeError("simulated crash at the hint put")
+        return super().put_object(key, data, if_none_match=if_none_match)
+
+
+def test_readers_find_the_head_past_a_lagging_hint(spark, tmp_base):
+    """A sync that dies at the hint put has committed its version. The
+    reference readers and a SQL registration resolve the same head the
+    writer does, not the stale hint."""
+    from onehouse_demos_spark.sql import Engine
+    from onehouse_demos_spark.tables.iceberg_export import (
+        iceberg_pruned_files,
+    )
+
+    t = _build(spark, tmp_base, "ice_lag")
+    sync_iceberg_metadata(t)
+    eng = Engine(spark, os.path.join(tmp_base, "wh_lag"))
+    eng.sql(f"CREATE TABLE ice_lag USING iceberg LOCATION '{t.base_path}'")
+
+    def sql_rows():
+        return {(r.key, r.px)
+                for r in eng.sql("SELECT key, px FROM ice_lag").collect()}
+
+    assert sql_rows() == {(k, px) for k, _, _, px in ROWS1}
+    t.upsert(spark.createDataFrame(ROWS2, DDL))
+    with pytest.raises(RuntimeError, match="hint put"):
+        sync_iceberg_metadata(t, store=HintLagStore(t.base_path))
+    meta_dir = os.path.join(t.base_path, "metadata")
+    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
+        assert fh.read().strip() == "1"
+    assert os.path.exists(os.path.join(meta_dir, "v2.metadata.json"))
+
+    engine = {(r.key, r.px) for r in t.snapshot().collect()}
+    assert engine == POST
+    assert _ice_rows(spark, t.base_path) == engine
+    live = sorted(
+        os.path.join(t.base_path, f.path)
+        for f in t.manifest.live_files(include_logs=False)
+    )
+    assert iceberg_pruned_files(t.base_path) == live
+    assert sql_rows() == engine
 
 
 def test_clean_delta_log_deletes_through_seam(spark, tmp_base):
@@ -254,13 +306,16 @@ def test_duckdb_reads_seam_materialized_delta(spark, tmp_base):
     from urllib.parse import unquote
 
     from onehouse_demos_spark.tables.delta_export import _read_log_state
+    from onehouse_demos_spark.tables.object_publish import LocalFiles
 
     t = _build(spark, tmp_base, "delta_duck")
     spy = SpyTreeStore(t.base_path)
     sync_delta_log(t, store=spy)
     t.upsert(spark.createDataFrame(ROWS2, DDL))
     sync_delta_log(t, store=spy)
-    _, live, _, _ = _read_log_state(os.path.join(t.base_path, "_delta_log"))
+    _, live, _, _ = _read_log_state(
+        os.path.join(t.base_path, "_delta_log"), LocalFiles()
+    )
     files = [os.path.join(t.base_path, unquote(p)) for p in live]
     con = duckdb.connect()
     try:

@@ -24,8 +24,9 @@ from pyspark.sql import functions as F
 from onehouse_demos_spark import LakehouseTable, TableConfig
 from onehouse_demos_spark.operators.ann_index import AnnIndex
 from onehouse_demos_spark.operators.similarity import (
+    _collect_vectors,
+    _lloyd,
     load_emb,
-    train_ivf_centroids,
     train_pq_codebooks,
 )
 from onehouse_demos_spark.session import TINY_CONFS, is_tiny, tiny_scope
@@ -114,9 +115,9 @@ def test_training_identical_on_tiny_and_non_tiny_paths(spark):
     emb = load_emb(spark, SF_DIR)
     wide = emb.repartition(par)
     assert is_tiny(emb) and not is_tiny(wide)
-    assert train_ivf_centroids(emb, k=4, iters=2) == train_ivf_centroids(
-        wide, k=4, iters=2
-    )
+    assert _lloyd(*_collect_vectors(emb), 4, 2).tolist() == _lloyd(
+        *_collect_vectors(wide), 4, 2
+    ).tolist()
     assert train_pq_codebooks(emb, m=4, k=4, iters=2) == train_pq_codebooks(
         wide, m=4, k=4, iters=2
     )

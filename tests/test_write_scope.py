@@ -172,6 +172,30 @@ def test_failed_publish_aborts_cleanly(spark, tmp_base, monkeypatch, name):
     assert t.timeline.lock_provider.list(".inflight") == []
 
 
+def test_post_publish_failure_keeps_the_published_layout(
+    spark, tmp_base, monkeypatch
+):
+    """A step that runs after the publish (the `table_config.json`
+    rewrite of a bucket resize) runs outside the write scope: its error
+    reaches the caller, but the instant stays published and the
+    in-memory layout stays the one the timeline holds."""
+    t = _table(spark, tmp_base, bucket_index_buckets=2)
+    before = len(t.timeline.instants())
+
+    def boom(*_a, **_k):
+        raise _Boom("sidecar rewrite failed")
+
+    monkeypatch.setattr(t, "_rewrite_config", boom)
+    with pytest.raises(_Boom):
+        M.resize_buckets(t, 4)
+    instants = t.timeline.instants()
+    assert len(instants) == before + 1
+    assert instants[-1].operation == "resize_buckets"
+    assert instants[-1].extra["buckets_after"] == 4
+    assert t.config.bucket_index_buckets == 4
+    assert t.timeline.lock_provider.list(".inflight") == []
+
+
 #: The only library call sites of the instant lifecycle outside
 #: timeline.py: the scope reserves and releases, its handle commits.
 _LIFECYCLE_ALLOWED = {
