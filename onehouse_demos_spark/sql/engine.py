@@ -13,6 +13,10 @@ Maps the reference's SQL surface onto LakehouseTable operations:
 - `DELETE FROM t [WHERE p]` (reference M4 `SparkSqlDeleteNode`)
 - `MERGE INTO t USING s ON cond WHEN MATCHED ... WHEN NOT MATCHED ...`
   (reference M6, declared via `SparkSqlMergeNode`)
+- `CALL proc(name => value, ...)`: one procedure registry
+  (`_PROCEDURES`); the maintenance statements (COMPACT TABLE, CLUSTER
+  TABLE, SAVEPOINT TABLE, RESTORE TABLE, VACUUM, SHOW INDEXES,
+  DESCRIBE HISTORY) run the handler of the procedure they alias
 - anything else: managed tables are registered as temp views and the
   statement passes through to Spark SQL unchanged (scan / filter /
   join / agg / SHOW ... — reference §2.3), so Catalyst owns the
@@ -33,6 +37,8 @@ from __future__ import annotations
 
 import os
 import re
+from functools import partial
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,12 +60,15 @@ from onehouse_demos_spark.sql.predicate import (
     tokenize,
     validate_expression,
 )
-from onehouse_demos_spark.tables.table import LakehouseTable, TableConfig, counted
-
-#: table-name pattern: dotted words, each part optionally backticked
-#: (masked identifier contents are word chars, so this matches the
-#: MASKED text; the span then slices the original, quotes included).
-_NAME = r"[\w.`]+"
+from onehouse_demos_spark.tables import maintenance
+from onehouse_demos_spark.tables.table import (
+    META_COLS,
+    PP_COL,
+    LakehouseTable,
+    TableConfig,
+    counted,
+)
+from onehouse_demos_spark.tables.timeline import Timeline
 
 _CREATE_RE = re.compile(
     r"^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.`]+)\s*"
@@ -98,7 +107,7 @@ _ALTER_RENAME_RE = re.compile(
 _ALTER_TYPE_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?P<name>[\w.`]+)\s+"
     r"(?:ALTER|CHANGE)\s+COLUMN\s+(?P<col>[\w`]+)\s+TYPE\s+"
-    r"(?P<type>.+?)\s*$",
+    r"(?P<dtype>.+?)\s*$",
     re.IGNORECASE,
 )
 _ALTER_DROP_RE = re.compile(
@@ -201,19 +210,194 @@ _CALL_RE = re.compile(
 #: Header only — the ON condition / WHEN clause boundaries are found
 #: by the paren- and CASE/END-aware splitter (sql/predicate.py), so a
 #: `CASE WHEN ... THEN ... END` inside a condition never terminates
-#: the clause (VERDICT r4 ask #7; the lazy-regex split did).
+#: the clause (a lazy regex split would).
 _MERGE_RE = re.compile(
-    r"^\s*MERGE\s+INTO\s+(?P<target>[\w.`]+)(?:\s+(?:AS\s+)?(?P<talias>\w+))?\s+"
+    r"^\s*MERGE\s+INTO\s+(?P<name>[\w.`]+)(?:\s+(?:AS\s+)?(?P<talias>\w+))?\s+"
     r"USING\s+(?P<source>[\w.`]+|\(.+?\))(?:\s+(?:AS\s+)?(?P<salias>\w+))?\s+"
     r"ON\s+(?P<rest>.+)$",
     re.IGNORECASE | re.DOTALL,
 )
-#: TBLPROPERTIES key (lowercased) -> pre-commit validator type.
-_VALIDATOR_PROP_TYPES = {
-    "precommitequalitysql": "equality",
-    "precommitinequalitysql": "inequality",
-    "precommitsingleresultsql": "single_result",
-}
+
+
+def _items(text: str, sep: str = ",") -> list[str]:
+    return [x.strip() for x in text.split(sep) if x.strip()]
+
+
+def _opt(value) -> str:
+    return "" if value is None else str(value)
+
+
+def _truthy(value: str) -> bool:
+    """The one boolean rule of TBLPROPERTIES and CALL arguments."""
+    return value.strip().lower() in ("true", "1", "yes")
+
+
+def _unquote(text: str) -> str:
+    """A quoted SQL literal's content with its doubled quote unescaped
+    ('it''s' -> it's); unquoted text stripped, as is."""
+    text = text.strip()
+    if len(text) >= 2 and text[0] == text[-1] and text[0] in "'\"":
+        return text[1:-1].replace(text[0] * 2, text[0])
+    return text
+
+
+def _parse_pairs(text: str | None) -> dict[str, str]:
+    """The `key = value` list of TBLPROPERTIES and the `name => value`
+    list of CALL, one parser: comma-separated at the top level, keys
+    lowercased, keys and values unquoted. A bare value is keyed by its
+    position ('0', '1', ...). `=`, `=>` or `,` inside a quoted value
+    never splits."""
+    out: dict[str, str] = {}
+    pos = 0
+    for part in _split_top_level(text or ""):
+        if not part.strip():
+            continue
+        split = split_once_top_level(part, "=")
+        if split is None:
+            out[str(pos)] = _unquote(part)
+            pos += 1
+        else:
+            out[_unquote(split[0]).lower()] = _unquote(split[1].lstrip(">"))
+    return out
+
+
+def _payload(value: str) -> str:
+    if value not in ("overwrite", "partial_update"):
+        raise ValueError(f"unknown payload {value!r}")
+    return value
+
+
+def _parse_validators(typ: str, text: str) -> list[dict]:
+    """Pre-commit validators of one type from their TBLPROPERTIES value
+    (Hudi hoodie.precommit.validators formats): ';'-separated SQL with
+    <TABLE> placeholders; a single_result entry is 'query#expected'."""
+    out: list[dict] = []
+    for q in _items(text, ";"):
+        if typ != "single_result":
+            out.append(dict(type=typ, query=q))
+        elif "#" in q:
+            query, expected = q.rsplit("#", 1)
+            out.append(
+                dict(type=typ, query=query.strip(), expected=expected.strip())
+            )
+    return out
+
+
+def _render_validators(validators: list[dict]) -> str:
+    return ";".join(
+        f"{v['query']}#{v['expected']}" if "expected" in v else v["query"]
+        for v in validators
+    )
+
+
+class _Prop(NamedTuple):
+    """One TBLPROPERTIES entry: its name as SHOW CREATE TABLE emits it
+    (matched case-insensitively), the TableConfig field it sets, how
+    its value parses and renders, and whether ALTER TABLE ... SET
+    TBLPROPERTIES may change it. The three validator entries share
+    `pre_commit_validators`, each owning the validators of its type."""
+
+    sql: str
+    field: str
+    parse: Callable[[str], object] = str
+    render: Callable[[object], str] = str
+    mutable: bool = False
+    validator: str | None = None
+
+    @property
+    def key(self) -> str:
+        return self.sql.lower()
+
+    def owns(self, validator: dict) -> bool:
+        # setting the entry's type leaves a validator of that type as is
+        return dict(validator, type=self.validator) == validator
+
+    def get(self, cfg: TableConfig):
+        value = getattr(cfg, self.field)
+        if self.validator is None:
+            return value
+        return [v for v in value if self.owns(v)]
+
+    def set(self, cfg: TableConfig, value) -> None:
+        if self.validator is not None:
+            others = [v for v in getattr(cfg, self.field) if not self.owns(v)]
+            value = others + value
+        setattr(cfg, self.field, value)
+
+
+def _validator_prop(sql: str, typ: str) -> _Prop:
+    return _Prop(
+        sql,
+        "pre_commit_validators",
+        partial(_parse_validators, typ),
+        _render_validators,
+        mutable=True,
+        validator=typ,
+    )
+
+
+_PRIMARY_KEY = _Prop("primaryKey", "record_key", _items, ",".join)
+
+#: The TBLPROPERTIES <-> TableConfig mapping. CREATE TABLE, SHOW CREATE
+#: TABLE, ALTER TABLE ... SET TBLPROPERTIES and CALL
+#: show_table_properties all read it; SHOW CREATE emits the entries
+#: that differ from their default, in this order.
+_PROPS = (
+    _PRIMARY_KEY,
+    _Prop("preCombineField", "precombine", render=_opt),
+    _Prop("type", "table_type"),
+    # Hudi payload-class analog (overwrite | partial_update)
+    _Prop("payload", "payload", _payload, mutable=True),
+    # Hudi `hoodie.metadata.record.index.enable` analog
+    _Prop("recordIndex", "record_index", _truthy, lambda b: str(b).lower()),
+    _Prop("secondaryIndexes", "secondary_indexes", _items, ",".join),
+    _Prop(
+        "expressionIndexes",
+        "expression_indexes",
+        partial(_items, sep=";"),
+        ";".join,
+    ),
+    # Hudi `hoodie.index.type=BUCKET` + `hoodie.bucket.index.num.buckets`
+    # analog: probe-free hash routing of keys to a per-partition bucket set
+    _Prop("bucketIndexBuckets", "bucket_index_buckets", int, _opt),
+    # "modulo" (fixed count) | "consistent" (prefix-range buckets; a hot
+    # bucket splits in O(bucket) via CALL split_bucket)
+    _Prop("bucketIndexEngine", "bucket_engine"),
+    # SQL expression -> partition path (expression-partitioned tables)
+    _Prop("partitionExpr", "partition_expr", render=_opt),
+    _Prop("indexScope", "index_scope"),
+    _Prop("softDeleteCol", "soft_delete_col", render=_opt),
+    _Prop("targetFileRows", "target_file_rows", int, mutable=True),
+    _validator_prop("preCommitEqualitySql", "equality"),
+    _validator_prop("preCommitInequalitySql", "inequality"),
+    _validator_prop("preCommitSingleResultSql", "single_result"),
+)
+_PROP_BY_KEY = {p.key: p for p in _PROPS}
+
+
+def _declared_config(name: str, m: re.Match) -> TableConfig:
+    """The config a CREATE TABLE statement declares: its PARTITIONED BY
+    columns and TBLPROPERTIES. An absent or empty property keeps its
+    TableConfig default; unknown properties are ignored."""
+    cfg = TableConfig(
+        name=name,
+        partition_by=[
+            strip_ident_quotes(p.strip().split()[0])
+            for p in _split_top_level(m.group("parts") or "")
+            if p.strip()
+        ],
+    )
+    props = _parse_pairs(m.group("props"))
+    for p in _PROPS:
+        if props.get(p.key):
+            p.set(cfg, p.parse(props[p.key]))
+    return cfg
+
+
+def _is_table(base_path: str) -> bool:
+    return os.path.exists(
+        os.path.join(base_path, Timeline.COMMITS_DIR, "table_config.json")
+    )
 
 
 #: Sentinel: a literal cannot be losslessly represented in the
@@ -308,32 +492,6 @@ def _plan_deterministic(df: DataFrame) -> bool:
         return False
 
 
-def _validators_from_props(props: dict) -> list[dict]:
-    """Pre-commit validators from TBLPROPERTIES (Hudi
-    hoodie.precommit.validators formats): ';'-separated SQL with
-    <TABLE> placeholders; single-result entries are 'query#expected'."""
-    out: list[dict] = []
-    for key, typ in _VALIDATOR_PROP_TYPES.items():
-        for q in props.get(key, "").split(";"):
-            q = q.strip()
-            if not q:
-                continue
-            if typ == "single_result":
-                if "#" not in q:
-                    continue
-                query, expected = q.rsplit("#", 1)
-                out.append(
-                    {
-                        "type": typ,
-                        "query": query.strip(),
-                        "expected": expected.strip(),
-                    }
-                )
-            else:
-                out.append({"type": typ, "query": q})
-    return out
-
-
 def _parens_balanced(txt: str) -> bool:
     """Literal-masked paren balance check (a ')' inside a string never
     counts)."""
@@ -426,6 +584,57 @@ def _prunable_filters(where: str) -> list[tuple[str, str, object]]:
     return out
 
 
+class _Args:
+    """One procedure call's arguments: lowercased names to values, the
+    positional ones keyed '0', '1', ...; a None value counts as absent."""
+
+    def __init__(self, proc: str, pairs: dict[str, str | None]):
+        self.proc = proc
+        self.pairs = {k: v for k, v in pairs.items() if v is not None}
+
+    def opt(self, *names: str, default: str | None = None) -> str | None:
+        return next((self.pairs[n] for n in names if n in self.pairs), default)
+
+    def req(self, *names: str) -> str:
+        value = self.opt(*names)
+        if value is None:
+            raise ValueError(
+                f"CALL {self.proc}: missing required argument {names[0]!r}"
+            )
+        return value
+
+    def integer(self, *names: str, default: int | None = None) -> int | None:
+        value = self.opt(*names)
+        return int(value) if value else default
+
+    def flag(self, name: str) -> bool:
+        return _truthy(self.opt(name, default="false"))
+
+
+#: procedure name -> (handler, creates). A handler takes the engine,
+#: the managed table its `table` argument names (or, when `creates`,
+#: the normalized name of the table it creates) and its `_Args`, and
+#: returns (rows, schema) for the result frame.
+_PROCEDURES: dict[str, tuple[Callable, bool]] = {}
+
+
+def _procedure(*names: str, creates: bool = False):
+    def register(fn):
+        for name in names:
+            _PROCEDURES[name] = (fn, creates)
+        return fn
+
+    return register
+
+
+def _procedure_form(proc: str, **groups: str):
+    """The handler of a statement that is procedure `proc` under another
+    syntax: each CALL argument is read from a pattern group."""
+    return lambda self, t, m: self._run(
+        proc, t, {arg: m.group(g) for arg, g in groups.items()}
+    )
+
+
 class Engine:
     """One warehouse of lakehouse tables + a SparkSession."""
 
@@ -442,13 +651,13 @@ class Engine:
         #: lakehouse LOCATION — live in `_tables` for full DML but are
         #: NOT owned: DROP unregisters, never deletes, and the attach
         #: is persisted in _external_tables.json like the other
-        #: register-by-location formats (ADVICE r4).
+        #: register-by-location formats, so it survives a restart.
         self._attached: dict[str, str] = {}
         #: lakehouse attaches whose location failed to load at
         #: discovery (transient FS error, unmounted store): kept out of
         #: `_tables` but still serialized by `_persist_external`, so a
-        #: transient failure never permanently unregisters the table
-        #: (ADVICE r5). A later successful attach clears the entry.
+        #: transient failure never permanently unregisters the table.
+        #: A later successful attach clears the entry.
         self._quarantined: dict[str, str] = {}
         #: per-external-view metadata token at last registration —
         #: register_views() replays a personality's metadata tree only
@@ -463,10 +672,7 @@ class Engine:
         plus persisted external registrations — like HMS entries, a
         registration survives an engine restart."""
         for name in sorted(os.listdir(self.warehouse_dir)):
-            cfg = os.path.join(
-                self.warehouse_dir, name, "_commits", "table_config.json"
-            )
-            if os.path.exists(cfg):
+            if _is_table(os.path.join(self.warehouse_dir, name)):
                 self._tables[name] = LakehouseTable.load(
                     self.spark, os.path.join(self.warehouse_dir, name)
                 )
@@ -518,12 +724,21 @@ class Engine:
     def tables(self) -> list[str]:
         return sorted(self._tables)
 
+    def _managed(self, name: str) -> LakehouseTable:
+        t = self._tables.get(name)
+        if t is None:
+            raise ValueError(f"table {name} does not exist")
+        return t
+
     @staticmethod
     def _norm(name: str) -> str:
         # split on top-level dots BEFORE unquoting, so a dot inside a
         # backticked part (`my.table`) stays part of the name
         last = _split_top_level(name, sep=".")[-1].strip()
         return strip_ident_quotes(last).lower()
+
+    def _frame(self, rows=(), schema: str = "result string") -> DataFrame:
+        return self.spark.createDataFrame(list(rows), schema)
 
     def create_table(
         self,
@@ -559,7 +774,9 @@ class Engine:
         MOR additionally gets `_ro` / `_rt` — reference S9 HMS-sync
         naming, README.md:341-344). External registrations are
         re-replayed from their format metadata (metadata-scale IO —
-        log/manifest files only; the parquet scan stays lazy)."""
+        log/manifest files only; the parquet scan stays lazy). Every
+        statement that reads a view runs this first, so no statement
+        handler registers views itself."""
         for name, t in self._tables.items():
             t.register_view(name)
         for name in self._external:
@@ -596,12 +813,12 @@ class Engine:
         """A registered MERGE_ON_READ Hudi personality gets the
         reference's hive-sync view pair (README.md:343-344):
         `<name>_ro` (base slices only) and `<name>_rt` (base + real
-        HoodieLogFormat log blocks merged at read — r10 rt leg).
+        HoodieLogFormat log blocks merged at read).
         The `_rt` merge needs the personality's engine columns
         (`_oh_key`/`_oh_commit`), so FOREIGN Hudi MOR tables — a real
         `.hoodie` attached by location, no `sync_state.json` — get
         `_ro` only instead of a view that raises once log records
-        decode (r11 advisor item)."""
+        decode."""
         fmt, loc = self._external[name]
         if fmt != "hudi":
             return
@@ -651,7 +868,7 @@ class Engine:
                 names = sorted(os.listdir(d))
                 # A COW->MOR mode upgrade rewrites hoodie.properties
                 # IN PLACE (same name set) — fold its mtime in so the
-                # `_ro`/`_rt` pair re-registers on the flip (r11).
+                # `_ro`/`_rt` pair re-registers on the flip.
                 try:
                     pm = os.stat(
                         os.path.join(d, "hoodie.properties")
@@ -662,9 +879,8 @@ class Engine:
             # Generic formats (parquet/csv dirs) have no metadata log
             # to version-probe: a file rewritten IN PLACE changes
             # neither the directory mtime nor its entry list, so any
-            # cheap token would serve stale snapshots (ADVICE r5).
-            # None = always re-register the view (the pre-cache
-            # behavior; the parquet scan itself stays lazy).
+            # cheap token would serve stale snapshots. None = always
+            # re-register the view (the parquet scan itself stays lazy).
             return None
         except OSError:
             return None
@@ -675,220 +891,26 @@ class Engine:
         s = strip_comments(statement).strip().rstrip(";")
         m = match_masked(_CALL_RE, s)
         if m:
-            return self._call(m)
-        m = match_masked(_MERGE_RE, s)
-        if m:
-            return self._merge(m)
-        m = match_masked(_UPDATE_RE, s)
-        if m:
-            return self._update(m)
-        m = match_masked(_DELETE_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            return self._delete(m)
-        m = match_masked(_INSERT_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            return self._insert(m)
+            proc = strip_ident_quotes(m.group("proc")).split(".")[-1].lower()
+            return self._call(proc, _parse_pairs(m.group("args")))
+        for pattern, handler in self._STATEMENTS:
+            m = match_masked(pattern, s)
+            if m is None:
+                continue
+            name = self._norm(m.group("name"))
+            if name in self._tables or handler in self._ENGINE_ONLY:
+                return handler(self, self._managed(name), m)
         m = match_masked(_CREATE_RE, s)
         if m and m.group("location"):
             return self._create_at_location(m)
         if m and (m.group("format") or "").lower() in ("lakehouse", "oh", ""):
             if m.group("format") or m.group("props") or m.group("ctas"):
                 return self._create(m)
-        m = match_masked(_CREATE_INDEX_RE, s) or None
-        if m and self._norm(m.group("name")) in self._tables:
-            t = self._tables[self._norm(m.group("name"))]
-            target = strip_ident_quotes(m.group("target").strip())
-            if target.lower() == "record_key":
-                t.enable_record_index()
-            elif target.isidentifier():
-                t.create_secondary_index(target)
-            else:
-                t.create_expression_index(target)
-            return self.spark.createDataFrame(
-                [(target,)], "indexed string"
-            )
-        m = match_masked(_DROP_INDEX_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            t = self._tables[self._norm(m.group("name"))]
-            target = strip_ident_quotes(m.group("target").strip())
-            t.drop_index(
-                "record_key" if target.lower() == "record_key" else target
-            )
-            return self.spark.createDataFrame(
-                [(target,)], "dropped string"
-            )
-        m = match_masked(_TRUNCATE_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            # TRUNCATE TABLE (Hudi spark-sql surface): one replace
-            # commit removing every live file — time travel to
-            # pre-truncate instants still works until cleaned
-            name = self._norm(m.group("name"))
-            t = self._tables[name]
-            from pyspark.sql import types as _T
-
-            empty = self.spark.createDataFrame(
-                [], _T.StructType(self._data_schema(t))
-            )
-            t.insert_overwrite_table(empty)
-            t.register_view(name)
-            return self.spark.createDataFrame([], "result string")
         m = match_masked(_DROP_RE, s)
         if m:
-            name = self._norm(m.group("name"))
-            if name in self._external:
-                # external registration: unlink the catalog entry only
-                del self._external[name]
-                self._external_view_tokens.pop(name, None)
-                self._persist_external()
-                self.spark.catalog.dropTempView(name)
-                return self.spark.createDataFrame([], "result string")
-            if name in self._attached:
-                # attached-by-location engine table: unregister only —
-                # the engine does not own the files
-                del self._attached[name]
-                del self._tables[name]
-                self._persist_external()
-                for view in (name, f"{name}_ro", f"{name}_rt"):
-                    self.spark.catalog.dropTempView(view)
-                return self.spark.createDataFrame([], "result string")
-            if name in self._quarantined:
-                # explicit DROP of a quarantined attach: the operator
-                # decided the location is gone for good — unregister
-                del self._quarantined[name]
-                self._persist_external()
-                return self.spark.createDataFrame([], "result string")
-            if name in self._tables:
-                self.drop_table(name)
-                for view in (name, f"{name}_ro", f"{name}_rt"):
-                    self.spark.catalog.dropTempView(view)
-                return self.spark.createDataFrame([], "result string")
-            if m.group("if_exists"):
-                return self.spark.createDataFrame([], "result string")
-            raise ValueError(f"table {name} does not exist")
-        m = match_masked(_SHOW_PARTS_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            return self._show_partitions(self._norm(m.group("name")))
-        m = _SHOW_INDEXES_RE.match(s)
-        if m and self._norm(m.group("name")) in self._tables:
-            return self.sql(
-                f"CALL show_indexes(table => '{self._norm(m.group('name'))}')"
-            )
+            return self._drop(m)
         if _SHOW_TABLES_RE.match(s):
             return self._show_tables()
-        m = match_masked(_CHANGES_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            # table-valued CHANGES(t, 'begin' [, 'end']): the CDC read
-            # view (insert/update/delete classification). Empty begin
-            # string = bootstrap (everything is an insert).
-            t = self._tables[self._norm(m.group("name"))]
-            begin = m.group("begin") or None
-            return t.changes(begin=begin, end=m.group("end"))
-        m = match_masked(_HISTORY_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            return self._history(self._norm(m.group("name")))
-        m = match_masked(_DESCRIBE_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            return self._describe(self._norm(m.group("name")))
-        m = match_masked(_ALTER_ADD_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            return self._alter_add(m)
-        m = match_masked(_ALTER_RENAME_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            name = self._norm(m.group("name"))
-            t = self._tables[name]
-            old = strip_ident_quotes(m.group("old"))
-            new = strip_ident_quotes(m.group("new"))
-            t.rename_column(old, new)
-            t.register_view(name)
-            return self.spark.createDataFrame(
-                [(old, new)], "renamed_from string, renamed_to string"
-            )
-        m = match_masked(_ALTER_TYPE_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            name = self._norm(m.group("name"))
-            t = self._tables[name]
-            col = strip_ident_quotes(m.group("col"))
-            t.widen_column(col, m.group("type"))
-            t.register_view(name)
-            return self.spark.createDataFrame(
-                [(col, m.group("type"))],
-                "altered_column string, new_type string",
-            )
-        m = match_masked(_ALTER_DROP_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            name = self._norm(m.group("name"))
-            t = self._tables[name]
-            cols = (
-                [c.strip() for c in m.group("cols").split(",")]
-                if m.group("cols")
-                else [m.group("col")]
-            )
-            for c in cols:
-                t.drop_column(strip_ident_quotes(c))
-            t.register_view(name)
-            return self.spark.createDataFrame(
-                [(strip_ident_quotes(c),) for c in cols],
-                "dropped_column string",
-            )
-        m = match_masked(_ALTER_PROPS_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            return self._alter_props(m)
-        m = match_masked(_SHOW_CREATE_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            return self._show_create(self._norm(m.group("name")))
-        m = match_masked(_COMPACT_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            from onehouse_demos_spark.tables.maintenance import run_compaction
-
-            run_compaction(self._tables[self._norm(m.group("name"))])
-            return self.spark.createDataFrame([], "result string")
-        m = match_masked(_CLUSTER_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            from onehouse_demos_spark.tables.maintenance import run_clustering
-
-            cols = [c.strip().strip("`") for c in m.group("cols").split(",")]
-            strategy = (m.group("strategy") or "linear").lower()
-            run_clustering(
-                self._tables[self._norm(m.group("name"))], cols,
-                strategy=strategy,
-            )
-            return self.spark.createDataFrame([], "result string")
-        m = match_masked(_SAVEPOINT_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            from onehouse_demos_spark.tables.maintenance import create_savepoint
-
-            target = create_savepoint(
-                self._tables[self._norm(m.group("name"))], m.group("instant")
-            )
-            return self.spark.createDataFrame(
-                [(target,)], "savepointed_instant string"
-            )
-        m = match_masked(_RESTORE_RE, s)
-        if m and self._norm(m.group("name")) in self._tables:
-            from onehouse_demos_spark.tables.maintenance import run_restore
-
-            name = self._norm(m.group("name"))
-            res = run_restore(self._tables[name], m.group("instant"))
-            self._tables[name].register_view(name)
-            return self.spark.createDataFrame(
-                [(res["restored_to"], len(res["removed_instants"]),
-                  len(res["deleted_files"]))],
-                "restored_to string, removed_instants int, deleted_files int",
-            )
-        m = _VACUUM_RE.match(s)
-        if m and self._norm(m.group("name")) in self._tables:
-            from onehouse_demos_spark.tables.maintenance import (
-                run_clean,
-                run_orphan_clean,
-            )
-
-            t = self._tables[self._norm(m.group("name"))]
-            keep = int(m.group("n") or 10)
-            removed = run_clean(t, keep_last_commits=keep)
-            removed += run_orphan_clean(t)
-            return self.spark.createDataFrame(
-                [(p,) for p in removed], "removed_file string"
-            )
         # Time travel: `FROM <t> VERSION AS OF '<instant>'` registers a
         # pinned snapshot view and rewrites the reference (reference
         # analog: incremental/as-of reads via `_hoodie_commit_time`,
@@ -980,23 +1002,89 @@ class Engine:
             (n, f"external-{fmt}", loc)
             for n, (fmt, loc) in sorted(self._external.items())
         ]
-        return self.spark.createDataFrame(
-            rows or [], "tableName string, tableType string, location string"
+        return self._frame(
+            rows, "tableName string, tableType string, location string"
         )
 
-    def _show_partitions(self, name: str) -> DataFrame:
-        parts = self._tables[name].manifest.partitions()
-        return self.spark.createDataFrame(
-            [(p,) for p in parts], "partition string"
+    def _show_partitions(self, t: LakehouseTable, m) -> DataFrame:
+        return self._frame(
+            [(p,) for p in t.manifest.partitions()], "partition string"
         )
 
-    def _describe(self, name: str) -> DataFrame:
-        info = self._tables[name].describe()
-        rows = sorted((k, str(v)) for k, v in info.items())
-        return self.spark.createDataFrame(rows, "col_name string, value string")
+    def _describe(self, t: LakehouseTable, m) -> DataFrame:
+        rows = sorted((k, str(v)) for k, v in t.describe().items())
+        return self._frame(rows, "col_name string, value string")
 
-    def _history(self, name: str, limit: int | None = None) -> DataFrame:
-        t = self._tables[name]
+    def _changes(self, t: LakehouseTable, m) -> DataFrame:
+        """Table-valued CHANGES(t, 'begin' [, 'end']): the CDC read view
+        (insert/update/delete classification). An empty begin string is
+        a bootstrap read: everything is an insert."""
+        return t.changes(begin=m.group("begin") or None, end=m.group("end"))
+
+    # -- CALL procedures (the maintenance procedures mirror Hudi's
+    # spark-sql CALL surface, README.md:1126-1160). Every statement form
+    # of a procedure (COMPACT TABLE, CLUSTER TABLE, SAVEPOINT TABLE,
+    # RESTORE TABLE, VACUUM, SHOW INDEXES, DESCRIBE HISTORY) runs the
+    # procedure's handler ------------------------------------------------
+
+    def _call(self, proc: str, pairs: dict[str, str]) -> DataFrame:
+        entry = _PROCEDURES.get(proc)
+        if entry is None:
+            raise ValueError(
+                f"unknown procedure {proc!r}; supported: "
+                + ", ".join(sorted(_PROCEDURES))
+            )
+        name = self._norm(_Args(proc, pairs).req("table", "0"))
+        if not entry[1]:
+            return self._run(proc, self._managed(name), pairs)
+        if name in self._tables or name in self._external:
+            raise ValueError(f"table {name} already exists")
+        return self._run(proc, name, pairs)
+
+    def _run(self, proc: str, t, pairs: dict[str, str | None]) -> DataFrame:
+        return self._frame(*_PROCEDURES[proc][0](self, t, _Args(proc, pairs)))
+
+    @_procedure("register_table", creates=True)
+    def _register_table(self, name: str, a: _Args):
+        """Iceberg-style registration: point the catalog at an existing
+        metadata.json (reference demo.md:225 `CALL hive_prod.system.
+        register_table(table => ..., metadata_file => ...)`)."""
+        metadata_file = a.req("metadata_file", "1")
+        if not os.path.exists(metadata_file):
+            raise FileNotFoundError(metadata_file)
+        base = os.path.dirname(os.path.dirname(os.path.abspath(metadata_file)))
+        self._register_external(name, "iceberg", base)
+        return (
+            [(name, "iceberg", base)],
+            "tableName string, format string, location string",
+        )
+
+    @_procedure("bootstrap_table", creates=True)
+    def _bootstrap_table(self, name: str, a: _Args):
+        """Metadata-only onboarding of an existing parquet dataset into
+        a NEW managed table (Hudi bootstrap analog): CALL
+        bootstrap_table(table => 't', location => '/data', primary_key
+        => 'id'[, precombine => 'ver'][, partition_by => 'dt,region']);
+        a hive-layout source decodes its col=val dirs into partitions."""
+        t = LakehouseTable.create(
+            self.spark,
+            f"{self.warehouse_dir}/{name}",
+            TableConfig(
+                name=name,
+                record_key=_items(a.req("primary_key", _PRIMARY_KEY.key)),
+                precombine=a.opt("precombine") or None,
+                partition_by=_items(a.opt("partition_by", default="")),
+            ),
+        )
+        inst = t.bootstrap(a.req("location", "1"))
+        self._tables[name] = t
+        return (
+            [(name, inst.instant, len(inst.adds))],
+            "table string, instant string, files int",
+        )
+
+    @_procedure("show_commits", "show_commits_metadata")
+    def _show_commits(self, t: LakehouseTable, a: _Args):
         rows = [
             (
                 i.instant,
@@ -1008,630 +1096,379 @@ class Engine:
             )
             for i in t.timeline.instants()
         ]
-        if limit is not None:
-            rows = rows[-limit:]
-        return self.spark.createDataFrame(
-            rows,
+        limit = a.integer("limit")
+        return (
+            rows if limit is None else rows[-limit:],
             "instant string, action string, operation string, "
             "n_adds int, n_removes int, rows_written long",
         )
 
-    # -- CALL procedures + register-by-location (reference S10 external
-    # registration: demo.md:208 `CREATE TABLE delta_db.people USING
-    # DELTA LOCATION ...`, demo.md:225 `CALL hive_prod.system.
-    # register_table(...)`; the maintenance procedures mirror Hudi's
-    # spark-sql CALL surface, README.md:1126-1160) ---------------------------
-
-    @staticmethod
-    def _parse_call_args(args: str) -> dict[str, str]:
-        """`name => 'value'` pairs (Iceberg/Hudi style) plus bare
-        positional values keyed '0','1',...; quotes stripped, keyword
-        case folded. `=>`/`=` inside a value string never splits."""
-        out: dict[str, str] = {}
-        pos = 0
-        for part in _split_top_level(args):
-            part = part.strip()
-            if not part:
-                continue
-            split = split_once_top_level(part, "=")
-            if split is None:
-                out[str(pos)] = part.strip("'\"")
-                pos += 1
-            else:
-                k, v = split
-                out[k.strip().lower()] = v.lstrip(">").strip().strip("'\"")
-        return out
-
-    def _call(self, m) -> DataFrame:
-        proc = strip_ident_quotes(m.group("proc")).split(".")[-1].lower()
-        a = self._parse_call_args(m.group("args") or "")
-
-        def arg(*names: str, default: str | None = None) -> str | None:
-            for n in names:
-                if n in a:
-                    return a[n]
-            return default
-
-        def req(*names: str) -> str:
-            v = arg(*names)
-            if v is None:
-                raise ValueError(
-                    f"CALL {proc}: missing required argument {names[0]!r}"
-                )
-            return v
-
-        if proc == "register_table":
-            return self._register_table(
-                req("table", "0"), req("metadata_file", "1")
-            )
-        if proc == "bootstrap_table":
-            # Metadata-only onboarding of an existing parquet dataset
-            # into a NEW managed table (Hudi bootstrap analog):
-            # CALL bootstrap_table(table => 't', location => '/data',
-            #   primary_key => 'id'[, precombine => 'ver']
-            #   [, partition_by => 'dt,region']  -- r9: hive-layout
-            #   sources decode col=val dirs into real partitions).
-            tname = self._norm(req("table", "0"))
-            if tname in self._tables or tname in self._external:
-                raise ValueError(f"table {tname} already exists")
-            t = LakehouseTable.create(
-                self.spark,
-                f"{self.warehouse_dir}/{tname}",
-                TableConfig(
-                    name=tname,
-                    record_key=[
-                        c.strip()
-                        for c in req("primary_key", "primarykey").split(",")
-                        if c.strip()
-                    ],
-                    precombine=arg("precombine") or None,
-                    partition_by=[
-                        c.strip()
-                        for c in (arg("partition_by") or "").split(",")
-                        if c.strip()
-                    ],
-                ),
-            )
-            inst = t.bootstrap(req("location", "1"))
-            self._tables[tname] = t
-            t.register_view(tname)
-            return self.spark.createDataFrame(
-                [(tname, inst.instant, len(inst.adds))],
-                "table string, instant string, files int",
-            )
-
-        name = self._norm(req("table", "0"))
-        if name not in self._tables:
-            raise ValueError(f"table {name} does not exist")
-        t = self._tables[name]
-
-        if proc in ("show_commits", "show_commits_metadata"):
-            lim = arg("limit")
-            return self._history(name, int(lim) if lim else None)
-        if proc == "show_compactions":
-            # `compactions show all` (README.md:1128-1132): REQUESTED
-            # persisted plans + COMPLETED compaction commits
-            from onehouse_demos_spark.tables.maintenance import (
-                show_compactions,
-            )
-
-            rows = [
+    @_procedure("show_compactions", "show_clustering")
+    def _show_pending(self, t: LakehouseTable, a: _Args):
+        """REQUESTED persisted plans and COMPLETED commits of compaction
+        or clustering (`compactions show all`, README.md:1128-1132)."""
+        return (
+            [
                 (r["instant"], r["state"], r["n_files"])
-                for r in show_compactions(t)
-            ]
-            return self.spark.createDataFrame(
-                rows or [], "instant string, state string, n_files int"
-            )
-        if proc == "run_compaction":
-            from onehouse_demos_spark.tables.maintenance import (
-                load_compaction_plan,
-                request_compaction,
-                run_compaction,
-                schedule_compaction,
-            )
-
-            op = (arg("op", default="scheduleandexecute") or "").lower()
-            if op == "schedule":
-                # persist a REQUESTED plan (the Hudi CLI `compaction
-                # schedule` step); run it later by timestamp
-                req = request_compaction(t)
-                n = (
-                    len(load_compaction_plan(t, req).log_files)
-                    if req is not None else 0
-                )
-                return self.spark.createDataFrame(
-                    [(op, req, n, False)],
-                    "op string, instant string, n_log_files int, "
-                    "executed boolean",
-                )
-            ts = arg("timestamp", "instant")
-            if op in ("run", "execute") and ts is not None:
-                # `compaction run --compactionInstant <ts>`
-                run_compaction(t, instant=ts)
-                t.register_view(name)
-                return self.spark.createDataFrame(
-                    [(op, ts, True)],
-                    "op string, instant string, executed boolean",
-                )
-            plan = schedule_compaction(t)
-            executed = False
-            if op in ("run", "execute", "scheduleandexecute") and not plan.empty:
-                run_compaction(t, plan)
-                executed = True
-            t.register_view(name)
-            return self.spark.createDataFrame(
-                [(op, len(plan.log_files), len(plan.partitions), executed)],
-                "op string, n_log_files int, n_partitions int, executed boolean",
-            )
-        if proc == "show_clustering":
-            from onehouse_demos_spark.tables.maintenance import (
-                show_clustering,
-            )
-
-            rows = [
-                (r["instant"], r["state"], r["n_files"])
-                for r in show_clustering(t)
-            ]
-            return self.spark.createDataFrame(
-                rows or [], "instant string, state string, n_files int"
-            )
-        if proc == "run_clustering":
-            from onehouse_demos_spark.tables.maintenance import (
-                request_clustering,
-                run_clustering,
-            )
-
-            op = (arg("op", default="scheduleandexecute") or "").lower()
-            ts = arg("timestamp", "instant")
-            if op in ("run", "execute") and ts is not None:
-                # execute a persisted REQUESTED clustering plan
-                run_clustering(t, instant=ts)
-                t.register_view(name)
-                return self.spark.createDataFrame(
-                    [(op, ts, True)],
-                    "op string, instant string, executed boolean",
-                )
-            cols = [
-                strip_ident_quotes(c.strip())
-                for c in req("order", "order_by").split(",")
-                if c.strip()
-            ]
-            strategy = (arg("strategy", default="linear") or "linear").lower()
-            if op == "schedule":
-                req_instant = request_clustering(t, cols, strategy=strategy)
-                return self.spark.createDataFrame(
-                    [(op, req_instant, ",".join(cols), False)],
-                    "op string, instant string, order_columns string, "
-                    "executed boolean",
-                )
-            run_clustering(t, cols, strategy=strategy)
-            t.register_view(name)
-            return self.spark.createDataFrame(
-                [(",".join(cols), strategy)], "order_columns string, strategy string"
-            )
-        if proc == "run_clean":
-            from onehouse_demos_spark.tables.maintenance import run_clean
-
-            keep = int(arg("retain_commits", "keep_last_commits", default="10"))
-            removed = run_clean(t, keep_last_commits=keep)
-            return self.spark.createDataFrame(
-                [(p,) for p in removed], "removed_file string"
-            )
-        if proc == "run_partition_ttl":
-            from onehouse_demos_spark.tables.maintenance import (
-                run_partition_ttl,
-            )
-
-            days = arg("retain_days")
-            commits = arg("retain_commits")
-            expired = run_partition_ttl(
-                t,
-                retain_days=float(days) if days else None,
-                retain_commits=int(commits) if commits else None,
-            )
-            t.register_view(name)
-            return self.spark.createDataFrame(
-                [(p,) for p in expired], "expired_partition string"
-            )
-        if proc == "show_indexes":
-            # Hudi 1.0 `SHOW INDEXES` analog: one row per index with
-            # its layout state (delta dirs pending fold, base presence).
-            rows = []
-            idxs = []
-            if t.record_index is not None:
-                idxs.append(("record_index", "record_key", t.record_index))
-            for col, ix in sorted(t.secondary_indexes.items()):
-                idxs.append((f"secondary_{col}", col, ix))
-            for expr2, ix in sorted(t.expression_indexes.items()):
-                idxs.append(("expression", expr2, ix))
-            for name2, on_col, ix in idxs:
-                deltas, bases = ix._dirs()
-                rows.append(
-                    (name2, on_col, ix.buckets, len(deltas), len(bases))
-                )
-            return self.spark.createDataFrame(
-                rows or [],
-                "index_name string, on string, buckets int, "
-                "delta_dirs int, base_dirs int",
-            )
-        if proc == "compact_record_index":
-            # Fold the record-level index's per-commit delta dirs into
-            # one base (Hudi metadata-table compaction analog); drops
-            # entries for dead files while folding.
-            if t.record_index is None:
-                raise ValueError(
-                    f"table {name} has no record-level index "
-                    "(create with record_index=True)"
-                )
-            folded = t.record_index.compact(
-                self.spark,
-                {f.path for f in t.manifest.live_files(include_logs=False)},
-            )
-            return self.spark.createDataFrame(
-                [(folded,)], "folded_index_dirs int"
-            )
-        if proc == "archive_commits":
-            from onehouse_demos_spark.tables.maintenance import run_archival
-
-            keep = int(arg("keep_last", default="50"))
-            archived = run_archival(t, keep_last=keep)
-            return self.spark.createDataFrame(
-                [(archived,)], "archived_instants int"
-            )
-        if proc == "create_savepoint":
-            from onehouse_demos_spark.tables.maintenance import create_savepoint
-
-            target = create_savepoint(t, arg("commit_time", "instant"))
-            return self.spark.createDataFrame(
-                [(target,)], "savepointed_instant string"
-            )
-        if proc == "show_savepoints":
-            from onehouse_demos_spark.tables.maintenance import list_savepoints
-
-            return self.spark.createDataFrame(
-                list_savepoints(t),
-                "savepoint_instant string, saved_instant string",
-            )
-        if proc == "delete_savepoint":
-            from onehouse_demos_spark.tables.maintenance import delete_savepoint
-
-            removed = delete_savepoint(t, req("commit_time", "instant"))
-            return self.spark.createDataFrame(
-                [(removed,)], "deleted_savepoint string"
-            )
-        if proc == "split_bucket":
-            # r9: consistent-engine hot-bucket split — O(one bucket)
-            from onehouse_demos_spark.tables.maintenance import (
-                split_bucket,
-            )
-
-            b = arg("bucket")
-            done = split_bucket(t, int(b) if b is not None else None)
-            t.register_view(name)
-            return self.spark.createDataFrame(
-                [
-                    (
-                        done.instant if done is not None else "",
-                        len(t._bucket_prefix_list()),
-                    )
-                ],
-                "instant string, buckets int",
-            )
-        if proc == "hudi_index":
-            # late-r11: Hudi's async-indexer face (`HoodieIndexer` /
-            # `hoodie.metadata.index.*.enable`) — build the named
-            # metadata-index partitions over the CURRENT personality
-            # state without waiting for a data commit; a partition is
-            # sticky-declared after its first build, so later plain
-            # syncs keep maintaining it.
-            from onehouse_demos_spark.tables.hudi_export import (
-                sync_hudi_metadata,
-            )
-
-            wanted = [
-                p.strip().lower()
-                for p in (
-                    arg(
-                        "partitions",
-                        default="column_stats,bloom_filters,record_index",
-                    )
-                    or ""
-                ).split(",")
-                if p.strip()
-            ]
-            valid = {"column_stats", "bloom_filters", "record_index"}
-            bad = sorted(set(wanted) - valid)
-            if bad:
-                raise ValueError(
-                    f"hudi_index: unknown partitions {bad}; "
-                    f"one of: {sorted(valid)}"
-                )
-            version = sync_hudi_metadata(
-                t,
-                column_stats="column_stats" in wanted,
-                bloom_filters="bloom_filters" in wanted,
-                record_index="record_index" in wanted,
-            )
-            return self.spark.createDataFrame(
-                [(p, version) for p in sorted(wanted)],
-                "partition string, version int",
-            )
-        if proc == "hudi_clean":
-            # r10: the personality's clean/archive service — age
-            # retired Hudi-named slices past the keep-last-instants
-            # horizon and archive their timeline instants (retention
-            # semantics mirroring Hudi's own clean).
-            from onehouse_demos_spark.tables.hudi_export import (
-                clean_hudi_personality,
-            )
-
-            keep = int(arg("keep_last_instants", default="10") or "10")
-            res = clean_hudi_personality(t, keep_last_instants=keep)
-            return self.spark.createDataFrame(
-                [
-                    (
-                        len(res["deleted_files"]),
-                        len(res["archived_instants"]),
-                    )
-                ],
-                "deleted_slices int, archived_instants int",
-            )
-        if proc == "show_bucket_layout":
-            # r10 observability for the bucket layouts: one row per
-            # bucket — encoded id, prefix (consistent engine), live
-            # files and rows — straight from the manifest, no data IO.
-            if not t.config.bucket_index_buckets:
-                raise ValueError(
-                    f"{name} has no bucket-index layout"
-                )
-            by_bucket: dict[int, list] = {}
-            for fm in t.manifest.live_files(include_logs=True):
-                if fm.bucket is not None:
-                    by_bucket.setdefault(fm.bucket, []).append(fm)
-            consistent = t.config.bucket_engine == "consistent"
-            ids = (
-                t._bucket_prefix_list()
-                if consistent
-                else list(range(t.config.bucket_index_buckets))
-            )
-            rows = []
-            for b in sorted(set(ids) | set(by_bucket)):
-                files = by_bucket.get(b, [])
-                if consistent:
-                    length, prefix = b >> 16, b & 0xFFFF
-                    label = format(prefix, f"0{length}b") if length else "*"
-                else:
-                    label = str(b)
-                rows.append(
-                    (
-                        b,
-                        label,
-                        len(files),
-                        sum(f.rows for f in files),
-                        b in set(ids),
-                    )
-                )
-            return self.spark.createDataFrame(
-                rows,
-                "bucket int, prefix string, files int, rows bigint, "
-                "routed boolean",
-            )
-        if proc == "auto_split":
-            # r10: the service form — split every over-target bucket,
-            # hottest first, until the layout is healthy (the policy
-            # `run_auto_split` applies during inline ingest services)
-            from onehouse_demos_spark.tables.maintenance import (
-                run_auto_split,
-            )
-
-            m = arg("max_bucket_rows")
-            done = run_auto_split(t, int(m) if m is not None else None)
-            t.register_view(name)
-            return self.spark.createDataFrame(
-                [
-                    (
-                        len(done),
-                        len(t._bucket_prefix_list()),
-                    )
-                ],
-                "splits int, buckets int",
-            )
-        if proc == "auto_resize":
-            # r11: the modulo engine's layout-health service — the
-            # `run_auto_split` counterpart for tables that grow by
-            # re-bucketing (manifest-arithmetic trigger, one atomic
-            # replacecommit when over target)
-            from onehouse_demos_spark.tables.maintenance import (
-                run_auto_resize,
-            )
-
-            m = arg("max_bucket_rows")
-            before = t.config.bucket_index_buckets or 0
-            done = run_auto_resize(t, int(m) if m is not None else None)
-            t.register_view(name)
-            return self.spark.createDataFrame(
-                [
-                    (
-                        len(done),
-                        before,
-                        t.config.bucket_index_buckets or 0,
-                    )
-                ],
-                "resizes int, buckets_before int, buckets_after int",
-            )
-        if proc == "resize_buckets":
-            # r9: re-bucket a bucket-layout table (Hudi consistent-
-            # hashing resize analog, one atomic replacecommit rewrite)
-            from onehouse_demos_spark.tables.maintenance import (
-                resize_buckets,
-            )
-
-            done = resize_buckets(t, int(req("buckets", "1")))
-            t.register_view(name)
-            return self.spark.createDataFrame(
-                [
-                    (
-                        done.instant if done is not None else "",
-                        t.config.bucket_index_buckets,
-                    )
-                ],
-                "instant string, buckets int",
-            )
-        if proc == "xtable_sync":
-            # one-command multi-format conversion — the reference runs
-            # `java -jar xtable-utilities --datasetConfig xtable_hudi.
-            # yaml` with targets DELTA,ICEBERG (demo.md:81-88,
-            # xtable/xtable_hudi.yaml); here each target personality is
-            # (re)synced in place over the same files.
-            fmts = [
-                f.strip().lower()
-                for f in (arg("formats", default="delta,iceberg") or "").split(",")
-                if f.strip()
-            ]
-            rows = []
-            for fmt in fmts:
-                if fmt == "delta":
-                    from onehouse_demos_spark.tables.delta_export import (
-                        sync_delta_log,
-                    )
-
-                    rows.append(("delta", sync_delta_log(t)))
-                elif fmt == "iceberg":
-                    from onehouse_demos_spark.tables.iceberg_export import (
-                        sync_iceberg_metadata,
-                    )
-
-                    rows.append(("iceberg", sync_iceberg_metadata(t)))
-                elif fmt == "hudi":
-                    from onehouse_demos_spark.tables.hudi_export import (
-                        sync_hudi_metadata,
-                    )
-
-                    # MOR freshness (README.md:756-776), two modes
-                    # (r10): 'compact' (default) folds logs through
-                    # the engine's compaction; 'rt' publishes them as
-                    # real HoodieLogFormat blocks under deltacommits —
-                    # no rewrite, a genuine `_rt` personality.
-                    hudi_mode = (
-                        arg("hudi_mode", default="compact") or "compact"
-                    ).lower()
-                    if hudi_mode not in ("compact", "rt"):
-                        raise ValueError(
-                            f"xtable_sync: hudi_mode {hudi_mode!r}; "
-                            "one of: compact, rt"
-                        )
-                    # r11: hudi_column_stats => true publishes the
-                    # column_stats metadata partition alongside files
-                    cs_arg = str(
-                        arg("hudi_column_stats", default="false") or "false"
-                    ).lower() in ("true", "1", "yes")
-                    bf_arg = str(
-                        arg("hudi_bloom_filters", default="false")
-                        or "false"
-                    ).lower() in ("true", "1", "yes")
-                    # r11: hudi_record_index => true publishes the
-                    # record-level index partition (sharded type-5
-                    # chains; exact point-read planning)
-                    rli_arg = str(
-                        arg("hudi_record_index", default="false")
-                        or "false"
-                    ).lower() in ("true", "1", "yes")
-                    rows.append(
-                        (
-                            "hudi",
-                            sync_hudi_metadata(
-                                t,
-                                compact_mor=hudi_mode == "compact",
-                                mor_rt=hudi_mode == "rt",
-                                column_stats=cs_arg,
-                                bloom_filters=bf_arg,
-                                record_index=rli_arg,
-                            ),
-                        )
-                    )
-                else:
-                    raise ValueError(
-                        f"xtable_sync: unsupported target format {fmt!r}"
-                    )
-            return self.spark.createDataFrame(
-                rows, "format string, version int"
-            )
-        if proc == "show_fsview_all":
-            # Hudi CLI/procedure `show_fsview_all`: the file-system
-            # view — one row per live file slice with partition, kind
-            # (base/log) and row count, straight from the manifest
-            rows = [
-                (f.partition or "", f.path, f.kind, f.rows)
-                for f in t.manifest.live_files()
-            ]
-            return self.spark.createDataFrame(
-                rows or [],
-                "partition string, path string, kind string, rows bigint",
-            )
-        if proc == "show_table_properties":
-            cfg = t.config
-            props = [
-                ("name", cfg.name),
-                ("type", cfg.table_type),
-                ("primaryKey", ",".join(cfg.record_key)),
-                ("preCombineField", cfg.precombine or ""),
-                ("partitionFields", ",".join(cfg.partition_by or [])),
-                ("recordIndex", str(cfg.record_index).lower()),
-                ("secondaryIndexes", ",".join(cfg.secondary_indexes or [])),
-                ("payload", cfg.payload),
-                ("bucketIndexBuckets", str(cfg.bucket_index_buckets or "")),
-                ("bucketIndexEngine", cfg.bucket_engine),
-                ("location", t.base_path),
-            ]
-            return self.spark.createDataFrame(
-                props, "key string, value string"
-            )
-        if proc in ("rollback_to_savepoint", "rollback_to_instant"):
-            from onehouse_demos_spark.tables.maintenance import run_restore
-
-            res = run_restore(t, req("commit_time", "instant", "instant_time"))
-            t.register_view(name)
-            return self.spark.createDataFrame(
-                [(res["restored_to"], len(res["removed_instants"]),
-                  len(res["deleted_files"]))],
-                "restored_to string, removed_instants int, deleted_files int",
-            )
-        raise ValueError(
-            f"unknown procedure {proc!r}; supported: register_table, "
-            "show_commits, show_compactions, show_clustering, show_fsview_all, "
-            "show_table_properties, run_compaction, run_clustering, "
-            "run_clean, resize_buckets, split_bucket, auto_split, "
-            "auto_resize, "
-            "show_bucket_layout, show_indexes, "
-            "compact_record_index, "
-            "archive_commits, create_savepoint, "
-            "show_savepoints, delete_savepoint, rollback_to_savepoint, "
-            "rollback_to_instant, xtable_sync, hudi_clean, hudi_index"
+                for r in getattr(maintenance, a.proc)(t)
+            ],
+            "instant string, state string, n_files int",
         )
 
-    def _register_table(self, table: str, metadata_file: str) -> DataFrame:
-        """Iceberg-style registration: point the catalog at an existing
-        metadata.json (reference demo.md:225). The personality's
-        metadata tree is replayed on every view refresh; the engine
-        never takes ownership of the files."""
-        name = self._norm(table)
-        if name in self._tables or name in self._external:
-            raise ValueError(f"table {name} already exists")
-        if not os.path.exists(metadata_file):
-            raise FileNotFoundError(metadata_file)
-        base = os.path.dirname(os.path.dirname(os.path.abspath(metadata_file)))
-        self._external[name] = ("iceberg", base)
+    @_procedure("run_compaction")
+    def _run_compaction(self, t: LakehouseTable, a: _Args):
+        op = a.opt("op", default="scheduleandexecute").lower()
+        if op == "schedule":
+            # persist a REQUESTED plan (the Hudi CLI `compaction
+            # schedule` step); run it later by timestamp
+            instant = maintenance.request_compaction(t)
+            n = (
+                len(maintenance.load_compaction_plan(t, instant).log_files)
+                if instant is not None
+                else 0
+            )
+            return (
+                [(op, instant, n, False)],
+                "op string, instant string, n_log_files int, "
+                "executed boolean",
+            )
+        ts = a.opt("timestamp", "instant")
+        if op in ("run", "execute") and ts is not None:
+            # `compaction run --compactionInstant <ts>`
+            maintenance.run_compaction(t, instant=ts)
+            return [(op, ts, True)], "op string, instant string, executed boolean"
+        plan = maintenance.schedule_compaction(t)
+        executed = op in ("run", "execute", "scheduleandexecute") and not plan.empty
+        if executed:
+            maintenance.run_compaction(t, plan)
+        return (
+            [(op, len(plan.log_files), len(plan.partitions), executed)],
+            "op string, n_log_files int, n_partitions int, executed boolean",
+        )
+
+    @_procedure("run_clustering")
+    def _run_clustering(self, t: LakehouseTable, a: _Args):
+        op = a.opt("op", default="scheduleandexecute").lower()
+        ts = a.opt("timestamp", "instant")
+        if op in ("run", "execute") and ts is not None:
+            # execute a persisted REQUESTED clustering plan
+            maintenance.run_clustering(t, instant=ts)
+            return [(op, ts, True)], "op string, instant string, executed boolean"
+        cols = [strip_ident_quotes(c) for c in _items(a.req("order", "order_by"))]
+        strategy = (a.opt("strategy") or "linear").lower()
+        if op == "schedule":
+            instant = maintenance.request_clustering(t, cols, strategy=strategy)
+            return (
+                [(op, instant, ",".join(cols), False)],
+                "op string, instant string, order_columns string, "
+                "executed boolean",
+            )
+        maintenance.run_clustering(t, cols, strategy=strategy)
+        return [(",".join(cols), strategy)], "order_columns string, strategy string"
+
+    @_procedure("run_clean")
+    def _run_clean(self, t: LakehouseTable, a: _Args):
+        keep = a.integer("retain_commits", "keep_last_commits", default=10)
+        removed = maintenance.run_clean(t, keep_last_commits=keep)
+        return [(p,) for p in removed], "removed_file string"
+
+    @_procedure("run_partition_ttl")
+    def _run_partition_ttl(self, t: LakehouseTable, a: _Args):
+        days = a.opt("retain_days")
+        expired = maintenance.run_partition_ttl(
+            t,
+            retain_days=float(days) if days else None,
+            retain_commits=a.integer("retain_commits"),
+        )
+        return [(p,) for p in expired], "expired_partition string"
+
+    @_procedure("show_indexes")
+    def _show_indexes(self, t: LakehouseTable, a: _Args):
+        """Hudi 1.0 `SHOW INDEXES` analog: one row per index with its
+        layout state (delta dirs pending fold, base presence)."""
+        idxs = [("record_index", "record_key", t.record_index)]
+        idxs = idxs if t.record_index is not None else []
+        idxs += [
+            (f"secondary_{col}", col, ix)
+            for col, ix in sorted(t.secondary_indexes.items())
+        ]
+        idxs += [
+            ("expression", expr, ix)
+            for expr, ix in sorted(t.expression_indexes.items())
+        ]
+        rows = []
+        for name, on, ix in idxs:
+            deltas, bases = ix._dirs()
+            rows.append((name, on, ix.buckets, len(deltas), len(bases)))
+        return (
+            rows,
+            "index_name string, on string, buckets int, "
+            "delta_dirs int, base_dirs int",
+        )
+
+    @_procedure("compact_record_index")
+    def _compact_record_index(self, t: LakehouseTable, a: _Args):
+        """Fold the record-level index's per-commit delta dirs into one
+        base (Hudi metadata-table compaction analog); drops entries for
+        dead files while folding."""
+        if t.record_index is None:
+            raise ValueError(
+                f"table {t.config.name} has no record-level index "
+                "(create with record_index=True)"
+            )
+        folded = t.record_index.compact(
+            self.spark,
+            {f.path for f in t.manifest.live_files(include_logs=False)},
+        )
+        return [(folded,)], "folded_index_dirs int"
+
+    @_procedure("archive_commits")
+    def _archive_commits(self, t: LakehouseTable, a: _Args):
+        keep = a.integer("keep_last", default=50)
+        archived = maintenance.run_archival(t, keep_last=keep)
+        return [(archived,)], "archived_instants int"
+
+    @_procedure("create_savepoint")
+    def _create_savepoint(self, t: LakehouseTable, a: _Args):
+        target = maintenance.create_savepoint(t, a.opt("commit_time", "instant"))
+        return [(target,)], "savepointed_instant string"
+
+    @_procedure("show_savepoints")
+    def _show_savepoints(self, t: LakehouseTable, a: _Args):
+        return (
+            maintenance.list_savepoints(t),
+            "savepoint_instant string, saved_instant string",
+        )
+
+    @_procedure("delete_savepoint")
+    def _delete_savepoint(self, t: LakehouseTable, a: _Args):
+        removed = maintenance.delete_savepoint(t, a.req("commit_time", "instant"))
+        return [(removed,)], "deleted_savepoint string"
+
+    @_procedure("rollback_to_savepoint", "rollback_to_instant")
+    def _rollback(self, t: LakehouseTable, a: _Args):
+        res = maintenance.run_restore(
+            t, a.req("commit_time", "instant", "instant_time")
+        )
+        return (
+            [
+                (
+                    res["restored_to"],
+                    len(res["removed_instants"]),
+                    len(res["deleted_files"]),
+                )
+            ],
+            "restored_to string, removed_instants int, deleted_files int",
+        )
+
+    @_procedure("split_bucket")
+    def _split_bucket(self, t: LakehouseTable, a: _Args):
+        """Consistent-engine hot-bucket split: an O(one bucket) rewrite."""
+        done = maintenance.split_bucket(t, a.integer("bucket"))
+        return (
+            [(done.instant if done is not None else "", len(t._bucket_prefix_list()))],
+            "instant string, buckets int",
+        )
+
+    @_procedure("auto_split")
+    def _auto_split(self, t: LakehouseTable, a: _Args):
+        """The service form of split_bucket: split every over-target
+        bucket, hottest first, until the layout is healthy (the policy
+        `run_auto_split` applies during inline ingest services)."""
+        done = maintenance.run_auto_split(t, a.integer("max_bucket_rows"))
+        return [(len(done), len(t._bucket_prefix_list()))], "splits int, buckets int"
+
+    @_procedure("auto_resize")
+    def _auto_resize(self, t: LakehouseTable, a: _Args):
+        """The modulo engine's layout-health service, the auto_split
+        counterpart for tables that grow by re-bucketing: a
+        manifest-arithmetic trigger, one atomic replacecommit when over
+        target."""
+        before = t.config.bucket_index_buckets or 0
+        done = maintenance.run_auto_resize(t, a.integer("max_bucket_rows"))
+        return (
+            [(len(done), before, t.config.bucket_index_buckets or 0)],
+            "resizes int, buckets_before int, buckets_after int",
+        )
+
+    @_procedure("resize_buckets")
+    def _resize_buckets(self, t: LakehouseTable, a: _Args):
+        """Re-bucket a bucket-layout table (Hudi consistent-hashing
+        resize analog): one atomic replacecommit rewrite."""
+        done = maintenance.resize_buckets(t, int(a.req("buckets", "1")))
+        return (
+            [(done.instant if done is not None else "", t.config.bucket_index_buckets)],
+            "instant string, buckets int",
+        )
+
+    @_procedure("show_bucket_layout")
+    def _show_bucket_layout(self, t: LakehouseTable, a: _Args):
+        """One row per bucket — encoded id, prefix (consistent engine),
+        live files and rows — straight from the manifest, no data IO."""
+        if not t.config.bucket_index_buckets:
+            raise ValueError(f"{t.config.name} has no bucket-index layout")
+        by_bucket: dict[int, list] = {}
+        for fm in t.manifest.live_files(include_logs=True):
+            if fm.bucket is not None:
+                by_bucket.setdefault(fm.bucket, []).append(fm)
+        consistent = t.config.bucket_engine == "consistent"
+        ids = (
+            t._bucket_prefix_list()
+            if consistent
+            else list(range(t.config.bucket_index_buckets))
+        )
+        rows = []
+        for b in sorted(set(ids) | set(by_bucket)):
+            files = by_bucket.get(b, [])
+            if consistent:
+                length, prefix = b >> 16, b & 0xFFFF
+                label = format(prefix, f"0{length}b") if length else "*"
+            else:
+                label = str(b)
+            rows.append(
+                (b, label, len(files), sum(f.rows for f in files), b in set(ids))
+            )
+        return (
+            rows,
+            "bucket int, prefix string, files int, rows bigint, routed boolean",
+        )
+
+    @_procedure("hudi_index")
+    def _hudi_index(self, t: LakehouseTable, a: _Args):
+        """Hudi's async-indexer face (`HoodieIndexer` /
+        `hoodie.metadata.index.*.enable`): build the named metadata-index
+        partitions over the CURRENT personality state without waiting
+        for a data commit. A partition is declared after its first
+        build, so later plain syncs keep maintaining it."""
+        from onehouse_demos_spark.tables.hudi_export import sync_hudi_metadata
+
+        wanted = [
+            p.lower()
+            for p in _items(
+                a.opt("partitions", default="column_stats,bloom_filters,record_index")
+            )
+        ]
+        valid = {"column_stats", "bloom_filters", "record_index"}
+        bad = sorted(set(wanted) - valid)
+        if bad:
+            raise ValueError(
+                f"hudi_index: unknown partitions {bad}; one of: {sorted(valid)}"
+            )
+        version = sync_hudi_metadata(
+            t,
+            column_stats="column_stats" in wanted,
+            bloom_filters="bloom_filters" in wanted,
+            record_index="record_index" in wanted,
+        )
+        return [(p, version) for p in sorted(wanted)], "partition string, version int"
+
+    @_procedure("hudi_clean")
+    def _hudi_clean(self, t: LakehouseTable, a: _Args):
+        """The personality's clean/archive service: age retired
+        Hudi-named slices past the keep-last-instants horizon and
+        archive their timeline instants, with Hudi's own clean
+        retention semantics."""
+        from onehouse_demos_spark.tables.hudi_export import clean_hudi_personality
+
+        keep = a.integer("keep_last_instants", default=10)
+        res = clean_hudi_personality(t, keep_last_instants=keep)
+        return (
+            [(len(res["deleted_files"]), len(res["archived_instants"]))],
+            "deleted_slices int, archived_instants int",
+        )
+
+    @_procedure("xtable_sync")
+    def _xtable_sync(self, t: LakehouseTable, a: _Args):
+        """One-command multi-format conversion — the reference runs
+        `java -jar xtable-utilities --datasetConfig xtable_hudi.yaml`
+        with targets DELTA,ICEBERG (demo.md:81-88,
+        xtable/xtable_hudi.yaml); here each target personality is
+        (re)synced in place over the same files."""
+        from onehouse_demos_spark.tables.delta_export import sync_delta_log
+        from onehouse_demos_spark.tables.hudi_export import sync_hudi_metadata
+        from onehouse_demos_spark.tables.iceberg_export import (
+            sync_iceberg_metadata,
+        )
+
+        rows = []
+        for fmt in _items(a.opt("formats", default="delta,iceberg").lower()):
+            if fmt == "delta":
+                rows.append(("delta", sync_delta_log(t)))
+            elif fmt == "iceberg":
+                rows.append(("iceberg", sync_iceberg_metadata(t)))
+            elif fmt == "hudi":
+                # MOR freshness (README.md:756-776), two modes:
+                # 'compact' (default) folds logs through the engine's
+                # compaction; 'rt' publishes them as real
+                # HoodieLogFormat blocks under deltacommits — no
+                # rewrite, a genuine `_rt` personality. The
+                # hudi_column_stats / hudi_bloom_filters /
+                # hudi_record_index flags publish those metadata
+                # partitions alongside files.
+                hudi_mode = (a.opt("hudi_mode") or "compact").lower()
+                if hudi_mode not in ("compact", "rt"):
+                    raise ValueError(
+                        f"xtable_sync: hudi_mode {hudi_mode!r}; one of: compact, rt"
+                    )
+                version = sync_hudi_metadata(
+                    t,
+                    compact_mor=hudi_mode == "compact",
+                    mor_rt=hudi_mode == "rt",
+                    column_stats=a.flag("hudi_column_stats"),
+                    bloom_filters=a.flag("hudi_bloom_filters"),
+                    record_index=a.flag("hudi_record_index"),
+                )
+                rows.append(("hudi", version))
+            else:
+                raise ValueError(f"xtable_sync: unsupported target format {fmt!r}")
+        return rows, "format string, version int"
+
+    @_procedure("show_fsview_all")
+    def _show_fsview_all(self, t: LakehouseTable, a: _Args):
+        """Hudi's `show_fsview_all`: one row per live file slice with
+        partition, kind (base/log) and row count, from the manifest."""
+        return (
+            [
+                (f.partition or "", f.path, f.kind, f.rows)
+                for f in t.manifest.live_files()
+            ],
+            "partition string, path string, kind string, rows bigint",
+        )
+
+    @_procedure("show_table_properties")
+    def _show_table_properties(self, t: LakehouseTable, a: _Args):
+        cfg = t.config
+        rows = [
+            ("name", cfg.name),
+            ("partitionFields", ",".join(cfg.partition_by or [])),
+        ]
+        rows += [(p.sql, p.render(p.get(cfg))) for p in _PROPS]
+        return rows + [("location", t.base_path)], "key string, value string"
+
+    # -- register-by-location (reference S10 external registration:
+    # demo.md:208 `CREATE TABLE delta_db.people USING DELTA LOCATION
+    # ...`, demo.md:225 `CALL hive_prod.system.register_table(...)`) ----
+
+    def _register_external(self, name: str, fmt: str, loc: str) -> None:
+        """Register a personality the engine does not own. The metadata
+        walk is validated before the registration persists; the view
+        itself is created by register_views, like every other view."""
+        self._external[name] = (fmt, loc)
         try:
-            df = self._external_df(name)  # validate the metadata walk
+            self._external_df(name)
         except Exception:
             del self._external[name]
             raise
         self._persist_external()
-        df.createOrReplaceTempView(name)
-        return self.spark.createDataFrame(
-            [(name, "iceberg", base)],
-            "tableName string, format string, location string",
-        )
+
+    def _attach(self, name: str, t: LakehouseTable) -> None:
+        """Register an engine table at a location the engine does not
+        own: full DML, persisted like the external registrations, and
+        a quarantined attach of the same name is healed."""
+        self._tables[name] = t
+        self._attached[name] = t.base_path
+        self._quarantined.pop(name, None)
+        self._persist_external()
 
     def _external_df(self, name: str) -> DataFrame:
         """Materialize an external registration's current snapshot.
@@ -1671,278 +1508,142 @@ class Engine:
         lakehouse format, a location with NO table yet plus a column
         list / TBLPROPERTIES creates a managed table AT that path —
         the shape SHOW CREATE TABLE emits, so its output is
-        re-runnable in a fresh warehouse. For existing locations and
-        external formats, data-definition clauses are rejected: the
-        table already exists on disk."""
+        re-runnable in a fresh warehouse; replayed over the live
+        location it attaches the table, refusing a different primary
+        key. For external formats, data-definition clauses are
+        rejected: the table already exists on disk."""
         name = self._norm(m.group("name"))
         fmt = (m.group("format") or "parquet").lower()
         loc = m.group("location").rstrip("/")
         if name in self._tables or name in self._external:
             raise ValueError(f"table {name} already exists")
-        exists = os.path.exists(os.path.join(loc, "table_config.json"))
-        if (
-            fmt == "hudi"
-            and not exists
-            and os.path.isdir(os.path.join(loc, ".hoodie"))
-            and (m.group("cols") or m.group("props"))
-            and not m.group("ctas")
-        ):
-            # A GENUINE Hudi table lives here (`.hoodie`, no engine
-            # config): creating a managed table would write engine
-            # metadata inside the foreign table directory (ADVICE r9).
-            # Data-definition clauses are rejected like any
-            # already-exists location; the no-cols form attaches it.
+        defines = bool(m.group("cols") or m.group("props"))
+        # USING hudi over a `.hoodie` timeline (a genuine Hudi table such
+        # as the reference's hudi_dimCustomer fixture, or an engine
+        # table's Hudi personality) registers that timeline as an
+        # external replayed personality, like delta/iceberg
+        hudi_timeline = fmt == "hudi" and os.path.isdir(
+            os.path.join(loc, ".hoodie")
+        )
+        if hudi_timeline and defines and not m.group("ctas"):
+            # creating a managed table would write engine metadata
+            # inside the Hudi table directory
             raise ValueError(
                 f"location {loc} already holds a Hudi table (.hoodie "
                 "present); drop the column list / TBLPROPERTIES to "
                 f"register it: CREATE TABLE {name} USING hudi "
                 f"LOCATION '{loc}'"
             )
-        if (
-            fmt in ("lakehouse", "oh", "hudi")
-            and not exists
-            and (m.group("cols") or m.group("props"))
-            and not m.group("ctas")
-        ):
-            props = self._parse_props(m.group("props"))
-            parts = [
-                strip_ident_quotes(p.strip().split()[0])
-                for p in _split_top_level(m.group("parts") or "")
-                if p.strip()
-            ]
-            cfg = self._config_from_props(name, props, parts)
-            t = LakehouseTable.create(self.spark, loc, cfg)
-            self._tables[name] = t
-            self._attached[name] = t.base_path
-            self._persist_external()
-            if m.group("cols"):
-                from pyspark.sql.types import StructType
-
-                schema = StructType.fromDDL(m.group("cols"))
-                t.insert(self.spark.createDataFrame([], schema))
-            t.register_view(name)
-            return self.spark.createDataFrame(
-                [(name, cfg.table_type, loc)],
-                "tableName string, format string, location string",
-            )
-        if (
-            fmt in ("lakehouse", "oh", "hudi")
-            and exists
-            and (m.group("cols") or m.group("props"))
-            and not m.group("ctas")
-        ):
-            # Replaying a SHOW CREATE statement over the live location:
-            # attach the existing table, but refuse a DDL that claims a
-            # DIFFERENT identity than what's on disk.
-            props = self._parse_props(m.group("props"))
-            t = LakehouseTable.load(self.spark, loc)
-            declared_rk = [
-                k.strip()
-                for k in props.get("primarykey", "").split(",")
-                if k.strip()
-            ]
-            if declared_rk and declared_rk != t.config.record_key:
-                raise ValueError(
-                    f"primaryKey {declared_rk} does not match the "
-                    f"table at {loc} ({t.config.record_key})"
-                )
-            self._tables[name] = t
-            self._attached[name] = t.base_path
-            self._quarantined.pop(name, None)
-            self._persist_external()
-            t.register_view(name)
-            return self.spark.createDataFrame(
-                [(name, t.config.table_type, loc)],
-                "tableName string, format string, location string",
-            )
-        if m.group("ctas") or m.group("cols") or m.group("props"):
+        engine_fmt = fmt in ("lakehouse", "oh", "hudi") and not hudi_timeline
+        if engine_fmt and defines and not m.group("ctas"):
+            cfg = _declared_config(name, m)
+            if _is_table(loc):
+                t = LakehouseTable.load(self.spark, loc)
+                if cfg.record_key and cfg.record_key != t.config.record_key:
+                    raise ValueError(
+                        f"primaryKey {cfg.record_key} does not match the "
+                        f"table at {loc} ({t.config.record_key})"
+                    )
+            else:
+                t = LakehouseTable.create(self.spark, loc, cfg)
+                self._record_schema(t, m)
+        elif defines or m.group("ctas"):
             raise ValueError(
                 "CREATE TABLE ... LOCATION registers an existing table; "
                 "column lists, TBLPROPERTIES and CTAS are not supported"
             )
-        if fmt == "hudi" and not exists and os.path.isdir(
-            os.path.join(loc, ".hoodie")
-        ):
-            # a GENUINE Hudi table (e.g. the reference's committed
-            # hudi_dimCustomer fixture): register as an external
-            # timeline-replayed personality, like delta/iceberg
-            fmt = "hudi-external"
-        if fmt in ("lakehouse", "oh", "hudi"):
+        elif engine_fmt:
             t = LakehouseTable.load(self.spark, loc)
-            self._tables[name] = t
-            # persisted like the other register-by-location formats:
-            # the attach survives an engine restart (ADVICE r4)
-            self._attached[name] = t.base_path
-            self._quarantined.pop(name, None)  # attach healed
-            self._persist_external()
-            t.register_view(name)
-            kind = t.config.table_type
-        elif fmt == "hudi-external":
-            self._external[name] = ("hudi", loc)
-            try:
-                df = self._external_df(name)
-            except Exception:
-                del self._external[name]
-                raise
-            self._persist_external()
-            df.createOrReplaceTempView(name)
-            # MERGE_ON_READ personalities get the reference's
-            # hive-sync `_ro`/`_rt` pair (README.md:343-344)
-            self._register_hudi_mor_pair(name)
-            kind = "external-hudi"
-        elif fmt in ("delta", "iceberg", "parquet"):
-            self._external[name] = (fmt, loc)
-            try:
-                df = self._external_df(name)  # validate before persisting
-            except Exception:
-                del self._external[name]
-                raise
-            self._persist_external()
-            df.createOrReplaceTempView(name)
-            kind = f"external-{fmt}"
+        elif hudi_timeline or fmt in ("delta", "iceberg", "parquet"):
+            self._register_external(name, fmt, loc)
+            return self._frame(
+                [(name, f"external-{fmt}", loc)],
+                "tableName string, format string, location string",
+            )
         else:
             raise ValueError(f"unsupported LOCATION format {fmt!r}")
-        return self.spark.createDataFrame(
-            [(name, kind, loc)],
+        self._attach(name, t)
+        return self._frame(
+            [(name, t.config.table_type, loc)],
             "tableName string, format string, location string",
         )
 
-    # -- statement handlers ---------------------------------------------------
-
-    @staticmethod
-    def _parse_props(props: str | None) -> dict[str, str]:
-        out: dict[str, str] = {}
-        if not props:
-            return out
-        for kv in _split_top_level(props):
-            split = split_once_top_level(kv, "=")
-            if split is not None:
-                k, v = split
-                v = v.strip()
-                if len(v) >= 2 and v[0] == v[-1] and v[0] in "'\"":
-                    # SQL-standard doubled-quote escape inside the
-                    # literal ('it''s' → it's) — SHOW CREATE TABLE
-                    # emits this form, so CREATE must read it back.
-                    v = v[1:-1].replace(v[0] * 2, v[0])
-                out[k.strip().strip("'\"").lower()] = v
-        return out
-
-    @staticmethod
-    def _config_from_props(
-        name: str, props: dict[str, str], parts: list[str]
-    ) -> TableConfig:
-        return TableConfig(
-            name=name,
-            record_key=[
-                k.strip()
-                for k in props.get("primarykey", "").split(",")
-                if k.strip()
-            ],
-            precombine=props.get("precombinefield") or None,
-            partition_by=parts,
-            # SQL expr → partition path (expr-partitioned tables);
-            # surfaced here so SHOW CREATE TABLE output is re-runnable.
-            partition_expr=props.get("partitionexpr") or None,
-            table_type=props.get("type", "cow"),
-            index_scope=props.get("indexscope", "partition"),
-            soft_delete_col=props.get("softdeletecol") or None,
-            target_file_rows=(
-                int(props["targetfilerows"])
-                if props.get("targetfilerows")
-                else TableConfig.target_file_rows
-            ),
-            expression_indexes=[
-                e.strip()
-                for e in props.get("expressionindexes", "").split(";")
-                if e.strip()
-            ],
-            # Hudi `hoodie.metadata.record.index.enable` analog.
-            record_index=props.get("recordindex", "").lower()
-            in ("true", "1"),
-            # Hudi 1.0 secondary-index analog: comma-separated columns.
-            secondary_indexes=[
-                c.strip()
-                for c in props.get("secondaryindexes", "").split(",")
-                if c.strip()
-            ],
-            # Hudi payload-class analog (overwrite | partial_update).
-            payload=props.get("payload", "overwrite"),
-            # Hudi `hoodie.index.type=BUCKET` +
-            # `hoodie.bucket.index.num.buckets` analog: probe-free
-            # hash routing of keys to a fixed per-partition bucket set.
-            bucket_index_buckets=(
-                int(props["bucketindexbuckets"])
-                if props.get("bucketindexbuckets")
-                else None
-            ),
-            # r9: "modulo" (fixed count) | "consistent" (prefix-range
-            # buckets; hot buckets split in O(bucket) via
-            # CALL split_bucket)
-            bucket_engine=props.get("bucketindexengine", "modulo"),
-            # Hudi hoodie.precommit.validators analog. Formats mirror
-            # Hudi's: ';'-separated SQL with <TABLE> placeholders;
-            # single-result entries are 'query#expected'.
-            pre_commit_validators=_validators_from_props(props),
+    def _drop(self, m) -> DataFrame:
+        """DROP TABLE: a table the engine created is deleted with its
+        files; a table registered or attached by location (quarantined
+        included) is only unregistered."""
+        name = self._norm(m.group("name"))
+        registered = (
+            name in self._external
+            or name in self._attached
+            or name in self._quarantined
         )
+        if registered:
+            for entries in (
+                self._external,
+                self._external_view_tokens,
+                self._attached,
+                self._quarantined,
+                self._tables,
+            ):
+                entries.pop(name, None)
+            self._persist_external()
+        elif name in self._tables:
+            self.drop_table(name)
+        elif m.group("if_exists"):
+            return self._frame()
+        else:
+            raise ValueError(f"table {name} does not exist")
+        for view in (name, f"{name}_ro", f"{name}_rt"):
+            self.spark.catalog.dropTempView(view)
+        return self._frame()
+
+    # -- statement handlers ---------------------------------------------------
 
     def _create(self, m: re.Match) -> DataFrame:
         name = self._norm(m.group("name"))
-        props = self._parse_props(m.group("props"))
-        parts = [
-            strip_ident_quotes(p.strip().split()[0])
-            for p in _split_top_level(m.group("parts") or "")
-            if p.strip()
-        ]
-        cfg = self._config_from_props(name, props, parts)
-        df = None
+        cfg = _declared_config(name, m)
         if m.group("ctas"):
             self.register_views()
-            df = self.spark.sql(m.group("ctas"))
-        elif m.group("cols"):
-            # declared schema, empty table: realize the schema through
-            # Spark SQL's own DDL parser
-            from pyspark.sql.types import StructType
+            self.create_table(name, cfg, df=self.spark.sql(m.group("ctas")))
+            return self._frame()
+        self._record_schema(self.create_table(name, cfg), m)
+        return self._frame()
 
-            schema = StructType.fromDDL(m.group("cols"))
-            df = self.spark.createDataFrame([], schema)
-            self.create_table(name, cfg, df=None)
-            # record schema via an empty insert so readers know it
-            self._tables[name].insert(df)
-            return self.spark.createDataFrame([], "result string")
-        self.create_table(name, cfg, df=df)
-        return self.spark.createDataFrame([], "result string")
+    def _record_schema(self, t: LakehouseTable, m: re.Match) -> None:
+        """Record a CREATE TABLE column list, parsed by Spark SQL's own
+        DDL parser, through a zero-row insert so readers know it."""
+        if m.group("cols"):
+            t.insert(
+                self.spark.createDataFrame(
+                    [], T.StructType.fromDDL(m.group("cols"))
+                )
+            )
 
-    def _insert(self, m: re.Match) -> DataFrame:
-        name = self._norm(m.group("name"))
-        t = self._tables[name]
+    def _insert(self, t: LakehouseTable, m: re.Match) -> DataFrame:
+        """INSERT INTO | OVERWRITE t [(cols)] VALUES ... | SELECT ... |
+        TABLE ...: the query's columns bind BY POSITION to the listed
+        columns, or to the table's data columns when none are listed
+        (Spark, Delta and Hudi SQL semantics); unlisted columns are
+        NULL."""
         self.register_views()
         body = m.group("body")
-        cols = m.group("cols")
         if body.upper().startswith("VALUES"):
-            df = self.spark.sql(f"SELECT * FROM ( {body} )")
-            target_cols = (
-                [strip_ident_quotes(c.strip()) for c in _split_top_level(cols)]
-                if cols
-                else [f.name for f in self._data_schema(t)]
-            )
-            df = df.toDF(*target_cols)
-        else:
-            df = self.spark.sql(body)
-            if cols:
-                df = df.toDF(*[
-                    strip_ident_quotes(c.strip())
-                    for c in _split_top_level(cols)
-                ])
-        df = self._align(t, df)
+            body = f"SELECT * FROM ( {body} )"
+        cols = m.group("cols")
+        target = (
+            [strip_ident_quotes(c.strip()) for c in _split_top_level(cols)]
+            if cols
+            else [f.name for f in self._data_schema(t)]
+        )
+        df = self._align(t, self.spark.sql(body).toDF(*target))
         if m.group("mode").upper() == "OVERWRITE":
             t.insert_overwrite(df)
         else:
             t.insert(df)
-        return self.spark.createDataFrame([], "result string")
+        return self._frame()
 
     def _data_schema(self, t: LakehouseTable):
-        from onehouse_demos_spark.tables.table import META_COLS, PP_COL
-
         schema = t._latest_schema()
         if schema is None:
             raise ValueError(f"table {t.config.name} has no schema yet")
@@ -1962,30 +1663,30 @@ class Engine:
                 out.append(F.lit(None).cast(f.dataType).alias(f.name))
         return df.select(*out)
 
-    def _pruned_dml_read(
-        self, t: LakehouseTable, where: str | None, stmt: str
-    ) -> DataFrame:
-        """Index/stats-routed snapshot for UPDATE/DELETE (reference
-        M4/M5 point-mutation shape): WHERE conjuncts that pin the FULL
-        record key by equality become a record-index point probe —
-        the same key→file metadata lookup the DataFrame upsert/delete
-        path uses, so a point statement opens only the files that hold
-        the keys instead of scanning the table. Other prunable
-        conjuncts route through snapshot_filtered (secondary/expression
-        index + min/max stats skipping). The caller re-applies the full
-        WHERE row-level in every case; an unextractable WHERE degrades
-        to the full snapshot — never corrupts. Diagnostics land in
-        ``self.last_dml_probe``."""
-        self.last_dml_probe = {
-            "stmt": stmt,
-            "table": t.config.name,
-            "mode": "full",
-        }
-        if not where:
-            return t.snapshot()
-        filters = _prunable_filters(where)
-        if not filters:
-            return t.snapshot()
+    def _keyed_read(
+        self, t: LakehouseTable, stmt: str, keys_df: DataFrame | None
+    ) -> DataFrame | None:
+        """The keyed point read UPDATE, DELETE and MERGE share: start
+        ``self.last_dml_probe`` for the statement and, given the frame
+        of keys it can touch, read only the files that hold them
+        (record index, bucket or key-range pruning, the DataFrame
+        upsert's own key→file lookup). None when there are no keys:
+        the caller reads more."""
+        self.last_dml_probe = {"stmt": stmt, "table": t.config.name, "mode": "full"}
+        if keys_df is None:
+            return None
+        df = t.snapshot_for_keys(keys_df)
+        probe = getattr(t, "last_key_read_probe", None) or {}
+        self.last_dml_probe.update(probe)
+        self.last_dml_probe["mode"] = "keys-" + probe.get("mode", "?")
+        return df
+
+    def _where_keys(
+        self, t: LakehouseTable, filters: list[tuple[str, str, object]]
+    ) -> DataFrame | None:
+        """The keys a WHERE pins: when its conjuncts fix the FULL record
+        key by equality (or a single key by IN), a frame of those keys
+        (plus any partition columns fixed by equality), else None."""
         rk = t.config.record_key
         eq: dict[str, list] = {}
         for col, op, val in filters:
@@ -1995,74 +1696,78 @@ class Engine:
                 eq.setdefault(col, []).extend(val)
         covered = rk and all(k in eq for k in rk)
         single_valued = all(len(eq[k]) == 1 for k in rk[1:] if k in eq)
-        if covered and (len(rk) == 1 or single_valued):
-            part_eq = {
-                c: v[0]
-                for c, v in eq.items()
-                if c in (t.config.partition_by or []) and len(v) == 1
-            }
-            cols = list(rk) + [c for c in part_eq if c not in rk]
-            if len(rk) == 1:
-                rows = [
-                    tuple([v] + [part_eq[c] for c in cols[1:]])
-                    for v in dict.fromkeys(eq[rk[0]])
-                ]
-            else:
-                rows = [
-                    tuple(
-                        [eq[k][0] for k in rk]
-                        + [part_eq[c] for c in cols[len(rk):]]
-                    )
-                ]
-            # Same hazard class _merge_source_keys gates against: the
-            # probe hashes/range-prunes on the key column's PERSISTED
-            # type, so a coercing literal (5.0 on a BIGINT key,
-            # numeric on a STRING key) would probe a value the index
-            # never stored and silently skip rows the full-snapshot
-            # path would mutate. Coerce each literal to its column's
-            # exact type where provably lossless; any other mismatch
-            # disables the point probe (degrade, never corrupt).
-            tgt_types = {f.name: f.dataType for f in self._data_schema(t)}
-            fields, coerced_rows = [], [list(r) for r in rows]
-            ok = True
-            for ci, c in enumerate(cols):
-                dt = tgt_types.get(c)
-                if dt is None:
-                    ok = False
-                    break
-                fields.append(T.StructField(c, dt, True))
-                for r in coerced_rows:
-                    got = _losslessly_typed(r[ci], dt)
-                    if got is _NO_COERCE:
-                        ok = False
-                        break
-                    r[ci] = got
-                if not ok:
-                    break
-            keys_df = None
-            if ok:
-                try:
-                    keys_df = self.spark.createDataFrame(
-                        [tuple(r) for r in coerced_rows],
-                        T.StructType(fields),
-                    )
-                except Exception:
-                    keys_df = None
-            if keys_df is not None:
-                df = t.snapshot_for_keys(keys_df)
-                probe = getattr(t, "last_key_read_probe", None) or {}
-                self.last_dml_probe.update(probe)
-                self.last_dml_probe["mode"] = "keys-" + probe.get(
-                    "mode", "?"
+        if not (covered and (len(rk) == 1 or single_valued)):
+            return None
+        part_eq = {
+            c: v[0]
+            for c, v in eq.items()
+            if c in (t.config.partition_by or []) and len(v) == 1
+        }
+        cols = list(rk) + [c for c in part_eq if c not in rk]
+        if len(rk) == 1:
+            rows = [
+                tuple([v] + [part_eq[c] for c in cols[1:]])
+                for v in dict.fromkeys(eq[rk[0]])
+            ]
+        else:
+            rows = [
+                tuple(
+                    [eq[k][0] for k in rk]
+                    + [part_eq[c] for c in cols[len(rk):]]
                 )
-                return df
-        df = t.snapshot_filtered(filters)
-        self.last_dml_probe["mode"] = "filtered"
-        return df
+            ]
+        # Same hazard class _merge_source_keys gates against: the
+        # probe hashes/range-prunes on the key column's PERSISTED
+        # type, so a coercing literal (5.0 on a BIGINT key, numeric on
+        # a STRING key) would probe a value the index never stored and
+        # silently skip rows the full-snapshot path would mutate.
+        # Coerce each literal to its column's exact type where provably
+        # lossless; any other mismatch disables the point probe
+        # (degrade, never corrupt).
+        tgt_types = {f.name: f.dataType for f in self._data_schema(t)}
+        fields, coerced_rows = [], [list(r) for r in rows]
+        for ci, c in enumerate(cols):
+            dt = tgt_types.get(c)
+            if dt is None:
+                return None
+            fields.append(T.StructField(c, dt, True))
+            for r in coerced_rows:
+                got = _losslessly_typed(r[ci], dt)
+                if got is _NO_COERCE:
+                    return None
+                r[ci] = got
+        try:
+            return self.spark.createDataFrame(
+                [tuple(r) for r in coerced_rows], T.StructType(fields)
+            )
+        except Exception:
+            return None
 
-    def _update(self, m: re.Match) -> DataFrame:
-        name = self._norm(m.group("name"))
-        t = self._tables[name]
+    def _pruned_dml_read(
+        self, t: LakehouseTable, where: str | None, stmt: str
+    ) -> DataFrame:
+        """Index/stats-routed snapshot for UPDATE/DELETE (reference
+        M4/M5 point-mutation shape): WHERE conjuncts that pin the FULL
+        record key by equality become a keyed point read, so a point
+        statement opens only the files that hold the keys instead of
+        scanning the table. Other prunable conjuncts route through
+        snapshot_filtered (secondary/expression index + min/max stats
+        skipping). The caller re-applies the full WHERE row-level in
+        every case; an unextractable WHERE degrades to the full
+        snapshot — never corrupts. Diagnostics land in
+        ``self.last_dml_probe``."""
+        filters = _prunable_filters(where) if where else []
+        df = self._keyed_read(
+            t, stmt, self._where_keys(t, filters) if filters else None
+        )
+        if df is not None:
+            return df
+        if not filters:
+            return t.snapshot()
+        self.last_dml_probe["mode"] = "filtered"
+        return t.snapshot_filtered(filters)
+
+    def _update(self, t: LakehouseTable, m: re.Match) -> DataFrame:
         sets = m.group("sets")
         where = m.group("where")
         if where:
@@ -2088,166 +1793,9 @@ class Engine:
             for c in changed.columns
         ]
         t.upsert(changed.select(*exprs))
-        return self.spark.createDataFrame([], "result string")
+        return self._frame()
 
-    def _alter_props(self, m: re.Match) -> DataFrame:
-        """ALTER TABLE t SET TBLPROPERTIES (...): MUTABLE properties
-        only — the merge payload, pre-commit validator SQL, and the
-        small-file sizing target. Identity-defining properties
-        (primaryKey, type, partition fields, index layout, scope) are
-        fixed at create; changing them would silently invalidate the
-        on-disk layout, so they are rejected loudly instead."""
-        name = self._norm(m.group("name"))
-        t = self._tables[name]
-        props = self._parse_props(m.group("props"))
-        # Two phases so a bad property leaves NO session state behind:
-        # validate every entry into staged thunks first, then apply
-        # all of them and persist once. (A mid-loop raise used to
-        # leave earlier properties active in-memory while nothing was
-        # written to table_config.json.)
-        staged: list = []
-        changed: list[tuple[str, str]] = []
-        for k, v in props.items():
-            if k == "payload":
-                if v not in ("overwrite", "partial_update"):
-                    raise ValueError(f"unknown payload {v!r}")
-                staged.append(
-                    lambda v=v: setattr(t.config, "payload", v)
-                )
-            elif k == "targetfilerows":
-                rows = int(v)
-                staged.append(
-                    lambda rows=rows: setattr(
-                        t.config, "target_file_rows", rows
-                    )
-                )
-            elif k in _VALIDATOR_PROP_TYPES:
-                typ = _VALIDATOR_PROP_TYPES[k]
-                new = _validators_from_props({k: v})
-
-                def _apply(typ=typ, new=new):
-                    keep = [
-                        x
-                        for x in t.config.pre_commit_validators
-                        if x.get("type") != typ
-                    ]
-                    t.config.pre_commit_validators = keep + new
-
-                staged.append(_apply)
-            else:
-                raise ValueError(
-                    f"table property {k!r} is immutable or unknown; "
-                    "mutable: payload, targetFileRows, "
-                    "preCommitEqualitySql, preCommitInequalitySql, "
-                    "preCommitSingleResultSql"
-                )
-            changed.append((k, v))
-        for apply_one in staged:
-            apply_one()
-        t._rewrite_config()
-        return self.spark.createDataFrame(
-            changed, "property string, value string"
-        )
-
-    def _show_create(self, name: str) -> DataFrame:
-        """SHOW CREATE TABLE: a re-runnable DDL statement reconstructed
-        from the persisted table config + latest schema."""
-        from onehouse_demos_spark.tables.table import META_COLS, PP_COL
-
-        t = self._tables[name]
-        cfg = t.config
-        schema = t._latest_schema()
-        hidden = set(META_COLS) | {PP_COL}
-        cols = ", ".join(
-            f"{f.name} {f.dataType.simpleString().upper()}"
-            for f in (schema.fields if schema is not None else [])
-            if f.name not in hidden
-        )
-        props = [("primaryKey", ",".join(cfg.record_key))]
-        if cfg.precombine:
-            props.append(("preCombineField", cfg.precombine))
-        if cfg.table_type != "cow":
-            props.append(("type", cfg.table_type))
-        if cfg.payload != "overwrite":
-            props.append(("payload", cfg.payload))
-        if cfg.record_index:
-            props.append(("recordIndex", "true"))
-        if cfg.secondary_indexes:
-            props.append(
-                ("secondaryIndexes", ",".join(cfg.secondary_indexes))
-            )
-        if cfg.expression_indexes:
-            props.append(
-                ("expressionIndexes", ";".join(cfg.expression_indexes))
-            )
-        if cfg.bucket_index_buckets:
-            props.append(
-                ("bucketIndexBuckets", str(cfg.bucket_index_buckets))
-            )
-        if cfg.bucket_engine != "modulo":
-            props.append(("bucketIndexEngine", cfg.bucket_engine))
-        if cfg.partition_expr:
-            props.append(("partitionExpr", cfg.partition_expr))
-        if cfg.index_scope != "partition":
-            props.append(("indexScope", cfg.index_scope))
-        if cfg.soft_delete_col:
-            props.append(("softDeleteCol", cfg.soft_delete_col))
-        if cfg.target_file_rows != TableConfig.target_file_rows:
-            props.append(("targetFileRows", str(cfg.target_file_rows)))
-        # Validators serialize back to the same TBLPROPERTIES formats
-        # the CREATE parser reads (';'-joined; single_result as
-        # 'query#expected'), keeping the statement round-trippable.
-        val_props: dict[str, list[str]] = {}
-        for v in cfg.pre_commit_validators:
-            typ = v.get("type")
-            key = {
-                "equality": "preCommitEqualitySql",
-                "inequality": "preCommitInequalitySql",
-                "single_result": "preCommitSingleResultSql",
-            }.get(typ)
-            if key is None:
-                continue
-            q = v["query"]
-            if typ == "single_result":
-                q = f"{q}#{v.get('expected')}"
-            val_props.setdefault(key, []).append(q)
-        for key, qs in val_props.items():
-            props.append((key, ";".join(qs)))
-        stmt = f"CREATE TABLE {name}"
-        if cols:
-            stmt += f" ({cols})"
-        stmt += " USING lakehouse"
-        if cfg.partition_by:
-            stmt += f" PARTITIONED BY ({', '.join(cfg.partition_by)})"
-        stmt += " TBLPROPERTIES (" + ", ".join(
-            "{}='{}'".format(k, str(v).replace("'", "''"))
-            for k, v in props
-        ) + ")"
-        stmt += f" LOCATION '{t.base_path}'"
-        return self.spark.createDataFrame([(stmt,)], "createtab_stmt string")
-
-    def _alter_add(self, m: re.Match) -> DataFrame:
-        """ALTER TABLE t ADD COLUMNS (a INT, b STRING ...): a
-        metadata-only schema-evolution commit on the managed table,
-        then refresh the SQL view so subsequent queries see the new
-        (NULL-filled for old files) columns."""
-        name = self._norm(m.group("name"))
-        t = self._tables[name]
-        adds: list[tuple[str, str]] = []
-        for part in _split_top_level(m.group("cols")):
-            bits = part.strip().split(None, 1)
-            if len(bits) != 2:
-                raise ValueError(f"bad ADD COLUMNS entry: {part!r}")
-            adds.append((strip_ident_quotes(bits[0]), bits[1].strip()))
-        t.evolve_schema(adds)
-        t.register_view(name)
-        return self.spark.createDataFrame(
-            [(c,) for c, _ in adds], "added_column string"
-        )
-
-    def _delete(self, m: re.Match) -> DataFrame:
-        name = self._norm(m.group("name"))
-        t = self._tables[name]
+    def _delete(self, t: LakehouseTable, m: re.Match) -> DataFrame:
         where = m.group("where")
         if where:
             validate_expression(where, "DELETE WHERE condition")
@@ -2257,7 +1805,131 @@ class Engine:
             c for c in t.config.partition_by if c in snap.columns
         ]
         t.delete(doomed.select(*dict.fromkeys(keep)))
-        return self.spark.createDataFrame([], "result string")
+        return self._frame()
+
+    def _truncate(self, t: LakehouseTable, m) -> DataFrame:
+        """TRUNCATE TABLE (Hudi spark-sql surface): one replace commit
+        removing every live file — time travel to pre-truncate instants
+        still works until cleaned."""
+        empty = self.spark.createDataFrame([], T.StructType(self._data_schema(t)))
+        t.insert_overwrite_table(empty)
+        return self._frame()
+
+    def _create_index(self, t: LakehouseTable, m) -> DataFrame:
+        """Hudi 1.0 index DDL analog: CREATE INDEX ON t (record_key |
+        col | expr(...))."""
+        target = strip_ident_quotes(m.group("target").strip())
+        if target.lower() == "record_key":
+            t.enable_record_index()
+        elif target.isidentifier():
+            t.create_secondary_index(target)
+        else:
+            t.create_expression_index(target)
+        return self._frame([(target,)], "indexed string")
+
+    def _drop_index(self, t: LakehouseTable, m) -> DataFrame:
+        target = strip_ident_quotes(m.group("target").strip())
+        t.drop_index("record_key" if target.lower() == "record_key" else target)
+        return self._frame([(target,)], "dropped string")
+
+    def _alter_add(self, t: LakehouseTable, m: re.Match) -> DataFrame:
+        """ALTER TABLE t ADD COLUMNS (a INT, b STRING ...): a
+        metadata-only schema-evolution commit on the managed table;
+        old files read the new columns as NULL."""
+        adds: list[tuple[str, str]] = []
+        for part in _split_top_level(m.group("cols")):
+            bits = part.strip().split(None, 1)
+            if len(bits) != 2:
+                raise ValueError(f"bad ADD COLUMNS entry: {part!r}")
+            adds.append((strip_ident_quotes(bits[0]), bits[1].strip()))
+        t.evolve_schema(adds)
+        return self._frame([(c,) for c, _ in adds], "added_column string")
+
+    def _alter_rename(self, t: LakehouseTable, m) -> DataFrame:
+        old = strip_ident_quotes(m.group("old"))
+        new = strip_ident_quotes(m.group("new"))
+        t.rename_column(old, new)
+        return self._frame(
+            [(old, new)], "renamed_from string, renamed_to string"
+        )
+
+    def _alter_type(self, t: LakehouseTable, m) -> DataFrame:
+        col = strip_ident_quotes(m.group("col"))
+        t.widen_column(col, m.group("dtype"))
+        return self._frame(
+            [(col, m.group("dtype"))], "altered_column string, new_type string"
+        )
+
+    def _alter_drop(self, t: LakehouseTable, m) -> DataFrame:
+        cols = [
+            strip_ident_quotes(c.strip())
+            for c in (m.group("cols") or m.group("col")).split(",")
+        ]
+        for c in cols:
+            t.drop_column(c)
+        return self._frame([(c,) for c in cols], "dropped_column string")
+
+    def _alter_props(self, t: LakehouseTable, m: re.Match) -> DataFrame:
+        """ALTER TABLE t SET TBLPROPERTIES (...): mutable properties
+        only (see `_PROPS`). Identity-defining properties (primaryKey,
+        type, partition fields, index layout, scope) are fixed at
+        create; changing them would silently invalidate the on-disk
+        layout, so they are rejected loudly instead. Every value parses
+        before any applies, so a bad entry leaves no state behind."""
+        props = _parse_pairs(m.group("props"))
+        staged = []
+        for k, v in props.items():
+            p = _PROP_BY_KEY.get(k)
+            if p is None or not p.mutable:
+                raise ValueError(
+                    f"table property {k!r} is immutable or unknown; "
+                    "mutable: "
+                    + ", ".join(q.sql for q in _PROPS if q.mutable)
+                )
+            staged.append((p, p.parse(v)))
+        for p, value in staged:
+            p.set(t.config, value)
+        t._rewrite_config()
+        return self._frame(props.items(), "property string, value string")
+
+    def _show_create(self, t: LakehouseTable, m) -> DataFrame:
+        """SHOW CREATE TABLE: a re-runnable DDL statement reconstructed
+        from the persisted table config + latest schema; it names the
+        properties that differ from their default."""
+        name = self._norm(m.group("name"))
+        cfg = t.config
+        schema = t._latest_schema()
+        hidden = set(META_COLS) | {PP_COL}
+        cols = ", ".join(
+            f"{f.name} {f.dataType.simpleString().upper()}"
+            for f in (schema.fields if schema is not None else [])
+            if f.name not in hidden
+        )
+        default = TableConfig(name=name)
+        props = ", ".join(
+            "{}='{}'".format(p.sql, p.render(p.get(cfg)).replace("'", "''"))
+            for p in _PROPS
+            if p.get(cfg) != p.get(default)
+        )
+        stmt = f"CREATE TABLE {name}"
+        if cols:
+            stmt += f" ({cols})"
+        stmt += " USING lakehouse"
+        if cfg.partition_by:
+            stmt += f" PARTITIONED BY ({', '.join(cfg.partition_by)})"
+        if props:
+            stmt += f" TBLPROPERTIES ({props})"
+        stmt += f" LOCATION '{t.base_path}'"
+        return self._frame([(stmt,)], "createtab_stmt string")
+
+    def _vacuum(self, t: LakehouseTable, m) -> DataFrame:
+        """VACUUM t [RETAIN n COMMITS]: CALL run_clean, then the sweep
+        of files no instant references (Delta VACUUM semantics)."""
+        rows, schema = self._run_clean(
+            t, _Args("run_clean", {"retain_commits": m.group("n")})
+        )
+        orphans = maintenance.run_orphan_clean(t)
+        return self._frame(rows + [(p,) for p in orphans], schema)
 
     def _merge_source_keys(
         self,
@@ -2336,50 +2008,11 @@ class Engine:
             return None
         return keys_df
 
-    def _register_merge_target(
-        self,
-        t: LakehouseTable,
-        target_name: str,
-        talias: str,
-        salias: str,
-        src_sql: str,
-        on_cond: str,
-        prunable: bool,
-    ) -> None:
-        """Register `__merge_target_<name>`: the record-index-pruned
-        point read when the MERGE shape allows it (key-equality ON, no
-        NOT MATCHED BY SOURCE clause — those need the target-only
-        rows), else the full snapshot. Sound because the pruned frame
-        holds EVERY target row whose key appears in the source (the
-        probe file set is a superset per key), so matched-row detection
-        and all MATCHED/NOT MATCHED populations are unchanged."""
-        self.last_dml_probe = {
-            "stmt": "merge",
-            "table": t.config.name,
-            "mode": "full",
-        }
-        target_df = None
-        if prunable:
-            keys_df = self._merge_source_keys(
-                t, talias, salias, src_sql, on_cond
-            )
-            if keys_df is not None:
-                target_df = t.snapshot_for_keys(keys_df)
-                probe = getattr(t, "last_key_read_probe", None) or {}
-                self.last_dml_probe.update(probe)
-                self.last_dml_probe["mode"] = "keys-" + probe.get(
-                    "mode", "?"
-                )
-        if target_df is None:
-            target_df = t.snapshot()
-        target_df.createOrReplaceTempView(f"__merge_target_{target_name}")
-
-    def _merge(self, m: re.Match) -> DataFrame:
+    def _merge(self, t: LakehouseTable, m: re.Match) -> DataFrame:
         """MERGE = one joined frame annotated with the winning clause,
         split into an upsert batch and a delete batch. Single shuffle
         on the join condition; Catalyst plans the join itself."""
-        target_name = self._norm(m.group("target"))
-        t = self._tables[target_name]
+        target_name = self._norm(m.group("name"))
         talias = m.group("talias") or target_name
         source = m.group("source")
         salias = m.group("salias")
@@ -2430,8 +2063,7 @@ class Engine:
         # Target registration is deferred until the WHEN clauses are
         # parsed: a MERGE with no NOT MATCHED BY SOURCE clause never
         # reads target rows whose key is absent from the source, so the
-        # target view can be the record-index-pruned point read
-        # (_register_merge_target below).
+        # target view can be the keyed point read (below).
 
         def unqual(expr: str | None) -> str | None:
             """Rewrite alias-qualified refs for the joined frame:
@@ -2589,15 +2221,23 @@ class Engine:
         key0 = t.config.record_key[0]
         src_sql = source
         tproj = ", ".join(f"{talias}.{c} AS __t_{c}" for c in tcols)
-        self._register_merge_target(
+        # `__merge_target_<name>`: the keyed point read when the ON
+        # condition equates the whole record key with the source and no
+        # NOT MATCHED BY SOURCE clause needs the target-only rows, else
+        # the full snapshot. Sound because the keyed read holds EVERY
+        # target row whose key appears in the source (the probe file set
+        # is a superset per key), so matched-row detection and all
+        # MATCHED/NOT MATCHED populations are unchanged.
+        target_df = self._keyed_read(
             t,
-            target_name,
-            talias,
-            salias,
-            src_sql,
-            on_cond,
-            prunable=not by_source_clauses,
+            "merge",
+            None
+            if by_source_clauses
+            else self._merge_source_keys(t, talias, salias, src_sql, on_cond),
         )
+        if target_df is None:
+            target_df = t.snapshot()
+        target_df.createOrReplaceTempView(f"__merge_target_{target_name}")
         if by_source_clauses:
             # BY SOURCE needs the target-only rows: full-outer join with
             # an explicit source-presence marker (a key-null probe alone
@@ -2758,4 +2398,39 @@ class Engine:
             ]
             if live:
                 t.delete(self.spark.sql(" UNION ALL ".join(live)))
-        return self.spark.createDataFrame([], "result string")
+        return self._frame()
+
+    #: (pattern, handler) of the statements over one managed table, tried
+    #: in order. A statement naming a table the engine does not manage
+    #: passes through to Spark SQL, except those in _ENGINE_ONLY.
+    _STATEMENTS = (
+        (_MERGE_RE, _merge),
+        (_UPDATE_RE, _update),
+        (_DELETE_RE, _delete),
+        (_INSERT_RE, _insert),
+        (_CREATE_INDEX_RE, _create_index),
+        (_DROP_INDEX_RE, _drop_index),
+        (_TRUNCATE_RE, _truncate),
+        (_SHOW_PARTS_RE, _show_partitions),
+        (_SHOW_INDEXES_RE, _procedure_form("show_indexes")),
+        (_CHANGES_RE, _changes),
+        (_HISTORY_RE, _procedure_form("show_commits")),
+        (_DESCRIBE_RE, _describe),
+        (_ALTER_ADD_RE, _alter_add),
+        (_ALTER_RENAME_RE, _alter_rename),
+        (_ALTER_TYPE_RE, _alter_type),
+        (_ALTER_DROP_RE, _alter_drop),
+        (_ALTER_PROPS_RE, _alter_props),
+        (_SHOW_CREATE_RE, _show_create),
+        (_COMPACT_RE, _procedure_form("run_compaction")),
+        (
+            _CLUSTER_RE,
+            _procedure_form("run_clustering", order="cols", strategy="strategy"),
+        ),
+        (_SAVEPOINT_RE, _procedure_form("create_savepoint", instant="instant")),
+        (_RESTORE_RE, _procedure_form("rollback_to_instant", instant="instant")),
+        (_VACUUM_RE, _vacuum),
+    )
+    #: Spark SQL cannot UPDATE or MERGE INTO a view either, so an unknown
+    #: target is an error here rather than a passthrough.
+    _ENGINE_ONLY = (_update, _merge)

@@ -1096,7 +1096,18 @@ class LakehouseTable:
                 if name.endswith(".parquet"):
                     paths.append(os.path.join(root, name))
         base = self.base_path
-        return self._map_files(paths, lambda p: _harvest_one(p, base, kind))
+        files = self._map_files(paths, lambda p: _harvest_one(p, base, kind))
+        # Spark writes a schema-only file when task 0 of an
+        # unpartitioned write gets no rows. It holds nothing, so it is
+        # deleted before the instant publishes; a write of no rows
+        # commits its schema with zero adds.
+        for f in files:
+            if f.rows == 0:
+                head, name = os.path.split(os.path.join(base, f.path))
+                for p in (name, f".{name}.crc"):
+                    if os.path.exists(os.path.join(head, p)):
+                        os.remove(os.path.join(head, p))
+        return [f for f in files if f.rows]
 
     def _map_files(self, items: list, fn) -> list:
         """`[fn(x) for x in items]`, one item per file: inline on the

@@ -6,52 +6,10 @@ test_hudi_export.py).
 
 from __future__ import annotations
 
-import json
-import os
-
 import pytest
 
 from onehouse_demos_spark import LakehouseTable, TableConfig
-from onehouse_demos_spark.sql.engine import Engine
-from onehouse_demos_spark.tables.hudi_export import sync_hudi_metadata
 from onehouse_demos_spark.tables.table import _decode_hive_partition
-
-
-def test_create_with_cols_over_foreign_hudi_dir_refuses(spark, tmp_base):
-    """ADVICE r9: CREATE TABLE ... USING hudi (cols) LOCATION over a
-    directory holding a GENUINE Hudi table (.hoodie present, no engine
-    config) must not create a managed table inside it — raise with a
-    pointer to the no-cols registration form, which keeps working."""
-    t = LakehouseTable.create(
-        spark,
-        f"{tmp_base}/src",
-        TableConfig(name="src", record_key=["id"], precombine="ver"),
-    )
-    t.insert(
-        spark.createDataFrame([(1, 1, "a")], "id int, ver int, v string")
-    )
-    sync_hudi_metadata(t)
-    # simulate a FOREIGN hudi table: .hoodie exists, engine config gone
-    foreign = f"{tmp_base}/foreign"
-    os.makedirs(foreign)
-    os.rename(os.path.join(t.base_path, ".hoodie"),
-              os.path.join(foreign, ".hoodie"))
-    for n in os.listdir(t.base_path):
-        src = os.path.join(t.base_path, n)
-        if n != "_commits" and not n.startswith("."):
-            os.rename(src, os.path.join(foreign, n))
-    # fix the timeline's file references: hardlinked hudi-named slices
-    # moved with their directories, so the personality stays readable
-    eng = Engine(spark, f"{tmp_base}/wh")
-    before = sorted(os.listdir(foreign))
-    with pytest.raises(ValueError, match="already holds a Hudi table"):
-        eng.sql(
-            "CREATE TABLE bad (id INT, ver INT, v STRING) USING hudi "
-            f"TBLPROPERTIES (primaryKey='id') LOCATION '{foreign}'"
-        )
-    # nothing was written into the foreign directory
-    assert sorted(os.listdir(foreign)) == before
-    assert not os.path.exists(os.path.join(foreign, "_commits"))
 
 
 def test_decode_hive_partition_rejects_duplicates_and_disorder():

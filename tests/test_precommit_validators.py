@@ -204,3 +204,48 @@ def test_sql_tblproperties_surface(spark, tmp_base):
     with pytest.raises(PreCommitValidationError):
         eng.sql("UPDATE gt SET v = NULL WHERE id = 1")
     assert eng.sql("SELECT v FROM gt WHERE id = 1").collect()[0][0] == "a"
+
+
+def _mk_pt(spark, tmp_base, extra_props=""):
+    eng = Engine(spark, f"{tmp_base}/wh")
+    eng.sql(
+        "CREATE TABLE pt (id INT, part STRING, v STRING, ver INT) "
+        "USING lakehouse PARTITIONED BY (part) "
+        f"TBLPROPERTIES (primaryKey='id', preCombineField='ver'{extra_props})"
+    )
+    for i in range(3):
+        vals = ", ".join(
+            f"({j + i * 100}, 'p{j % 3}', 'v{j + i * 100}', 1)"
+            for j in range(30)
+        )
+        eng.sql(f"INSERT INTO pt VALUES {vals}")
+    return eng
+
+
+def test_validator_rows_with_nulls_compare(spark, tmp_base):
+    """A multi-row equality validator whose result mixes NULL and
+    values must evaluate (pass or fail), never crash the commit with
+    TypeError."""
+    eng = _mk_pt(spark, tmp_base)
+    t = eng.table("pt")
+    # part-level max(v) per part plus a NULL row from a grouping-set
+    t.set_pre_commit_validators(
+        [
+            {
+                "type": "equality",
+                "query": (
+                    "SELECT part, count(*) FROM <TABLE> "
+                    "GROUP BY ROLLUP(part)"
+                ),
+            }
+        ]
+    )
+    # count changes → the equality validator must FAIL (cleanly)
+    with pytest.raises(PreCommitValidationError):
+        eng.sql("INSERT INTO pt VALUES (900, 'p0', 'x', 1)")
+    # a no-op-count write (update in place) passes the same validator
+    eng.sql("UPDATE pt SET v = 'same-count' WHERE id = 1")
+    assert (
+        eng.sql("SELECT v FROM pt WHERE id = 1").collect()[0][0]
+        == "same-count"
+    )

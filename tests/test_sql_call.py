@@ -13,8 +13,11 @@ import os
 
 import pytest
 
+from onehouse_demos_spark import LakehouseTable, TableConfig
 from onehouse_demos_spark.sql import Engine
+from onehouse_demos_spark.sql.engine import _PROCEDURES, _parse_pairs
 from onehouse_demos_spark.tables.delta_export import sync_delta_log
+from onehouse_demos_spark.tables.hudi_export import sync_hudi_metadata
 from onehouse_demos_spark.tables.iceberg_export import sync_iceberg_metadata
 
 DDL = "id int, grp string, v int"
@@ -411,7 +414,7 @@ def test_call_errors(spark, tmp_base):
 def test_parse_call_args_masking():
     # '=>' and ',' inside a value string never split; positional args
     # key as '0','1',...
-    got = Engine._parse_call_args("a => 'x => y, z', b => 3, 'pos'")
+    got = _parse_pairs("a => 'x => y, z', b => 3, 'pos'")
     assert got == {"a": "x => y, z", "b": "3", "0": "pos"}
 
 
@@ -731,3 +734,107 @@ def test_show_indexes_sql_statement(spark, tmp_base):
     )
     rows = eng.sql("SHOW INDEXES FROM t_si").collect()
     assert [r.index_name for r in rows] == ["record_index"]
+
+
+def test_create_with_cols_over_foreign_hudi_dir_refuses(spark, tmp_base):
+    """CREATE TABLE ... USING hudi (cols) LOCATION over a directory
+    holding a GENUINE Hudi table (.hoodie present, no engine config)
+    must not create a managed table inside it — raise with a pointer
+    to the no-cols registration form, which keeps working."""
+    t = LakehouseTable.create(
+        spark,
+        f"{tmp_base}/src",
+        TableConfig(name="src", record_key=["id"], precombine="ver"),
+    )
+    t.insert(
+        spark.createDataFrame([(1, 1, "a")], "id int, ver int, v string")
+    )
+    sync_hudi_metadata(t)
+    # simulate a FOREIGN hudi table: .hoodie exists, engine config gone
+    foreign = f"{tmp_base}/foreign"
+    os.makedirs(foreign)
+    os.rename(os.path.join(t.base_path, ".hoodie"),
+              os.path.join(foreign, ".hoodie"))
+    for n in os.listdir(t.base_path):
+        src = os.path.join(t.base_path, n)
+        if n != "_commits" and not n.startswith("."):
+            os.rename(src, os.path.join(foreign, n))
+    # fix the timeline's file references: hardlinked hudi-named slices
+    # moved with their directories, so the personality stays readable
+    eng = Engine(spark, f"{tmp_base}/wh")
+    before = sorted(os.listdir(foreign))
+    with pytest.raises(ValueError, match="already holds a Hudi table"):
+        eng.sql(
+            "CREATE TABLE bad (id INT, ver INT, v STRING) USING hudi "
+            f"TBLPROPERTIES (primaryKey='id') LOCATION '{foreign}'"
+        )
+    # nothing was written into the foreign directory
+    assert sorted(os.listdir(foreign)) == before
+    assert not os.path.exists(os.path.join(foreign, "_commits"))
+
+
+def test_unknown_procedure_is_refused_by_name_first(spark, tmp_base):
+    """The procedure name is checked before its arguments, and the
+    refusal lists every procedure the registry serves."""
+    eng = Engine(spark, f"{tmp_base}/wh_unknown")
+    with pytest.raises(ValueError, match="unknown procedure") as err:
+        eng.sql("CALL frobnicate()")
+    listed = set(str(err.value).split("supported: ")[1].split(", "))
+    assert listed == set(_PROCEDURES)
+    assert {"bootstrap_table", "run_partition_ttl", "show_commits_metadata"} <= listed
+
+
+def test_update_and_merge_on_unknown_table_raise(spark, tmp_base):
+    eng = Engine(spark, f"{tmp_base}/wh_nope")
+    with pytest.raises(ValueError, match="does not exist"):
+        eng.sql("UPDATE nope SET v = 1 WHERE id = 1")
+    with pytest.raises(ValueError, match="does not exist"):
+        eng.sql(
+            "MERGE INTO nope t USING (SELECT 1 AS id) s ON t.id = s.id "
+            "WHEN MATCHED THEN DELETE"
+        )
+
+
+def test_call_argument_unescapes_doubled_quote(spark, tmp_base):
+    """CALL arguments read SQL's doubled quote as TBLPROPERTIES do."""
+    eng = Engine(spark, f"{tmp_base}/wh_quote")
+    with pytest.raises(FileNotFoundError, match="it's"):
+        eng.sql(
+            "CALL register_table(table => 'q', "
+            "metadata_file => '/no/it''s/v1.metadata.json')"
+        )
+
+
+def test_record_index_property_takes_the_shared_boolean_rule(spark, tmp_base):
+    """`yes` is true for a TBLPROPERTIES flag as for a CALL flag."""
+    eng = Engine(spark, f"{tmp_base}/wh_yes")
+    eng.sql(
+        "CREATE TABLE ry (id INT, v INT) USING lakehouse "
+        "TBLPROPERTIES (primaryKey=id, recordIndex='yes')"
+    )
+    assert eng.table("ry").config.record_index
+    assert eng.table("ry").record_index is not None
+
+
+def test_show_create_replayed_over_its_own_location_attaches(spark, tmp_base):
+    """SHOW CREATE TABLE replayed in a second warehouse over the live
+    location attaches the table as it is: no commit is added, and a
+    statement declaring another primary key is refused."""
+    eng = Engine(spark, f"{tmp_base}/wh_own")
+    eng.sql(
+        "CREATE TABLE own (id INT, v STRING) USING lakehouse "
+        "TBLPROPERTIES (primaryKey=id)"
+    )
+    eng.sql("INSERT INTO own VALUES (1, 'a')")
+    before = [i.instant for i in eng.table("own").timeline.instants()]
+    stmt = eng.sql("SHOW CREATE TABLE own").collect()[0][0]
+    eng2 = Engine(spark, f"{tmp_base}/wh_own2")
+    eng2.sql(stmt)
+    assert [i.instant for i in eng2.table("own").timeline.instants()] == before
+    assert [tuple(r) for r in eng2.sql("SELECT id, v FROM own").collect()] == [
+        (1, "a")
+    ]
+    with pytest.raises(ValueError, match="does not match"):
+        Engine(spark, f"{tmp_base}/wh_own3").sql(
+            stmt.replace("primaryKey='id'", "primaryKey='v'")
+        )

@@ -1,9 +1,15 @@
 """SQL surface: CREATE/CTAS/INSERT/UPDATE/DELETE/MERGE + passthrough
 (reference M5/M6/M10, Q12; spark-sql write path of the test suite)."""
 
+import ast
+import dataclasses
+import os
+
 import pytest
 
+from onehouse_demos_spark import TableConfig
 from onehouse_demos_spark.sql import Engine
+from onehouse_demos_spark.sql.engine import _PROPS
 
 
 @pytest.fixture()
@@ -379,3 +385,329 @@ def test_alter_set_tblproperties_and_show_create(spark, tmp_base):
     assert "primaryKey='id'" in stmt
     assert "payload='partial_update'" in stmt
     assert "LOCATION '" in stmt
+
+
+def test_insert_select_binds_by_position(engine):
+    """INSERT ... SELECT binds the query's columns to the table's (or
+    the listed) columns by position, as INSERT ... VALUES does: an
+    alias that names no table column still lands in its slot."""
+    engine.sql(
+        "CREATE TABLE up (id INT, v STRING) USING lakehouse "
+        "TBLPROPERTIES (primaryKey=id)"
+    )
+    engine.sql("INSERT INTO up SELECT id, CAST(id AS STRING) AS s FROM range(10)")
+    engine.sql("INSERT INTO up (v, id) SELECT 'x' AS a, 42 AS b")
+    rows = {(r.id, r.v) for r in engine.sql("SELECT id, v FROM up").collect()}
+    assert rows == {(i, str(i)) for i in range(10)} | {(42, "x")}
+
+
+def test_unpartitioned_writes_commit_no_empty_files(engine, spark):
+    """A write whose task gets no rows publishes no zero-row file: not
+    the schema-only insert behind CREATE TABLE (cols), not an
+    unpartitioned INSERT or MOR UPDATE, and so no Iceberg manifest
+    entry counts 0 records."""
+    from onehouse_demos_spark.tables.iceberg_export import (
+        _head,
+        _walk,
+        sync_iceberg_metadata,
+    )
+    from onehouse_demos_spark.tables.object_publish import LocalFiles
+
+    for name, kind in (("zc", "cow"), ("zm", "mor")):
+        engine.sql(
+            f"CREATE TABLE {name} (id INT, v INT) USING lakehouse "
+            f"TBLPROPERTIES (primaryKey=id, preCombineField=v, type={kind})"
+        )
+        t = engine.table(name)
+        assert t.timeline.instants()[-1].adds == []  # schema commit
+        spark.createDataFrame(
+            [(i, 1) for i in range(10)], "id int, v int"
+        ).createOrReplaceTempView("z_rows")
+        engine.sql(f"INSERT INTO {name} SELECT * FROM z_rows")
+        engine.sql(f"INSERT INTO {name} VALUES (10, 1)")
+        engine.sql(f"UPDATE {name} SET v = 2 WHERE id < 3")
+        live = t.manifest.live_files()
+        assert live and all(f.rows > 0 for f in live), [f.rows for f in live]
+        view = f"{name}_rt" if kind == "mor" else name
+        assert engine.sql(f"SELECT count(*) FROM {view}").collect()[0][0] == 11
+        sync_iceberg_metadata(t)
+        _, _, meta = _head(os.path.join(t.base_path, "metadata"), LocalFiles())
+        counts = [
+            d["record_count"] for _, _, d in _walk(LocalFiles(), meta, t.base_path)
+        ]
+        assert counts and all(c > 0 for c in counts), counts
+
+
+#: A non-default value for every TBLPROPERTIES entry, on two tables
+#: because the record index and the bucket layout exclude each other.
+_PROP_TABLES = {
+    "pa": (
+        "id INT, v STRING, ts TIMESTAMP, ver INT, gone BOOLEAN",
+        {
+            "primaryKey": "id",
+            "preCombineField": "ver",
+            "type": "mor",
+            "payload": "partial_update",
+            "recordIndex": "true",
+            "secondaryIndexes": "v",
+            "expressionIndexes": "hour(ts)",
+            "partitionExpr": "substr(v, 1, 1)",
+            "indexScope": "global",
+            "softDeleteCol": "gone",
+            "targetFileRows": "1234",
+            "preCommitEqualitySql": "SELECT count(*) FROM <TABLE> WHERE id < 0",
+            "preCommitInequalitySql": "SELECT uuid()",
+            "preCommitSingleResultSql": "SELECT count(*) >= 0 FROM <TABLE>#True",
+        },
+    ),
+    "pb": (
+        "id INT, v STRING",
+        {
+            "primaryKey": "id",
+            "bucketIndexBuckets": "4",
+            "bucketIndexEngine": "consistent",
+        },
+    ),
+}
+
+
+@pytest.mark.parametrize("prop", _PROPS, ids=[p.sql for p in _PROPS])
+def test_table_property_round_trip(spark, tmp_base, prop):
+    """Each TBLPROPERTIES entry survives CREATE -> SHOW CREATE TABLE ->
+    replay into a second warehouse, is listed by CALL
+    show_table_properties, and ALTER TABLE ... SET TBLPROPERTIES
+    accepts it only when it is mutable."""
+    name = next(n for n, (_, ps) in _PROP_TABLES.items() if prop.sql in ps)
+    cols, props = _PROP_TABLES[name]
+    listed = ", ".join(f"{k}='{v}'" for k, v in props.items())
+    eng = Engine(spark, f"{tmp_base}/wh")
+    eng.sql(
+        f"CREATE TABLE {name} ({cols}) USING lakehouse "
+        f"TBLPROPERTIES ({listed})"
+    )
+    cfg = eng.table(name).config
+    assert prop.get(cfg) != prop.get(TableConfig(name=name))
+    stmt = eng.sql(f"SHOW CREATE TABLE {name}").collect()[0][0]
+    assert f"{prop.sql}=" in stmt
+    eng2 = Engine(spark, f"{tmp_base}/wh2")
+    eng2.sql(stmt.replace(f"{tmp_base}/wh/", f"{tmp_base}/wh2/"))
+    assert dataclasses.asdict(eng2.table(name).config) == dataclasses.asdict(cfg)
+    shown = {
+        r.key: r.value
+        for r in eng.sql(f"CALL show_table_properties(table => '{name}')").collect()
+    }
+    assert shown[prop.sql] == prop.render(prop.get(cfg))
+    alter = f"ALTER TABLE {name} SET TBLPROPERTIES ({prop.sql}='{props[prop.sql]}')"
+    if prop.mutable:
+        before = dataclasses.asdict(cfg)
+        eng.sql(alter)
+        assert prop.get(eng.table(name).config) == prop.get(TableConfig(**before))
+    else:
+        with pytest.raises(ValueError, match="immutable"):
+            eng.sql(alter)
+
+
+def _mk_pt(spark, tmp_base, extra_props=""):
+    eng = Engine(spark, f"{tmp_base}/wh")
+    eng.sql(
+        "CREATE TABLE pt (id INT, part STRING, v STRING, ver INT) "
+        "USING lakehouse PARTITIONED BY (part) "
+        f"TBLPROPERTIES (primaryKey='id', preCombineField='ver'{extra_props})"
+    )
+    for i in range(3):
+        vals = ", ".join(
+            f"({j + i * 100}, 'p{j % 3}', 'v{j + i * 100}', 1)"
+            for j in range(30)
+        )
+        eng.sql(f"INSERT INTO pt VALUES {vals}")
+    return eng
+
+
+def test_update_coercing_double_literal_on_int_key(spark, tmp_base):
+    """WHERE id = 5.0 on an INT key: Spark coercion matches id=5; the
+    literal is losslessly coerced to the key type, so the point probe
+    SURVIVES and mutates the right row (previously it probed the
+    double form and silently skipped it)."""
+    eng = _mk_pt(spark, tmp_base, ", recordIndex='true'")
+    eng.sql("UPDATE pt SET v = 'C' WHERE id = 5.0")
+    assert eng.last_dml_probe["mode"] == "keys-index"
+    assert eng.sql("SELECT v FROM pt WHERE id = 5").collect()[0][0] == "C"
+
+
+def test_delete_coercing_literal_on_int_key(spark, tmp_base):
+    eng = _mk_pt(spark, tmp_base, ", recordIndex='true'")
+    eng.sql("DELETE FROM pt WHERE id = 7.0")
+    assert (
+        eng.sql("SELECT count(*) AS c FROM pt WHERE id = 7").collect()[0][0]
+        == 0
+    )
+
+
+def test_fractional_literal_on_int_key_stands_down(spark, tmp_base):
+    """id = 5.5 can match no integer row, but its truncation would
+    probe the WRONG value — the probe must stand down, and the
+    (empty) mutation must still be exact."""
+    eng = _mk_pt(spark, tmp_base, ", recordIndex='true'")
+    before = eng.table("pt").snapshot().count()
+    eng.sql("DELETE FROM pt WHERE id = 5.5")
+    assert not eng.last_dml_probe["mode"].startswith("keys-")
+    assert eng.table("pt").snapshot().count() == before
+
+
+def test_update_numeric_literal_on_string_key(spark, tmp_base):
+    """Numeric literal probing a STRING key: '5' vs 5 hash apart; the
+    probe must stand down and the coerced row still mutates."""
+    eng = Engine(spark, f"{tmp_base}/wh")
+    eng.sql(
+        "CREATE TABLE st (k STRING, v STRING, ver INT) USING lakehouse "
+        "TBLPROPERTIES (primaryKey='k', preCombineField='ver', "
+        "recordIndex='true')"
+    )
+    eng.sql("INSERT INTO st VALUES ('5', 'a', 1), ('6', 'b', 1)")
+    eng.sql("UPDATE st SET v = 'Z' WHERE k = 5")
+    assert not eng.last_dml_probe["mode"].startswith("keys-")
+    assert eng.sql("SELECT v FROM st WHERE k = '5'").collect()[0][0] == "Z"
+
+
+def test_exact_type_literal_still_point_probes(spark, tmp_base):
+    """The gate must not over-fire: an exact-type literal keeps the
+    index probe."""
+    eng = _mk_pt(spark, tmp_base, ", recordIndex='true'")
+    eng.sql("UPDATE pt SET v = 'P' WHERE id = 5")
+    assert eng.last_dml_probe["mode"] == "keys-index"
+    assert eng.sql("SELECT v FROM pt WHERE id = 5").collect()[0][0] == "P"
+
+
+def test_alter_props_all_or_nothing(spark, tmp_base):
+    eng = _mk_pt(spark, tmp_base)
+    t = eng.table("pt")
+    before_payload = t.config.payload
+    with pytest.raises(ValueError):
+        eng.sql(
+            "ALTER TABLE pt SET TBLPROPERTIES "
+            "('payload'='partial_update', 'primaryKey'='nope')"
+        )
+    # the valid first property must NOT have been applied in-memory
+    assert t.config.payload == before_payload
+
+
+def test_show_create_round_trip(spark, tmp_base):
+    eng = Engine(spark, f"{tmp_base}/wh")
+    eng.sql(
+        "CREATE TABLE rt (id INT, v STRING, ver INT) USING lakehouse "
+        "TBLPROPERTIES (primaryKey='id', preCombineField='ver', "
+        "targetFileRows='1234', "
+        "preCommitSingleResultSql='SELECT count(*) >= 0 FROM <TABLE>#True')"
+    )
+    eng.sql("INSERT INTO rt VALUES (1, 'it''s', 1)")
+    stmt = eng.sql("SHOW CREATE TABLE rt").collect()[0][0]
+    assert "targetFileRows='1234'" in stmt
+    assert "preCommitSingleResultSql=" in stmt
+    # replay into a second warehouse: same config shape
+    eng2 = Engine(spark, f"{tmp_base}/wh2")
+    eng2.sql(stmt.replace(f"{tmp_base}/wh", f"{tmp_base}/wh2"))
+    c1, c2 = eng.table("rt").config, eng2.table("rt").config
+    assert c2.record_key == c1.record_key
+    assert c2.precombine == c1.precombine
+    assert c2.target_file_rows == 1234
+    assert c2.pre_commit_validators == c1.pre_commit_validators
+
+
+def test_show_create_emits_partition_expr_and_quotes(spark, tmp_base):
+    eng = Engine(spark, f"{tmp_base}/wh")
+    eng.sql(
+        "CREATE TABLE pe (id INT, ts TIMESTAMP, v STRING) USING lakehouse "
+        "TBLPROPERTIES (primaryKey='id', "
+        "partitionExpr='date_format(ts, ''yyyy-MM'')')"
+    )
+    t = eng.table("pe")
+    assert t.config.partition_expr == "date_format(ts, 'yyyy-MM')"
+    stmt = eng.sql("SHOW CREATE TABLE pe").collect()[0][0]
+    # embedded quotes doubled in the emitted literal
+    assert "partitionExpr='date_format(ts, ''yyyy-MM'')'" in stmt
+    eng2 = Engine(spark, f"{tmp_base}/wh2")
+    eng2.sql(stmt.replace(f"{tmp_base}/wh", f"{tmp_base}/wh2"))
+    assert eng2.table("pe").config.partition_expr == "date_format(ts, 'yyyy-MM')"
+
+
+def test_nondeterministic_merge_source_skips_pruning(spark, tmp_base):
+    eng = _mk_pt(spark, tmp_base, ", recordIndex='true'")
+    eng.sql(
+        "MERGE INTO pt USING (SELECT 105 + CAST(rand() * 0 AS INT) AS id, "
+        "'p0' AS part, 'ND' AS v, 9 AS ver) s "
+        "ON pt.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    assert eng.last_dml_probe["mode"] == "full"
+    assert eng.sql("SELECT v FROM pt WHERE id = 105").collect()[0][0] == "ND"
+    # no duplicate key materialized
+    assert (
+        eng.sql(
+            "SELECT count(*) AS c FROM pt WHERE id = 105"
+        ).collect()[0][0]
+        == 1
+    )
+
+
+def test_deterministic_merge_source_still_prunes(spark, tmp_base):
+    eng = _mk_pt(spark, tmp_base, ", recordIndex='true'")
+    eng.sql(
+        "MERGE INTO pt USING (SELECT 105 AS id, 'p0' AS part, "
+        "'D' AS v, 9 AS ver) s "
+        "ON pt.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    assert eng.last_dml_probe["mode"].startswith("keys-")
+    assert eng.sql("SELECT v FROM pt WHERE id = 105").collect()[0][0] == "D"
+
+
+def test_engine_states_each_property_and_procedure_once():
+    """sql/engine.py names each TBLPROPERTIES entry in one string
+    literal, its entry in the property table (matched
+    case-insensitively; docstrings aside), and dispatches procedures
+    through the registry, never by comparing the procedure name."""
+    import onehouse_demos_spark.sql.engine as engine
+
+    with open(engine.__file__) as fh:
+        tree = ast.parse(fh.read())
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        )
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    # the TableConfig field column of the table (`payload` is spelled
+    # like its property)
+    fields = {
+        id(n.args[1])
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Name)
+        and n.func.id == "_Prop"
+    }
+    literals = [
+        n.value.lower()
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and id(n) not in docstrings | fields
+    ]
+    assert {p.sql: literals.count(p.key) for p in _PROPS} == {
+        p.sql: 1 for p in _PROPS
+    }
+    proc_compares = [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Compare)
+        and any(
+            isinstance(x, ast.Name) and x.id == "proc"
+            for x in [n.left, *n.comparators]
+        )
+    ]
+    assert proc_compares == []
