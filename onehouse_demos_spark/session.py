@@ -40,16 +40,31 @@ ENGINE_CONFS: dict[str, str] = {
     # Don't let tiny files explode task counts; at 100 TB the
     # manifest-driven planner controls file counts instead.
     "spark.sql.files.maxPartitionBytes": "134217728",
-    # Throughput GC: Java 17 defaults to G1, whose region management +
-    # write barriers penalize this workload's allocation profile
-    # (interpreted higher-order-function lambdas allocate per-element;
-    # the r2→r3 bench "regression cluster" on HOF-heavy queries was G1
-    # variance — ParallelGC measured 41.4s vs 47-50s suite total on
-    # identical code+data, and cut run-to-run spread from ±3s to <1s).
-    # Applies to fresh JVMs only (pyspark's gateway reads driver opts
-    # at launch); a pre-existing session keeps its collector.
-    "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
-    "spark.executor.extraJavaOptions": "-XX:+UseParallelGC",
+    # JVM flags go in `defaultJavaOptions`, which Spark places before a
+    # caller's `extraJavaOptions`: a caller adding its own flags keeps
+    # the engine's. They apply to fresh JVMs only (pyspark's gateway
+    # reads driver options at launch); a running session keeps its own.
+    #
+    # ParallelGC: Java 17's default G1 pays region management and write
+    # barriers on this workload's per-element allocation (interpreted
+    # higher-order-function lambdas); ParallelGC ran the bench suite in
+    # 41.4 s against 47-50 s, with a spread under 1 s instead of ±3 s.
+    #
+    # Driver compile policy: C2 compiles only hot code. Its invocation
+    # thresholds are ten times JDK 17's (5000/600/15000), so code a
+    # short-lived session runs a few thousand times stays in C1; under
+    # the defaults, C2 alone took 35-45% of a benchmark run's JVM CPU
+    # (4 CPUs). `Tier4BackEdgeThreshold` keeps its default: a hot scan
+    # loop still reaches C2 through on-stack replacement. Stopping at
+    # C1 (`TieredStopAtLevel=1`) saves more CPU on short runs but
+    # leaves long scans in C1 code: the sf0.1 bench suite ran 37-45%
+    # slower on 4 CPUs. Executors exist only on a cluster, where they
+    # live long enough for the default thresholds to pay off.
+    "spark.driver.defaultJavaOptions": (
+        "-XX:+UseParallelGC -XX:Tier4InvocationThreshold=50000 "
+        "-XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=150000"
+    ),
+    "spark.executor.defaultJavaOptions": "-XX:+UseParallelGC",
 }
 
 

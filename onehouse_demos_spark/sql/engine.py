@@ -804,10 +804,17 @@ class Engine:
                 except Exception:
                     pass
                 continue
-            df.createOrReplaceTempView(name)
-            self._register_hudi_mor_pair(name)
-            if token is not None:
-                self._external_view_tokens[name] = token
+            self._show_external(name, token, df)
+
+    def _show_external(self, name: str, token, df: DataFrame) -> None:
+        """Serve external registration `name` from `df`, its replay
+        taken at metadata `token`: the view (and a Hudi MOR table's
+        `_ro`/`_rt` pair), and the token that spares the next
+        statement a replay."""
+        df.createOrReplaceTempView(name)
+        self._register_hudi_mor_pair(name)
+        if token is not None:
+            self._external_view_tokens[name] = token
 
     def _register_hudi_mor_pair(self, name: str) -> None:
         """A registered MERGE_ON_READ Hudi personality gets the
@@ -1451,15 +1458,18 @@ class Engine:
 
     def _register_external(self, name: str, fmt: str, loc: str) -> None:
         """Register a personality the engine does not own. The metadata
-        walk is validated before the registration persists; the view
-        itself is created by register_views, like every other view."""
+        walk is validated before the registration persists, and its
+        frame serves the view, so the next statement does not replay
+        it again."""
         self._external[name] = (fmt, loc)
+        token = self._external_token(name)
         try:
-            self._external_df(name)
+            df = self._external_df(name)
         except Exception:
             del self._external[name]
             raise
         self._persist_external()
+        self._show_external(name, token, df)
 
     def _attach(self, name: str, t: LakehouseTable) -> None:
         """Register an engine table at a location the engine does not

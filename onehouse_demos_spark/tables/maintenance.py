@@ -16,6 +16,7 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from onehouse_demos_spark.tables.table import (
     DELETED_COL,
@@ -231,6 +232,31 @@ def _zvalue(scaled_cols) -> "F.Column":
     return z
 
 
+def _zorder_axes(table: LakehouseTable, sort_columns: list[str]) -> list["F.Column"]:
+    """One numeric expression per z-order column, for its min-max
+    scaling: the value of a number, the day of a date, the microsecond
+    of a timestamp. Any other type, or a column the table lacks, raises
+    ValueError naming the column, before the clustering reserves an
+    instant."""
+    types = {f.name.lower(): f.dataType for f in table._latest_schema() or []}
+    axes = []
+    for c in sort_columns:
+        dtype = types.get(c.lower())
+        if isinstance(dtype, T.NumericType):
+            axes.append(F.col(c).cast("double"))
+        elif isinstance(dtype, T.DateType):
+            axes.append(F.unix_date(F.col(c)).cast("double"))
+        elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+            axes.append(F.unix_micros(F.col(c).cast("timestamp")).cast("double"))
+        else:
+            kind = "missing" if dtype is None else dtype.simpleString()
+            raise ValueError(
+                f"z-order clustering needs numeric, date or timestamp "
+                f"columns; {c!r} is {kind}"
+            )
+    return axes
+
+
 #: Persisted clustering-request marker suffix (Hudi's
 #: `<ts>.replacecommit.requested` clustering convention).
 CLUSTERING_REQUEST_SUFFIX = ".clustering.requested"
@@ -258,6 +284,8 @@ def request_clustering(
         files = [f for f in files if (f.partition or "") in set(partitions)]
     if not files:
         return None
+    if strategy == "zorder":
+        _zorder_axes(table, sort_columns)
     payload = {
         "sort_columns": list(sort_columns),
         "target_file_rows": target_file_rows,
@@ -360,24 +388,25 @@ def run_clustering(
             ]
     if not files:
         return None
+    axes = _zorder_axes(table, sort_columns) if strategy == "zorder" else None
     with table._writing("replacecommit", planned_from) as w:
         df = table._read_files(files)
         total_rows = sum(f.rows for f in files)
         n_files = max(1, (total_rows + target_file_rows - 1) // target_file_rows)
-        if strategy == "zorder":
+        if axes is not None:
             # One tiny agg job for min/max; the scale cost is the same
             # single range-repartition + sort as the linear strategy.
             bounds = df.agg(
-                *[F.min(F.col(c).cast("double")).alias(f"mn_{i}") for i, c in enumerate(sort_columns)],
-                *[F.max(F.col(c).cast("double")).alias(f"mx_{i}") for i, c in enumerate(sort_columns)],
+                *[F.min(a).alias(f"mn_{i}") for i, a in enumerate(axes)],
+                *[F.max(a).alias(f"mx_{i}") for i, a in enumerate(axes)],
             ).collect()[0]
             scaled = []
-            for i, c in enumerate(sort_columns):
+            for i, (c, a) in enumerate(zip(sort_columns, axes)):
                 mn, mx = bounds[f"mn_{i}"], bounds[f"mx_{i}"]
                 if mn is None or mx is None or mx == mn:
                     scaled.append(F.lit(0).cast("long"))
                     continue
-                frac = (F.col(c).cast("double") - F.lit(mn)) / F.lit(mx - mn)
+                frac = (a - F.lit(mn)) / F.lit(mx - mn)
                 scaled.append(
                     F.when(F.col(c).isNull(), F.lit(0))
                     .otherwise(

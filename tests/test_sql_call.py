@@ -838,3 +838,70 @@ def test_show_create_replayed_over_its_own_location_attaches(spark, tmp_base):
         Engine(spark, f"{tmp_base}/wh_own3").sql(
             stmt.replace("primaryKey='id'", "primaryKey='v'")
         )
+
+
+@pytest.mark.parametrize(
+    "statement",
+    [
+        "CLUSTER TABLE t_mor BY (grp, id) USING ZORDER",
+        "CALL run_clustering(table => 't_mor', order => 'grp,id', "
+        "strategy => 'zorder')",
+        "CALL run_clustering(table => 't_mor', order => 'grp,id', "
+        "strategy => 'zorder', op => 'schedule')",
+    ],
+)
+def test_zorder_refuses_a_string_column_before_reserving(
+    spark, tmp_base, monkeypatch, statement
+):
+    """Z-order min-max scales each column, which a string has no
+    measure for: the statement names the column and reserves no
+    instant."""
+    eng = Engine(spark, f"{tmp_base}/wh_zstr")
+    t = _mor(eng, spark)
+    before = [i.instant for i in t.timeline.instants()]
+
+    def reserve(*args, **kwargs):
+        raise AssertionError("an instant was reserved")
+
+    monkeypatch.setattr(LakehouseTable, "_writing", reserve)
+    monkeypatch.setattr(t.timeline, "reserve_instant", reserve)
+    with pytest.raises(ValueError, match="'grp' is string"):
+        eng.sql(statement)
+    assert [i.instant for i in t.timeline.instants()] == before
+
+
+def test_zorder_scales_date_and_timestamp_columns(spark, tmp_base):
+    eng = Engine(spark, f"{tmp_base}/wh_zdt")
+    eng.sql(
+        "CREATE TABLE zdt (id INT, d DATE, ts TIMESTAMP, v INT) USING "
+        "lakehouse TBLPROPERTIES (primaryKey=id)"
+    )
+    eng.sql(
+        "INSERT INTO zdt SELECT id, date_add(DATE'2024-01-01', CAST(id AS INT)), "
+        "timestamp_seconds(1700000000 + id * 977), CAST(id AS INT) FROM range(20)"
+    )
+    before = sorted(tuple(r) for r in eng.sql("SELECT * FROM zdt").collect())
+    eng.sql("CLUSTER TABLE zdt BY (d, ts) USING ZORDER")
+    assert sorted(tuple(r) for r in eng.sql("SELECT * FROM zdt").collect()) == before
+    last = eng.table("zdt").timeline.instants()[-1]
+    assert last.operation == "clustering"
+
+
+def test_external_registration_replays_its_metadata_once(spark, tmp_base):
+    """The registration's validating replay serves the view: the first
+    statement after it finds the token unchanged."""
+    eng = Engine(spark, f"{tmp_base}/wh_once")
+    eng.sql(
+        "CREATE TABLE src1 (id INT, grp STRING, v INT) USING lakehouse "
+        "TBLPROPERTIES (primaryKey=id)"
+    )
+    _seed_rows(spark).createOrReplaceTempView("once_rows")
+    eng.sql("INSERT INTO src1 SELECT * FROM once_rows")
+    t = eng.table("src1")
+    sync_delta_log(t, now_ms=1_700_000_000_000)
+    real = eng._external_df
+    calls = []
+    eng._external_df = lambda name: (calls.append(name), real(name))[1]
+    eng.sql(f"CREATE TABLE d USING DELTA LOCATION '{t.base_path}'")
+    assert len(eng.sql("SELECT * FROM d").collect()) == 10
+    assert calls == ["d"]
