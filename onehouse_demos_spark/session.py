@@ -10,7 +10,10 @@ master, which callers override via `SPARK_MASTER` or the builder.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
 import uuid
 from contextlib import contextmanager
 from typing import Iterator
@@ -60,12 +63,166 @@ ENGINE_CONFS: dict[str, str] = {
     # leaves long scans in C1 code: the sf0.1 bench suite ran 37-45%
     # slower on 4 CPUs. Executors exist only on a cluster, where they
     # live long enough for the default thresholds to pay off.
+    #
+    # `session_builder` appends the driver's class-data-sharing archive
+    # (`-XX:SharedArchiveFile`, see `_driver_archive`) when it launches
+    # a fresh JVM that can map one. The archive is keyed by the java
+    # binary, the launch classpath, the jar listing and the class list,
+    # and is used only when the Spark conf dir holds no real config. A
+    # missing or stale archive costs only the speed-up.
     "spark.driver.defaultJavaOptions": (
         "-XX:+UseParallelGC -XX:Tier4InvocationThreshold=50000 "
         "-XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=150000"
     ),
     "spark.executor.defaultJavaOptions": "-XX:+UseParallelGC",
 }
+
+#: The classes a driver JVM loads while the engine runs the oracle
+#: sweep, in the JDK's class-list format (`tools/jvm_classlist.py`
+#: regenerates it). The driver's class-data-sharing archive holds them.
+CLASS_LIST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm_classes.txt")
+#: A dump of the class list takes ~30 s on 4 CPUs; one still running
+#: after this is abandoned and the session starts without an archive.
+_DUMP_TIMEOUT_S = 600
+
+
+def _jvm_cache() -> str:
+    """The user cache directory of the driver's archives and of the
+    empty conf dir their JVMs launch with."""
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
+        os.path.expanduser("~"), ".cache"
+    )
+    return os.path.join(base, "onehouse_demos_spark", "jvm")
+
+
+def _java() -> str:
+    """The binary `spark-class` launches the driver with."""
+    home = os.environ.get("JAVA_HOME")
+    return os.path.join(home, "bin", "java") if home else shutil.which("java") or "java"
+
+
+def _holds_config(conf_dir: str) -> bool:
+    """True when `conf_dir` holds a file other than Spark's templates."""
+    return os.path.isdir(conf_dir) and any(
+        not n.endswith(".template") for n in os.listdir(conf_dir)
+    )
+
+
+def _launch_classpath(conf_dir: str, jars: str) -> str:
+    """The driver's `-cp` as Spark's launcher writes it: the conf dir,
+    the slf4j-api jars, then the jars directory's wildcard, which the
+    JVM expands in directory order. An archive maps only under the
+    classpath it was dumped with, so the dump uses this very string."""
+    slf4j = [
+        os.path.join(jars, n) for n in os.listdir(jars) if n.startswith("slf4j-api-")
+    ]
+    return os.pathsep.join([conf_dir + os.sep, *slf4j, os.path.join(jars, "*")])
+
+
+def _archive_key(java: str, classpath: str, jars: str, class_list: str) -> str:
+    """Names the archive of one launch: the java binary (path, size,
+    mtime), the classpath, the jar listing in directory order (name,
+    size, mtime) and the class list's bytes. Any change names a new
+    archive; the JVM itself refuses one that no longer matches."""
+    h = hashlib.sha256()
+    java = os.path.realpath(java)
+    st = os.stat(java)
+    h.update(f"{java}\0{st.st_size}\0{st.st_mtime_ns}\0{classpath}\0".encode())
+    with os.scandir(jars) as entries:
+        for e in entries:
+            st = e.stat()
+            h.update(f"{e.name}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
+    with open(class_list, "rb") as fh:
+        h.update(fh.read())
+    return h.hexdigest()[:16]
+
+
+def _dump_archive(java: str, classpath: str, cache: str, key: str) -> None:
+    """Dump the static archive of `CLASS_LIST` under `classpath` to a
+    temporary file, move it to `<cache>/<key>.jsa`, then delete every
+    other key's files. A failed or timed-out dump leaves
+    `<key>.jsa.failed` with its output, and sessions stop retrying that
+    key."""
+    archive = os.path.join(cache, f"{key}.jsa")
+    tmp = f"{archive}.{os.getpid()}.tmp"
+    command = [
+        java,
+        "-Xshare:dump",
+        f"-XX:SharedClassListFile={CLASS_LIST}",
+        f"-XX:SharedArchiveFile={tmp}",
+        "-Xlog:cds=off",
+        "-cp",
+        classpath,
+    ]
+    try:
+        try:
+            proc = subprocess.run(
+                command,
+                stdin=subprocess.DEVNULL,
+                stdout=subprocess.PIPE,
+                stderr=subprocess.STDOUT,
+                timeout=_DUMP_TIMEOUT_S,
+            )
+            output, dumped = proc.stdout, proc.returncode == 0 and os.path.exists(tmp)
+        except subprocess.TimeoutExpired as exc:
+            output, dumped = exc.output or b"", False
+        if not dumped:
+            with open(f"{archive}.failed", "wb") as fh:
+                fh.write(output)
+            return
+        os.replace(tmp, archive)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    for entry in os.scandir(cache):
+        if entry.is_file() and not entry.name.startswith(key):
+            os.remove(entry.path)
+
+
+def _driver_archive() -> str | None:
+    """The class-data-sharing archive for the driver JVM this process is
+    about to launch, dumped first when it is missing; None when the
+    launch cannot use one. Then `SPARK_CONF_DIR` names the engine's
+    empty conf dir.
+
+    Rules: JDK 17 neither dumps nor maps an archive with a non-empty
+    directory on the classpath, and Spark puts its conf dir first. A
+    conf dir that holds only templates configures nothing, so the JVM
+    launches with an empty one instead; one holding real config is
+    left alone and gets no archive. A running gateway JVM (getOrCreate
+    reuses it), Spark Connect and an unwritable cache get none either.
+    A missing, stale or unmappable archive costs only the speed-up: the
+    JVM starts without sharing (`-Xshare:auto`)."""
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    if SparkContext._gateway or SparkContext._active_spark_context:
+        return None
+    if os.environ.get("SPARK_CONNECT_MODE_ENABLED") or os.environ.get("SPARK_REMOTE"):
+        return None
+    try:
+        spark_home = _find_spark_home()
+        conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        if _holds_config(conf_dir):
+            return None
+        cache = _jvm_cache()
+        empty_conf = os.path.join(cache, "conf")
+        os.makedirs(empty_conf, exist_ok=True)
+        if os.listdir(empty_conf):
+            return None
+        java = _java()
+        jars = os.path.join(spark_home, "jars")
+        classpath = _launch_classpath(empty_conf, jars)
+        key = _archive_key(java, classpath, jars, CLASS_LIST)
+        archive = os.path.join(cache, f"{key}.jsa")
+        if not os.path.exists(archive) and not os.path.exists(f"{archive}.failed"):
+            _dump_archive(java, classpath, cache, key)
+    except (OSError, subprocess.SubprocessError):
+        return None
+    if not os.path.exists(archive):
+        return None
+    os.environ["SPARK_CONF_DIR"] = empty_conf
+    return archive
 
 
 def session_builder(
@@ -84,6 +241,13 @@ def session_builder(
         builder = builder.master(f"local[{cpus}]")
     for key, value in ENGINE_CONFS.items():
         builder = builder.config(key, value)
+    archive = _driver_archive()
+    if archive:
+        driver_options = ENGINE_CONFS["spark.driver.defaultJavaOptions"]
+        builder = builder.config(
+            "spark.driver.defaultJavaOptions",
+            f"{driver_options} -XX:SharedArchiveFile={archive}",
+        )
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))

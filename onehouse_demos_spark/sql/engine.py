@@ -812,14 +812,15 @@ class Engine:
         `_ro`/`_rt` pair), and the token that spares the next
         statement a replay."""
         df.createOrReplaceTempView(name)
-        self._register_hudi_mor_pair(name)
+        self._register_hudi_mor_pair(name, df)
         if token is not None:
             self._external_view_tokens[name] = token
 
-    def _register_hudi_mor_pair(self, name: str) -> None:
+    def _register_hudi_mor_pair(self, name: str, df: DataFrame) -> None:
         """A registered MERGE_ON_READ Hudi personality gets the
         reference's hive-sync view pair (README.md:343-344):
-        `<name>_ro` (base slices only) and `<name>_rt` (base + real
+        `<name>_ro` (base slices only: `df`, the registration's own
+        snapshot replay) and `<name>_rt` (base + real
         HoodieLogFormat log blocks merged at read).
         The `_rt` merge needs the personality's engine columns
         (`_oh_key`/`_oh_commit`), so FOREIGN Hudi MOR tables — a real
@@ -836,14 +837,9 @@ class Engine:
                     return
         except OSError:
             return
-        from onehouse_demos_spark.tables.hudi_export import (
-            read_hudi_rt,
-            read_hudi_snapshot,
-        )
+        from onehouse_demos_spark.tables.hudi_export import read_hudi_rt
 
-        read_hudi_snapshot(self.spark, loc).createOrReplaceTempView(
-            f"{name}_ro"
-        )
+        df.createOrReplaceTempView(f"{name}_ro")
         if not os.path.exists(
             os.path.join(loc, ".hoodie", "sync_state.json")
         ):

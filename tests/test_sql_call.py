@@ -905,3 +905,25 @@ def test_external_registration_replays_its_metadata_once(spark, tmp_base):
     eng.sql(f"CREATE TABLE d USING DELTA LOCATION '{t.base_path}'")
     assert len(eng.sql("SELECT * FROM d").collect()) == 10
     assert calls == ["d"]
+
+
+def test_hudi_mor_registration_serves_ro_from_its_replay(
+    spark, tmp_base, monkeypatch
+):
+    """A MERGE_ON_READ Hudi registration's `_ro` view is the frame its
+    validating replay built: one snapshot replay, not two."""
+    from onehouse_demos_spark.tables import hudi_export
+
+    eng = Engine(spark, f"{tmp_base}/wh_mor_once")
+    t = _mor(eng, spark, "src_mor")
+    sync_hudi_metadata(t, mor_rt=True)
+    real = hudi_export.read_hudi_snapshot
+    calls = []
+    monkeypatch.setattr(
+        hudi_export,
+        "read_hudi_snapshot",
+        lambda *a, **kw: (calls.append(a[1]), real(*a, **kw))[1],
+    )
+    eng.sql(f"CREATE TABLE h USING HUDI LOCATION '{t.base_path}'")
+    assert len(eng.sql("SELECT * FROM h_ro").collect()) == 10
+    assert calls == [t.base_path]
